@@ -117,22 +117,12 @@ object Cli {
         // re-fingerprinting the corpus (`repair` below is the unscoped
         // full reconcile when you need an fsck)
         val scope = Some(updates.select("_key"))
-        c.config.index_columns.foreach { col =>
-          val changed = c.reembedChanged(col, embedder, scope = scope)
-          val fresh = c.embedColumn(col, embedder)
-          println(s"column '$col': re-embedded $changed changed rows, embedded $fresh new rows")
-          // keyword/dedup/ANN indexes (when built) share the staleness
-          // trap; each repair also covers keys it has never seen, so one
-          // call syncs changed AND new rows. No-ops without an index.
-          // ANN repair runs last — it reads the vector index's
-          // fingerprints, which the re-embeds above just refreshed.
-          val kw = c.repairKeywordIndex(col, scope = scope)
-          if (kw > 0) println(s"column '$col': re-indexed $kw keyword rows")
-          val dd = c.repairDedupIndex(col, scope = scope)
-          if (dd > 0) println(s"column '$col': re-banded $dd dedup rows")
-          val ann = c.repairAnnIndex(col, scope = scope)
-          if (ann > 0) println(s"column '$col': re-assigned $ann ANN rows")
-        }
+        // every built index shares the staleness trap; each repair also
+        // covers keys it has never seen, so one pass syncs changed AND new
+        // rows (repairIndexes runs them in dependency order)
+        c.config.index_columns.foreach(col => println(s"column '$col': repaired " +
+          c.repairIndexes(col, embedder, scope).map { case (k, n) => s"$k $n" }
+            .mkString(", ")))
       case "build-index" =>
         // optional acceleration structures beside the vector index
         val c = catalog.load(req(flags, "collection"))
@@ -183,13 +173,9 @@ object Cli {
         // heal every structure; the upsert flow runs the scoped variant
         val c = catalog.load(req(flags, "collection"))
         val embedder = registry.load(c.config.model_name, c.config.model_variant)
-        c.config.index_columns.foreach { col =>
-          val n = c.reembedChanged(col, embedder)
-          val kw = c.repairKeywordIndex(col)
-          val dd = c.repairDedupIndex(col)
-          val ann = c.repairAnnIndex(col)
-          println(s"column '$col': re-embedded $n, keyword $kw, dedup $dd, ann $ann")
-        }
+        c.config.index_columns.foreach(col => println(s"column '$col': repaired " +
+          c.repairIndexes(col, embedder).map { case (k, n) => s"$k $n" }
+            .mkString(", ")))
       case "save-queries" =>
         // register saved percolation queries (merge by query_id) from a
         // parquet/jsonl file whose first two columns are (query_id, query)
@@ -331,37 +317,11 @@ object Cli {
             registry.load(c.config.model_name, c.config.model_variant)
           rows.foreach { r =>
             val (column, action) = (r.getString(1), r.getString(3))
-            action match {
-              case "reembedChanged + embedColumn" =>
-                val n = c.reembedChanged(column, embedder) + c.embedColumn(column, embedder)
-                println(s"$action($column): $n row(s)")
-              case "repairKeywordIndex" =>
-                println(s"$action($column): ${c.repairKeywordIndex(column)} row(s)")
-              case "repairDedupIndex" =>
-                println(s"$action($column): ${c.repairDedupIndex(column)} row(s)")
-              case "repairAnnIndex" =>
-                println(s"$action($column): ${c.repairAnnIndex(column)} row(s)")
-              case "repairBinarySketch" =>
-                println(s"$action($column): ${c.repairBinarySketch(column)} row(s)")
-              case "buildAnnIndex" =>
-                // retrain with the index's stored geometry
-                val p = s.read.parquet(s"${c.annIndexDir(column)}/params").head()
-                c.buildAnnIndex(column, nLists = p.getAs[Int]("n_lists"),
-                  pqM = p.getAs[Int]("pq_m"))
-                println(s"$action($column): retrained")
-              case "compact" =>
-                println(s"compact(): ${c.compact()} file(s)")
-              case "compactIndex" =>
-                println(s"$action($column): ${c.compactIndex(column)} file(s)")
-              case "compactAnnIndex" =>
-                println(s"$action($column): ${c.compactAnnIndex(column)} file(s)")
-              case "compactKeywordIndex" =>
-                c.compactKeywordIndex(column); println(s"$action($column): folded")
-              case "compactDedupIndex" =>
-                println(s"$action($column): ${c.compactDedupIndex(column)} file(s)")
-              case "compactBinarySketch" =>
-                println(s"$action($column): ${c.compactBinarySketch(column)} file(s)")
-              case other => fail(s"unknown planned action '$other'")
+            if (action == "compact") println(s"compact(): ${c.compact()} file(s)")
+            else graft.core.IndexFamily.action(action) match {
+              case Some(m) =>
+                println(s"$action($column): ${m.run(c, column, None, () => embedder)}")
+              case None => fail(s"unknown planned action '$action'")
             }
           }
           rows = c.planMaintenance().collect()

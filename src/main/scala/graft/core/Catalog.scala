@@ -3,6 +3,7 @@ package graft.core
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StringType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets
@@ -34,9 +35,18 @@ class Collection private[core] (
 ) {
   import Keys.KeyCol
 
+  import IndexFamily._
+
   val dir: String = s"$rootDir/${config.name}"
   val dataDir: String = s"$dir/${config.db_path}"
-  def indexDir(column: String): String = s"$dir/${config.index_dir}/$column"
+  def indexDir(column: String): String = familyDir(VectorIndex, column)
+
+  private[core] def familyDir(f: IndexFamily, column: String): String =
+    s"$dir/${config.index_dir}/$column${f.suffix}"
+
+  /** A family sub-table's path; `""` is the family directory itself. */
+  private def table(f: IndexFamily, column: String, sub: String): String =
+    if (sub.isEmpty) familyDir(f, column) else s"${familyDir(f, column)}/$sub"
 
   private def fs: FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -136,6 +146,12 @@ class Collection private[core] (
       if (fs.exists(stage)) fs.delete(stage, true)
       fs.delete(new Path(target + "_swapjournal_tmp"), false)
     }
+  }
+
+  /** Heal both swap kinds on one directory before reading it. */
+  private def healTable(target: String): Unit = {
+    recoverSwap(target)
+    recoverFileSwap(target)
   }
 
   /** Replace `deleteLeaves` (leaf file names under `target`) with whatever
@@ -330,15 +346,13 @@ class Collection private[core] (
     writeLock.lock()
     try {
       if (isEmpty) return 0
-      val totalBytes = fs.getContentSummary(new Path(dataDir)).getLength
-      val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
+      val nFiles = filesFor(dataDir, targetFileBytes)
       writeAndSwap(dataDir) { tmp =>
         // range-clustered, not round-robin: compaction must PRESERVE the
         // key clustering that upsert/delete footer pruning depends on —
         // a hash repartition makes every file's key range span the whole
         // table and the next 10-key upsert rewrites every file
-        df.repartitionByRange(nFiles, col(KeyCol)).sortWithinPartitions(KeyCol)
-          .write.mode("overwrite").parquet(tmp)
+        keyClustered(df, nFiles).write.mode("overwrite").parquet(tmp)
       }
       nFiles
     } finally writeLock.unlock()
@@ -361,6 +375,159 @@ class Collection private[core] (
     synchronized {
       compactSwap(new Path(target), new Path(target + "_precompact"), tmp)
     }
+  }
+
+  /** [[writeAndSwap]] for a multi-table structure: the sub-tables' own
+    * `_SUCCESS` files sit one level down where [[recoverSwap]] can't see
+    * them, so the roll-forward marker is written at the top.
+    */
+  private def swapIn(target: String)(write: String => Unit): Unit =
+    writeAndSwap(target) { tmp =>
+      write(tmp)
+      fs.create(new Path(tmp, "_SUCCESS"), true).close()
+    }
+
+  private def keyClustered(rows: DataFrame, nFiles: Int): DataFrame =
+    rows.repartitionByRange(math.max(1, nFiles), col(KeyCol)).sortWithinPartitions(KeyCol)
+
+  /** File count that rewrites `target` at ~`targetFileBytes` per file. */
+  private def filesFor(target: String, targetFileBytes: Long): Int = math.max(1,
+    math.ceil(fs.getContentSummary(new Path(target)).getLength.toDouble / targetFileBytes).toInt)
+
+  /** A build's file count: `nFiles`, or a quarter of the parallelism. */
+  private def buildFiles(nFiles: Int): Int =
+    if (nFiles > 0) nFiles else math.max(1, spark.sparkContext.defaultParallelism / 4)
+
+  // ---- index-family lifecycle ----------------------------------------
+  //
+  // The steps every per-column index family ([[IndexFamily]]) shares:
+  // the guarded prologue, the staged build, the key watermark, the
+  // watermark stream and the fingerprint-driven repair. Family methods
+  // below hold only their own build / append / search code.
+
+  /** Heal the family's pending swaps: staged directory swaps, then
+    * file-granular journals.
+    */
+  private[core] def heal(f: IndexFamily, column: String): Unit = {
+    f.dirSwap.foreach(t => recoverSwap(table(f, column, t)))
+    f.fileSwap.foreach(t => recoverFileSwap(table(f, column, t)))
+  }
+
+  private[core] def built(f: IndexFamily, column: String): Boolean = {
+    recoverSwap(familyDir(f, column))
+    fs.exists(new Path(table(f, column, f.marker)))
+  }
+
+  /** The prologue of every index-family write: validate the column, hold
+    * [[writeLock]] across the whole call (a rewrite must never interleave
+    * with another writer's append), heal the family's swaps. `body` gets
+    * the family directory.
+    */
+  private def maintained[A](f: IndexFamily, column: String)(body: String => A): A = {
+    Identifiers.validate(column)
+    writeLock.lock()
+    try { heal(f, column); body(familyDir(f, column)) }
+    finally writeLock.unlock()
+  }
+
+  /** Fresh build in place (the family's marker is written last, so a
+    * half-written build reads as absent); a REBUILD over an existing
+    * structure is staged and swapped in — an in-place overwrite that died
+    * mid-way would leave stale sub-tables over half-written ones.
+    */
+  private def stagedBuild(target: String)(build: String => Unit): Unit =
+    if (!fs.exists(new Path(target))) build(target) else swapIn(target)(build)
+
+  /** Highest key stored in `table`, the refresh/stream watermark.
+    * Long.MinValue, not 0, when empty: user-imported keys may be
+    * non-positive.
+    */
+  private def watermark(table: String, keyCol: String = KeyCol): Long = {
+    val r = spark.read.parquet(table).agg(max(col(keyCol))).head()
+    if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
+  }
+
+  /** The streaming twin of a family's refresh: watch its upstream (the
+    * data directory, or the vector index directory) as a file stream and
+    * `append` every micro-batch's unseen keys. Exactly-once by a cached
+    * max-indexed-key watermark, seeded lazily by `seed` on the first
+    * batch: replays (restart, checkpoint loss, `compact()` rewrites
+    * re-delivering files) drop their already-indexed keys. In-place
+    * rewrites stay repair's job (fingerprint-driven). Each micro-batch
+    * holds [[writeLock]]; a missing structure is built by `bootstrap`.
+    * `ignoreMissingFiles`: a compaction may delete a listed source file
+    * before the batch reads it — its rows live on in files the source
+    * lists as new, which the watermark dedups.
+    */
+  private def watermarkStream(f: IndexFamily, column: String, checkpointDir: String,
+                              seed: () => Long)(bootstrap: => Unit)(
+                              append: DataFrame => Unit): StreamingQuery = {
+    Identifiers.validate(column)
+    val source = f.upstream match {
+      case Upstream.Text =>
+        spark.readStream.schema(df.schema).option("ignoreMissingFiles", "true")
+          .parquet(dataDir).select(col(KeyCol), col(column))
+      case Upstream.Vectors =>
+        val stored = indexRaw(column).getOrElse(throw new IllegalStateException(
+          s"no embedding index for '$column'; run embedColumn or " +
+            "embedColumnStream first"))
+        spark.readStream.schema(stored.schema).option("ignoreMissingFiles", "true")
+          .parquet(indexDir(column))
+    }
+    @volatile var maxSeen = Long.MinValue
+    @volatile var seeded = false
+    source.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        writeLock.lock()
+        try {
+          heal(f, column)
+          if (!built(f, column)) { bootstrap; maxSeen = seed(); seeded = true }
+          else {
+            if (!seeded) { maxSeen = seed(); seeded = true }
+            val pending = batch.filter(col(KeyCol) > maxSeen)
+            val mx = pending.agg(max(col(KeyCol))).head()
+            if (!mx.isNullAt(0)) { append(pending); maxSeen = mx.getLong(0) }
+          }
+        } finally writeLock.unlock()
+      }
+      .start()
+  }
+
+  /** Fingerprint-driven copy-on-write repair of the key-clustered
+    * `target`: keys whose `current` upstream `(key, fp)` differs from the
+    * `stored` one — or lacks one on either side (unseen keys, including
+    * below-watermark upsert inserts; legacy fingerprint-less rows) — get
+    * their rows replaced by `fresh(changed)`. Only the files `touched`
+    * plans (default: footer key ranges) are rewritten, through the
+    * journaled file swap; `sidecar(changed, freshRows)` then records the
+    * new fingerprints LAST, so a crash re-repairs conservatively and the
+    * re-run is idempotent. Returns the number of changed keys.
+    */
+  private def repairByFingerprint(
+      target: String, current: DataFrame, stored: DataFrame,
+      touched: Option[DataFrame => Seq[FileKeyRange]] = None,
+      cluster: (DataFrame, Int) => DataFrame = keyClustered)(
+      fresh: DataFrame => DataFrame)(sidecar: (DataFrame, DataFrame) => Unit): Long = {
+    val changed = current.withColumnRenamed("fp", "__fp")
+      .join(stored, Seq(KeyCol), "left_outer")
+      .filter(col("fp").isNull || col("__fp").isNull || col("fp") =!= col("__fp"))
+      .select(col(KeyCol)).localCheckpoint(true)
+    val n = changed.count()
+    if (n > 0L) {
+      val rows = fresh(changed)
+      val files = touched.fold(touchedFiles(target, changed))(_(changed))
+      val next =
+        if (files.isEmpty) rows
+        else spark.read.parquet(files.map(_.path.toString): _*)
+          .join(changed, Seq(KeyCol), "left_anti")
+          .unionByName(rows)
+      replaceFiles(target, files.map(_.path.getName)) { tmp =>
+        cluster(next, files.length).write.mode("overwrite").parquet(tmp)
+      }
+      sidecar(changed, rows)
+    }
+    n
   }
 
   /** Copy-on-write MERGE into the collection (same-key rows replaced,
@@ -408,10 +575,8 @@ class Collection private[core] (
           }.toIndexedSeq: _*)
         }
       val merged = graft.operators.Upsert(base, aligned, KeyCol)
-      val nOut = math.max(1, touched.length)
       replaceFiles(dataDir, touched.map(_.path.getName)) { tmp =>
-        merged.repartitionByRange(nOut, col(KeyCol)).sortWithinPartitions(KeyCol)
-          .write.mode("overwrite").parquet(tmp)
+        keyClustered(merged, touched.length).write.mode("overwrite").parquet(tmp)
       }
     } finally writeLock.unlock()
   }
@@ -513,8 +678,7 @@ class Collection private[core] (
     * pre-fingerprint index files coexist with fingerprinted appends.
     */
   private def indexRaw(column: String): Option[DataFrame] = {
-    recoverSwap(indexDir(column))
-    recoverFileSwap(indexDir(column))
+    healTable(indexDir(column))
     val idx = new Path(indexDir(column))
     val hasData = fs.exists(idx) &&
       fs.listStatus(idx).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -846,19 +1010,15 @@ class Collection private[core] (
     * and the swap and be lost. Returns the file count written, 0 when the
     * index is absent.
     */
-  def compactIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    writeLock.lock()
-    try {
-      val raw = indexRaw(column).getOrElse { return 0 }
-      val totalBytes = fs.getContentSummary(new Path(indexDir(column))).getLength
-      val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      writeAndSwap(indexDir(column)) { tmp =>
-        raw.repartitionByRange(nFiles, col(KeyCol)).sortWithinPartitions(KeyCol)
-          .write.mode("overwrite").parquet(tmp)
+  def compactIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
+    maintained(VectorIndex, column) { target =>
+      indexRaw(column).fold(0) { raw =>
+        val nFiles = filesFor(target, targetFileBytes)
+        writeAndSwap(target)(tmp =>
+          keyClustered(raw, nFiles).write.mode("overwrite").parquet(tmp))
+        nFiles
       }
-      nFiles
-    } finally writeLock.unlock()
-  }
+    }
 
   /** Streaming twin of [[embedColumn]]: watch the collection's data
     * directory as a file stream and embed every newly landed row into the
@@ -1062,8 +1222,7 @@ class Collection private[core] (
     val emb0 = embeddings(column)
     val emb =
       if (nProbe > 0 && hasAnnIndex(column)) {
-        recoverSwap(annListsDir(column))
-        recoverFileSwap(annListsDir(column))
+        healTable(annListsDir(column))
         val centers = readAnnCenters(column)
         val probes = qVecs
           .flatMap(v => graft.search.Ann.ivfProbes(centers, v,
@@ -1102,38 +1261,22 @@ class Collection private[core] (
     * after appends — like the vector index, it does not track the
     * collection automatically.
     */
-  def keywordIndexDir(column: String): String =
-    s"$dir/${config.index_dir}/${column}_kw"
+  def keywordIndexDir(column: String): String = familyDir(KeywordIndex, column)
 
-  /** Build (or REBUILD) the keyword index. A rebuild over an existing
-    * index is staged to a side directory and swapped in with the same
-    * checked two-rename + recovery protocol as [[compact]] — an in-place
-    * overwrite would leave stale `stats` over half-written `postings`
-    * if the rebuild died mid-way, and [[hasKeywordIndex]] (which keys on
-    * `stats`) would happily serve the corrupt mix.
+  /** Build (or REBUILD, staged and swapped like [[compact]]) the keyword
+    * index — a rebuild dying mid-way must never leave stale `stats` over
+    * half-written `postings` for [[hasKeywordIndex]] (which keys on
+    * `stats`) to serve.
     */
   def buildKeywordIndex(column: String, nBuckets: Int = 64,
                         analyzer: graft.search.Analyzer =
-                          graft.search.Analyzer.Whitespace): Unit = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = keywordIndexDir(column)
-      recoverSwap(target)
-      def build(where: String): Unit = graft.search.Keyword.buildIndex(
+                          graft.search.Analyzer.Whitespace): Unit =
+    maintained(KeywordIndex, column) { target =>
+      stagedBuild(target)(where => graft.search.Keyword.buildIndex(
         df.select(col(KeyCol), col(column)), where,
         idCol = KeyCol, textCol = column, nBuckets = nBuckets,
-        analyzer = analyzer)
-      if (!fs.exists(new Path(target))) build(target)
-      else writeAndSwap(target) { tmp =>
-        build(tmp)
-        // writeAndSwap's roll-forward marker; Keyword.buildIndex writes
-        // three sub-tables, so the parquet jobs' own _SUCCESS files sit
-        // one level down where recoverSwap can't see them
-        fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      }
-    } finally writeLock.unlock()
-  }
+        analyzer = analyzer))
+    }
 
   /** Fold rows the keyword index has not seen yet into it — the keyword
     * twin of [[embedColumn]]'s watermark catch-up. The watermark is the
@@ -1145,37 +1288,35 @@ class Collection private[core] (
     * rows can never match a term and stay out of the norms on both the
     * operator and oracle side).
     */
-  def refreshKeywordIndex(column: String, nBuckets: Int = 64): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = keywordIndexDir(column)
-      recoverSwap(target)
+  def refreshKeywordIndex(column: String, nBuckets: Int = 64): Long =
+    maintained(KeywordIndex, column) { target =>
+      def nDocs(): Long =
+        spark.read.parquet(s"$target/stats").head().getAs[Long]("n_docs")
       if (!hasKeywordIndex(column)) {
         graft.search.Keyword.buildIndex(
           df.select(col(KeyCol), col(column)), target,
           idCol = KeyCol, textCol = column, nBuckets = nBuckets)
-        return spark.read.parquet(s"$target/stats")
-          .head().getAs[Long]("n_docs")
-      }
-      // heal any crashed append BEFORE reading the watermark — a
-      // committed-but-unfinished batch must advance doclen first, or
-      // this refresh would re-append its postings
-      graft.search.Keyword.recoverAppend(spark, target)
-      val watermark = spark.read.parquet(s"$target/doclen")
-        .agg(max(col("key"))).head() match {
-          // Long.MinValue, not 0: user-imported keys may be non-positive
-          case r if r.isNullAt(0) => Long.MinValue
-          case r => r.getLong(0)
+        nDocs()
+      } else {
+        val pending = df.filter(col(KeyCol) > keywordWatermark(target))
+          .select(col(KeyCol), col(column))
+        if (pending.isEmpty) 0L
+        else {
+          val before = nDocs()
+          graft.search.Keyword.appendToIndex(pending, target,
+            idCol = KeyCol, textCol = column)
+          nDocs() - before
         }
-      val pending = df.filter(col(KeyCol) > watermark)
-        .select(col(KeyCol), col(column))
-      if (pending.isEmpty) return 0L
-      val before = spark.read.parquet(s"$target/stats").head().getAs[Long]("n_docs")
-      graft.search.Keyword.appendToIndex(pending, target,
-        idCol = KeyCol, textCol = column)
-      spark.read.parquet(s"$target/stats").head().getAs[Long]("n_docs") - before
-    } finally writeLock.unlock()
+      }
+    }
+
+  /** Heal any crashed append BEFORE reading the watermark — a
+    * committed-but-unfinished batch must advance doclen first, or the
+    * caller would re-append its postings.
+    */
+  private def keywordWatermark(target: String): Long = {
+    graft.search.Keyword.recoverAppend(spark, target)
+    watermark(s"$target/doclen", "key")
   }
 
   /** Repair the keyword index after [[upsert]] rewrote text under
@@ -1186,19 +1327,38 @@ class Collection private[core] (
     * has never seen, including upsert-introduced keys below any
     * watermark. Returns the number of documents re-indexed.
     */
-  def repairKeywordIndex(column: String, scope: Option[DataFrame] = None): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      recoverSwap(keywordIndexDir(column))
-      if (!hasKeywordIndex(column)) return 0L
+  def repairKeywordIndex(column: String, scope: Option[DataFrame] = None): Long =
+    maintained(KeywordIndex, column) { target =>
+      if (!hasKeywordIndex(column)) 0L
       // a scoped repair prunes the text read + fp compare to the batch's
       // keys; the tombstone generation inside is already key-range-pruned
-      val docs = scope.fold(df.select(col(KeyCol), col(column)))(k =>
-        scopedTo(df, k).select(col(KeyCol), col(column)))
-      graft.search.Keyword.repairIndex(docs, keywordIndexDir(column),
+      else graft.search.Keyword.repairIndex(
+        scope.fold(df)(scopedTo(df, _)).select(col(KeyCol), col(column)), target,
         idCol = KeyCol, textCol = column)
-    } finally writeLock.unlock()
+    }
+
+  /** Streaming twin of [[refreshKeywordIndex]] ([[watermarkStream]]):
+    * fold newly appended rows into the keyword index continuously — the
+    * sparse-side companion of [[embedColumnStream]]; surviving fresh keys
+    * ride [[graft.search.Keyword.appendToIndex]]'s staged crash-safe
+    * commit. Bootstraps by building the index (with `analyzer`) when
+    * absent; an existing index keeps its stored analyzer.
+    */
+  def keywordIndexStream(column: String, checkpointDir: String,
+                         nBuckets: Int = 64,
+                         analyzer: graft.search.Analyzer =
+                           graft.search.Analyzer.Whitespace): StreamingQuery = {
+    val target = keywordIndexDir(column)
+    watermarkStream(KeywordIndex, column, checkpointDir,
+        () => keywordWatermark(target)) {
+      graft.search.Keyword.buildIndex(
+        df.select(col(KeyCol), col(column)), target,
+        idCol = KeyCol, textCol = column, nBuckets = nBuckets,
+        analyzer = analyzer)
+    } { pending =>
+      graft.search.Keyword.appendToIndex(pending, target,
+        idCol = KeyCol, textCol = column)
+    }
   }
 
   /** Fold the keyword index's delta log: rewrite postings/doclen as
@@ -1207,87 +1367,13 @@ class Collection private[core] (
     * this removes the tombstone rows repairs accumulate, restoring
     * scan cost to O(live postings).
     */
-  /** Streaming twin of [[refreshKeywordIndex]]: watch the data directory
-    * and fold newly appended rows into the keyword index continuously —
-    * the sparse-side companion of [[embedColumnStream]]. Exactly-once by
-    * the same watermark discipline: a cached max-indexed-key filters
-    * each micro-batch, so file replays (restart, checkpoint loss,
-    * `compact()` rewrites re-delivering files) drop their old keys
-    * before the append; surviving fresh keys ride
-    * [[graft.search.Keyword.appendToIndex]]'s staged crash-safe commit.
-    * In-place text REWRITES are repair's job ([[repairKeywordIndex]],
-    * fingerprint-driven) — the same contract as the embed stream.
-    * Bootstraps by building the index (with `analyzer`) when absent;
-    * an existing index keeps its stored analyzer.
-    */
-  def keywordIndexStream(column: String, checkpointDir: String,
-                         nBuckets: Int = 64,
-                         analyzer: graft.search.Analyzer =
-                           graft.search.Analyzer.Whitespace)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    Identifiers.validate(column)
-    val target = keywordIndexDir(column)
-    def doclenMax(): Long =
-      spark.read.option("mergeSchema", "true").parquet(s"$target/doclen")
-        .agg(max(col("key"))).head() match {
-          case r if r.isNullAt(0) => Long.MinValue
-          case r => r.getLong(0)
-        }
-    @volatile var maxSeen = Long.MinValue
-    @volatile var seeded = false
-    spark.readStream.schema(df.schema)
-      .option("ignoreMissingFiles", "true").parquet(dataDir)
-      .select(col(KeyCol), col(column))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeLock.lock()
-        try {
-          recoverSwap(target)
-          if (!hasKeywordIndex(column)) {
-            graft.search.Keyword.buildIndex(
-              df.select(col(KeyCol), col(column)), target,
-              idCol = KeyCol, textCol = column, nBuckets = nBuckets,
-              analyzer = analyzer)
-            maxSeen = doclenMax()
-            seeded = true
-          } else {
-            if (!seeded) {
-              graft.search.Keyword.recoverAppend(spark, target)
-              maxSeen = doclenMax()
-              seeded = true
-            }
-            val pending = batch.filter(col(KeyCol) > maxSeen)
-            val mx = pending.agg(max(col(KeyCol))).head()
-            if (!mx.isNullAt(0)) {
-              graft.search.Keyword.appendToIndex(pending, target,
-                idCol = KeyCol, textCol = column)
-              maxSeen = mx.getLong(0)
-            }
-          }
-        } finally writeLock.unlock()
-      }
-      .start()
-  }
+  def compactKeywordIndex(column: String): Unit =
+    maintained(KeywordIndex, column) { target =>
+      if (hasKeywordIndex(column))
+        swapIn(target)(tmp => graft.search.Keyword.compactIndexTo(spark, target, tmp))
+    }
 
-  def compactKeywordIndex(column: String): Unit = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = keywordIndexDir(column)
-      recoverSwap(target)
-      if (!hasKeywordIndex(column)) return
-      writeAndSwap(target) { tmp =>
-        graft.search.Keyword.compactIndexTo(spark, target, tmp)
-        fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      }
-    } finally writeLock.unlock()
-  }
-
-  private def hasKeywordIndex(column: String): Boolean = {
-    recoverSwap(keywordIndexDir(column))
-    fs.exists(new Path(s"${keywordIndexDir(column)}/stats"))
-  }
+  private def hasKeywordIndex(column: String): Boolean = built(KeywordIndex, column)
 
   /** BM25 page over `column`, content-fetched like [[search]]. Uses the
     * pruned persistent index when built, else falls back to a one-shot
@@ -1447,13 +1533,9 @@ class Collection private[core] (
   // re-hashes the whole corpus (Dedup.incrementalNearDups' corpus pass),
   // which at 100 TB turns a nightly-crawl check into a full-corpus job.
 
-  def dedupIndexDir(column: String): String =
-    s"$dir/${config.index_dir}/${column}_dd"
+  def dedupIndexDir(column: String): String = familyDir(DedupIndex, column)
 
-  private def hasDedupIndex(column: String): Boolean = {
-    recoverSwap(dedupIndexDir(column))
-    fs.exists(new Path(s"${dedupIndexDir(column)}/params"))
-  }
+  private def hasDedupIndex(column: String): Boolean = built(DedupIndex, column)
 
   private def writeDedupParams(where: String,
                                p: graft.dedup.Dedup.MinHashParams): Unit = {
@@ -1482,156 +1564,109 @@ class Collection private[core] (
   def buildDedupIndex(column: String,
                       p: graft.dedup.Dedup.MinHashParams =
                         graft.dedup.Dedup.MinHashParams(),
-                      nFiles: Int = 0): Unit = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = dedupIndexDir(column)
-      recoverSwap(target)
-      def build(where: String): Unit = {
-        val src = df.select(col(KeyCol), col(column))
-        val n = if (nFiles > 0) nFiles
-                else math.max(1, spark.sparkContext.defaultParallelism / 4)
-        graft.dedup.Dedup.minhashBands(src, column, KeyCol, p)
-          .repartitionByRange(n, col(KeyCol)).sortWithinPartitions(KeyCol)
+                      nFiles: Int = 0): Unit =
+    maintained(DedupIndex, column) { target =>
+      stagedBuild(target) { where =>
+        val n = buildFiles(nFiles)
+        keyClustered(graft.dedup.Dedup.minhashBands(
+            df.select(col(KeyCol), col(column)), column, KeyCol, p), n)
           .write.mode("overwrite").parquet(s"$where/bands")
         // fps is key-clustered too: repair/delete maintain it through the
         // same footer-range copy-on-write as the bands
-        dedupFps(column)
-          .repartitionByRange(n, col(KeyCol)).sortWithinPartitions(KeyCol)
-          .write.mode("overwrite").parquet(s"$where/fps")
+        keyClustered(dedupFps(column), n).write.mode("overwrite").parquet(s"$where/fps")
         writeDedupParams(where, p)
       }
-      if (!fs.exists(new Path(target))) build(target)
-      else writeAndSwap(target) { tmp =>
-        build(tmp)
-        fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      }
-    } finally writeLock.unlock()
-  }
+    }
 
   private def dedupFps(column: String): DataFrame =
     df.select(col(KeyCol),
       md5(coalesce(col(column).cast(StringType), lit(""))).as("fp"))
 
+  private def emptyFps: DataFrame = spark.createDataFrame(
+    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    StructType(Seq(StructField(KeyCol, LongType, nullable = false),
+      StructField("fp", StringType, nullable = true))))
+
   /** Repair the dedup index after [[upsert]] rewrote text under existing
-    * keys — [[reembedChanged]]'s machinery applied to the band table:
-    * changed keys (stored `fps` vs md5 of current text; unseen keys —
-    * including below-watermark upsert inserts — count as changed, as
-    * does everything when the fps table predates this feature) have
-    * their band files rewritten via the file-granular copy-on-write
-    * swap. Only files whose footer key range intersects a changed key
-    * are touched — bands AND the key-clustered fps sidecar, which takes
-    * the changed keys' fresh fingerprints through [[upsertByKeyRange]]
-    * (fps last, so a crash rereads conservatively: un-advanced fps rows
-    * re-flag their keys as changed and the re-run is idempotent).
+    * keys — [[repairByFingerprint]] over the band table: changed keys
+    * (stored `fps` vs md5 of current text; everything counts as changed
+    * when the fps table predates this feature) are re-banded and only
+    * their band files rewritten; the key-clustered fps sidecar takes the
+    * changed keys' fresh fingerprints through [[upsertByKeyRange]].
     * Returns the number of documents re-banded.
     */
-  def repairDedupIndex(column: String, scope: Option[DataFrame] = None): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = dedupIndexDir(column)
-      recoverSwap(target)
-      recoverFileSwap(s"$target/bands")
-      recoverFileSwap(s"$target/fps")
-      if (!hasDedupIndex(column)) return 0L
-      // scoped repair prunes the fingerprint compare to the batch's key
-      // range (the caller knows what its upsert touched); the default
-      // full reconcile reads every fingerprint
-      def sc(d: DataFrame): DataFrame = scope.fold(d)(k => scopedTo(d, k))
-      val cur = sc(dedupFps(column)).withColumnRenamed("fp", "__fp")
-      val stored =
-        if (fs.exists(new Path(s"$target/fps")))
-          sc(spark.read.parquet(s"$target/fps"))
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField(KeyCol, LongType, nullable = false),
-            StructField("fp", StringType, nullable = true))))
-      val changed = cur.join(stored, Seq(KeyCol), "left_outer")
-        .filter(col("fp").isNull || col("fp") =!= col("__fp"))
-        .select(col(KeyCol)).localCheckpoint(true)
-      val n = changed.count()
-      if (n == 0L) return 0L
-      val p = readDedupParams(column)
-      // key-range-pruned text read — a bare semi-join would scan the
-      // whole text column to re-band 10 rows
-      val fresh = graft.dedup.Dedup.minhashBands(
-        scopedTo(df, changed).select(col(KeyCol), col(column)),
-        column, KeyCol, p)
-      val touched = touchedFiles(s"$target/bands", changed)
-      val next =
-        if (touched.isEmpty) fresh
-        else spark.read.parquet(touched.map(_.path.toString).toIndexedSeq: _*)
-          .join(changed, Seq(KeyCol), "left_anti")
-          .unionByName(fresh)
-      val nOut = math.max(1, touched.length)
-      replaceFiles(s"$target/bands", touched.map(_.path.getName)) { tmp =>
-        next.repartitionByRange(nOut, col(KeyCol)).sortWithinPartitions(KeyCol)
-          .write.mode("overwrite").parquet(tmp)
-      }
-      if (fs.exists(new Path(s"$target/fps")))
-        upsertByKeyRange(s"$target/fps", scopedTo(dedupFps(column), changed))
+  def repairDedupIndex(column: String, scope: Option[DataFrame] = None): Long =
+    maintained(DedupIndex, column) { target =>
+      if (!hasDedupIndex(column)) 0L
       else {
-        // legacy index without a sidecar: a PARTIAL fps holding only the
-        // batch's keys would flag every OTHER key as unseen forever
-        // (indexStatus all-missing, next unscoped repair re-bands the
-        // corpus). Backfill the whole key set once — but record a REAL
-        // fingerprint only for the keys this call re-banded; every other
-        // key gets fp null, which still counts as changed, because their
-        // band rows may describe older text (an unscoped repair heals
-        // them exactly once and writes their true fps then).
-        val n0 = math.max(1, spark.sparkContext.defaultParallelism / 4)
-        scopedTo(dedupFps(column), changed)
-          .unionByName(df.select(col(KeyCol))
-            .join(changed, Seq(KeyCol), "left_anti")
-            .withColumn("fp", lit(null).cast(StringType)))
-          .repartitionByRange(n0, col(KeyCol)).sortWithinPartitions(KeyCol)
-          .write.mode("overwrite").parquet(s"$target/fps")
+        // scoped repair prunes the fingerprint compare to the batch's key
+        // range (the caller knows what its upsert touched); the default
+        // full reconcile reads every fingerprint
+        def sc(d: DataFrame): DataFrame = scope.fold(d)(scopedTo(d, _))
+        val fps = s"$target/fps"
+        val hasFps = fs.exists(new Path(fps))
+        repairByFingerprint(s"$target/bands", sc(dedupFps(column)),
+            if (hasFps) sc(spark.read.parquet(fps)) else emptyFps) { changed =>
+          // key-range-pruned text read — a bare semi-join would scan the
+          // whole text column to re-band 10 rows
+          graft.dedup.Dedup.minhashBands(
+            scopedTo(df, changed).select(col(KeyCol), col(column)),
+            column, KeyCol, readDedupParams(column))
+        } { (changed, _) =>
+          if (hasFps) upsertByKeyRange(fps, scopedTo(dedupFps(column), changed))
+          else {
+            // legacy index without a sidecar: a PARTIAL fps holding only
+            // the batch's keys would flag every OTHER key as unseen forever
+            // (indexStatus all-missing, next unscoped repair re-bands the
+            // corpus). Backfill the whole key set once — but record a REAL
+            // fingerprint only for the keys this call re-banded; every
+            // other key gets fp null, which still counts as changed,
+            // because their band rows may describe older text (an unscoped
+            // repair heals them exactly once and writes their true fps).
+            keyClustered(scopedTo(dedupFps(column), changed)
+                .unionByName(df.select(col(KeyCol))
+                  .join(changed, Seq(KeyCol), "left_anti")
+                  .withColumn("fp", lit(null).cast(StringType))), buildFiles(0))
+              .write.mode("overwrite").parquet(fps)
+          }
+        }
       }
-      n
-    } finally writeLock.unlock()
-  }
+    }
 
   /** Fold rows the dedup index has not seen (keys above the stored
     * bands' max key) into it — O(new rows), the same watermark catch-up
     * as [[refreshKeywordIndex]]/[[embedColumn]]. Builds outright when
     * absent. Returns the number of documents banded in.
     */
-  def refreshDedupIndex(column: String): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = dedupIndexDir(column)
-      recoverSwap(target)
-      recoverFileSwap(s"$target/bands")
+  def refreshDedupIndex(column: String): Long =
+    maintained(DedupIndex, column) { target =>
       if (!hasDedupIndex(column)) {
         buildDedupIndex(column)
-        return spark.read.parquet(s"$target/bands")
-          .select(col(KeyCol)).distinct().count()
+        spark.read.parquet(s"$target/bands").select(col(KeyCol)).distinct().count()
+      } else {
+        val pending = df.filter(col(KeyCol) > watermark(s"$target/bands"))
+          .select(col(KeyCol), col(column))
+        if (pending.isEmpty) 0L
+        else appendBands(column, pending).select(col(KeyCol)).distinct().count()
       }
-      val watermark = spark.read.parquet(s"$target/bands")
-        .agg(max(col(KeyCol))).head() match {
-          // Long.MinValue, not 0: user-imported keys may be non-positive,
-          // and an empty bands table must not silently skip them
-          case r if r.isNullAt(0) => Long.MinValue
-          case r => r.getLong(0)
-        }
-      val pending = df.filter(col(KeyCol) > watermark)
-        .select(col(KeyCol), col(column))
-      if (pending.isEmpty) return 0L
-      val p = readDedupParams(column)
-      val bands = graft.dedup.Dedup.minhashBands(pending, column, KeyCol, p)
-        .localCheckpoint(true)
-      bands.write.mode("append").parquet(s"$target/bands")
-      // track what text the new keys were banded from, so a later
-      // repairDedupIndex doesn't flag them as unseen
-      if (fs.exists(new Path(s"$target/fps")))
-        pending.select(col(KeyCol),
-            md5(coalesce(col(column).cast(StringType), lit(""))).as("fp"))
-          .write.mode("append").parquet(s"$target/fps")
-      bands.select(col(KeyCol)).distinct().count()
-    } finally writeLock.unlock()
+    }
+
+  /** Band `pending` rows into the dedup index and record their
+    * fingerprints, so a later [[repairDedupIndex]] doesn't flag them as
+    * unseen. Appended keys are monotone, so the appends stay
+    * key-clustered. Pre-fps legacy indexes stay fps-less: a partial
+    * sidecar would flag every old key as unseen. Returns the bands.
+    */
+  private def appendBands(column: String, pending: DataFrame): DataFrame = {
+    val target = dedupIndexDir(column)
+    val bands = graft.dedup.Dedup.minhashBands(pending, column, KeyCol,
+      readDedupParams(column)).localCheckpoint(true)
+    bands.write.mode("append").parquet(s"$target/bands")
+    if (fs.exists(new Path(s"$target/fps")))
+      pending.select(col(KeyCol),
+          md5(coalesce(col(column).cast(StringType), lit(""))).as("fp"))
+        .write.mode("append").parquet(s"$target/fps")
+    bands
   }
 
   // --- persistent novelty store ------------------------------------------
@@ -1642,17 +1677,13 @@ class Collection private[core] (
   // append-only — [[deleteKeys]] does NOT erase grams: novelty asks "has
   // this corpus EVER seen this content", and re-ingesting deleted
   // boilerplate must not come back looking novel. That retention choice
-  // is what keeps the store a LOG rather than a sixth index family
-  // needing repair/compact parity; the trade (a deleted doc's grams
-  // still suppress novelty) errs conservative for an admission gate.
+  // is why its registry entry has no fingerprints, deletes, repair or
+  // compact; the trade (a deleted doc's grams still suppress novelty)
+  // errs conservative for an admission gate.
 
-  def noveltyStoreDir(column: String): String =
-    s"$dir/${config.index_dir}/${column}_nv"
+  def noveltyStoreDir(column: String): String = familyDir(NoveltyStore, column)
 
-  private def hasNoveltyStore(column: String): Boolean = {
-    recoverSwap(noveltyStoreDir(column))
-    fs.exists(new Path(s"${noveltyStoreDir(column)}/params"))
-  }
+  private def hasNoveltyStore(column: String): Boolean = built(NoveltyStore, column)
 
   private def noveltyN(column: String): Int =
     spark.read.parquet(s"${noveltyStoreDir(column)}/params")
@@ -1663,31 +1694,17 @@ class Collection private[core] (
     * `params` (the gram width) written LAST so a half-written fresh
     * build reads as "no store" (the dedup-index commit discipline).
     */
-  def buildNoveltyStore(column: String, n: Int = 3, nFiles: Int = 0): Unit = {
-    Identifiers.validate(column)
-    require(n >= 1, s"n must be >= 1, got $n")
-    writeLock.lock()
-    try {
-      val target = noveltyStoreDir(column)
-      recoverSwap(target)
-      def build(where: String): Unit = {
-        val files = if (nFiles > 0) nFiles
-                    else math.max(1, spark.sparkContext.defaultParallelism / 4)
-        graft.dedup.Dedup.ngramFingerprints(
-            df.select(col(KeyCol), col(column)), column, KeyCol, n)
-          .repartitionByRange(files, col(KeyCol))
-          .sortWithinPartitions(KeyCol)
+  def buildNoveltyStore(column: String, n: Int = 3, nFiles: Int = 0): Unit =
+    maintained(NoveltyStore, column) { target =>
+      require(n >= 1, s"n must be >= 1, got $n")
+      stagedBuild(target) { where =>
+        keyClustered(graft.dedup.Dedup.ngramFingerprints(
+            df.select(col(KeyCol), col(column)), column, KeyCol, n), buildFiles(nFiles))
           .write.mode("overwrite").parquet(s"$where/grams")
         import spark.implicits._
         Seq(n).toDF("n").write.mode("overwrite").parquet(s"$where/params")
       }
-      if (!fs.exists(new Path(target))) build(target)
-      else writeAndSwap(target) { tmp =>
-        build(tmp)
-        fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      }
-    } finally writeLock.unlock()
-  }
+    }
 
   /** Fold newly ingested rows' grams into the store (max-key watermark,
     * the [[refreshDedupIndex]] discipline; in-place text rewrites stay
@@ -1695,31 +1712,20 @@ class Collection private[core] (
     * Returns the number of documents folded; bootstraps a missing
     * store with the default width.
     */
-  def refreshNoveltyStore(column: String): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = noveltyStoreDir(column)
-      recoverSwap(target)
-      if (!hasNoveltyStore(column)) {
-        buildNoveltyStore(column)
-        return count()
+  def refreshNoveltyStore(column: String): Long =
+    maintained(NoveltyStore, column) { target =>
+      if (!hasNoveltyStore(column)) { buildNoveltyStore(column); count() }
+      else {
+        val pending = df.filter(col(KeyCol) > watermark(s"$target/grams"))
+          .select(col(KeyCol), col(column))
+        val nPending = pending.count()
+        if (nPending > 0)
+          graft.dedup.Dedup.ngramFingerprints(pending, column, KeyCol,
+              noveltyN(column))
+            .write.mode("append").parquet(s"$target/grams")
+        nPending
       }
-      val watermark = spark.read.parquet(s"$target/grams")
-        .agg(max(col(KeyCol))).head() match {
-          case r if r.isNullAt(0) => Long.MinValue
-          case r => r.getLong(0)
-        }
-      val pending = df.filter(col(KeyCol) > watermark)
-        .select(col(KeyCol), col(column))
-      val nPending = pending.count()
-      if (nPending == 0) return 0L
-      graft.dedup.Dedup.ngramFingerprints(pending, column, KeyCol,
-          noveltyN(column))
-        .write.mode("append").parquet(s"$target/grams")
-      nPending
-    } finally writeLock.unlock()
-  }
+    }
 
   /** Score an incoming batch against the stored grams —
     * [[graft.dedup.Dedup.ngramNoveltyAgainst]] with the store's width:
@@ -1738,74 +1744,23 @@ class Collection private[core] (
         .select(col("fp")))
   }
 
-  /** Streaming twin of [[refreshDedupIndex]]: watch the data directory
-    * and fold newly appended rows' MinHash bands into the persistent
-    * dedup index continuously, so [[checkDuplicates]] always sees the
-    * current corpus without a manual refresh. Same watermark discipline
-    * as [[keywordIndexStream]]: a cached max-banded-key filters every
-    * micro-batch, so file replays (restart, checkpoint loss, `compact()`
-    * rewrites re-delivering files) drop their already-banded keys.
-    * Crash between the bands and fps appends is conservative: the keys'
-    * fps rows are missing, so [[repairDedupIndex]] flags them changed
-    * and re-bands idempotently (the band COW replaces, never doubles).
-    * In-place text REWRITES are repair's job (fingerprint-driven) — the
-    * same contract as the embed and keyword streams. Bootstraps by
-    * building the index (with `p`) when absent; an existing index keeps
-    * its stored params.
+  /** Streaming twin of [[refreshDedupIndex]] ([[watermarkStream]]): fold
+    * newly appended rows' MinHash bands into the persistent dedup index
+    * continuously, so [[checkDuplicates]] always sees the current corpus
+    * without a manual refresh. A crash between the bands and fps appends
+    * is conservative: the keys' fps rows are missing, so
+    * [[repairDedupIndex]] flags them changed and re-bands idempotently
+    * (the band COW replaces, never doubles). Bootstraps by building the
+    * index (with `p`) when absent; an existing index keeps its stored
+    * params.
     */
   def dedupIndexStream(column: String, checkpointDir: String,
                        p: graft.dedup.Dedup.MinHashParams =
-                         graft.dedup.Dedup.MinHashParams())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    Identifiers.validate(column)
-    val target = dedupIndexDir(column)
-    def bandsMax(): Long =
-      spark.read.parquet(s"$target/bands").agg(max(col(KeyCol))).head() match {
-        case r if r.isNullAt(0) => Long.MinValue
-        case r => r.getLong(0)
-      }
-    @volatile var maxSeen = Long.MinValue
-    @volatile var seeded = false
-    spark.readStream.schema(df.schema)
-      .option("ignoreMissingFiles", "true").parquet(dataDir)
-      .select(col(KeyCol), col(column))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeLock.lock()
-        try {
-          recoverSwap(target)
-          recoverFileSwap(s"$target/bands")
-          recoverFileSwap(s"$target/fps")
-          if (!hasDedupIndex(column)) {
-            buildDedupIndex(column, p)
-            maxSeen = bandsMax(); seeded = true
-          } else {
-            if (!seeded) { maxSeen = bandsMax(); seeded = true }
-            val pending = batch.filter(col(KeyCol) > maxSeen)
-            val mx = pending.agg(max(col(KeyCol))).head()
-            if (!mx.isNullAt(0)) {
-              val params = readDedupParams(column)
-              // appended keys are monotone, so the band/fps appends stay
-              // key-clustered: repair's footer-range planning keeps pruning
-              val bands = graft.dedup.Dedup
-                .minhashBands(pending, column, KeyCol, params)
-                .localCheckpoint(true)
-              bands.write.mode("append").parquet(s"$target/bands")
-              // pre-fps legacy indexes stay fps-less (same as refresh): a
-              // partial sidecar would flag every old key as unseen
-              if (fs.exists(new Path(s"$target/fps")))
-                pending.select(col(KeyCol),
-                    md5(coalesce(col(column).cast(StringType), lit("")))
-                      .as("fp"))
-                  .write.mode("append").parquet(s"$target/fps")
-              maxSeen = mx.getLong(0)
-            }
-          }
-        } finally writeLock.unlock()
-      }
-      .start()
-  }
+                         graft.dedup.Dedup.MinHashParams()): StreamingQuery =
+    watermarkStream(DedupIndex, column, checkpointDir,
+        () => watermark(s"${dedupIndexDir(column)}/bands")) {
+      buildDedupIndex(column, p)
+    } { pending => appendBands(column, pending) }
 
   /** Check an incoming batch against the indexed corpus: `(corpus_key,
     * new_key, jaccard)` for every batch row whose exact shingle Jaccard
@@ -1852,15 +1807,11 @@ class Collection private[core] (
   // directory-per-list layout cannot express without a swap window per
   // directory.
 
-  def annIndexDir(column: String): String =
-    s"$dir/${config.index_dir}/${column}_ann"
+  def annIndexDir(column: String): String = familyDir(AnnIndex, column)
 
   private def annListsDir(column: String): String = s"${annIndexDir(column)}/lists"
 
-  private def hasAnnIndex(column: String): Boolean = {
-    recoverSwap(annIndexDir(column))
-    fs.exists(new Path(s"${annIndexDir(column)}/params"))
-  }
+  private def hasAnnIndex(column: String): Boolean = built(AnnIndex, column)
 
   /** Upstream fingerprint view for the ANN index: one `(key, fp)` row per
     * document from the VECTOR index (the table the ANN index accelerates)
@@ -1873,16 +1824,25 @@ class Collection private[core] (
     val raw = indexRaw(column).getOrElse(
       throw new IllegalStateException(
         s"no embedding index for '$column'; run embedColumn first"))
-    val fp = if (raw.schema.fieldNames.contains("fp")) col("fp")
-             else lit(null).cast(StringType).as("fp")
     // scope restricts BEFORE the per-key dedup AND at file granularity:
     // a filter on top of dropDuplicates does not reliably push below the
     // Deduplicate node, and a pushed filter still opens every file's
     // footer — scopedRead plans the touched files driver-side instead
-    val src = scope.fold(raw.select(col(KeyCol), fp.as("fp")))(k =>
-      scopedRead(indexDir(column), k).select(col(KeyCol), fp.as("fp")))
-    src.dropDuplicates(KeyCol)
+    vectorFps(scope.fold(raw)(scopedRead(indexDir(column), _)))
   }
+
+  /** One `(key, fp)` row per key of stored vector-index rows (a chunked
+    * index repeats the per-document fp on every chunk row); rows indexed
+    * before the fingerprint column existed read fp null.
+    */
+  private def vectorFps(stored: DataFrame): DataFrame = {
+    val fp = if (stored.schema.fieldNames.contains("fp")) col("fp")
+             else lit(null).cast(StringType)
+    stored.select(col(KeyCol), fp.as("fp")).dropDuplicates(KeyCol)
+  }
+
+  private[core] def vectorFpsOf(column: String): Option[DataFrame] =
+    indexRaw(column).map(vectorFps)
 
   /** `(key, fp, list_ids)` sidecar rows for a batch: fingerprints joined
     * with the batch's list assignments. A chunked document's vectors can
@@ -2052,12 +2012,8 @@ class Collection private[core] (
     * deterministic sample as the centroids; `dim % pqM` must be 0.
     */
   def buildAnnIndex(column: String, nLists: Int = 0, iters: Int = 10,
-                    sampleN: Int = 10000, nFiles: Int = 0, pqM: Int = 0): Unit = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = annIndexDir(column)
-      recoverSwap(target)
+                    sampleN: Int = 10000, nFiles: Int = 0, pqM: Int = 0): Unit =
+    maintained(AnnIndex, column) { target =>
       val emb = embeddings(column)
       // nLists = 0 (default) sizes lists by the sqrt rule so probed work
       // stays linear as the corpus grows (Ann.autoLists; 16 at fixture
@@ -2069,9 +2025,8 @@ class Collection private[core] (
         if (pqM <= 0) None
         else Some(graft.search.Ann.pqTrain(emb, KeyCol, "embedding",
           m = pqM, iters = iters, sampleN = sampleN))
-      def build(where: String): Unit = {
-        val n = if (nFiles > 0) nFiles
-                else math.max(1, spark.sparkContext.defaultParallelism / 4)
+      stagedBuild(target) { where =>
+        val n = buildFiles(nFiles)
         annClustered(annRows(emb, centers, cb), n)
           .write.mode("overwrite").parquet(s"$where/lists")
         annCentersDf(centers).write.mode("overwrite").parquet(s"$where/centroids")
@@ -2081,9 +2036,8 @@ class Collection private[core] (
         // same footer-range copy-on-write as the lists; list_ids come
         // from the just-written lists (a narrow (key, list_id) read, no
         // re-assignment)
-        annSidecar(annUpstreamFps(column),
-            spark.read.parquet(s"$where/lists").select(col(KeyCol), col("list_id")))
-          .repartitionByRange(n, col(KeyCol)).sortWithinPartitions(KeyCol)
+        keyClustered(annSidecar(annUpstreamFps(column),
+            spark.read.parquet(s"$where/lists").select(col(KeyCol), col("list_id"))), n)
           .write.mode("overwrite").parquet(s"$where/fps")
         import spark.implicits._
         // assignment quality at build time — indexStatus recomputes it on
@@ -2094,13 +2048,7 @@ class Collection private[core] (
           .toDF("n_lists", "iters", "sample_n", "pq_m", "build_drift")
           .write.mode("overwrite").parquet(s"$where/params")
       }
-      if (!fs.exists(new Path(target))) build(target)
-      else writeAndSwap(target) { tmp =>
-        build(tmp)
-        fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      }
-    } finally writeLock.unlock()
-  }
+    }
 
   /** ANN top-k page over `column` through the persistent IVF index:
     * probe the `nProbe` nearest centroid lists, score only their members,
@@ -2126,8 +2074,7 @@ class Collection private[core] (
       case Some(p) => searchFiltered(column, query, limit, embedder, p)
       case None => search(column, query, limit, embedder)
     }
-    recoverSwap(annListsDir(column))
-    recoverFileSwap(annListsDir(column))
+    healTable(annListsDir(column))
     fetchHits(annPage(column, embedder.embedOne(query), limit, nProbe,
       predicate, fetchK), column)
   }
@@ -2188,8 +2135,7 @@ class Collection private[core] (
     Identifiers.validate(column)
     require(k >= 1 && nQueries >= 1, s"need k, nQueries >= 1; got $k, $nQueries")
     require(hasAnnIndex(column), s"no ANN index for '$column' — buildAnnIndex first")
-    recoverSwap(annListsDir(column))
-    recoverFileSwap(annListsDir(column))
+    healTable(annListsDir(column))
     val emb = embeddings(column)
     val queries = emb
       .orderBy(md5(col(KeyCol).cast("string")), col(KeyCol)).limit(nQueries)
@@ -2273,8 +2219,7 @@ class Collection private[core] (
       val rows = Seq.newBuilder[TierStats]
       rows += measure("exact")(qv => graft.search.Search.topK(emb, qv, k))
       if (hasAnnIndex(column)) {
-        recoverSwap(annListsDir(column))
-        recoverFileSwap(annListsDir(column))
+        healTable(annListsDir(column))
         val name = if (annPqM(column) > 0) "ivf-pq" else "ivf"
         rows += measure(s"$name(nProbe=$nProbe)")(qv =>
           annPage(column, qv, k, nProbe, None, fetchK))
@@ -2293,33 +2238,32 @@ class Collection private[core] (
     * standard IVF append; rebuild when drift warrants it). Builds
     * outright when absent. Returns the number of vectors folded in.
     */
-  def refreshAnnIndex(column: String): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = annIndexDir(column)
-      recoverSwap(target)
-      recoverSwap(annListsDir(column))
-      recoverFileSwap(annListsDir(column))
+  def refreshAnnIndex(column: String): Long =
+    maintained(AnnIndex, column) { _ =>
       if (!hasAnnIndex(column)) {
         buildAnnIndex(column)
-        return spark.read.parquet(annListsDir(column)).count()
+        spark.read.parquet(annListsDir(column)).count()
+      } else {
+        val wm = watermark(annListsDir(column))
+        val pending = embeddings(column).filter(col(KeyCol) > wm)
+        if (pending.isEmpty) 0L
+        else appendAnnRows(column, pending,
+          annUpstreamFps(column).filter(col(KeyCol) > wm)).count()
       }
-      val watermark = spark.read.parquet(annListsDir(column))
-        .agg(max(col(KeyCol))).head() match {
-          case r if r.isNullAt(0) => Long.MinValue
-          case r => r.getLong(0)
-        }
-      val pending = embeddings(column).filter(col(KeyCol) > watermark)
-      if (pending.isEmpty) return 0L
-      val centers = readAnnCenters(column)
-      val cb = if (annPqM(column) > 0) Some(readAnnCodebooks(column)) else None
-      val fresh = annRows(pending, centers, cb).localCheckpoint(true)
-      annClustered(fresh, 1).write.mode("append").parquet(annListsDir(column))
-      annSidecar(annUpstreamFps(column).filter(col(KeyCol) > watermark), fresh)
-        .write.mode("append").parquet(s"$target/fps")
-      fresh.count()
-    } finally writeLock.unlock()
+    }
+
+  /** Assign `vectors` against the STORED centroids (PQ-encoded when the
+    * index carries codebooks) and append them to the lists, their `fps`
+    * rows to the sidecar. Returns the appended lists rows.
+    */
+  private def appendAnnRows(column: String, vectors: DataFrame,
+                            fps: DataFrame): DataFrame = {
+    val centers = readAnnCenters(column)
+    val cb = if (annPqM(column) > 0) Some(readAnnCodebooks(column)) else None
+    val fresh = annRows(vectors, centers, cb).localCheckpoint(true)
+    annClustered(fresh, 1).write.mode("append").parquet(annListsDir(column))
+    annSidecar(fps, fresh).write.mode("append").parquet(s"${annIndexDir(column)}/fps")
+    fresh
   }
 
   /** Batch kNN self-join over `column`'s vectors: `(src, nbr, sim)` with
@@ -2341,8 +2285,7 @@ class Collection private[core] (
     if (!hasAnnIndex(column))
       return graft.search.Ann.knnJoinIvf(emb, KeyCol, "embedding", k,
         nLists = nLists, nProbe = nProbe)
-    recoverSwap(annListsDir(column))
-    recoverFileSwap(annListsDir(column))
+    healTable(annListsDir(column))
     val centers = readAnnCenters(column)
     val lists = spark.read.parquet(annListsDir(column))
     // full-vector lists already carry the float per chunk row — use them
@@ -2379,8 +2322,7 @@ class Collection private[core] (
     if (!hasAnnIndex(column))
       return graft.search.Ann.searchBatchIvf(queries, emb, KeyCol,
         "embedding", k, nLists = nLists, nProbe = nProbe)
-    recoverSwap(annListsDir(column))
-    recoverFileSwap(annListsDir(column))
+    healTable(annListsDir(column))
     val centers = readAnnCenters(column)
     val lists = spark.read.parquet(annListsDir(column))
     val assigned =
@@ -2425,8 +2367,7 @@ class Collection private[core] (
           threshold = threshold)
         .groupBy(col("key_a"), col("key_b"))
         .agg(max(col("cosine")).as("cosine"))
-    recoverSwap(annListsDir(column))
-    recoverFileSwap(annListsDir(column))
+    healTable(annListsDir(column))
     val kl = spark.read.parquet(annListsDir(column))
       .select(col(KeyCol), col("list_id")).distinct()
     val cand = kl.as("a").join(kl.as("b"),
@@ -2454,10 +2395,10 @@ class Collection private[core] (
     * against the STORED centroids (never retrained — IVF practice; the
     * `drift` column of [[indexStatus]] says when a rebuild is due),
     * PQ-encode when the index carries codebooks, append lists + fps
-    * sidecar. With [[keywordIndexStream]] and [[dedupIndexStream]] this
-    * completes the set: all three persistent index families maintain
-    * themselves under a live ingest. Exactly-once by the same cached
-    * max-listed-key watermark (replays, checkpoint loss and
+    * sidecar. With [[keywordIndexStream]], [[dedupIndexStream]] and
+    * [[binarySketchStream]] every keyed index family maintains itself
+    * under a live ingest ([[watermarkStream]]). Exactly-once by the same
+    * cached max-listed-key watermark (replays, checkpoint loss and
     * [[compactIndex]] rewrites re-deliver only keys the filter drops).
     * Crash between the lists and fps appends is conservative: keys
     * missing from the sidecar count as changed in [[repairAnnIndex]]
@@ -2468,60 +2409,11 @@ class Collection private[core] (
     * absent — an existing index keeps its stored geometry.
     */
   def annIndexStream(column: String, checkpointDir: String,
-                     nLists: Int = 0, pqM: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    Identifiers.validate(column)
-    val target = annIndexDir(column)
-    val srcSchema = indexRaw(column).getOrElse(throw new IllegalStateException(
-      s"no embedding index for '$column'; run embedColumn or " +
-        "embedColumnStream first")).schema
-    def listsMax(): Long =
-      spark.read.parquet(annListsDir(column)).agg(max(col(KeyCol)))
-        .head() match {
-          case r if r.isNullAt(0) => Long.MinValue
-          case r => r.getLong(0)
-        }
-    @volatile var maxSeen = Long.MinValue
-    @volatile var seeded = false
-    spark.readStream.schema(srcSchema)
-      .option("ignoreMissingFiles", "true").parquet(indexDir(column))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeLock.lock()
-        try {
-          recoverSwap(target)
-          recoverSwap(annListsDir(column))
-          recoverFileSwap(annListsDir(column))
-          recoverFileSwap(s"$target/fps")
-          if (!hasAnnIndex(column)) {
-            buildAnnIndex(column, nLists = nLists, pqM = pqM)
-            maxSeen = listsMax(); seeded = true
-          } else {
-            if (!seeded) { maxSeen = listsMax(); seeded = true }
-            val pending0 = batch.filter(col(KeyCol) > maxSeen)
-            val mx = pending0.agg(max(col(KeyCol))).head()
-            if (!mx.isNullAt(0)) {
-              val centers = readAnnCenters(column)
-              val cb = if (annPqM(column) > 0) Some(readAnnCodebooks(column))
-                       else None
-              val fresh = annRows(dequantView(pending0), centers, cb)
-                .localCheckpoint(true)
-              annClustered(fresh, 1).write.mode("append")
-                .parquet(annListsDir(column))
-              val fp = if (pending0.schema.fieldNames.contains("fp")) col("fp")
-                       else lit(null).cast(StringType).as("fp")
-              annSidecar(
-                  pending0.select(col(KeyCol), fp.as("fp"))
-                    .dropDuplicates(KeyCol), fresh)
-                .write.mode("append").parquet(s"$target/fps")
-              maxSeen = mx.getLong(0)
-            }
-          }
-        } finally writeLock.unlock()
-      }
-      .start()
-  }
+                     nLists: Int = 0, pqM: Int = 0): StreamingQuery =
+    watermarkStream(AnnIndex, column, checkpointDir,
+        () => watermark(annListsDir(column))) {
+      buildAnnIndex(column, nLists = nLists, pqM = pqM)
+    } { pending => appendAnnRows(column, dequantView(pending), vectorFps(pending)) }
 
   /** Repair the ANN index after [[upsert]] + [[reembedChanged]] rewrote
     * vectors under existing keys — the stored `(key, fp)` table is
@@ -2538,86 +2430,65 @@ class Collection private[core] (
     * anti-join removes any earlier copy). Returns the number of
     * documents re-assigned.
     */
-  def repairAnnIndex(column: String, scope: Option[DataFrame] = None): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = annIndexDir(column)
-      recoverSwap(target)
-      recoverSwap(annListsDir(column))
-      recoverFileSwap(annListsDir(column))
-      recoverFileSwap(s"$target/fps")
-      if (!hasAnnIndex(column)) return 0L
-      // change detection: full reconcile compares every fingerprint
-      // (narrow-column corpus scans); a SCOPED repair — the caller knows
-      // which keys its upsert touched — prunes both sides to the batch's
-      // key range (footer/row-group stats) before comparing
-      val cur = annUpstreamFps(column, scope).withColumnRenamed("fp", "__fp")
-      val fpsDf = spark.read.option("mergeSchema", "true").parquet(s"$target/fps")
-      val storedFps = scope.fold(fpsDf)(k => scopedRead(s"$target/fps", k))
-      val changed = cur.join(storedFps, Seq(KeyCol), "left_outer")
-        .filter(col("fp").isNull || col("__fp").isNull || col("fp") =!= col("__fp"))
-        .select(col(KeyCol)).localCheckpoint(true)
-      val n = changed.count()
-      if (n == 0L) return 0L
-      val centers = readAnnCenters(column)
-      val cb = if (annPqM(column) > 0) Some(readAnnCodebooks(column)) else None
-      // rewrite planning: only files holding a changed key's OLD row
-      // ((list_id, key) pair pruning through the sidecar); fresh rows
-      // land in new files, whatever their list
-      val touched = annTouchedLists(column, changed)
-      // the fresh vectors read is file-granular too — a bare semi-join
-      // would scan the whole (wide) embedding column
-      val fresh = annRows(dequantView(scopedRead(indexDir(column), changed)),
-        centers, cb)
-        .localCheckpoint(true)
-      val next =
-        if (touched.isEmpty) fresh
-        else spark.read.parquet(touched.map(_.path.toString).toIndexedSeq: _*)
-          .join(changed, Seq(KeyCol), "left_anti")
-          .unionByName(fresh)
-      replaceFiles(annListsDir(column), touched.map(_.path.getName)) { tmp =>
-        annClustered(next, touched.length).write.mode("overwrite").parquet(tmp)
+  def repairAnnIndex(column: String, scope: Option[DataFrame] = None): Long =
+    maintained(AnnIndex, column) { target =>
+      if (!hasAnnIndex(column)) 0L
+      else {
+        // change detection: full reconcile compares every fingerprint
+        // (narrow-column corpus scans); a SCOPED repair — the caller knows
+        // which keys its upsert touched — prunes both sides to the batch's
+        // key range (footer/row-group stats) before comparing
+        val fps = s"$target/fps"
+        repairByFingerprint(annListsDir(column), annUpstreamFps(column, scope),
+            scope.fold(spark.read.option("mergeSchema", "true").parquet(fps))(
+              scopedRead(fps, _)),
+            // rewrite planning: only files holding a changed key's OLD row
+            // ((list_id, key) pair pruning through the sidecar); fresh rows
+            // land in new files, whatever their list
+            touched = Some(annTouchedLists(column, _)), cluster = annClustered) {
+          changed =>
+            val centers = readAnnCenters(column)
+            val cb = if (annPqM(column) > 0) Some(readAnnCodebooks(column)) else None
+            // the fresh vectors read is file-granular too — a bare
+            // semi-join would scan the whole (wide) embedding column
+            annRows(dequantView(scopedRead(indexDir(column), changed)), centers, cb)
+              .localCheckpoint(true)
+        } { (changed, fresh) =>
+          upsertByKeyRange(fps,
+            annSidecar(scopedTo(annUpstreamFps(column), changed), fresh))
+        }
       }
-      upsertByKeyRange(s"$target/fps",
-        annSidecar(scopedTo(annUpstreamFps(column), changed), fresh))
-      n
-    } finally writeLock.unlock()
-  }
+    }
 
   /** Re-cluster the ANN lists table into ~`targetFileBytes` files —
     * refresh appends accumulate small, wide-range files that erode the
     * probe filter's footer pruning; same staged swap as [[compactIndex]].
     * Returns the file count written, 0 when no index.
     */
-  def compactAnnIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      if (!hasAnnIndex(column)) return 0
-      recoverSwap(annListsDir(column))
-      recoverFileSwap(annListsDir(column))
-      val totalBytes = fs.getContentSummary(new Path(annListsDir(column))).getLength
-      val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      // dropDuplicates over ALL columns: a repair that crashed between
-      // its lists swap and its fps sidecar update re-appends the same
-      // (key, list, vector/code) row on re-run — benign for serving
-      // (every read path folds per-key/pair max) but it inflates the
-      // table; compaction is where the copies fold away. Distinct chunk
-      // vectors of one document differ in their embedding/code column
-      // and are never collapsed.
-      val lists = spark.read.parquet(annListsDir(column)).dropDuplicates()
-      writeAndSwap(annListsDir(column)) { tmp =>
-        annClustered(lists, nFiles).write.mode("overwrite").parquet(tmp)
+  def compactAnnIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
+    maintained(AnnIndex, column) { target =>
+      if (!hasAnnIndex(column)) 0
+      else {
+        val listsDir = annListsDir(column)
+        val nFiles = filesFor(listsDir, targetFileBytes)
+        // dropDuplicates over ALL columns: a repair that crashed between
+        // its lists swap and its fps sidecar update re-appends the same
+        // (key, list, vector/code) row on re-run — benign for serving
+        // (every read path folds per-key/pair max) but it inflates the
+        // table; compaction is where the copies fold away. Distinct chunk
+        // vectors of one document differ in their embedding/code column
+        // and are never collapsed.
+        val lists = spark.read.parquet(listsDir).dropDuplicates()
+        writeAndSwap(listsDir)(tmp =>
+          annClustered(lists, nFiles).write.mode("overwrite").parquet(tmp))
+        // the fps sidecar accumulates one appended file per refresh/stream
+        // micro-batch FOREVER if only the lists fold — the round-10 soak
+        // caught exactly that (file count through the maintenance bound
+        // after 100 batches despite compaction)
+        compactKeyClustered(s"$target/fps", targetFileBytes)
+        nFiles
       }
-      // the fps sidecar accumulates one appended file per refresh/stream
-      // micro-batch FOREVER if only the lists fold — the round-10 soak
-      // caught exactly that (file count through the maintenance bound
-      // after 100 batches despite compaction)
-      compactKeyClustered(s"${annIndexDir(column)}/fps", targetFileBytes)
-      nFiles
-    } finally writeLock.unlock()
-  }
+    }
 
   /** Fold an append-accumulated, key-clustered table (band/fps sidecars)
     * back to a target file count: dropDuplicates (crash re-appends fold
@@ -2629,14 +2500,11 @@ class Collection private[core] (
                                   targetFileBytes: Long): Int = {
     if (!fs.exists(new Path(target))) return 0
     recoverFileSwap(target)
-    val totalBytes = fs.getContentSummary(new Path(target)).getLength
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
+    val nFiles = filesFor(target, targetFileBytes)
     val rows = spark.read.option("mergeSchema", "true").parquet(target)
       .dropDuplicates()
-    writeAndSwap(target) { tmp =>
-      rows.repartitionByRange(nFiles, col(KeyCol)).sortWithinPartitions(KeyCol)
-        .write.mode("overwrite").parquet(tmp)
-    }
+    writeAndSwap(target)(tmp =>
+      keyClustered(rows, nFiles).write.mode("overwrite").parquet(tmp))
     nFiles
   }
 
@@ -2648,17 +2516,12 @@ class Collection private[core] (
     * the small-files pressure story.
     */
   def compactDedupIndex(column: String,
-                        targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      if (!hasDedupIndex(column)) return 0
-      val t = dedupIndexDir(column)
-      recoverSwap(t)
-      compactKeyClustered(s"$t/bands", targetFileBytes) +
+                        targetFileBytes: Long = 128L * 1024 * 1024): Int =
+    maintained(DedupIndex, column) { t =>
+      if (!hasDedupIndex(column)) 0
+      else compactKeyClustered(s"$t/bands", targetFileBytes) +
         compactKeyClustered(s"$t/fps", targetFileBytes)
-    } finally writeLock.unlock()
-  }
+    }
 
   // --- binary (1-bit sign) sketch surface ---------------------------------
   //
@@ -2674,16 +2537,12 @@ class Collection private[core] (
   // watermark append and repair is the standard fingerprint-driven COW
   // rewrite — the dedup-band maintenance story applied to vectors.
 
-  def binaryIndexDir(column: String): String =
-    s"$dir/${config.index_dir}/${column}_bin"
+  def binaryIndexDir(column: String): String = familyDir(BinarySketch, column)
 
   private def binarySketchDir(column: String): String =
     s"${binaryIndexDir(column)}/sketch"
 
-  private def hasBinarySketch(column: String): Boolean = {
-    recoverSwap(binaryIndexDir(column))
-    fs.exists(new Path(s"${binaryIndexDir(column)}/params"))
-  }
+  private def hasBinarySketch(column: String): Boolean = built(BinarySketch, column)
 
   private def readBinaryDim(column: String): Int =
     spark.read.parquet(s"${binaryIndexDir(column)}/params")
@@ -2699,174 +2558,91 @@ class Collection private[core] (
     * reads as "no sketch". Chunked indexes sketch every chunk vector
     * (one row per vector, several per key); search folds per key.
     */
-  def buildBinarySketch(column: String, nFiles: Int = 0): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
+  def buildBinarySketch(column: String, nFiles: Int = 0): Long =
+    maintained(BinarySketch, column) { target =>
       val emb = embeddings(column)
       val first = emb.select(col("embedding")).limit(1).collect()
       require(first.nonEmpty,
         s"no embedding index for '$column'; run embedColumn first")
       val dim = first.head.getSeq[Float](0).length
-      val target = binaryIndexDir(column)
-      recoverSwap(target)
-      val n = if (nFiles > 0) nFiles
-              else math.max(1, spark.sparkContext.defaultParallelism / 4)
-      def build(where: String): Unit = {
+      val n = buildFiles(nFiles)
+      stagedBuild(target) { where =>
         import spark.implicits._
-        binaryRows(emb, dim)
-          .repartitionByRange(n, col(KeyCol)).sortWithinPartitions(KeyCol)
+        keyClustered(binaryRows(emb, dim), n)
           .write.mode("overwrite").parquet(s"$where/sketch")
-        annUpstreamFps(column)
-          .repartitionByRange(n, col(KeyCol)).sortWithinPartitions(KeyCol)
+        keyClustered(annUpstreamFps(column), n)
           .write.mode("overwrite").parquet(s"$where/fps")
         Seq((dim, graft.search.BinaryQuant.nWords(dim)))
           .toDF("dim", "n_words")
           .write.mode("overwrite").parquet(s"$where/params")
       }
-      if (!fs.exists(new Path(target))) build(target)
-      else writeAndSwap(target) { tmp =>
-        build(tmp)
-        fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      }
       spark.read.parquet(binarySketchDir(column))
         .select(col(KeyCol)).distinct().count()
-    } finally writeLock.unlock()
-  }
+    }
 
   /** Fold vectors the sketch has not seen (keys above the stored max)
     * into it — O(new rows), the watermark catch-up every other index
     * family uses. Builds outright when absent. Returns keys folded in.
     */
-  def refreshBinarySketch(column: String): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = binaryIndexDir(column)
-      recoverSwap(target)
-      recoverFileSwap(binarySketchDir(column))
-      recoverFileSwap(s"$target/fps")
-      if (!hasBinarySketch(column)) return buildBinarySketch(column)
-      val watermark = spark.read.parquet(binarySketchDir(column))
-        .agg(max(col(KeyCol))).head() match {
-          case r if r.isNullAt(0) => Long.MinValue
-          case r => r.getLong(0)
+  def refreshBinarySketch(column: String): Long =
+    maintained(BinarySketch, column) { _ =>
+      if (!hasBinarySketch(column)) buildBinarySketch(column)
+      else {
+        val pending = embeddings(column)
+          .filter(col(KeyCol) > watermark(binarySketchDir(column)))
+          .localCheckpoint(true)
+        if (pending.isEmpty) 0L
+        else {
+          appendSketch(column, pending,
+            annUpstreamFps(column, Some(pending.select(col(KeyCol)))))
+          pending.select(col(KeyCol)).distinct().count()
         }
-      val pending = embeddings(column).filter(col(KeyCol) > watermark)
-        .localCheckpoint(true)
-      if (pending.isEmpty) return 0L
-      val dim = readBinaryDim(column)
-      binaryRows(pending, dim).write.mode("append").parquet(binarySketchDir(column))
-      annUpstreamFps(column, Some(pending.select(col(KeyCol))))
-        .write.mode("append").parquet(s"$target/fps")
-      pending.select(col(KeyCol)).distinct().count()
-    } finally writeLock.unlock()
+      }
+    }
+
+  /** Append `vectors`' sign words to the sketch and `fps` to its sidecar. */
+  private def appendSketch(column: String, vectors: DataFrame, fps: DataFrame): Unit = {
+    binaryRows(vectors, readBinaryDim(column))
+      .write.mode("append").parquet(binarySketchDir(column))
+    fps.write.mode("append").parquet(s"${binaryIndexDir(column)}/fps")
   }
 
-  /** Fingerprint-driven repair after [[upsert]]/re-embed rewrote vectors
-    * under existing keys: changed keys (stored fps vs the vector
-    * index's current fps; unseen/legacy-null rows count as changed)
-    * have their sketch files rewritten through the file-granular COW
-    * swap — only footer-range-intersecting files are touched, fps
-    * follows through [[upsertByKeyRange]]. Returns keys re-sketched.
+  /** Fingerprint-driven repair ([[repairByFingerprint]]) after
+    * [[upsert]]/re-embed rewrote vectors under existing keys: changed
+    * keys (stored fps vs the vector index's current fps) have their
+    * sketch files rewritten; fps follows through [[upsertByKeyRange]].
+    * Returns keys re-sketched.
     */
-  def repairBinarySketch(column: String, scope: Option[DataFrame] = None): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = binaryIndexDir(column)
-      recoverSwap(target)
-      recoverFileSwap(binarySketchDir(column))
-      recoverFileSwap(s"$target/fps")
-      if (!hasBinarySketch(column)) return 0L
-      val cur = annUpstreamFps(column, scope).withColumnRenamed("fp", "__fp")
-      val stored = scope.fold(spark.read.parquet(s"$target/fps"))(k =>
-        scopedRead(s"$target/fps", k))
-      val changed = cur.join(stored, Seq(KeyCol), "left_outer")
-        .filter(col("fp").isNull || col("__fp").isNull ||
-          col("fp") =!= col("__fp"))
-        .select(col(KeyCol)).localCheckpoint(true)
-      val n = changed.count()
-      if (n == 0L) return 0L
-      val dim = readBinaryDim(column)
-      val fresh = binaryRows(dequantView(scopedRead(indexDir(column), changed)),
-        dim)
-      val touched = touchedFiles(binarySketchDir(column), changed)
-      val next =
-        if (touched.isEmpty) fresh
-        else spark.read.parquet(touched.map(_.path.toString).toIndexedSeq: _*)
-          .join(changed, Seq(KeyCol), "left_anti")
-          .unionByName(fresh)
-      replaceFiles(binarySketchDir(column), touched.map(_.path.getName)) { tmp =>
-        next.repartitionByRange(math.max(1, touched.length), col(KeyCol))
-          .sortWithinPartitions(KeyCol).write.mode("overwrite").parquet(tmp)
-      }
-      // scopedTo, not a bare semi-join: the key-range filter pushes below
-      // the fp dedup into the vector-index scan, so a 10-key repair reads
-      // 10 keys' row groups — the ScaleProbe-audited O(touched) shape
-      upsertByKeyRange(s"$target/fps", annUpstreamFps(column, Some(changed)))
-      n
-    } finally writeLock.unlock()
-  }
-
-  /** Streaming twin of [[refreshBinarySketch]]: watch the VECTOR index
-    * directory and fold newly appended vectors' sign words into the
-    * sketch continuously — the same watermark discipline as
-    * [[annIndexStream]] (a cached max-sketched-key filters every
-    * micro-batch, so file replays drop already-sketched keys). A crash
-    * between the sketch and fps appends is conservative: the keys' fps
-    * rows are missing, so [[repairBinarySketch]] flags them changed and
-    * re-sketches idempotently (the COW rewrite replaces; serving's
-    * per-key min fold is duplicate-tolerant meanwhile). Bootstraps by
-    * building the sketch when absent.
-    */
-  def binarySketchStream(column: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    Identifiers.validate(column)
-    val target = binaryIndexDir(column)
-    val srcSchema = indexRaw(column).getOrElse(throw new IllegalStateException(
-      s"no embedding index for '$column'; run embedColumn or " +
-        "embedColumnStream first")).schema
-    def sketchMax(): Long =
-      spark.read.parquet(binarySketchDir(column)).agg(max(col(KeyCol)))
-        .head() match {
-          case r if r.isNullAt(0) => Long.MinValue
-          case r => r.getLong(0)
+  def repairBinarySketch(column: String, scope: Option[DataFrame] = None): Long =
+    maintained(BinarySketch, column) { target =>
+      if (!hasBinarySketch(column)) 0L
+      else {
+        val fps = s"$target/fps"
+        repairByFingerprint(binarySketchDir(column), annUpstreamFps(column, scope),
+            scope.fold(spark.read.parquet(fps))(scopedRead(fps, _))) { changed =>
+          binaryRows(dequantView(scopedRead(indexDir(column), changed)),
+            readBinaryDim(column))
+        } { (changed, _) =>
+          // scopedRead-pruned, not a bare semi-join: a 10-key repair reads
+          // 10 keys' files — the ScaleProbe-audited O(touched) shape
+          upsertByKeyRange(fps, annUpstreamFps(column, Some(changed)))
         }
-    @volatile var maxSeen = Long.MinValue
-    @volatile var seeded = false
-    spark.readStream.schema(srcSchema)
-      .option("ignoreMissingFiles", "true").parquet(indexDir(column))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeLock.lock()
-        try {
-          recoverSwap(target)
-          recoverFileSwap(binarySketchDir(column))
-          recoverFileSwap(s"$target/fps")
-          if (!hasBinarySketch(column)) {
-            buildBinarySketch(column)
-            maxSeen = sketchMax(); seeded = true
-          } else {
-            if (!seeded) { maxSeen = sketchMax(); seeded = true }
-            val pending = batch.filter(col(KeyCol) > maxSeen)
-            val mx = pending.agg(max(col(KeyCol))).head()
-            if (!mx.isNullAt(0)) {
-              val dim = readBinaryDim(column)
-              binaryRows(dequantView(pending), dim)
-                .write.mode("append").parquet(binarySketchDir(column))
-              val fp = if (pending.schema.fieldNames.contains("fp")) col("fp")
-                       else lit(null).cast(StringType).as("fp")
-              pending.select(col(KeyCol), fp.as("fp")).dropDuplicates(KeyCol)
-                .write.mode("append").parquet(s"$target/fps")
-              maxSeen = mx.getLong(0)
-            }
-          }
-        } finally writeLock.unlock()
       }
-      .start()
-  }
+    }
+
+  /** Streaming twin of [[refreshBinarySketch]] ([[watermarkStream]] over
+    * the VECTOR index directory). A crash between the sketch and fps
+    * appends is conservative: the keys' fps rows are missing, so
+    * [[repairBinarySketch]] flags them changed and re-sketches
+    * idempotently (the COW rewrite replaces; serving's per-key min fold
+    * is duplicate-tolerant meanwhile). Bootstraps by building the sketch
+    * when absent.
+    */
+  def binarySketchStream(column: String, checkpointDir: String): StreamingQuery =
+    watermarkStream(BinarySketch, column, checkpointDir,
+        () => watermark(binarySketchDir(column))) {
+      buildBinarySketch(column)
+    } { pending => appendSketch(column, dequantView(pending), vectorFps(pending)) }
 
   /** Re-cluster the sketch into ~`targetFileBytes` files — heals refresh
     * small-file growth and folds away duplicate rows from a repair that
@@ -2875,19 +2651,15 @@ class Collection private[core] (
     * table). Same discipline as [[compactAnnIndex]].
     */
   def compactBinarySketch(column: String,
-                          targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      if (!hasBinarySketch(column)) return 0
-      // the sketch IS a key-clustered append log — same fold as the
-      // band/fps sidecars (and mergeSchema-tolerant, unlike the inline
-      // copy this replaced)
-      val n = compactKeyClustered(binarySketchDir(column), targetFileBytes)
-      compactKeyClustered(s"${binaryIndexDir(column)}/fps", targetFileBytes)
-      n
-    } finally writeLock.unlock()
-  }
+                          targetFileBytes: Long = 128L * 1024 * 1024): Int =
+    maintained(BinarySketch, column) { target =>
+      if (!hasBinarySketch(column)) 0
+      else {
+        val n = compactKeyClustered(binarySketchDir(column), targetFileBytes)
+        compactKeyClustered(s"$target/fps", targetFileBytes)
+        n
+      }
+    }
 
   /** Two-stage binary serving: Hamming over the stored sketch ranks
     * `fetchK` candidate KEYS (per-key min over chunk vectors), exact
@@ -2927,9 +2699,12 @@ class Collection private[core] (
 
   // --- delete (right-to-be-forgotten) ------------------------------------
 
-  /** Erase rows by `_key` from the collection AND every persisted index
-    * beside it — vector/chunked embeddings, keyword postings, dedup
-    * bands, ANN lists — the removal pass a production corpus needs
+  /** Erase rows by `_key` from the collection AND every keyed index
+    * beside it — each [[IndexFamily]]'s `deletes` tables and `erase` step:
+    * vector/chunked embeddings, keyword postings, dedup bands, ANN lists,
+    * binary sketch and their fps sidecars (the append-only novelty store
+    * and the trained tokenizer/classifier are not keyed by row and stay)
+    * — the removal pass a production corpus needs
     * (takedowns, privacy erasure, retractions), built from the same
     * partition-scoped machinery as [[upsert]]:
     *
@@ -2967,55 +2742,33 @@ class Collection private[core] (
         .distinct().localCheckpoint(true)
       val n = df.join(del, Seq(KeyCol), "left_semi").count()
       deleteByKeyRange(dataDir, del)
-      // ANN before the vector index: its rewrite planning reads the
-      // vector index (current-assignment pairs, see annTouchedLists) —
-      // content can no longer surface either way, data went first
-      indexStructures().sortBy { case (_, kind) => if (kind == "ann") 0 else 1 }
-        .foreach {
-        case (c0, "vector") => deleteByKeyRange(indexDir(c0), del)
-        case (c0, "kw") =>
-          recoverSwap(keywordIndexDir(c0))
-          if (hasKeywordIndex(c0))
-            graft.search.Keyword.deleteFromIndex(del, keywordIndexDir(c0))
-        case (c0, "dd") =>
-          val target = dedupIndexDir(c0)
-          recoverSwap(target)
-          recoverFileSwap(s"$target/bands")
-          if (hasDedupIndex(c0)) {
-            deleteByKeyRange(s"$target/bands", del)
-            if (fs.exists(new Path(s"$target/fps")))
-              deleteByKeyRange(s"$target/fps", del)
+      // vector-upstream structures before the vector index: ANN's rewrite
+      // planning reads it (current-assignment pairs, see annTouchedLists)
+      // — content can no longer surface either way, data went first
+      indexStructures().sortBy(_._2.upstream != Upstream.Vectors)
+        .filter { case (_, f) => f.deletes.nonEmpty || f.erase.isDefined }
+        .foreach { case (c0, f) =>
+          heal(f, c0)
+          if (built(f, c0)) {
+            f.erase.foreach(_(this, c0, del))
+            f.deletes.map(table(f, c0, _)).filter(t => fs.exists(new Path(t)))
+              .foreach(deleteByKeyRange(_, del))
           }
-        case (c0, "bin") =>
-          val target = binaryIndexDir(c0)
-          recoverSwap(target)
-          recoverFileSwap(binarySketchDir(c0))
-          if (hasBinarySketch(c0)) {
-            deleteByKeyRange(binarySketchDir(c0), del)
-            if (fs.exists(new Path(s"$target/fps")))
-              deleteByKeyRange(s"$target/fps", del)
-          }
-        case (c0, "ann") =>
-          val target = annIndexDir(c0)
-          recoverSwap(target)
-          recoverSwap(annListsDir(c0))
-          recoverFileSwap(annListsDir(c0))
-          if (hasAnnIndex(c0)) {
-            val touched = annTouchedLists(c0, del)
-            if (touched.nonEmpty) {
-              val next = spark.read.parquet(touched.map(_.path.toString).toIndexedSeq: _*)
-                .join(del, Seq(KeyCol), "left_anti")
-              replaceFiles(annListsDir(c0), touched.map(_.path.getName)) { tmp =>
-                annClustered(next, touched.length).write.mode("overwrite").parquet(tmp)
-              }
-            }
-            if (fs.exists(new Path(s"$target/fps")))
-              deleteByKeyRange(s"$target/fps", del)
-          }
-        case _ => ()
-      }
+        }
       n
     } finally writeLock.unlock()
+  }
+
+  /** ANN lists rewrite only the files covering the deleted keys' lists. */
+  private[core] def deleteAnnLists(column: String, del: DataFrame): Unit = {
+    val touched = annTouchedLists(column, del)
+    if (touched.nonEmpty) {
+      val next = spark.read.parquet(touched.map(_.path.toString): _*)
+        .join(del, Seq(KeyCol), "left_anti")
+      replaceFiles(annListsDir(column), touched.map(_.path.getName)) { tmp =>
+        annClustered(next, touched.length).write.mode("overwrite").parquet(tmp)
+      }
+    }
   }
 
   /** File-granular key deletion from a key-clustered parquet directory:
@@ -3031,8 +2784,7 @@ class Collection private[core] (
       .parquet(touched.map(_.path.toString).toIndexedSeq: _*)
       .join(del, Seq(KeyCol), "left_anti")
     replaceFiles(target, touched.map(_.path.getName)) { tmp =>
-      remaining.repartitionByRange(math.max(1, touched.length), col(KeyCol))
-        .sortWithinPartitions(KeyCol).write.mode("overwrite").parquet(tmp)
+      keyClustered(remaining, touched.length).write.mode("overwrite").parquet(tmp)
     }
   }
 
@@ -3047,8 +2799,7 @@ class Collection private[core] (
     */
   private def upsertByKeyRange(target: String, updates: DataFrame): Unit = {
     if (!fs.exists(new Path(target))) {
-      updates.repartitionByRange(1, col(KeyCol)).sortWithinPartitions(KeyCol)
-        .write.mode("overwrite").parquet(target)
+      keyClustered(updates, 1).write.mode("overwrite").parquet(target)
       return
     }
     recoverFileSwap(target)
@@ -3062,13 +2813,14 @@ class Collection private[core] (
         // the updates carry (e.g. ann fps list_ids) — old rows read null
         .unionByName(updates, allowMissingColumns = true)
     replaceFiles(target, touched.map(_.path.getName)) { tmp =>
-      next.repartitionByRange(math.max(1, touched.length), col(KeyCol))
-        .sortWithinPartitions(KeyCol).write.mode("overwrite").parquet(tmp)
+      keyClustered(next, touched.length).write.mode("overwrite").parquet(tmp)
     }
   }
 
   /** Consistency report (`fsck`) across `column`'s persisted structures:
-    * one row per structure present (vector/keyword/dedup/ann) with
+    * one row per fingerprinted structure present (every
+    * [[IndexFamily]] with a `fps` sidecar or live fingerprint view:
+    * vector/keyword/dedup/ann/binary) with
     *
     *  - `missing`: upstream rows the structure has not indexed yet (the
     *    watermark backlog a refresh/embed pass would fold in);
@@ -3078,10 +2830,11 @@ class Collection private[core] (
     *  - `orphaned`: structure rows whose key no longer exists upstream
     *    (e.g. a deletion interrupted before this structure's swap).
     *
-    * "Upstream" is the collection's text for vector/keyword/dedup and
-    * the VECTOR index for ann (an ANN list entry mirrors an embedding,
-    * not raw text — text changes surface on the vector row first, then
-    * flow to ann after `reembedChanged`). A fully synced collection
+    * "Upstream" is the family's [[Upstream]]: the collection's text for
+    * vector/keyword/dedup and the VECTOR index for ann/binary (an ANN
+    * list entry mirrors an embedding, not raw text — text changes surface
+    * on the vector row first, then flow to ann after `reembedChanged`).
+    * `drift` is set for families that track one (ann). A fully synced collection
     * reports zeros everywhere; each non-zero names exactly the
     * maintenance call that clears it (embedColumn/refresh* for missing,
     * repair* for stale, deleteKeys re-run for orphaned). Counting only —
@@ -3093,61 +2846,44 @@ class Collection private[core] (
     val cur = df.select(col(KeyCol),
         md5(coalesce(col(column).cast(StringType), lit(""))).as("__fp"))
       .localCheckpoint(true)
-    def counts(structure: String, stored: DataFrame,
-               upstream: DataFrame): (String, Long, Long, Long, Option[Double]) = {
-      val missing = upstream.join(stored, Seq(KeyCol), "left_anti").count()
-      val stale = upstream.join(stored, Seq(KeyCol))
-        .filter(col("fp").isNull || col("fp") =!= col("__fp")).count()
-      val orphaned = stored.join(upstream, Seq(KeyCol), "left_anti").count()
-      (structure, missing, stale, orphaned, None)
-    }
-    val rows = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long, Long, Option[Double])]
-    indexRaw(column).foreach { raw =>
-      val fp = if (raw.schema.fieldNames.contains("fp")) col("fp")
-               else lit(null).cast(StringType).as("fp")
-      rows += counts("vector",
-        raw.select(col(KeyCol), fp.as("fp")).dropDuplicates(KeyCol), cur)
-    }
-    if (hasKeywordIndex(column))
-      rows += counts("keyword",
-        graft.search.Keyword.liveFps(spark, keywordIndexDir(column))
-          .withColumnRenamed("key", KeyCol), cur)
-    if (hasDedupIndex(column)) {
-      recoverFileSwap(s"${dedupIndexDir(column)}/fps")
-      val fpsPath = new Path(s"${dedupIndexDir(column)}/fps")
-      val stored =
-        if (fs.exists(fpsPath)) spark.read.parquet(fpsPath.toString)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField(KeyCol, LongType, nullable = false),
-            StructField("fp", StringType, nullable = true))))
-      rows += counts("dedup", stored, cur)
-    }
-    if (hasAnnIndex(column)) {
-      recoverFileSwap(s"${annIndexDir(column)}/fps")
-      val base = counts("ann",
-        spark.read.parquet(s"${annIndexDir(column)}/fps"),
-        annUpstreamFps(column).withColumnRenamed("fp", "__fp"))
-      // centroid drift: current sample's assignment distance over the
-      // build-time baseline. ~1.0 = the appended data still matches the
-      // trained centroids; growing >1 = refresh has folded in data the
-      // centroids never saw — rebuildAnnIndex (retrain) lowers it back.
-      // Refresh deliberately never retrains, so this is the one signal.
-      val drift = annBuildDrift(column).filter(_ > 0).map { b =>
-        graft.search.Ann.assignmentDrift(
-          embeddings(column), KeyCol, "embedding", readAnnCenters(column)) / b
+    val rows = IndexFamily.all.flatMap { f =>
+      storedFps(f, column).map { stored =>
+        val upstream =
+          if (f.upstream == Upstream.Vectors)
+            annUpstreamFps(column).withColumnRenamed("fp", "__fp")
+          else cur
+        val missing = upstream.join(stored, Seq(KeyCol), "left_anti").count()
+        val stale = upstream.join(stored, Seq(KeyCol))
+          .filter(col("fp").isNull || col("fp") =!= col("__fp")).count()
+        val orphaned = stored.join(upstream, Seq(KeyCol), "left_anti").count()
+        (f.structure, missing, stale, orphaned, f.drift.flatMap(_(this, column)))
       }
-      rows += base.copy(_5 = drift)
     }
-    if (hasBinarySketch(column)) {
-      recoverFileSwap(s"${binaryIndexDir(column)}/fps")
-      rows += counts("binary",
-        spark.read.parquet(s"${binaryIndexDir(column)}/fps"),
-        annUpstreamFps(column).withColumnRenamed("fp", "__fp"))
-    }
-    rows.toSeq.toDF("structure", "missing", "stale", "orphaned", "drift")
+    rows.toDF("structure", "missing", "stale", "orphaned", "drift")
   }
+
+  /** The family's stored `(key, fp)` view, None when the structure is
+    * absent or keeps no fingerprints. A legacy dedup index without its
+    * sidecar reads as empty (every key missing).
+    */
+  private def storedFps(f: IndexFamily, column: String): Option[DataFrame] =
+    f.liveFps.fold(f.fps.filter(_ => built(f, column)).map { t =>
+      val path = table(f, column, t)
+      recoverFileSwap(path)
+      if (fs.exists(new Path(path))) spark.read.parquet(path) else emptyFps
+    })(_(this, column))
+
+  /** ANN centroid drift: the current table's assignment distance over the
+    * build-time baseline. ~1.0 = the appended data still matches the
+    * trained centroids; growing >1 = refresh has folded in data the
+    * centroids never saw — a rebuild (retrain) lowers it back. Refresh
+    * deliberately never retrains, so this is the one signal.
+    */
+  private[core] def annDrift(column: String): Option[Double] =
+    annBuildDrift(column).filter(_ > 0).map { b =>
+      graft.search.Ann.assignmentDrift(
+        embeddings(column), KeyCol, "embedding", readAnnCenters(column)) / b
+    }
 
   // ---- trained tokenizer artifact (BPE merge table) -------------------
   //
@@ -3158,13 +2894,9 @@ class Collection private[core] (
   // composition moves). The table is KB-sized and broadcasts into the
   // row-local serving apply.
 
-  def tokenizerDir(column: String): String =
-    s"$dir/${config.index_dir}/${column}_tok"
+  def tokenizerDir(column: String): String = familyDir(Tokenizer, column)
 
-  def hasTokenizer(column: String): Boolean = {
-    recoverSwap(tokenizerDir(column))
-    fs.exists(new Path(s"${tokenizerDir(column)}/merges"))
-  }
+  def hasTokenizer(column: String): Boolean = built(Tokenizer, column)
 
   /** Train a BPE merge table over `column` and persist it — fresh build
     * writes in place, retrain is a staged swap ([[writeAndSwap]], the
@@ -3175,29 +2907,19 @@ class Collection private[core] (
     * number of learned rules.
     */
   def trainTokenizer(column: String, numMerges: Int = 200,
-                     minCount: Long = 2L): Int = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = tokenizerDir(column)
-      recoverSwap(target)
+                     minCount: Long = 2L): Int =
+    maintained(Tokenizer, column) { target =>
       val merges =
         graft.functions.Bpe.learn(df.select(col(column)), column,
           numMerges, minCount)
       import spark.implicits._
-      def build(where: String): Unit =
+      stagedBuild(target)(where =>
         merges.zipWithIndex
           .map { case (m, i) => ((i + 1).toLong, m.a, m.b, m.count) }
           .toDF("rank", "sym_a", "sym_b", "cnt")
-          .coalesce(1).write.mode("overwrite").parquet(s"$where/merges")
-      if (!fs.exists(new Path(target))) build(target)
-      else writeAndSwap(target) { tmp =>
-        build(tmp)
-        fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      }
+          .coalesce(1).write.mode("overwrite").parquet(s"$where/merges"))
       merges.size
-    } finally writeLock.unlock()
-  }
+    }
 
   /** The stored merge table `(rank, sym_a, sym_b, cnt)`, rank-ordered. */
   def tokenizerMerges(column: String): DataFrame = {
@@ -3226,13 +2948,9 @@ class Collection private[core] (
   // retraining. The weight table is dim+1 doubles; serving broadcasts it
   // into a row-local scorer (zero shuffles, stateless on a stream).
 
-  def classifierDir(column: String): String =
-    s"$dir/${config.index_dir}/${column}_clf"
+  def classifierDir(column: String): String = familyDir(ClassifierModel, column)
 
-  def hasClassifier(column: String): Boolean = {
-    recoverSwap(classifierDir(column))
-    fs.exists(new Path(s"${classifierDir(column)}/weights"))
-  }
+  def hasClassifier(column: String): Boolean = built(ClassifierModel, column)
 
   /** Train the learned quality filter on THIS collection's rows:
     * y = 1.0 where `positive` holds, 0.0 elsewhere
@@ -3245,12 +2963,8 @@ class Collection private[core] (
     */
   def trainClassifier(column: String, positive: org.apache.spark.sql.Column,
                       dim: Int = 64, iters: Int = 3,
-                      lr: Double = 1e-5): Long = {
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      val target = classifierDir(column)
-      recoverSwap(target)
+                      lr: Double = 1e-5): Long =
+    maintained(ClassifierModel, column) { target =>
       val labeled = df.select(col(KeyCol), col(column),
         when(positive, 1.0).otherwise(0.0).as("__y"))
       val feats = graft.operators.Classifier
@@ -3260,7 +2974,7 @@ class Collection private[core] (
         dim, iters, lr)
       val nPos = labeled.filter(col("__y") === 1.0).count()
       import spark.implicits._
-      def build(where: String): Unit = {
+      stagedBuild(target) { where =>
         w.toIndexedSeq.zipWithIndex.map { case (wj, j) => (j.toLong, wj) }
           .toDF("j", "w")
           .coalesce(1).write.mode("overwrite").parquet(s"$where/weights")
@@ -3268,14 +2982,8 @@ class Collection private[core] (
           .toDF("dim", "iters", "lr", "n_pos")
           .write.mode("overwrite").parquet(s"$where/params")
       }
-      if (!fs.exists(new Path(target))) build(target)
-      else writeAndSwap(target) { tmp =>
-        build(tmp)
-        fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      }
       nPos
-    } finally writeLock.unlock()
-  }
+    }
 
   /** The stored weight vector (index dim = bias). */
   def classifierWeights(column: String): Array[Double] = {
@@ -3350,10 +3058,7 @@ class Collection private[core] (
         val merged = spark.read.parquet(queriesDir)
           .join(q, Seq("query_id"), "left_anti").unionByName(q)
           .localCheckpoint(true)
-        writeAndSwap(queriesDir) { tmp =>
-          merged.coalesce(1).write.parquet(tmp)
-          fs.create(new Path(tmp, "_SUCCESS"), true).close()
-        }
+        swapIn(queriesDir)(tmp => merged.coalesce(1).write.parquet(tmp))
       }
       q.count()
     } finally writeLock.unlock()
@@ -3372,10 +3077,7 @@ class Collection private[core] (
       if (n > 0) {
         val kept = cur.join(del, Seq("query_id"), "left_anti")
           .localCheckpoint(true)
-        writeAndSwap(queriesDir) { tmp =>
-          kept.coalesce(1).write.parquet(tmp)
-          fs.create(new Path(tmp, "_SUCCESS"), true).close()
-        }
+        swapIn(queriesDir)(tmp => kept.coalesce(1).write.parquet(tmp))
       }
       n
     } finally writeLock.unlock()
@@ -3485,17 +3187,18 @@ class Collection private[core] (
 
   /** Ordered maintenance plan: what to run, on what, and why — the
     * operational layer above [[indexStatus]]'s raw counters. One row per
-    * recommended action, lowest `priority` first:
+    * recommended action, lowest `priority` first, each action the name
+    * of an [[IndexFamily]] call ([[IndexFamily.action]]):
     *
     *   1. vector-index repair (missing/stale/orphaned embeddings) — runs
-    *      first because keyword/dedup/ANN repairs read the fingerprints
+    *      first because the ANN and binary repairs read the fingerprints
     *      the re-embed refreshes;
-    *   2. keyword / dedup / ANN repairs (same counters per structure);
+    *   2. every other family's repair (same counters per structure);
     *   3. ANN retrain (`buildAnnIndex`) when centroid drift crossed
     *      `driftRebuildAt` — refresh deliberately never retrains, so
     *      accumulated drift needs an explicit rebuild;
-    *   4. compactions: small-file pressure on the data / vector-index /
-    *      ANN-lists directories (file count > `smallFileFactor` x the
+    *   4. compactions: small-file pressure on the data directory and each
+    *      family's `pressure` tables (file count > `smallFileFactor` x the
     *      `targetFileBytes` ideal), and keyword log churn (dead log
     *      fraction > `deadFractionAt`).
     *
@@ -3514,27 +3217,16 @@ class Collection private[core] (
     val structs = indexStructures()
     structs.map(_._1).distinct.foreach { c0 =>
       indexStatus(c0).collect().foreach { r =>
-        val structure = r.getString(0)
+        val f = IndexFamily.all.find(_.structure == r.getString(0)).get
         val (missing, stale, orphaned) = (r.getLong(1), r.getLong(2), r.getLong(3))
-        if (missing + stale + orphaned > 0) {
-          val (pri, action) = structure match {
-            case "vector" => (1, "reembedChanged + embedColumn")
-            case "keyword" => (2, "repairKeywordIndex")
-            case "dedup" => (2, "repairDedupIndex")
-            // "binary" must route to ITS repair: the old catch-all sent
-            // it to repairAnnIndex, which never touches the sketch, so
-            // binary staleness could neither converge under --apply nor
-            // survive the one-row-per-(column, action) dedupe
-            case "binary" => (2, "repairBinarySketch")
-            case _ => (2, "repairAnnIndex")
-          }
-          acts += ((pri, c0, structure, action,
+        if (missing + stale + orphaned > 0) f.repair.foreach { m =>
+          acts += ((if (f == VectorIndex) 1 else 2, c0, f.structure, m.action,
             s"missing=$missing stale=$stale orphaned=$orphaned"))
         }
-        if (structure == "ann" && !r.isNullAt(4) &&
-            r.getDouble(4) >= driftRebuildAt)
-          acts += ((3, c0, "ann", "buildAnnIndex",
+        if (!r.isNullAt(4) && r.getDouble(4) >= driftRebuildAt) f.retrain.foreach { m =>
+          acts += ((3, c0, f.structure, m.action,
             f"centroid drift ${r.getDouble(4)}%.2fx the build baseline"))
+        }
       }
     }
     def filePressure(target: String, c0: String, structure: String,
@@ -3553,30 +3245,17 @@ class Collection private[core] (
           s"$n files for $bytes bytes (ideal ~$ideal)"))
     }
     filePressure(dataDir, "", "data", "compact")
-    structs.foreach {
-      case (c0, "vector") => filePressure(indexDir(c0), c0, "vector", "compactIndex")
-      case (c0, "ann") =>
-        filePressure(annListsDir(c0), c0, "ann", "compactAnnIndex")
-        // the fps sidecar grows one file per refresh/stream batch; its
-        // pressure routes to the same compact (which folds both)
-        filePressure(s"${annIndexDir(c0)}/fps", c0, "ann", "compactAnnIndex")
-      case (c0, "dd") =>
-        filePressure(s"${dedupIndexDir(c0)}/bands", c0, "dedup",
-          "compactDedupIndex")
-        filePressure(s"${dedupIndexDir(c0)}/fps", c0, "dedup",
-          "compactDedupIndex")
-      case (c0, "bin") =>
-        filePressure(binarySketchDir(c0), c0, "binary", "compactBinarySketch")
-        filePressure(s"${binaryIndexDir(c0)}/fps", c0, "binary",
-          "compactBinarySketch")
-      case (c0, "kw") =>
-        if (hasKeywordIndex(c0)) {
-          val dead = graft.search.Keyword.deadFraction(spark, keywordIndexDir(c0))
-          if (dead > deadFractionAt)
-            acts += ((4, c0, "keyword", "compactKeywordIndex",
+    structs.foreach { case (c0, f) =>
+      f.compact.foreach { m =>
+        // a sidecar grows one file per refresh/stream batch; its pressure
+        // routes to the family's compact, which folds every table
+        f.pressure.foreach(t => filePressure(table(f, c0, t), c0, f.structure, m.action))
+        f.churn.filter(_ => built(f, c0)).map(_(this, c0))
+          .filter(_ > deadFractionAt).foreach { dead =>
+            acts += ((4, c0, f.structure, m.action,
               f"${dead * 100}%.0f%% of the log is tombstone churn"))
-        }
-      case _ => ()
+          }
+      }
     }
     // one row per (column, action): lists + sidecar pressure can both
     // route to the same compact — running it once folds both
@@ -3584,33 +3263,31 @@ class Collection private[core] (
       .toDF("priority", "column", "structure", "action", "reason")
   }
 
-  /** Heal every pending swap across the collection — data directory plus
-    * all four index families — so the on-disk state is a complete,
-    * consistent snapshot. Used before [[backup]]: copying a directory
-    * with an uncommitted journal would capture a torn write.
+  /** Every index family's repair for `column`, in dependency order
+    * ([[IndexFamily.all]]): the vector index re-embeds changed rows and
+    * embeds new ones first, then the text-upstream families (keyword,
+    * dedup) repair, then the vector-upstream ones (ANN, binary sketch)
+    * read the fingerprints the re-embed refreshed. Absent structures are
+    * no-ops. `scope` (the keys a batch touched) prunes change detection
+    * to the batch's key range; None is the full reconcile. Returns
+    * `(structure, rows repaired)` per family.
+    */
+  def repairIndexes(column: String, embedder: graft.embed.Embedder,
+                    scope: Option[DataFrame] = None): Seq[(String, Long)] =
+    IndexFamily.all.flatMap(f => f.repair.map(m =>
+      f.structure -> m.run(this, column, scope, () => embedder)))
+
+  /** Heal every pending swap across the collection — data directory,
+    * saved queries and every [[IndexFamily]] structure — so the on-disk
+    * state is a complete, consistent snapshot. Used before [[backup]]:
+    * copying a directory with an uncommitted journal would capture a
+    * torn write.
     */
   private def healAll(): Unit = {
     recoverCompaction()
     recoverFileSwap(dataDir)
     recoverSwap(queriesDir)
-    indexStructures().foreach {
-      case (c0, "vector") => recoverFileSwap(indexDir(c0))
-      case (c0, "kw")     => recoverSwap(keywordIndexDir(c0))
-      case (c0, "dd") =>
-        val t = dedupIndexDir(c0)
-        recoverSwap(t); recoverFileSwap(s"$t/bands"); recoverFileSwap(s"$t/fps")
-      case (c0, "ann") =>
-        val t = annIndexDir(c0)
-        recoverSwap(t); recoverSwap(annListsDir(c0))
-        recoverFileSwap(annListsDir(c0)); recoverFileSwap(s"$t/fps")
-      case (c0, "tok") => recoverSwap(tokenizerDir(c0))
-      case (c0, "clf") => recoverSwap(classifierDir(c0))
-      case (c0, "bin") =>
-        val t = binaryIndexDir(c0)
-        recoverSwap(t); recoverFileSwap(binarySketchDir(c0))
-        recoverFileSwap(s"$t/fps")
-      case _ => ()
-    }
+    indexStructures().foreach { case (c0, f) => heal(f, c0) }
   }
 
   /** Back up the whole collection (config + data + every index) into
@@ -3638,26 +3315,19 @@ class Collection private[core] (
     } finally writeLock.unlock()
   }
 
-  /** `(column, kind)` for every persisted index structure under the
-    * index root, `kind` in vector|kw|dd|ann (suffix-namespaced dirs —
-    * the collection's layout convention), vector indexes first.
+  /** `(column, family)` for every persisted index structure under the
+    * index root, vector indexes first. A structure staged aside by a
+    * crashed directory swap (`<dir>_precompact`, the live directory
+    * missing) counts too, so [[healAll]] can roll it back or forward.
     */
-  private def indexStructures(): Seq[(String, String)] = {
+  private def indexStructures(): Seq[(String, IndexFamily)] = {
     val root = new Path(s"$dir/${config.index_dir}")
     if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-      .filterNot(n => n.endsWith("_precompact") || n.endsWith("_compacting")
-        || n.endsWith("_staging"))
-      .map { n =>
-        if (n.endsWith("_kw")) (n.dropRight(3), "kw")
-        else if (n.endsWith("_dd")) (n.dropRight(3), "dd")
-        else if (n.endsWith("_ann")) (n.dropRight(4), "ann")
-        else if (n.endsWith("_tok")) (n.dropRight(4), "tok")
-        else if (n.endsWith("_clf")) (n.dropRight(4), "clf")
-        else if (n.endsWith("_bin")) (n.dropRight(4), "bin")
-        else (n, "vector")
-      }
-      .sortBy { case (c0, kind) => (if (kind == "vector") 0 else 1, c0) }
+    fs.listStatus(root).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName.stripSuffix("_precompact"))
+      .filterNot(n => Identifiers.OperationalSuffixes.exists(n.endsWith))
+      .distinct.map(IndexFamily.of)
+      .sortBy { case (c0, f) => (f != VectorIndex, c0) }
   }
 
   private[core] def writeConfig(): Unit = {
@@ -3668,15 +3338,15 @@ class Collection private[core] (
   }
 }
 
-/** Identifier guard mirroring the reference's SQL-injection check
-  * (collection_actor.rs:21-28): alphanumeric + underscore only. We build
-  * `Column`s rather than SQL strings, but keep the validation for parity.
-  */
 /** One row of [[Collection.tierSweep]]'s serving-tier comparison. */
 final case class TierStats(tier: String, recall: Double, mrr: Double,
                            ndcg: Double, secPerQuery: Double,
                            mbReadPerQuery: Double)
 
+/** Identifier guard mirroring the reference's SQL-injection check
+  * (collection_actor.rs:21-28): alphanumeric + underscore only. We build
+  * `Column`s rather than SQL strings, but keep the validation for parity.
+  */
 object Identifiers {
   /** Suffixes reserved for on-disk operational artifacts (staged swaps,
     * compaction journals, import stages). An identifier ending with one
@@ -3688,12 +3358,15 @@ object Identifiers {
     * both shapes are rejected at creation time instead of being
     * mishandled later.
     */
-  private[graft] val ReservedSuffixes = Seq(
+  private[graft] val OperationalSuffixes = Seq(
     "_staging", "_swapjournal", "_swapjournal_tmp", "_import",
-    "_precompact", "_compacting", "__stage", "__stage_commit",
-    // index-structure dir suffixes: column "body_kw" would collide with
-    // column "body"'s keyword index directory under index/
-    "_kw", "_dd", "_ann", "_tok", "_clf", "_bin")
+    "_precompact", "_compacting", "__stage", "__stage_commit")
+
+  /** Plus every index family's directory suffix: column "body_kw" would
+    * collide with column "body"'s keyword index directory under index/.
+    */
+  private[graft] val ReservedSuffixes =
+    OperationalSuffixes ++ IndexFamily.all.map(_.suffix).filter(_.nonEmpty)
 
   def validate(name: String): Unit = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),

@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions.col
   * At 100 TB: same shuffle count as the union plan, ~half the sort
   * payload, and the payload struct never travels with left rows.
   *
-  * Measured at sf0.1 (100k x 150k, warm medians, tools.AsofAB): BOTH
-  * forms materializing the payload — exec 0.93s vs window 0.88s (1.06x);
+  * Measured at sf0.1 (100k x 150k, warm medians, recorded in SCALE.md
+  * "Custom operators"): BOTH forms materializing the payload — exec
+  * 0.93s vs window 0.88s (1.06x);
   * AQE off, exec wins 0.22s vs 0.25s. BENCH_r02's "3.8x slower" was not
   * merge cost: a COUNT over the window form constant-folds its right
   * branch away (`_side = 1` filter), while the custom node was an

@@ -97,7 +97,8 @@ class CatalogSpec extends SparkSpec {
     // Backup.include() would silently drop such a column's index from
     // every backup, so the name is refused before the directory can exist
     Seq("_foo", "_key", "x_staging", "notes_import", "col_swapjournal",
-      "body_kw", "body_dd", "body_ann", "t_precompact", "t_compacting")
+      "body_kw", "body_dd", "body_ann", "body_nv", "body_bin", "body_tok",
+      "body_clf", "t_precompact", "t_compacting")
       .foreach { bad =>
         val e = intercept[IllegalArgumentException](Identifiers.validate(bad))
         assert(e.getMessage.contains("reserved") || e.getMessage.contains("invalid"),

@@ -163,4 +163,43 @@ class MaintenanceSpec extends SparkSpec {
     assert(c.searchAnn("text", "sidecar fixture doc 3", 3, emb, nProbe = 2)
       .count() == 3)
   }
+
+  test("a novelty store neither breaks planning nor escapes backup's heal") {
+    val cat = new Catalog(spark, tmpRoot())
+    val c = cat.create(CollectionConfig(name = "m5"))
+    c.importDf((1 to 20).map(i => s"novelty fixture doc $i word$i").toDF("text"))
+    assert(c.embedColumn("text", emb) == 20)
+    c.buildNoveltyStore("text")
+    assert(plan(c).isEmpty, "a clean collection with a novelty store plans nothing")
+
+    // a rebuild that crashed between its two renames leaves the live
+    // store staged aside; backup must roll it back before copying
+    val nv = new java.io.File(c.noveltyStoreDir("text"))
+    assert(nv.renameTo(new java.io.File(nv.getPath + "_precompact")))
+    val dest = tmpRoot()
+    c.backup(dest)
+    assert(nv.isDirectory, "backup heals the novelty store's swap")
+    val restored = cat.restore(dest, "m5r")
+    val probe = Seq((100L, "novelty fixture doc 3 word3")).toDF("_key", "text")
+    assert(restored.noveltyCheck("text", probe, "text", "_key")
+      .head().getAs[Long]("n_novel") == 0L, "the restored store still knows the grams")
+  }
+
+  test("the upsert repair flow (repairIndexes) leaves the binary sketch clean") {
+    val cat = new Catalog(spark, tmpRoot())
+    val c = cat.create(CollectionConfig(name = "m6"))
+    c.importDf((1 to 30).map(i => s"binary flow doc $i word$i").toDF("text"))
+    assert(c.embedColumn("text", emb) == 30)
+    c.buildKeywordIndex("text")
+    c.buildBinarySketch("text")
+    val updates = Seq((4L, "an entirely different body for four")).toDF("_key", "text")
+    c.upsert(updates)
+    val repaired = c.repairIndexes("text", emb, Some(updates.select("_key"))).toMap
+    assert(repaired("vector") == 1L && repaired("keyword") == 1L && repaired("binary") == 1L,
+      repaired)
+    val status = c.indexStatus("text").collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(status("binary") == 0L && status.values.forall(_ == 0L), status)
+    assert(plan(c).isEmpty)
+  }
 }
