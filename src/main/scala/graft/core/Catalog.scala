@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets
 
@@ -57,7 +57,7 @@ class Collection private[core] (
     * the swap would be staged to `_precompact` by the swap and then
     * deleted (silent row loss; the roll-forward recovery would do the
     * same after a crash). Readers stay lock-free apart from the brief
-    * `synchronized` rename window. Cross-process (and cross-instance)
+    * rename window ([[swapMonitor]]). Cross-process (and cross-instance)
     * safety comes from the [[WriteLease]] file beneath the JVM lock: a
     * foreign writer refuses loudly instead of interleaving, a crashed
     * holder's lease expires, and the commit points fence with
@@ -90,7 +90,7 @@ class Collection private[core] (
     * directory's rows are never lost and the next read sees a complete
     * directory.
     */
-  private[core] def recoverSwap(target: String): Unit = synchronized {
+  private[core] def recoverSwap(target: String): Unit = swapMonitor.synchronized {
     val dataPath = new Path(target)
     val old = new Path(target + "_precompact")
     if (!fs.exists(dataPath) && fs.exists(old)) {
@@ -109,6 +109,17 @@ class Collection private[core] (
   }
 
   private[core] def recoverCompaction(): Unit = recoverSwap(dataDir)
+
+  /** The monitor every rename window of this collection holds: swap
+    * recovery, the staged directory swap and the file-swap journal
+    * commit. It is keyed by the collection directory for the whole JVM,
+    * not by this instance — an HTTP request loads its own instance, and
+    * a writer elsewhere in the process holds another, so an instance
+    * monitor would let two of them heal the same crashed swap at once.
+    */
+  private def swapMonitor: AnyRef =
+    Collection.swapMonitors.computeIfAbsent(
+      fs.makeQualified(new Path(dir)).toString, _ => new Object)
 
   // ---- file-granular copy-on-write ([[upsert]] / [[reembedChanged]]) ----
   //
@@ -139,7 +150,7 @@ class Collection private[core] (
     * discard an uncommitted staging dir. Runs before every read of a
     * directory that [[replaceFiles]] may have been rewriting.
     */
-  private[core] def recoverFileSwap(target: String): Unit = synchronized {
+  private[core] def recoverFileSwap(target: String): Unit = swapMonitor.synchronized {
     if (fs.exists(journalPath(target))) completeFileSwap(target)
     else {
       val stage = stagingPath(target)
@@ -182,7 +193,7 @@ class Collection private[core] (
     // fencing: an op that outlived a broken lease must not commit over
     // the new holder's files
     writeLock.checkHeld()
-    synchronized {
+    swapMonitor.synchronized {
       if (!fs.rename(jTmp, journalPath(target)))
         throw new java.io.IOException(s"could not commit swap journal for $target")
       completeFileSwap(target)
@@ -372,7 +383,7 @@ class Collection private[core] (
     // fencing: an op that outlived a broken lease must not swap over
     // the new holder's directory
     writeLock.checkHeld()
-    synchronized {
+    swapMonitor.synchronized {
       compactSwap(new Path(target), new Path(target + "_precompact"), tmp)
     }
   }
@@ -674,8 +685,10 @@ class Collection private[core] (
     * streaming micro-batch killed between directory creation and first
     * file commit) leaves the directory behind with no parquet footers,
     * and a bare read would die with UNABLE_TO_INFER_SCHEMA instead of
-    * reporting an empty index. `mergeSchema` unions file schemas so
-    * pre-fingerprint index files coexist with fingerprinted appends.
+    * reporting an empty index. The read declares the stored layout
+    * ([[vectorIndexSchema]]) instead of inferring it, which would cost a
+    * footer job per call; pre-fingerprint index files read `fp` as
+    * null, as a schema merge would.
     */
   private def indexRaw(column: String): Option[DataFrame] = {
     healTable(indexDir(column))
@@ -683,8 +696,16 @@ class Collection private[core] (
     val hasData = fs.exists(idx) &&
       fs.listStatus(idx).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     if (!hasData) None
-    else Some(spark.read.option("mergeSchema", "true").parquet(indexDir(column)))
+    else Some(spark.read.schema(vectorIndexSchema).parquet(indexDir(column)))
   }
+
+  /** The vector index's stored layout: `(_key, fp, embedding)` for f32,
+    * `(_key, fp, qembedding)` bytes for the quantized variants.
+    */
+  private def vectorIndexSchema: StructType = StructType(Seq(
+    StructField(KeyCol, LongType), StructField("fp", StringType),
+    if (config.model_variant == "f32") StructField("embedding", ArrayType(FloatType))
+    else StructField("qembedding", BinaryType)))
 
   /** Number of indexed vectors for `column` (A2: the reference asks the
     * usearch index for its size, collection_actor.rs:367-378). Goes
@@ -1118,7 +1139,7 @@ class Collection private[core] (
   }
 
   /** Full search (K4): embed the query, exact top-k over the column's index,
-    * hydrate content by joining back on `_key` (K1+K3). Returns
+    * hydrate content by `_key` (K1+K3, [[fetchHits]]). Returns
     * `(content, key, score)` in descending score order, matching the
     * reference's `SearchResult` (collection_utils.rs:81-86).
     */
@@ -1127,17 +1148,14 @@ class Collection private[core] (
              after: Option[(Double, Long)] = None): DataFrame = {
     graft.search.Search.validateLimit(limit)
     val qv = embedder.embedOne(query)
-    after match {
-      case None =>
-        graft.search.Search.searchAndFetch(df, embeddings(column), qv, limit,
-          column)
+    fetchHits(after match {
+      case None => graft.search.Search.topK(embeddings(column), qv, limit)
+      // keyset page N: exact per-key max, filtered past the cursor
+      // (Search.topKAfter explains why the page-1 fast path is unsound
+      // under a cursor)
       case Some(cursor) =>
-        // keyset page N: exact per-key max, filtered past the cursor
-        // (Search.topKAfter explains why the page-1 fast path is unsound
-        // under a cursor), then the same fetch envelope
-        fetchHits(graft.search.Search.topKAfter(embeddings(column), qv,
-          limit, cursor), column)
-    }
+        graft.search.Search.topKAfter(embeddings(column), qv, limit, cursor)
+    }, column)
   }
 
   /** Related-items page (the query-by-example sibling of [[search]]):
@@ -1171,7 +1189,7 @@ class Collection private[core] (
     val qv = embedder.embedOne(query)
     val keys = df.filter(predicate).select(col(KeyCol))
     val emb = embeddings(column).join(keys, Seq(KeyCol), "left_semi")
-    graft.search.Search.searchAndFetch(df, emb, qv, limit, column)
+    fetchHits(graft.search.Search.topK(emb, qv, limit), column)
   }
 
   /** Late-interaction (ColBERT MaxSim) search over a CHUNKED index
@@ -1228,10 +1246,10 @@ class Collection private[core] (
           .flatMap(v => graft.search.Ann.ivfProbes(centers, v,
             math.min(nProbe, centers.length)))
           .distinct.map(Integer.valueOf)
-        val lists = spark.read.parquet(annListsDir(column))
-          .filter(col("list_id").isin(probes: _*))
+        val pqM = annPqM(column)
+        val lists = annLists(column, pqM).filter(col("list_id").isin(probes: _*))
         val window = math.max(limit, if (fetchK > 0) fetchK else limit * 4)
-        if (lists.schema.fieldNames.contains("embedding")) {
+        if (pqM == 0) {
           val cand = graft.search.LateInteraction.topK(qDf, "__qid", "__qvec",
               lists.select(col(KeyCol), col("embedding")),
               KeyCol, "embedding", window)
@@ -1489,14 +1507,16 @@ class Collection private[core] (
     graft.search.Search.validateLimit(limit)
     val qv = embedder.embedOne(query)
     val dense = graft.search.Search.topK(embeddings(column), qv, limit)
-    val terms =
-      if (hasKeywordIndex(column))
-        graft.search.Keyword.analyzerOf(spark, keywordIndexDir(column))
-          .queryTokens(query)
-      else graft.search.Keyword.queryTerms(query)
+    // one stats read serves the analyzer and the keyword page's bucket
+    // count, as in searchKeyword
+    val meta = if (hasKeywordIndex(column))
+      Some(graft.search.Keyword.storedMeta(spark, keywordIndexDir(column)))
+    else None
+    val terms = meta.fold(graft.search.Keyword.queryTerms(query))(m =>
+      graft.search.Analyzer.fromId(m._2).queryTokens(query))
     val pages =
       if (terms.isEmpty) Seq(dense)
-      else Seq(keywordHits(column, terms, limit), dense)
+      else Seq(keywordHits(column, terms, limit, nBuckets = meta.map(_._1)), dense)
     fetchHits(graft.search.Keyword.rrfFuse(pages, KeyCol, limit), column)
   }
 
@@ -1517,11 +1537,44 @@ class Collection private[core] (
     hits.withColumnRenamed("key", KeyCol)
   }
 
-  /** k-row hits page -> (content, key, score), the [[search]] envelope. */
-  private def fetchHits(hits: DataFrame, column: String): DataFrame =
-    df.join(broadcast(hits), KeyCol)
-      .select(col(column).as("content"), col(KeyCol).as("key"), col("score"))
-      .orderBy(desc("score"), col("key"))
+  /** A hits page `(_key, score, extra...)` hydrated into the [[search]]
+    * envelope `(content, key, score, extra...)`, ordered by (score desc,
+    * key) — the serving path's page assembly. The page (at most a few
+    * hundred rows) is collected and joined on the driver: one key-pruned
+    * `_key IN (...)` read fetches the content in the column's stored
+    * type, and the result is a local DataFrame. A broadcast join plus a
+    * global sort would spend a broadcast job and range-sort jobs on the
+    * same hundred rows. As in a join, a hit whose key has no collection
+    * row drops out, and a key held by several rows yields one row each.
+    */
+  private[graft] def fetchHits(hits: DataFrame, column: String): DataFrame = {
+    import org.apache.spark.sql.Row
+    import scala.jdk.CollectionConverters._
+    val page = hits.collect()
+    val data = df
+    val keyAt = hits.schema.fieldIndex(KeyCol)
+    def keyOf(r: Row, i: Int) = r.getAs[Number](i).longValue
+    val keys = page.map(keyOf(_, keyAt)).distinct
+    val content: Map[Long, Seq[Any]] =
+      if (keys.isEmpty) Map.empty
+      else data.filter(col(KeyCol).isin(keys.toIndexedSeq: _*))
+        .select(col(KeyCol), col(column)).collect().toSeq
+        .groupMap(keyOf(_, 0))(_.get(1))
+    val extras = hits.schema.fields.filterNot(f => f.name == KeyCol || f.name == "score")
+    val rows = page.toSeq.flatMap { h =>
+      val key = keyOf(h, keyAt)
+      val rest = h.getAs[Double]("score") +: extras.map(f => h.getAs[Any](f.name)).toSeq
+      content.getOrElse(key, Nil).map(c => Row.fromSeq(c +: key +: rest))
+    }.sortWith { (a, b) =>
+      // (score desc, key) in Spark's double order: NaN above every
+      // number, -0.0 equal to 0.0 (adding 0.0 folds it)
+      val c = java.lang.Double.compare(b.getDouble(2) + 0.0, a.getDouble(2) + 0.0)
+      c < 0 || (c == 0 && a.getLong(1) < b.getLong(1))
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("content", data.schema(column).dataType),
+        StructField("key", LongType), StructField("score", DoubleType)) ++ extras))
+  }
 
   // --- near-dup (MinHash band) index surface -----------------------------
   //
@@ -1938,9 +1991,32 @@ class Collection private[core] (
       .map { case (c, i) => (i, c.toSeq) }.toDF("list_id", "centroid")
   }
 
+  // The ANN index's stored layouts. Serving reads declare them instead
+  // of inferring them, which costs a footer job per read.
+  private val AnnCentersSchema = StructType(Seq(
+    StructField("list_id", IntegerType), StructField("centroid", ArrayType(DoubleType))))
+  private val AnnCodebooksSchema = StructType(Seq(
+    StructField("subspace", IntegerType), StructField("code", IntegerType),
+    StructField("centroid", ArrayType(DoubleType))))
+  private val AnnParamsSchema = StructType(Seq(
+    StructField("n_lists", IntegerType), StructField("iters", IntegerType),
+    StructField("sample_n", IntegerType), StructField("pq_m", IntegerType),
+    StructField("build_drift", DoubleType)))
+
+  /** `(key, embedding, list_id)` lists in the full-vector layout
+    * (`pqM = 0`), `(key, code, list_id)` in the PQ layout.
+    */
+  private def annLists(column: String, pqM: Int): DataFrame =
+    spark.read.schema(StructType(Seq(
+        StructField(KeyCol, LongType),
+        if (pqM == 0) StructField("embedding", ArrayType(FloatType))
+        else StructField("code", BinaryType),
+        StructField("list_id", IntegerType))))
+      .parquet(annListsDir(column))
+
   private def readAnnCenters(column: String): Array[Array[Double]] =
-    spark.read.parquet(s"${annIndexDir(column)}/centroids")
-      .orderBy(col("list_id")).collect()
+    spark.read.schema(AnnCentersSchema).parquet(s"${annIndexDir(column)}/centroids")
+      .collect().sortBy(_.getInt(0))
       .map(_.getSeq[Double](1).toArray)
 
   private def annClustered(dfIn: DataFrame, nOut: Int): DataFrame =
@@ -1954,8 +2030,8 @@ class Collection private[core] (
   }
 
   private def readAnnCodebooks(column: String): Array[Array[Array[Double]]] =
-    spark.read.parquet(s"${annIndexDir(column)}/codebooks")
-      .orderBy(col("subspace"), col("code")).collect()
+    spark.read.schema(AnnCodebooksSchema).parquet(s"${annIndexDir(column)}/codebooks")
+      .collect().sortBy(r => (r.getInt(0), r.getInt(1)))
       .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.map(_._2)).toArray
@@ -1963,22 +2039,16 @@ class Collection private[core] (
   /** Stored pq_m (0 = full-vector layout); params predating the column
     * read as 0.
     */
-  private def annPqM(column: String): Int = {
-    val p = spark.read.option("mergeSchema", "true")
-      .parquet(s"${annIndexDir(column)}/params")
-    if (!p.schema.fieldNames.contains("pq_m")) 0
-    else Option(p.head().getAs[Integer]("pq_m")).fold(0)(_.intValue)
-  }
+  private def annPqM(column: String): Int =
+    Option(spark.read.schema(AnnParamsSchema).parquet(s"${annIndexDir(column)}/params")
+      .head().getAs[Integer]("pq_m")).fold(0)(_.intValue)
 
   /** Build-time assignment drift baseline; None for params predating the
     * column (legacy index — no baseline to compare against).
     */
-  private def annBuildDrift(column: String): Option[Double] = {
-    val p = spark.read.option("mergeSchema", "true")
-      .parquet(s"${annIndexDir(column)}/params")
-    if (!p.schema.fieldNames.contains("build_drift")) None
-    else Option(p.head().getAs[java.lang.Double]("build_drift")).map(_.doubleValue)
-  }
+  private def annBuildDrift(column: String): Option[Double] =
+    Option(spark.read.schema(AnnParamsSchema).parquet(s"${annIndexDir(column)}/params")
+      .head().getAs[java.lang.Double]("build_drift")).map(_.doubleValue)
 
   /** Lists rows for a batch of vectors: `(key, embedding, list_id)` in
     * the full-vector layout, `(key, code, list_id)` when PQ-encoded —
@@ -2091,12 +2161,12 @@ class Collection private[core] (
     val centers = readAnnCenters(column)
     val probes = graft.search.Ann.ivfProbes(centers, qv,
       math.min(nProbe, centers.length)).map(Integer.valueOf)
-    val lists = spark.read.parquet(annListsDir(column))
-      .filter(col("list_id").isin(probes: _*))
+    val pqM = annPqM(column)
+    val lists = annLists(column, pqM).filter(col("list_id").isin(probes: _*))
     val cand = predicate.fold(lists)(p =>
       lists.join(df.filter(p).select(col(KeyCol)), Seq(KeyCol), "left_semi"))
     val hits =
-      if (annPqM(column) == 0)
+      if (pqM == 0)
         graft.search.Search.topK(cand.select(col(KeyCol), col("embedding")), qv, limit)
       else {
         // ADC over byte codes selects the candidate window; exact cosine
@@ -2324,9 +2394,10 @@ class Collection private[core] (
         "embedding", k, nLists = nLists, nProbe = nProbe)
     healTable(annListsDir(column))
     val centers = readAnnCenters(column)
-    val lists = spark.read.parquet(annListsDir(column))
+    val pqM = annPqM(column)
+    val lists = annLists(column, pqM)
     val assigned =
-      if (lists.schema.fieldNames.contains("embedding"))
+      if (pqM == 0)
         lists.select(col(KeyCol), col("embedding"), col("list_id"))
       else lists.select(col(KeyCol), col("list_id")).distinct()
         .join(emb, Seq(KeyCol))
@@ -3336,6 +3407,11 @@ class Collection private[core] (
     try out.write(CollectionConfig.toJson(config).getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
+}
+
+private[core] object Collection {
+  /** Rename-window monitors, one per qualified collection directory. */
+  val swapMonitors = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 }
 
 /** One row of [[Collection.tierSweep]]'s serving-tier comparison. */

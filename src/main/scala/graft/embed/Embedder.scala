@@ -8,6 +8,12 @@ package graft.embed
   * `Dataset.mapPartitions` — one embedder instance per task, no driver-side
   * batching loop. Implementations must be `Serializable` (shipped to
   * executors) and deterministic (the correctness oracle depends on it).
+  *
+  * `embed` and `embedOne` may be called concurrently on one instance:
+  * [[graft.serve.HttpApi]] embeds each request's query on its own worker
+  * thread, with the one instance the [[ModelRegistry]] holds. An
+  * implementation therefore keeps no unsynchronized mutable state
+  * ([[HashingEmbedder]] allocates its digest per call).
   */
 trait Embedder extends Serializable {
   /** Embedding dimensionality (reference: `output_dim`). */

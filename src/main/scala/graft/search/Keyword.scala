@@ -1,7 +1,8 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** Keyword (BM25) search and keyword+vector hybrid rank fusion.
   *
@@ -339,16 +340,27 @@ object Keyword {
       .write.mode("overwrite").parquet(s"$dir/stats")
   }
 
+  // The stored layouts of the index tables. Query-path reads declare
+  // them instead of inferring them (inference costs a footer job per
+  // read); columns missing from older files read as null, as a schema
+  // merge would. Keys read as long — the collection's `_key`; an index
+  // built over narrower integer keys widens on read.
+  private val StatsSchema = StructType(Seq(
+    StructField("n_docs", LongType), StructField("sum_dl", LongType),
+    StructField("n_buckets", IntegerType), StructField("analyzer", StringType)))
+  private val DoclenSchema = StructType(Seq(
+    StructField("key", LongType), StructField("dl", LongType),
+    StructField("fp", StringType), StructField("cnt", IntegerType)))
+  private val PostingsSchema = StructType(Seq(
+    StructField("tok", StringType), StructField("key", LongType),
+    StructField("tf", LongType), StructField("bucket", IntegerType)))
+
   /** (n_buckets, analyzer id) from a stored index's stats; indexes
     * predating the analyzer column read as whitespace.
     */
   private[graft] def storedMeta(spark: SparkSession, dir: String): (Int, String) = {
-    val p = spark.read.option("mergeSchema", "true").parquet(s"$dir/stats")
-    val r = p.head()
-    val az =
-      if (!p.schema.fieldNames.contains("analyzer")) "ws"
-      else Option(r.getAs[String]("analyzer")).getOrElse("ws")
-    (r.getAs[Int]("n_buckets"), az)
+    val r = spark.read.schema(StatsSchema).parquet(s"$dir/stats").head()
+    (r.getAs[Int]("n_buckets"), Option(r.getAs[String]("analyzer")).getOrElse("ws"))
   }
 
   /** The analyzer a stored index was built with — every later search /
@@ -722,11 +734,14 @@ object Keyword {
     writeStats(spark, dstDir, folded, nBuckets, az)
   }
 
-  /** Query the persistent index. The postings read carries a `bucket`
-    * partition filter derived driver-side from the query terms, so only
-    * |distinct term buckets| directories are listed and scanned. Both
-    * logs aggregate to their net view AFTER the pruning filters, so the
-    * tombstone folding touches only the matched buckets' rows.
+  /** Query the persistent index. The postings read names the query
+    * terms' `bucket=N` directories (derived driver-side), so only those
+    * are listed and scanned — reading the postings root would list every
+    * bucket first, a parallel-listing job costing more than the query. A
+    * bucket no posting hashed to has no directory and is skipped. Both
+    * logs aggregate to their net view AFTER the pruning, so the
+    * tombstone folding touches only the matched buckets' rows. Every
+    * read declares its table's stored layout.
     *
     * Pure read — queries never run recovery: a lock-free search racing
     * a live writer's staged append must not delete its staging dirs or
@@ -748,7 +763,7 @@ object Keyword {
                   after: Option[(Double, Long)] = None,
                   mustNot: Seq[String] = Nil,
                   nBuckets: Option[Int] = None): DataFrame = {
-    val stored = spark.read.parquet(s"$dir/stats")
+    val stored = spark.read.schema(StatsSchema).parquet(s"$dir/stats")
     // a caller that already read the one-row stats table (storedMeta —
     // the analyzer lives there too) passes the bucket count in; a bare
     // call pays the head() job itself
@@ -761,13 +776,17 @@ object Keyword {
     val neg = mustNot.map(_.toLowerCase).distinct
     // excluded terms' postings live in their own buckets — read those
     // too (still O(query+mustNot buckets), never the whole postings log)
-    val buckets = (qt ++ neg).map(tokenBucket(_, nB)).distinct
-    val postings = netPostingsOf(
-        spark.read.parquet(s"$dir/postings")
-          .filter(col("bucket").isin(buckets: _*)))
-      .select(col("tok"), col("key"), col("tf"))
-    val doclen = liveDoclenOf(
-        spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen"))
+    val fs = hadoopFs(spark, dir)
+    val bucketDirs = (qt ++ neg).map(tokenBucket(_, nB)).distinct
+      .map(b => s"$dir/postings/bucket=$b")
+      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
+    val postingsLog =
+      if (bucketDirs.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), PostingsSchema)
+      else spark.read.schema(PostingsSchema)
+        .option("basePath", s"$dir/postings").parquet(bucketDirs: _*)
+    val postings = netPostingsOf(postingsLog).select(col("tok"), col("key"), col("tf"))
+    val doclen = liveDoclenOf(spark.read.schema(DoclenSchema).parquet(s"$dir/doclen"))
       .select(col("key"), col("dl"))
     bm25FromTables(postings, doclen, stats, qt, k, k1, b, requireAll, after,
       neg)

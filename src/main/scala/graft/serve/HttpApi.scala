@@ -1,12 +1,14 @@
 package graft.serve
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.functions.col
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.core.Catalog
 import graft.embed.ModelRegistry
@@ -42,25 +44,43 @@ import graft.search.Search
   * search clamps `1 <= limit <= 100` with default 10 (K5,
   * serve.rs:53,155-161).
   *
-  * Each search request runs one small Spark job (top-k over the column's
-  * embedding index) — the driver hosts the API; executors do the scan.
-  * For a production deployment you would put the index behind
-  * bucket-partitioned parquet (see [[graft.search.Ann.writeIndex]]) so a
-  * request prunes to probed buckets.
+  * A malformed request — a body that is not a JSON object, a missing
+  * required field, a field of the wrong type — is a 400.
+  *
+  * Requests are served concurrently by a fixed pool of worker threads,
+  * one per processor available to the driver JVM; [[stop]] shuts it
+  * down. The driver hosts the API and executors do the scans. A search
+  * request runs a handful of Spark jobs — the index reads and top-k
+  * (the ANN and keyword modes prune to the probed lists / the query
+  * terms' buckets), plus one key-pruned content fetch; the page itself
+  * is assembled on the driver. Concurrent requests share the Spark
+  * scheduler, and embedders are called from several workers at once
+  * ([[graft.embed.Embedder]]).
   */
 final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
                     host: String = "127.0.0.1") {
   @volatile private var server: HttpServer = _
+  @volatile private var workers: ExecutorService = _
 
   def start(): Int = {
     server = HttpServer.create(new InetSocketAddress(host, port), 0)
     server.createContext("/", handle _)
-    server.setExecutor(null)
+    val n = new AtomicInteger
+    workers = Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors,
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-http-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    server.setExecutor(workers)
     server.start()
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (workers != null) workers.shutdown()
+  }
 
   private def handle(ex: HttpExchange): Unit = {
     val t0 = System.nanoTime()
@@ -89,105 +109,80 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
         val items = catalog.list().map(configJson).mkString("[", ",", "]")
         (200, ok(secs(), s"""{"collections":$items}"""))
       case ("GET", s"/collections/$name") if !name.contains("/") =>
-        graft.core.Identifiers.validate(name) // rejects ".." etc
-        if (!catalog.exists(name)) throw new NoSuchElementException(s"collection $name not found")
-        (200, ok(secs(), configJson(catalog.load(name).config)))
+        (200, ok(secs(), configJson(collection(name).config)))
       case ("POST", s"/collections/$name/search") if !name.contains("/") =>
-        // reject path separators / traversal before the name touches the
-        // filesystem (same guard as the GET config route)
-        graft.core.Identifiers.validate(name)
-        if (!catalog.exists(name)) throw new NoSuchElementException(s"collection $name not found")
-        val req = JsonMethods.parse(new String(
-          ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
-        implicit val fmt: Formats = DefaultFormats
-        val column = (req \ "column_name").extractOpt[String]
-          .getOrElse(throw new IllegalArgumentException("column_name is required"))
-        val query = (req \ "query").extractOpt[String]
-          .getOrElse(throw new IllegalArgumentException("query is required"))
-        val limit = (req \ "limit").extractOpt[Int].getOrElse(Search.DefaultLimit)
+        val coll = collection(name)
+        val req = body(ex)
+        val column = need[String](req, "column_name")
+        val query = need[String](req, "query")
+        val limit = opt[Int](req, "limit").getOrElse(Search.DefaultLimit)
         Search.validateLimit(limit)
-        val mode = (req \ "mode").extractOpt[String].getOrElse("vector")
+        val mode = opt[String](req, "mode").getOrElse("vector")
         // keyset pagination: the LAST hit's [score, key], echoed verbatim
         // (doubles serialize round-trip-exactly, so the cursor is exact).
         // Stateless — no scroll context is held server-side.
         val searchAfter: Option[(Double, Long)] =
-          (req \ "search_after") match {
-            // json4s extracts an ABSENT field as an empty Seq — match
-            // JNothing/JNull explicitly so only present-but-malformed
-            // cursors error
-            case org.json4s.JNothing | org.json4s.JNull => None
-            case v => v.extractOpt[Seq[Double]] match {
-              case Some(Seq(s, key)) if key.isWhole => Some((s, key.toLong))
-              case other => throw new IllegalArgumentException(
-                s"search_after must be [score, key], got $other")
-            }
+          opt[Seq[Double]](req, "search_after").map {
+            case Seq(s, key) if key.isWhole => (s, key.toLong)
+            case other => throw new IllegalArgumentException(
+              s"search_after must be [score, key], got $other")
           }
         if (searchAfter.isDefined && mode != "vector" && mode != "keyword")
           throw new IllegalArgumentException(
             s"search_after supports modes vector|keyword, not '$mode'")
-        val coll = catalog.load(name)
         def embedder = registry.load(coll.config.model_name, coll.config.model_variant)
+        // require_all=true -> conjunctive (AND) semantics
+        def requireAll = opt[Boolean](req, "require_all").getOrElse(false)
         val rows = (mode match {
           case "vector" => coll.search(column, query, limit, embedder, searchAfter)
           case "keyword" =>
-            // require_all=true -> conjunctive (AND) semantics
-            val requireAll = (req \ "require_all").extractOpt[Boolean]
-              .getOrElse(false)
             coll.searchKeyword(column, query, limit, requireAll, searchAfter)
           case "fuzzy" =>
             // keyword search with typo auto-correction (vocabulary-
             // absent terms replaced by their best trigram/edit match)
-            val requireAll = (req \ "require_all").extractOpt[Boolean]
-              .getOrElse(false)
-            val maxDist = (req \ "max_dist").extractOpt[Int].getOrElse(2)
+            val maxDist = opt[Int](req, "max_dist").getOrElse(2)
             require(maxDist >= 1, s"max_dist must be >= 1, got $maxDist")
             coll.searchKeywordFuzzy(column, query, limit, requireAll, maxDist)
           case "hybrid" => coll.searchHybrid(column, query, limit, embedder)
           case "ann" =>
-            val nProbe = (req \ "n_probe").extractOpt[Int].getOrElse(2)
+            val nProbe = opt[Int](req, "n_probe").getOrElse(2)
             require(nProbe >= 1, s"n_probe must be >= 1, got $nProbe")
             coll.searchAnn(column, query, limit, embedder, nProbe)
           case "binary" =>
             // Hamming candidates over the 1-bit sketch, exact rerank
-            val fetchK = (req \ "fetch_k").extractOpt[Int].getOrElse(0)
+            val fetchK = opt[Int](req, "fetch_k").getOrElse(0)
             require(fetchK >= 0, s"fetch_k must be >= 0, got $fetchK")
             coll.searchBinary(column, query, limit, embedder, fetchK)
           case "late" =>
             // MaxSim over a chunked index; chunk_tokens should match the
             // granularity the index was embedded with. n_probe > 0 routes
             // candidate generation through the ANN index (PLAID shape)
-            val mt = (req \ "chunk_tokens").extractOpt[Int].getOrElse(512)
+            val mt = opt[Int](req, "chunk_tokens").getOrElse(512)
             require(mt >= 1, s"chunk_tokens must be >= 1, got $mt")
             // an absent overlap clamps to the chunk size instead of
             // failing small chunk_tokens on the 50-token default
-            val ov = (req \ "chunk_overlap").extractOpt[Int]
-              .getOrElse(math.min(50, mt - 1))
+            val ov = opt[Int](req, "chunk_overlap").getOrElse(math.min(50, mt - 1))
             require(ov >= 0 && ov < mt,
               s"need 0 <= chunk_overlap < chunk_tokens, got ($mt, $ov)")
-            val np = (req \ "n_probe").extractOpt[Int].getOrElse(0)
+            val np = opt[Int](req, "n_probe").getOrElse(0)
             require(np >= 0, s"n_probe must be >= 0, got $np")
             coll.searchLate(column, query, limit, embedder, mt, ov, np)
           case other => throw new IllegalArgumentException(
             s"mode must be vector|keyword|fuzzy|hybrid|ann|binary|late, got '$other'")
         }).collect()
-        val results = rows.map { r =>
-          s"""{"content":${js(r.getString(0))},"key":${r.getLong(1)},"score":${r.getDouble(2)}}"""
-        }.mkString("[", ",", "]")
         // a FULL page advertises its continuation cursor (vector/keyword
         // modes); a short page is the end — no next
         val next =
           if (rows.length == limit && (mode == "vector" || mode == "keyword"))
             s""","next":[${rows.last.getDouble(2)},${rows.last.getLong(1)}]"""
           else ""
-        (200, ok(secs(), s"""{"results":$results$next}"""))
+        (200, ok(secs(), s"""{"results":${hitsJson(rows)}$next}"""))
       case ("GET", s"/collections/$name/similar/$keyStr")
           if !name.contains("/") && !keyStr.contains("/") =>
         // related items by the STORED vector of an indexed key —
         // query-by-example without an embedder call; same result
         // envelope as search, no cursor (pages are k-deep by contract)
-        graft.core.Identifiers.validate(name)
-        if (!catalog.exists(name)) throw new NoSuchElementException(s"collection $name not found")
-        val coll = catalog.load(name)
+        val coll = collection(name)
         val key = try keyStr.toLong catch {
           case _: NumberFormatException =>
             throw new IllegalArgumentException(s"key must be an integer, got '$keyStr'")
@@ -200,17 +195,12 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
           coll.config.index_columns.headOption.getOrElse(
             throw new IllegalArgumentException("collection has no index columns")))
         val rows = coll.moreLikeThis(column, key, limit).collect()
-        val results = rows.map { r =>
-          s"""{"content":${js(r.getString(0))},"key":${r.getLong(1)},"score":${r.getDouble(2)}}"""
-        }.mkString("[", ",", "]")
-        (200, ok(secs(), s"""{"results":$results}"""))
+        (200, ok(secs(), s"""{"results":${hitsJson(rows)}}"""))
       case ("GET", s"/collections/$name/status") if !name.contains("/") =>
         // operational health over HTTP: per-index-column consistency
         // counters (+ ANN centroid drift) and the ordered maintenance
         // plan — counting/footer-metadata only, safe for a GET
-        graft.core.Identifiers.validate(name)
-        if (!catalog.exists(name)) throw new NoSuchElementException(s"collection $name not found")
-        val coll = catalog.load(name)
+        val coll = collection(name)
         val statuses = coll.config.index_columns.flatMap { c =>
           coll.indexStatus(c).collect().map { r =>
             val drift = if (r.isNullAt(4)) "null" else r.getDouble(4).toString
@@ -232,9 +222,7 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
         // read-only aggregation, safe for a GET (the full per-doc
         // report stays a CLI/`analyze --dest` concern: it is
         // corpus-sized and has no business in one HTTP response)
-        graft.core.Identifiers.validate(name)
-        if (!catalog.exists(name)) throw new NoSuchElementException(s"collection $name not found")
-        val coll = catalog.load(name)
+        val coll = collection(name)
         import org.apache.spark.sql.functions.{avg, count => cnt, lit, round => rnd}
         val summaries = coll.config.index_columns.map { c =>
           val rep = coll.analyzeQuality(c).localCheckpoint(true)
@@ -255,10 +243,7 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
         }.mkString("[", ",", "]")
         (200, ok(secs(), s"""{"quality":$summaries}"""))
       case ("GET", s"/collections/$name/queries") if !name.contains("/") =>
-        graft.core.Identifiers.validate(name)
-        if (!catalog.exists(name)) throw new NoSuchElementException(s"collection $name not found")
-        val rows = catalog.load(name).savedQueries
-          .orderBy("query_id").collect()
+        val rows = collection(name).savedQueries.orderBy("query_id").collect()
         val items = rows.map(r =>
           s"""{"query_id":${r.getLong(0)},"query":${js(r.getString(1))}}""")
           .mkString("[", ",", "]")
@@ -266,34 +251,26 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
       case ("POST", s"/collections/$name/queries") if !name.contains("/") =>
         // register saved percolation queries (merge by id); or, with
         // {delete:[ids...]}, unregister
-        graft.core.Identifiers.validate(name)
-        if (!catalog.exists(name)) throw new NoSuchElementException(s"collection $name not found")
-        val req = JsonMethods.parse(new String(
-          ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
-        implicit val fmt: Formats = DefaultFormats
-        val coll = catalog.load(name)
+        val coll = collection(name)
+        val req = body(ex)
         val spark = coll.spark
         import spark.implicits._
         // json4s extracts a MISSING field as Some(Nil) for Seq — match the
         // JSON shape explicitly so {} routes to the queries branch
         (req \ "delete") match {
           case JArray(_) =>
-            val ids = (req \ "delete").extract[Seq[Long]]
+            val ids = need[Seq[Long]](req, "delete")
             require(ids.nonEmpty, "delete must carry at least one id")
             val n = coll.deleteQueries(ids)
             (200, ok(secs(), s"""{"deleted":$n}"""))
           case _ =>
-            val qs = (req \ "queries").extractOpt[Seq[JValue]]
+            val qs = opt[Seq[JValue]](req, "queries")
               .getOrElse(throw new IllegalArgumentException(
                 "queries (or delete) is required"))
             require(qs.nonEmpty && qs.length <= 1000,
               s"queries must carry 1..1000 entries, got ${qs.length}")
-            val rows = qs.map { q =>
-              ((q \ "query_id").extractOpt[Long]
-                 .getOrElse(throw new IllegalArgumentException("queries[].query_id is required")),
-               (q \ "query").extractOpt[String]
-                 .getOrElse(throw new IllegalArgumentException("queries[].query is required")))
-            }
+            val rows = qs.map(q => (need[Long](q, "query_id", "queries[]."),
+              need[String](q, "query", "queries[].")))
             // same contract as search_batch / percolate: one row per id
             require(rows.map(_._1).distinct.length == rows.length,
               "queries[].query_id values must be distinct")
@@ -305,51 +282,35 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
         // texts once, answer all of them in ONE probed pass over the ANN
         // lists (Collection.searchBatch) instead of N sequential calls —
         // the eval-set / decontamination serving shape
-        graft.core.Identifiers.validate(name)
-        if (!catalog.exists(name)) throw new NoSuchElementException(s"collection $name not found")
-        val req = JsonMethods.parse(new String(
-          ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
-        implicit val fmt: Formats = DefaultFormats
-        val column = (req \ "column_name").extractOpt[String]
-          .getOrElse(throw new IllegalArgumentException("column_name is required"))
-        val qs = (req \ "queries").extractOpt[Seq[JValue]]
-          .getOrElse(throw new IllegalArgumentException("queries is required"))
+        val coll = collection(name)
+        val req = body(ex)
+        val column = need[String](req, "column_name")
+        val qs = need[Seq[JValue]](req, "queries")
         require(qs.nonEmpty && qs.length <= 100,
           s"queries must carry 1..100 entries, got ${qs.length}")
-        val limit = (req \ "limit").extractOpt[Int].getOrElse(Search.DefaultLimit)
+        val limit = opt[Int](req, "limit").getOrElse(Search.DefaultLimit)
         Search.validateLimit(limit)
-        val nProbe = (req \ "n_probe").extractOpt[Int].getOrElse(2)
+        val nProbe = opt[Int](req, "n_probe").getOrElse(2)
         require(nProbe >= 1, s"n_probe must be >= 1, got $nProbe")
-        val coll = catalog.load(name)
         val embedder = registry.load(coll.config.model_name, coll.config.model_variant)
-        val qrows = qs.map { q =>
-          ((q \ "id").extractOpt[Long]
-             .getOrElse(throw new IllegalArgumentException("queries[].id is required")),
-           (q \ "query").extractOpt[String]
-             .getOrElse(throw new IllegalArgumentException("queries[].query is required")))
-        }
+        val qrows = qs.map(q => (need[Long](q, "id", "queries[]."),
+          need[String](q, "query", "queries[].")))
         require(qrows.map(_._1).distinct.length == qrows.length,
           "queries[].id values must be distinct")
         val spark = coll.spark
         import spark.implicits._
         val qdf = qrows.map { case (id, t) => (id, embedder.embedOne(t)) }
           .toDF(graft.core.Keys.KeyCol, "embedding")
-        val hits = coll.searchBatch(qdf, column, limit, nProbe)
-          .orderBy(col("src"), col("sim").desc, col("nbr")).collect()
-        // one bounded content fetch for the page's distinct hit keys
-        val hitKeys = hits.map(_.getLong(1)).distinct
-        val content: Map[Long, String] =
-          if (hitKeys.isEmpty) Map.empty
-          else coll.df
-            .filter(col(graft.core.Keys.KeyCol).isin(hitKeys.toSeq: _*))
-            .select(col(graft.core.Keys.KeyCol),
-              coalesce(col(column).cast("string"), lit("")).as("c"))
-            .as[(Long, String)].collect().toMap
-        val byQuery = hits.groupBy(_.getLong(0))
-        val results = qrows.map(_._1).distinct.map { id =>
-          val page = byQuery.getOrElse(id, Array.empty).map { r =>
+        // every query's hits hydrated in one page: (content, key, score,
+        // src), each query's hits in (score desc, key) order
+        val hits = coll.fetchHits(coll.searchBatch(qdf, column, limit, nProbe)
+            .select(col("nbr").as(graft.core.Keys.KeyCol), col("sim").as("score"),
+              col("src")), column)
+          .collect().groupBy(_.getLong(3))
+        val results = qrows.map { case (id, _) =>
+          val page = hits.getOrElse(id, Array.empty).map { r =>
             s"""{"key":${r.getLong(1)},"score":${r.getDouble(2)},""" +
-              s""""content":${js(content.getOrElse(r.getLong(1), ""))}}"""
+              s""""content":${js(Option(r.get(0)).fold("")(_.toString))}}"""
           }.mkString("[", ",", "]")
           s"""{"id":$id,"hits":$page}"""
         }.mkString("[", ",", "]")
@@ -358,29 +319,20 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
         // reverse search: which saved queries match the posted documents?
         // `{column_name, documents:[{id, text}...], require_all?}` — the
         // document batch is bounded like a search page (<= 100 docs)
-        graft.core.Identifiers.validate(name)
-        if (!catalog.exists(name)) throw new NoSuchElementException(s"collection $name not found")
-        val req = JsonMethods.parse(new String(
-          ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
-        implicit val fmt: Formats = DefaultFormats
-        val column = (req \ "column_name").extractOpt[String]
-          .getOrElse(throw new IllegalArgumentException("column_name is required"))
-        val docs = (req \ "documents").extractOpt[Seq[JValue]]
-          .getOrElse(throw new IllegalArgumentException("documents is required"))
+        val coll = collection(name)
+        val req = body(ex)
+        val column = need[String](req, "column_name")
+        val docs = need[Seq[JValue]](req, "documents")
         require(docs.nonEmpty && docs.length <= 100,
           s"documents must carry 1..100 entries, got ${docs.length}")
-        val requireAll = (req \ "require_all").extractOpt[Boolean].getOrElse(true)
-        val coll = catalog.load(name)
-        val rows = docs.map { d =>
-          ((d \ "id").extractOpt[Long]
-             .getOrElse(throw new IllegalArgumentException("documents[].id is required")),
-           (d \ "text").extractOpt[String].getOrElse(""))
-        }
+        val requireAll = opt[Boolean](req, "require_all").getOrElse(true)
+        val rows = docs.map(d => (need[Long](d, "id", "documents[]."),
+          opt[String](d, "text").getOrElse("")))
         require(rows.map(_._1).distinct.length == rows.length,
           "documents[].id values must be distinct")
         val spark = coll.spark
         import spark.implicits._
-        val matches = (req \ "mode").extractOpt[String].getOrElse("keyword") match {
+        val matches = opt[String](req, "mode").getOrElse("keyword") match {
           case "keyword" =>
             coll.percolate(column,
                 rows.toDF("id", "text"), idCol = "id", textCol = "text",
@@ -392,7 +344,7 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
           case "vector" =>
             // semantic percolation: saved queries match by embedding
             // cosine >= threshold (default 0.5), not by shared terms
-            val threshold = (req \ "threshold").extractOpt[Double].getOrElse(0.5)
+            val threshold = opt[Double](req, "threshold").getOrElse(0.5)
             require(threshold >= -1.0 && threshold <= 1.0,
               s"threshold must be a cosine in [-1, 1], got $threshold")
             val embedder = registry.load(coll.config.model_name,
@@ -410,6 +362,52 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
       case _ => (404, err(secs(), s"no route for $method $path"))
     }
   }
+
+  /** The named collection; rejects path separators / traversal before
+    * the name touches the filesystem, and answers 404 for an unknown one.
+    */
+  private def collection(name: String): graft.core.Collection = {
+    graft.core.Identifiers.validate(name)
+    if (!catalog.exists(name)) throw new NoSuchElementException(s"collection $name not found")
+    catalog.load(name)
+  }
+
+  /** The request body as a JSON object; anything else is a 400. */
+  private def body(ex: HttpExchange): JValue = {
+    val text = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+    val v =
+      try JsonMethods.parse(text)
+      catch { case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        throw new IllegalArgumentException(
+          s"request body must be a JSON object: ${e.getOriginalMessage}")
+      }
+    v match {
+      case o: JObject => o
+      case _ => throw new IllegalArgumentException("request body must be a JSON object")
+    }
+  }
+
+  /** Optional field `name` of `obj`: None when absent or null, a 400 when
+    * present with the wrong type (never a silent fall-back to the
+    * default).
+    */
+  private def opt[A: Manifest](obj: JValue, name: String, where: String = ""): Option[A] =
+    obj \ name match {
+      case JNothing | JNull => None
+      case v => Some(v.extractOpt[A](DefaultFormats, manifest[A]).getOrElse(
+        throw new IllegalArgumentException(
+          s"$where$name has the wrong type: ${JsonMethods.compact(v)}")))
+    }
+
+  private def need[A: Manifest](obj: JValue, name: String, where: String = ""): A =
+    opt[A](obj, name, where).getOrElse(
+      throw new IllegalArgumentException(s"$where$name is required"))
+
+  /** A `(content, key, score)` page as the search envelope's results. */
+  private def hitsJson(rows: Array[org.apache.spark.sql.Row]): String =
+    rows.map { r =>
+      s"""{"content":${js(r.getString(0))},"key":${r.getLong(1)},"score":${r.getDouble(2)}}"""
+    }.mkString("[", ",", "]")
 
   private def configJson(c: graft.core.CollectionConfig): String =
     graft.core.CollectionConfig.toJson(c)

@@ -193,6 +193,30 @@ class CatalogSpec extends SparkSpec {
     assert(!new java.io.File(c2.dataDir + "_precompact").exists)
   }
 
+  test("instances healing one crashed swap at once: every read succeeds, no rows lost") {
+    // an HTTP request loads its own Collection instance and a writer may
+    // hold another, so the heal's rename window must be exclusive per
+    // collection directory, not per instance
+    val cat = new Catalog(spark, tmpRoot())
+    val c = cat.create(CollectionConfig(name = "race"))
+    c.importDf((1 to 20).map(i => s"row $i").toDF("text"))
+    val rows = c.df.orderBy("_key").collect().map(_.toSeq).toSeq
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try (1 to 20).foreach { round =>
+      assert(new java.io.File(c.dataDir).renameTo(new java.io.File(c.dataDir + "_precompact")),
+        "test setup: stage data aside")
+      val readers = Seq.fill(4)(cat.load("race"))
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val counts = readers.map(r => pool.submit(new java.util.concurrent.Callable[Long] {
+        def call(): Long = { go.await(); r.count() }
+      }))
+      go.countDown()
+      counts.foreach(f => assert(f.get() == 20L, s"round $round"))
+      assert(!new java.io.File(c.dataDir + "_precompact").exists, s"round $round")
+    } finally pool.shutdown()
+    assert(c.df.orderBy("_key").collect().map(_.toSeq).toSeq == rows)
+  }
+
   test("crashed index-rewrite swap recovers on next read") {
     // reembedChanged replaces the index dir with the same staged-swap
     // compact uses; a crash inside the rename window must heal on read

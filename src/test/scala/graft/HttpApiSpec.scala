@@ -147,6 +147,86 @@ class HttpApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("malformed request bodies are 400s, never 500s or silent defaults") {
+    val root = java.nio.file.Files.createTempDirectory("graft_http").toString
+    val cat = new Catalog(spark, root)
+    val registry = new ModelRegistry
+    registry.register("hf://mys/minilm", "f32", new HashingEmbedder(dim = 64))
+    cat.create(CollectionConfig(name = "bad")).importDf(Seq("apple pie").toDF("text"))
+
+    val api = new HttpApi(cat, registry, 0)
+    val port = api.start()
+    try {
+      val (jc, jb) = post(port, "/collections/bad/search", "{bad json")
+      assert(jc == 400 && jb.contains("JSON"), jb)
+      val (ec, eb) = post(port, "/collections/bad/search", "")
+      assert(ec == 400 && eb.contains("JSON"), eb)
+      val (ac, ab) = post(port, "/collections/bad/search", """["text"]""")
+      assert(ac == 400 && ab.contains("JSON object"), ab)
+      // a present field of the wrong type is an error, not the default
+      val (lc, lb) = post(port, "/collections/bad/search",
+        """{"column_name":"text","query":"apple","limit":"ten"}""")
+      assert(lc == 400 && lb.contains("limit"), lb)
+      val (rc, rb) = post(port, "/collections/bad/search",
+        """{"column_name":"text","query":"apple","mode":"keyword","require_all":"yes"}""")
+      assert(rc == 400 && rb.contains("require_all"), rb)
+      // the other body-carrying routes share the parser
+      val (bc, bb) = post(port, "/collections/bad/search_batch", "{bad json")
+      assert(bc == 400 && bb.contains("JSON"), bb)
+      val (pc, pb) = post(port, "/collections/bad/percolate", "")
+      assert(pc == 400 && pb.contains("JSON"), pb)
+      val (qc, qb) = post(port, "/collections/bad/queries", "{bad json")
+      assert(qc == 400 && qb.contains("JSON"), qb)
+    } finally api.stop()
+  }
+
+  test("parallel mixed-mode requests return the serial pages") {
+    val root = java.nio.file.Files.createTempDirectory("graft_http").toString
+    val cat = new Catalog(spark, root)
+    val registry = new ModelRegistry
+    registry.register("hf://mys/minilm", "f32", new HashingEmbedder(dim = 64))
+    val c = cat.create(CollectionConfig(name = "par"))
+    val words = Seq("apple", "banana", "car", "truck", "road", "pie", "ship", "sail")
+    c.importDf((1 to 60).map(i =>
+      Seq(words(i % 8), words(i * 3 % 8), words(i * 5 % 7), s"doc$i").mkString(" "))
+      .toDF("text"))
+    c.embedColumn("text", registry.load("hf://mys/minilm", "f32"))
+    c.buildKeywordIndex("text", nBuckets = 16)
+    c.buildAnnIndex("text", nLists = 4, sampleN = 60)
+
+    val bodies = Seq(
+      """{"column_name":"text","query":"apple pie","limit":10}""",
+      """{"column_name":"text","query":"car road","limit":5,"mode":"ann","n_probe":2}""",
+      """{"column_name":"text","query":"ship sail","limit":10,"mode":"keyword"}""",
+      """{"column_name":"text","query":"truck apple","limit":10,"mode":"hybrid"}""",
+      """{"column_name":"text","query":"banan road","limit":10,"mode":"fuzzy"}""",
+      """{"column_name":"text","query":"sail","limit":3}""",
+      """{"column_name":"text","query":"car truck","limit":10,"mode":"keyword","require_all":true}""",
+      """{"column_name":"text","query":"pie ship","limit":20,"mode":"ann","n_probe":4}""")
+    // the page without the envelope's timing
+    def page(b: String) = b.substring(b.indexOf("\"data\":"))
+
+    val api = new HttpApi(cat, registry, 0)
+    val port = api.start()
+    try {
+      val serial = bodies.map { b =>
+        val (code, out) = post(port, "/collections/par/search", b)
+        assert(code == 200 && out.contains("\"key\""), out)
+        page(out)
+      }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.size)
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val parallel =
+        try bodies.map(b => pool.submit(new java.util.concurrent.Callable[(Int, String)] {
+            def call(): (Int, String) = { go.await(); post(port, "/collections/par/search", b) }
+          })).map { f => if (go.getCount > 0) go.countDown(); f.get() }
+        finally pool.shutdown()
+      parallel.zip(serial).zip(bodies).foreach { case (((code, out), want), b) =>
+        assert(code == 200 && page(out) == want, s"$b:\n$out\nserial: $want")
+      }
+    } finally api.stop()
+  }
+
   test("search_batch route: a page of queries answered in one pass") {
     val root = java.nio.file.Files.createTempDirectory("graft_http").toString
     val cat = new Catalog(spark, root)

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.core.{Catalog, CollectionConfig}
 import graft.embed.HashingEmbedder
 
@@ -18,26 +14,6 @@ class RefreshJobsSpec extends SparkSpec {
   import spark.implicits._
 
   private val emb = new HashingEmbedder(dim = 32)
-
-  /** Spark jobs launched by `body` on this thread (job-group scoped, so
-    * a stray job from another thread never counts).
-    */
-  private def jobsOf[A](tag: String)(body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == tag)) n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(tag, tag)
-      val out = try body finally sc.clearJobGroup()
-      org.apache.spark.graftops.ListenerBridge.waitUntilListenerEmpty(sc)
-      (out, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   test("refresh after one appended batch stays within each family's job ceiling") {
     val root = java.nio.file.Files.createTempDirectory("graft_refresh_jobs").toString

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +10,26 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** Spark jobs launched by `body` on this thread (job-group scoped, so
+    * a stray job from another thread never counts).
+    */
+  def jobsOf[A](tag: String)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == tag)) n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(tag, tag)
+      val out = try body finally sc.clearJobGroup()
+      org.apache.spark.graftops.ListenerBridge.waitUntilListenerEmpty(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
