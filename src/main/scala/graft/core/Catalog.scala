@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
@@ -27,6 +27,11 @@ import java.nio.charset.StandardCharsets
   * bucketing over the same table (see [[graft.search.Ann]]) — a mutable
   * in-memory graph is the one reference design that does not survive a
   * 1000-executor cluster.
+  *
+  * Serving reads go through [[ServingCache]], a per-driver read cache of
+  * these same Parquet tables keyed by file identity — not a second
+  * storage format: what a search returns is what a Spark read of the
+  * listed files would rank and fetch.
   */
 class Collection private[core] (
     val spark: SparkSession,
@@ -41,8 +46,14 @@ class Collection private[core] (
   val dataDir: String = s"$dir/${config.db_path}"
   def indexDir(column: String): String = familyDir(VectorIndex, column)
 
-  private[core] def familyDir(f: IndexFamily, column: String): String =
+  /** The one place a column becomes a path: the column must be an
+    * identifier, so no request field can name a directory outside the
+    * index root.
+    */
+  private[core] def familyDir(f: IndexFamily, column: String): String = {
+    Identifiers.validate(column)
     s"$dir/${config.index_dir}/$column${f.suffix}"
+  }
 
   /** A family sub-table's path; `""` is the family directory itself. */
   private def table(f: IndexFamily, column: String, sub: String): String =
@@ -1147,16 +1158,60 @@ class Collection private[core] (
              embedder: graft.embed.Embedder,
              after: Option[(Double, Long)] = None): DataFrame = {
     graft.search.Search.validateLimit(limit)
-    val qv = embedder.embedOne(query)
-    fetchHits(after match {
-      case None => graft.search.Search.topK(embeddings(column), qv, limit)
-      // keyset page N: exact per-key max, filtered past the cursor
-      // (Search.topKAfter explains why the page-1 fast path is unsound
-      // under a cursor)
-      case Some(cursor) =>
-        graft.search.Search.topKAfter(embeddings(column), qv, limit, cursor)
-    }, column)
+    fetchHits(denseHits(column, embedder.embedOne(query), limit, after), column)
   }
+
+  /** [[search]]'s ranked `(_key, score)` page: on the driver over the
+    * index's resident segments ([[ServingCache.vectors]]), else
+    * [[graft.search.Search.topK]] over [[embeddings]] — past a cursor,
+    * [[graft.search.Search.topKAfter]]'s exact per-key max (it explains
+    * why the page-1 fast path is unsound under a cursor).
+    */
+  private def denseHits(column: String, qv: Array[Float], limit: Int,
+                        after: Option[(Double, Long)]): DataFrame = {
+    healTable(indexDir(column))
+    ServingCache.vectors(hadoopConf, indexDir(column), config.model_variant) match {
+      case Some(segs) => residentPage(segs, qv, limit, after)
+      case None => after match {
+        case None => graft.search.Search.topK(embeddings(column), qv, limit)
+        case Some(cursor) =>
+          graft.search.Search.topKAfter(embeddings(column), qv, limit, cursor)
+      }
+    }
+  }
+
+  /** The exact `(_key, score)` page over resident vectors, ranked on the
+    * driver as the Spark plans rank it: cosine by
+    * [[graft.plans.CosineSimilarity.scalar]] (bit-identical to the scoring
+    * column), cut by [[graft.search.Search.topK]]'s accumulator. Past a
+    * cursor each key's max over all its vectors comes first, as in
+    * [[graft.search.Search.topKAfter]]. The page is a local DataFrame:
+    * collecting it runs no job.
+    */
+  private def residentPage(segs: Seq[ServingCache.Vectors], qv: Array[Float],
+                           limit: Int, after: Option[(Double, Long)]): DataFrame = {
+    import graft.search.Search
+    val q = qv.map(_.toDouble)
+    val scored = segs.iterator.flatMap(s => s.keys.indices.iterator.map(i =>
+      (s.keys(i), graft.plans.CosineSimilarity.scalar(s.vecs(i), q))))
+    val cap = math.max(limit, Search.LocalStateCap)
+    val page = after match {
+      case None => Search.localTopK(scored, limit, cap)
+      case Some((s, key)) =>
+        val best = new scala.collection.mutable.HashMap[Long, Double]
+        scored.foreach { case (k, v) => if (best.get(k).forall(v > _)) best(k) = v }
+        Search.localTopK(best.iterator.filter { case (k, v) =>
+          v < s || (v == s && k > key) }, limit, cap)
+    }
+    localHits(page.toSeq)
+  }
+
+  private def localHits(page: Seq[(Long, Double)]): DataFrame = {
+    import spark.implicits._
+    page.toDF(KeyCol, "score")
+  }
+
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
   /** Related-items page (the query-by-example sibling of [[search]]):
     * the `limit` nearest already-indexed keys to `key`, content-
@@ -1263,11 +1318,8 @@ class Collection private[core] (
           emb0.join(cand, Seq(KeyCol), "left_semi")
         }
       } else emb0
-    val ranked = graft.search.LateInteraction.topK(
-      qDf, "__qid", "__qvec", emb, KeyCol, "embedding", limit)
-    df.join(broadcast(ranked), KeyCol)
-      .select(col(column).as("content"), col(KeyCol).as("key"), col("score"))
-      .orderBy(desc("score"), col("key"))
+    fetchHits(graft.search.LateInteraction.topK(
+      qDf, "__qid", "__qvec", emb, KeyCol, "embedding", limit), column)
   }
 
   // --- keyword (BM25) + hybrid search surface ----------------------------
@@ -1393,6 +1445,20 @@ class Collection private[core] (
 
   private def hasKeywordIndex(column: String): Boolean = built(KeywordIndex, column)
 
+  /** `(n_buckets, analyzer id)` of the built index's one-row stats table,
+    * as [[graft.search.Keyword.storedMeta]] reads it (stats predating the
+    * analyzer column read as whitespace); None when unbuilt.
+    */
+  private def keywordMeta(column: String): Option[(Int, String)] =
+    if (!hasKeywordIndex(column)) None
+    else {
+      val r = smallTable(s"${keywordIndexDir(column)}/stats", KeywordMetaSchema).head
+      Some((r.getAs[Int](0), Option(r.getString(1)).getOrElse("ws")))
+    }
+
+  private val KeywordMetaSchema = StructType(Seq(
+    StructField("n_buckets", IntegerType), StructField("analyzer", StringType)))
+
   /** BM25 page over `column`, content-fetched like [[search]]. Uses the
     * pruned persistent index when built, else falls back to a one-shot
     * corpus scan (correct but corpus-linear — fine ad hoc, build the
@@ -1416,11 +1482,7 @@ class Collection private[core] (
     val (negWords, posWords) = words.partition(w => w.length > 1 && w.startsWith("-"))
     require(posWords.nonEmpty,
       "keyword search requires at least one non-excluded query term")
-    // ONE stats read for analyzer + bucket count (the searchKeywordFuzzy
-    // discipline — each head() on the one-row stats table is a job)
-    val meta = if (hasKeywordIndex(column))
-      Some(graft.search.Keyword.storedMeta(spark, keywordIndexDir(column)))
-    else None
+    val meta = keywordMeta(column)
     val analyzer = meta.fold(graft.search.Analyzer.Whitespace: graft.search.Analyzer)(
       m => graft.search.Analyzer.fromId(m._2))
     val terms = analyzer.queryTokens(posWords.mkString(" "))
@@ -1428,9 +1490,7 @@ class Collection private[core] (
     // a non-empty query whose every term the index's analyzer filters
     // away (all stopwords) matches nothing — empty page, not an error
     // (searchHybrid already degrades the same case to dense-only)
-    if (terms.isEmpty)
-      return df.select(col(column).as("content"), col(KeyCol).as("key"),
-        lit(0.0).as("score")).limit(0)
+    if (terms.isEmpty) return fetchHits(localHits(Nil), column)
     fetchHits(keywordHits(column, terms, limit, requireAll, after, mustNot,
       nBuckets = meta.map(_._1)), column)
   }
@@ -1472,28 +1532,19 @@ class Collection private[core] (
     val (negWords, posWords) = words.partition(w => w.length > 1 && w.startsWith("-"))
     require(posWords.nonEmpty,
       "keyword search requires at least one non-excluded query term")
-    // ONE stats read serves both the analyzer and the bucket count the
-    // indexed search needs (each head() is a scheduled job on the query
-    // path — reading the same one-row table twice was pure job tax)
-    val meta = if (hasKeywordIndex(column))
-      Some(graft.search.Keyword.storedMeta(spark, keywordIndexDir(column)))
-    else None
+    val meta = keywordMeta(column)
     val analyzer = meta.fold(graft.search.Analyzer.Whitespace: graft.search.Analyzer)(
       m => graft.search.Analyzer.fromId(m._2))
     val terms = analyzer.queryTokens(posWords.mkString(" "))
     val mustNot = analyzer.queryTokens(negWords.map(_.drop(1)).mkString(" "))
-    if (terms.isEmpty)
-      return df.select(col(column).as("content"), col(KeyCol).as("key"),
-        lit(0.0).as("score")).limit(0)
+    if (terms.isEmpty) return fetchHits(localHits(Nil), column)
     // presence check + every absent term's best correction in ONE job
     // (the vocabulary is consumed once, so no checkpoint either);
     // semantics pinned inside resolveTerms
     val resolved = graft.search.Fuzzy.resolveTerms(
       keywordVocab(column).select(col("tok")), terms, maxDist)
     val corrected = terms.flatMap(resolved.get).distinct.filterNot(mustNot.contains)
-    if (corrected.isEmpty)
-      return df.select(col(column).as("content"), col(KeyCol).as("key"),
-        lit(0.0).as("score")).limit(0)
+    if (corrected.isEmpty) return fetchHits(localHits(Nil), column)
     fetchHits(keywordHits(column, corrected, limit, requireAll,
       after = None, mustNot = mustNot, nBuckets = meta.map(_._1)), column)
   }
@@ -1505,13 +1556,8 @@ class Collection private[core] (
   def searchHybrid(column: String, query: String, limit: Int,
                    embedder: graft.embed.Embedder): DataFrame = {
     graft.search.Search.validateLimit(limit)
-    val qv = embedder.embedOne(query)
-    val dense = graft.search.Search.topK(embeddings(column), qv, limit)
-    // one stats read serves the analyzer and the keyword page's bucket
-    // count, as in searchKeyword
-    val meta = if (hasKeywordIndex(column))
-      Some(graft.search.Keyword.storedMeta(spark, keywordIndexDir(column)))
-    else None
+    val dense = denseHits(column, embedder.embedOne(query), limit, after = None)
+    val meta = keywordMeta(column)
     val terms = meta.fold(graft.search.Keyword.queryTerms(query))(m =>
       graft.search.Analyzer.fromId(m._2).queryTokens(query))
     val pages =
@@ -1540,26 +1586,32 @@ class Collection private[core] (
   /** A hits page `(_key, score, extra...)` hydrated into the [[search]]
     * envelope `(content, key, score, extra...)`, ordered by (score desc,
     * key) — the serving path's page assembly. The page (at most a few
-    * hundred rows) is collected and joined on the driver: one key-pruned
-    * `_key IN (...)` read fetches the content in the column's stored
-    * type, and the result is a local DataFrame. A broadcast join plus a
+    * hundred rows) is collected and joined on the driver: the content,
+    * in the column's stored type, comes from the serving cache's copy of
+    * the data row groups whose footer key range holds a hit
+    * ([[ServingCache.content]]), else from one key-pruned `_key IN (...)`
+    * read, and the result is a local DataFrame. A broadcast join plus a
     * global sort would spend a broadcast job and range-sort jobs on the
     * same hundred rows. As in a join, a hit whose key has no collection
     * row drops out, and a key held by several rows yields one row each.
     */
   private[graft] def fetchHits(hits: DataFrame, column: String): DataFrame = {
-    import org.apache.spark.sql.Row
     import scala.jdk.CollectionConverters._
     val page = hits.collect()
-    val data = df
     val keyAt = hits.schema.fieldIndex(KeyCol)
     def keyOf(r: Row, i: Int) = r.getAs[Number](i).longValue
     val keys = page.map(keyOf(_, keyAt)).distinct
-    val content: Map[Long, Seq[Any]] =
-      if (keys.isEmpty) Map.empty
-      else data.filter(col(KeyCol).isin(keys.toIndexedSeq: _*))
-        .select(col(KeyCol), col(column)).collect().toSeq
-        .groupMap(keyOf(_, 0))(_.get(1))
+    recoverCompaction()
+    recoverFileSwap(dataDir)
+    val (contentType, content) =
+      ServingCache.content(hadoopConf, dataDir, column, keys.toIndexedSeq).getOrElse {
+        val data = df
+        (data.schema(column).dataType,
+          if (keys.isEmpty) Map.empty[Long, Seq[Any]]
+          else data.filter(col(KeyCol).isin(keys.toIndexedSeq: _*))
+            .select(col(KeyCol), col(column)).collect().toSeq
+            .groupMap(keyOf(_, 0))(_.get(1)))
+      }
     val extras = hits.schema.fields.filterNot(f => f.name == KeyCol || f.name == "score")
     val rows = page.toSeq.flatMap { h =>
       val key = keyOf(h, keyAt)
@@ -1572,7 +1624,7 @@ class Collection private[core] (
       c < 0 || (c == 0 && a.getLong(1) < b.getLong(1))
     }
     spark.createDataFrame(rows.asJava, StructType(Seq(
-        StructField("content", data.schema(column).dataType),
+        StructField("content", contentType),
         StructField("key", LongType), StructField("score", DoubleType)) ++ extras))
   }
 
@@ -2014,10 +2066,17 @@ class Collection private[core] (
         StructField("list_id", IntegerType))))
       .parquet(annListsDir(column))
 
+  /** A small metadata table (ANN centroids/codebooks/params, keyword
+    * stats) read whole through the serving cache, else through Spark in
+    * its declared layout.
+    */
+  private def smallTable(dir: String, schema: StructType): Seq[Row] =
+    ServingCache.table(hadoopConf, dir, schema)
+      .getOrElse(spark.read.schema(schema).parquet(dir).collect().toSeq)
+
   private def readAnnCenters(column: String): Array[Array[Double]] =
-    spark.read.schema(AnnCentersSchema).parquet(s"${annIndexDir(column)}/centroids")
-      .collect().sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    smallTable(s"${annIndexDir(column)}/centroids", AnnCentersSchema).toArray
+      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   private def annClustered(dfIn: DataFrame, nOut: Int): DataFrame =
     dfIn.repartitionByRange(math.max(1, nOut), col("list_id"), col(KeyCol))
@@ -2030,8 +2089,8 @@ class Collection private[core] (
   }
 
   private def readAnnCodebooks(column: String): Array[Array[Array[Double]]] =
-    spark.read.schema(AnnCodebooksSchema).parquet(s"${annIndexDir(column)}/codebooks")
-      .collect().sortBy(r => (r.getInt(0), r.getInt(1)))
+    smallTable(s"${annIndexDir(column)}/codebooks", AnnCodebooksSchema).toArray
+      .sortBy(r => (r.getInt(0), r.getInt(1)))
       .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.map(_._2)).toArray
@@ -2040,15 +2099,16 @@ class Collection private[core] (
     * read as 0.
     */
   private def annPqM(column: String): Int =
-    Option(spark.read.schema(AnnParamsSchema).parquet(s"${annIndexDir(column)}/params")
-      .head().getAs[Integer]("pq_m")).fold(0)(_.intValue)
+    Option(annParams(column).getAs[Integer]("pq_m")).fold(0)(_.intValue)
 
   /** Build-time assignment drift baseline; None for params predating the
     * column (legacy index — no baseline to compare against).
     */
   private def annBuildDrift(column: String): Option[Double] =
-    Option(spark.read.schema(AnnParamsSchema).parquet(s"${annIndexDir(column)}/params")
-      .head().getAs[java.lang.Double]("build_drift")).map(_.doubleValue)
+    Option(annParams(column).getAs[java.lang.Double]("build_drift")).map(_.doubleValue)
+
+  private def annParams(column: String): Row =
+    smallTable(s"${annIndexDir(column)}/params", AnnParamsSchema).head
 
   /** Lists rows for a batch of vectors: `(key, embedding, list_id)` in
     * the full-vector layout, `(key, code, list_id)` when PQ-encoded —
@@ -2162,10 +2222,16 @@ class Collection private[core] (
     val probes = graft.search.Ann.ivfProbes(centers, qv,
       math.min(nProbe, centers.length)).map(Integer.valueOf)
     val pqM = annPqM(column)
-    val lists = annLists(column, pqM).filter(col("list_id").isin(probes: _*))
-    val cand = predicate.fold(lists)(p =>
-      lists.join(df.filter(p).select(col(KeyCol)), Seq(KeyCol), "left_semi"))
-    val hits =
+    // flat lists without a predicate score on the driver over the probed
+    // lists' resident segments
+    val resident =
+      if (pqM == 0 && predicate.isEmpty)
+        ServingCache.annLists(hadoopConf, annListsDir(column), probes.map(_.intValue).toSet)
+      else None
+    resident.map(residentPage(_, qv, limit, after = None)).getOrElse {
+      val lists = annLists(column, pqM).filter(col("list_id").isin(probes: _*))
+      val cand = predicate.fold(lists)(p =>
+        lists.join(df.filter(p).select(col(KeyCol)), Seq(KeyCol), "left_semi"))
       if (pqM == 0)
         graft.search.Search.topK(cand.select(col(KeyCol), col("embedding")), qv, limit)
       else {
@@ -2181,7 +2247,7 @@ class Collection private[core] (
           .join(broadcast(cands), Seq(KeyCol), "left_semi")
         graft.search.Search.topK(exact, qv, limit)
       }
-    hits
+    }
   }
 
   /** Measured recall of the stored ANN index: a hash-ordered sample of

@@ -29,6 +29,9 @@ object Search {
   def validateLimit(limit: Int): Unit =
     require(limit >= 1 && limit <= MaxLimit, s"limit must be in [1, $MaxLimit], got $limit")
 
+  /** [[topK]]'s default bound on its per-partition key state. */
+  val LocalStateCap = 4096
+
   /** Score column for a literal query vector (computed in f64). */
   def scoreAgainst(embCol: Column, queryVec: Array[Float]): Column =
     VectorFunctions.cosine(embCol, typedLit(queryVec.map(_.toDouble).toSeq))
@@ -93,7 +96,7 @@ object Search {
     */
   def topK(embeddings: DataFrame, queryVec: Array[Float], k: Int,
            keyColName: String = KeyCol, embColName: String = "embedding",
-           localStateCap: Int = 4096): DataFrame = {
+           localStateCap: Int = LocalStateCap): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     // loud guard: the typed stage decodes keys as long; a non-integral
@@ -111,33 +114,42 @@ object Search {
         scoreAgainst(col(embColName), queryVec).as("score"))
       .as[(Long, Double)]
     val cap = math.max(k, localStateCap)
-    val local = scored.mapPartitions { it =>
-      val best = new java.util.HashMap[java.lang.Long, java.lang.Double]
-      def topEntries(n: Int): Array[(Long, Double)] = {
-        import scala.jdk.CollectionConverters._
-        best.entrySet().iterator().asScala
-          .map(e => (e.getKey.longValue, e.getValue.doubleValue))
-          .toArray.sortBy { case (key, s) => (-s, key) }.take(n)
-      }
-      it.foreach { case (key, s) =>
-        val cur = best.get(key)
-        if (cur == null || s > cur) {
-          best.put(key, s)
-          if (best.size > cap) {
-            // compact to the top-k under the emission order; amortized
-            // O(log cap) per row (cap - k inserts between compactions)
-            val keep = topEntries(k)
-            best.clear()
-            keep.foreach { case (kk, ss) => best.put(kk, ss) }
-          }
-        }
-      }
-      topEntries(k).iterator
-    }
+    val local = scored.mapPartitions(it => localTopK(it, k, cap).iterator)
     local.toDF(keyColName, "score")
       .groupBy(col(keyColName)).agg(max(col("score")).as("score"))
       .orderBy(desc("score"), col(keyColName))
       .limit(k)
+  }
+
+  /** [[topK]]'s stage-1 accumulator over one partition's `(key, score)`
+    * rows: per-key max in at most `cap` entries, cut to the k best under
+    * the order `(-score, key)` and returned in it. Over ALL of an index's
+    * rows it is the exact top-k page; the driver-side serving path
+    * ([[graft.core.Collection.search]] over resident vectors) runs it so.
+    */
+  private[graft] def localTopK(it: Iterator[(Long, Double)], k: Int,
+                               cap: Int): Array[(Long, Double)] = {
+    val best = new java.util.HashMap[java.lang.Long, java.lang.Double]
+    def topEntries(n: Int): Array[(Long, Double)] = {
+      import scala.jdk.CollectionConverters._
+      best.entrySet().iterator().asScala
+        .map(e => (e.getKey.longValue, e.getValue.doubleValue))
+        .toArray.sortBy { case (key, s) => (-s, key) }.take(n)
+    }
+    it.foreach { case (key, s) =>
+      val cur = best.get(key)
+      if (cur == null || s > cur) {
+        best.put(key, s)
+        if (best.size > cap) {
+          // compact to the top-k under the emission order; amortized
+          // O(log cap) per row (cap - k inserts between compactions)
+          val keep = topEntries(k)
+          best.clear()
+          keep.foreach { case (kk, ss) => best.put(kk, ss) }
+        }
+      }
+    }
+    topEntries(k)
   }
 
   /** [[topK]]'s page N: the k best keys STRICTLY AFTER the keyset cursor

@@ -49,13 +49,22 @@ import graft.search.Search
   *
   * Requests are served concurrently by a fixed pool of worker threads,
   * one per processor available to the driver JVM; [[stop]] shuts it
-  * down. The driver hosts the API and executors do the scans. A search
-  * request runs a handful of Spark jobs — the index reads and top-k
-  * (the ANN and keyword modes prune to the probed lists / the query
-  * terms' buckets), plus one key-pruned content fetch; the page itself
-  * is assembled on the driver. Concurrent requests share the Spark
-  * scheduler, and embedders are called from several workers at once
-  * ([[graft.embed.Embedder]]).
+  * down. The driver hosts the API and executors do the scans.
+  *
+  * What a search costs: every request heals and lists the directories it
+  * reads, and takes the hits' content, the keyword stats and the ANN
+  * centroids/params from the driver's read cache over the collection's
+  * Parquet files ([[graft.core.ServingCache]]). A warm `vector` request
+  * (page 1 or `search_after`) and a warm `ann` request over flat lists
+  * score on the driver over the index's resident vectors and run no
+  * Spark job. `keyword`, `fuzzy` and `hybrid` run their postings reads
+  * and BM25/fusion plans as Spark jobs (8, 15 and 9 on ServeJobsSpec's
+  * fixture); `late`, `binary`, PQ-layout ANN and `search_batch` run on
+  * Spark too. The cache fills on first use and holds at most an eighth
+  * of the driver's maximum heap; an index larger than that is searched
+  * by Spark jobs. A committed write is visible to the next request.
+  * Concurrent requests share the Spark scheduler, and embedders are
+  * called from several workers at once ([[graft.embed.Embedder]]).
   */
 final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
                     host: String = "127.0.0.1") {

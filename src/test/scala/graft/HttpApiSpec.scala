@@ -180,6 +180,37 @@ class HttpApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("a column that is not an identifier is a 400 and never reaches the filesystem") {
+    val root = java.nio.file.Files.createTempDirectory("graft_http").toString
+    val cat = new Catalog(spark, root)
+    val registry = new ModelRegistry
+    registry.register("hf://mys/minilm", "f32", new HashingEmbedder(dim = 64))
+    val c = cat.create(CollectionConfig(name = "t"))
+    c.importDf(Seq("apple pie", "car road").toDF("text"))
+    c.embedColumn("text", registry.load("hf://mys/minilm", "f32"))
+    // "<collection>/index/../../victim" is "<root>/victim"; a swap heal
+    // there would delete "<root>/victim_staging"
+    val victim = new java.io.File(root, "victim_staging")
+    victim.mkdirs()
+    new java.io.File(victim, "keep.txt").createNewFile()
+
+    val api = new HttpApi(cat, registry, 0)
+    val port = api.start()
+    try {
+      for (mode <- Seq("vector", "keyword", "ann", "late")) {
+        val (sc, sb) = post(port, "/collections/t/search",
+          s"""{"column_name":"../../victim","query":"a","mode":"$mode"}""")
+        assert(sc == 400 && sb.contains("invalid identifier"), s"$mode: $sb")
+      }
+      val (mc, mb) = get(port, "/collections/t/similar/1?column=../../victim")
+      assert(mc == 400 && mb.contains("invalid identifier"), mb)
+      assert(new java.io.File(victim, "keep.txt").exists)
+      // the real column still serves
+      val (oc, ob) = get(port, "/collections/t/similar/1?column=text")
+      assert(oc == 200 && ob.contains("car road"), ob)
+    } finally api.stop()
+  }
+
   test("parallel mixed-mode requests return the serial pages") {
     val root = java.nio.file.Files.createTempDirectory("graft_http").toString
     val cat = new Catalog(spark, root)
