@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
@@ -91,15 +91,14 @@ class Collection private[core] (
   def isEmpty: Boolean = { recoverCompaction(); !fs.exists(new Path(dataDir)) }
 
   /** Crash recovery for a staged directory swap ([[compact]] and
-    * [[compactIndex]] share the rename window; [[upsert]] and
-    * [[reembedChanged]] use the file-granular journal protocol below,
-    * healed by [[recoverFileSwap]]). A crash between the
-    * two renames leaves the target directory MISSING, the original staged
-    * at `_precompact`, and the rewrite at `_compacting`. Reads heal it:
-    * roll the rewrite forward when it finished (its `_SUCCESS` commit
-    * marker exists), otherwise roll the original back. Either way the
-    * directory's rows are never lost and the next read sees a complete
-    * directory.
+    * [[compactIndex]] share the rename window; file-granular writes use
+    * the journal protocol below, healed by [[recoverFileSwap]]). A crash
+    * between the two renames leaves the target directory MISSING, the
+    * original staged at `_precompact`, and the rewrite at `_compacting`.
+    * Reads heal it: roll the rewrite forward when it finished (its
+    * `_SUCCESS` commit marker exists), otherwise roll the original back.
+    * Either way the directory's rows are never lost and the next read
+    * sees a complete directory.
     */
   private[core] def recoverSwap(target: String): Unit = swapMonitor.synchronized {
     val dataPath = new Path(target)
@@ -132,42 +131,52 @@ class Collection private[core] (
     Collection.swapMonitors.computeIfAbsent(
       fs.makeQualified(new Path(dir)).toString, _ => new Object)
 
-  // ---- file-granular copy-on-write ([[upsert]] / [[reembedChanged]]) ----
+  // ---- file-granular copy-on-write -------------------------------------
   //
   // Whole-directory staged swaps (compact's mechanism) rewrite O(table)
   // bytes for ANY update size — a scale-killer when a 1,000-row correction
   // batch hits a 100 TB collection. The file-granular protocol instead
   // replaces only the parquet files whose footer `_key` range intersects
   // the update keys ([[ParquetStats.fileKeyRanges]] — footer metadata,
-  // no data I/O), leaving every other file untouched on disk.
+  // no data I/O), leaving every other file untouched on disk. It is the
+  // one commit path of every file-granular write: [[upsert]],
+  // [[deleteKeys]], the fingerprint repairs, and the vector embed
+  // appends (a swap that replaces nothing).
   //
-  // Commit protocol (crash-safe, roll-forward):
+  // Commit protocol (crash-safe, roll-forward), owned by the writer:
   //   1. write the replacement rows to `<target>_staging/` (Spark job);
   //   2. write a journal listing (files-to-delete, staged-files) to a tmp
-  //      name and RENAME it to `<target>_swapjournal` — this rename is the
-  //      commit point;
+  //      name, fence on the lease, and RENAME it to `<target>_swapjournal`
+  //      — this rename is the commit point;
   //   3. move staged files into the target dir, then delete the replaced
   //      files, then drop the staging dir and the journal.
-  // A crash before (2) leaves an uncommitted staging dir that the next
-  // read discards; a crash after (2) is completed by the next read
-  // re-running (3) — every step is idempotent (move: skip when already
-  // moved; delete: already-gone is fine), so rows are never lost and
-  // duplicates never survive past the heal that every read performs.
+  // Readers only roll forward: a crash after (2) is completed by the next
+  // read re-running (3) — every step is idempotent (move: skip when
+  // already moved; delete: already-gone is fine), so rows are never lost
+  // and duplicates never survive past the heal that every read performs.
+  // A stage without a journal is a write in flight to every reader, on
+  // this instance or another, so only a writer under the lease discards
+  // one ([[discardStage]]) — the leftovers of a crash before (2).
 
   private def journalPath(target: String) = new Path(target + "_swapjournal")
+  private def journalTmp(target: String) = new Path(target + "_swapjournal_tmp")
   private def stagingPath(target: String) = new Path(target + "_staging")
 
-  /** Heal a crashed file-granular swap: roll a committed journal forward,
-    * discard an uncommitted staging dir. Runs before every read of a
-    * directory that [[replaceFiles]] may have been rewriting.
+  /** Read-side heal of a file-granular swap: complete a committed
+    * journal. It deletes nothing else, so it is safe beside any write.
     */
   private[core] def recoverFileSwap(target: String): Unit = swapMonitor.synchronized {
     if (fs.exists(journalPath(target))) completeFileSwap(target)
-    else {
-      val stage = stagingPath(target)
-      if (fs.exists(stage)) fs.delete(stage, true)
-      fs.delete(new Path(target + "_swapjournal_tmp"), false)
-    }
+  }
+
+  /** Writer-side heal, under the write lease: roll a committed journal
+    * forward, then discard a crashed write's uncommitted stage and tmp
+    * journal — with the lease held, no other write can own them.
+    */
+  private def discardStage(target: String): Unit = swapMonitor.synchronized {
+    recoverFileSwap(target)
+    fs.delete(stagingPath(target), true)
+    fs.delete(journalTmp(target), false)
   }
 
   /** Heal both swap kinds on one directory before reading it. */
@@ -198,7 +207,7 @@ class Collection private[core] (
       require(!fs.exists(new Path(target, n)), s"staged file name collides with existing: $n")
     }
     val body = (deleteLeaves.map("D " + _) ++ stagedLeaves.map("S " + _)).mkString("\n")
-    val jTmp = new Path(target + "_swapjournal_tmp")
+    val jTmp = journalTmp(target)
     val out = fs.create(jTmp, true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
     // fencing: an op that outlived a broken lease must not commit over
@@ -223,6 +232,8 @@ class Collection private[core] (
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList.filter(_.nonEmpty)
       finally in.close()
+    // an append may be the target's first write
+    fs.mkdirs(new Path(target))
     lines.collect { case l if l.startsWith("S ") => l.drop(2) }.foreach { n =>
       val src = new Path(stage, n)
       val dst = new Path(target, n)
@@ -368,6 +379,7 @@ class Collection private[core] (
     writeLock.lock()
     try {
       if (isEmpty) return 0
+      discardStage(dataDir)
       val nFiles = filesFor(dataDir, targetFileBytes)
       writeAndSwap(dataDir) { tmp =>
         // range-clustered, not round-robin: compaction must PRESERVE the
@@ -427,12 +439,13 @@ class Collection private[core] (
   // watermark stream and the fingerprint-driven repair. Family methods
   // below hold only their own build / append / search code.
 
-  /** Heal the family's pending swaps: staged directory swaps, then
-    * file-granular journals.
+  /** A writer's heal of the family, under the write lease: staged
+    * directory swaps, then file-granular journals, discarding crashed
+    * writes' stages ([[discardStage]]).
     */
   private[core] def heal(f: IndexFamily, column: String): Unit = {
     f.dirSwap.foreach(t => recoverSwap(table(f, column, t)))
-    f.fileSwap.foreach(t => recoverFileSwap(table(f, column, t)))
+    f.fileSwap.foreach(t => discardStage(table(f, column, t)))
   }
 
   private[core] def built(f: IndexFamily, column: String): Boolean = {
@@ -464,8 +477,17 @@ class Collection private[core] (
     * Long.MinValue, not 0, when empty: user-imported keys may be
     * non-positive.
     */
-  private def watermark(table: String, keyCol: String = KeyCol): Long = {
-    val r = spark.read.parquet(table).agg(max(col(keyCol))).head()
+  /** Observability for specs/ops: micro-batches that took
+    * [[watermarkStream]]'s `held` anti-join since this Collection object
+    * was created.
+    */
+  @volatile private[graft] var streamRecoveryAntiJoins: Long = 0L
+
+  private def watermark(table: String, keyCol: String = KeyCol): Long =
+    watermarkOf(spark.read.parquet(table), keyCol)
+
+  private def watermarkOf(rows: DataFrame, keyCol: String = KeyCol): Long = {
+    val r = rows.agg(max(col(keyCol))).head()
     if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
   }
 
@@ -480,9 +502,18 @@ class Collection private[core] (
     * `ignoreMissingFiles`: a compaction may delete a listed source file
     * before the batch reads it — its rows live on in files the source
     * lists as new, which the watermark dedups.
+    *
+    * `held(lo)`, when given, is the family's stored keys at or above
+    * `lo`. A batch whose keys reach down to the watermark then keeps the
+    * rows the family does not hold instead of dropping them: the file
+    * source can list a multi-file append part-way, so a later batch may
+    * carry keys below an earlier one's. Without it such rows are left to
+    * the family's repair. A batch wholly above the watermark never reads
+    * the family.
     */
   private def watermarkStream(f: IndexFamily, column: String, checkpointDir: String,
-                              seed: () => Long)(bootstrap: => Unit)(
+                              seed: () => Long, held: Option[Long => DataFrame] = None)(
+                              bootstrap: => Unit)(
                               append: DataFrame => Unit): StreamingQuery = {
     Identifiers.validate(column)
     val source = f.upstream match {
@@ -507,9 +538,18 @@ class Collection private[core] (
           if (!built(f, column)) { bootstrap; maxSeen = seed(); seeded = true }
           else {
             if (!seeded) { maxSeen = seed(); seeded = true }
-            val pending = batch.filter(col(KeyCol) > maxSeen)
-            val mx = pending.agg(max(col(KeyCol))).head()
-            if (!mx.isNullAt(0)) { append(pending); maxSeen = mx.getLong(0) }
+            val r = batch.agg(min(col(KeyCol)), max(col(KeyCol))).head()
+            if (!r.isNullAt(0)) {
+              val (lo, hi) = (r.getLong(0), r.getLong(1))
+              held match {
+                case Some(keys) if lo <= maxSeen =>
+                  streamRecoveryAntiJoins += 1
+                  val pending = batch.join(keys(lo), Seq(KeyCol), "left_anti")
+                  if (!pending.isEmpty) append(pending)
+                case _ => if (hi > maxSeen) append(batch.filter(col(KeyCol) > maxSeen))
+              }
+              maxSeen = math.max(maxSeen, hi)
+            }
           }
         } finally writeLock.unlock()
       }
@@ -520,28 +560,36 @@ class Collection private[core] (
     * `target`: keys whose `current` upstream `(key, fp)` differs from the
     * `stored` one — or lacks one on either side (unseen keys, including
     * below-watermark upsert inserts; legacy fingerprint-less rows) — get
-    * their rows replaced by `fresh(changed)`. Only the files `touched`
-    * plans (default: footer key ranges) are rewritten, through the
+    * their rows replaced by `fresh(changed)`; `changed` keeps `current`'s
+    * other columns (what `fresh` needs, e.g. the text to re-embed). Only
+    * the files `touched` plans (default: footer key ranges) are
+    * rewritten, read in their declared `layout` when given, through the
     * journaled file swap; `sidecar(changed, freshRows)` then records the
     * new fingerprints LAST, so a crash re-repairs conservatively and the
     * re-run is idempotent. Returns the number of changed keys.
+    *
+    * `changed` is pinned with `localCheckpoint`: on a cluster, losing an
+    * executor fails the repair instead of recomputing it, and a re-run heals.
     */
   private def repairByFingerprint(
       target: String, current: DataFrame, stored: DataFrame,
       touched: Option[DataFrame => Seq[FileKeyRange]] = None,
-      cluster: (DataFrame, Int) => DataFrame = keyClustered)(
+      cluster: (DataFrame, Int) => DataFrame = keyClustered,
+      layout: Option[StructType] = None)(
       fresh: DataFrame => DataFrame)(sidecar: (DataFrame, DataFrame) => Unit): Long = {
+    val carried = current.columns.filter(_ != "fp").map(col)
     val changed = current.withColumnRenamed("fp", "__fp")
       .join(stored, Seq(KeyCol), "left_outer")
       .filter(col("fp").isNull || col("__fp").isNull || col("fp") =!= col("__fp"))
-      .select(col(KeyCol)).localCheckpoint(true)
+      .select(carried.toIndexedSeq: _*).localCheckpoint(true)
     val n = changed.count()
     if (n > 0L) {
       val rows = fresh(changed)
       val files = touched.fold(touchedFiles(target, changed))(_(changed))
       val next =
         if (files.isEmpty) rows
-        else spark.read.parquet(files.map(_.path.toString): _*)
+        else layout.fold(spark.read)(l => spark.read.schema(l))
+          .parquet(files.map(_.path.toString): _*)
           .join(changed, Seq(KeyCol), "left_anti")
           .unionByName(rows)
       replaceFiles(target, files.map(_.path.getName)) { tmp =>
@@ -656,48 +704,27 @@ class Collection private[core] (
   }
 
   /** The `(_key, embedding)` index table for `column`, empty-schema'd when
-    * absent. Quantized indexes (`model_variant` f16/i8 — stored as a
-    * compact binary payload, see [[graft.embed.Quantization]]) are
-    * dequantized on read: quantization is a storage concern only, readers
-    * always see `array<float>` (SURVEY §1.3).
+    * absent. Quantized indexes (`model_variant` f16/i8, stored as a
+    * compact binary payload, see [[VectorLayout]]) are dequantized on
+    * read: quantization is a storage concern only, readers always see
+    * `array<float>` (SURVEY §1.3).
     */
-  def embeddings(column: String): DataFrame = {
-    val raw = indexRaw(column)
-    raw match {
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField(KeyCol, LongType, nullable = false),
-            StructField("embedding", ArrayType(FloatType), nullable = false))))
-      case Some(r) => dequantView(r)
-    }
-  }
+  def embeddings(column: String): DataFrame =
+    indexRaw(column).fold(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(
+        StructField(KeyCol, LongType, nullable = false),
+        StructField("embedding", ArrayType(FloatType), nullable = false)))))(
+      vectorLayout.view)
 
-  /** `(_key, embedding)` reader view over index rows AS STORED — the
-    * dequantize-on-read step shared by [[embeddings]] and
-    * [[annIndexStream]]'s micro-batches (which arrive in the stored
-    * layout straight from the index directory's file stream).
-    */
-  private def dequantView(raw: DataFrame): DataFrame =
-    if (raw.schema.fieldNames.contains("qembedding")) {
-      val variant = config.model_variant
-      val deq = udf((b: Array[Byte]) =>
-        graft.embed.Quantization.decode(variant, b).toSeq)
-      raw.select(col(KeyCol), deq(col("qembedding")).as("embedding"))
-    } else
-      // readers keep the (_key, embedding) contract; the fingerprint
-      // column (reembedChanged's staleness marker) stays internal
-      raw.select(col(KeyCol), col("embedding"))
+  private val vectorLayout = VectorLayout(config.model_variant)
 
   /** The index table as stored (including the `fp` fingerprint column when
     * present), or None when absent/empty. "Exists but holds no data files"
-    * counts as empty too: a write task aborted mid-append (e.g. a
-    * streaming micro-batch killed between directory creation and first
-    * file commit) leaves the directory behind with no parquet footers,
-    * and a bare read would die with UNABLE_TO_INFER_SCHEMA instead of
+    * counts as empty too: a directory left behind with no parquet footers
+    * would make a bare read die with UNABLE_TO_INFER_SCHEMA instead of
     * reporting an empty index. The read declares the stored layout
-    * ([[vectorIndexSchema]]) instead of inferring it, which would cost a
+    * ([[VectorLayout.schema]]) instead of inferring it, which would cost a
     * footer job per call; pre-fingerprint index files read `fp` as
     * null, as a schema merge would.
     */
@@ -706,17 +733,8 @@ class Collection private[core] (
     val idx = new Path(indexDir(column))
     val hasData = fs.exists(idx) &&
       fs.listStatus(idx).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (!hasData) None
-    else Some(spark.read.schema(vectorIndexSchema).parquet(indexDir(column)))
+    Option.when(hasData)(spark.read.schema(vectorLayout.schema).parquet(indexDir(column)))
   }
-
-  /** The vector index's stored layout: `(_key, fp, embedding)` for f32,
-    * `(_key, fp, qembedding)` bytes for the quantized variants.
-    */
-  private def vectorIndexSchema: StructType = StructType(Seq(
-    StructField(KeyCol, LongType), StructField("fp", StringType),
-    if (config.model_variant == "f32") StructField("embedding", ArrayType(FloatType))
-    else StructField("qembedding", BinaryType)))
 
   /** Number of indexed vectors for `column` (A2: the reference asks the
     * usearch index for its size, collection_actor.rs:367-378). Goes
@@ -726,66 +744,53 @@ class Collection private[core] (
     */
   def indexedCount(column: String): Long = embeddings(column).count()
 
-  /** Embed `column` incrementally and append to its index (E4).
-    *
-    * The reference's incremental driver pages LIMIT/OFFSET batches starting
-    * at `index.size()` (collection_actor.rs:808-871) — O(n·batches) rescans
-    * and fragile under reordering. Spark-native: the watermark is
-    * `max(_key)` already indexed; one partitioned pass embeds everything
-    * above it. Returns the number of rows embedded.
+  /** The index's watermark ([[watermark]]); no read when it holds no files. */
+  private def vectorWatermark(column: String): Long =
+    indexRaw(column).fold(Long.MinValue)(watermarkOf(_))
+
+  // ---- vector embed passes ----------------------------------------------
+  //
+  // Every pass that adds vectors (embedColumn, chunked or not, the embed
+  // stream, insertVectors and reembedChanged's repair) is the vector
+  // family's lifecycle ([[maintained]], [[watermarkStream]],
+  // [[repairByFingerprint]]) around two shared steps: [[embedRows]] turns
+  // `(key, text)` rows into stored rows and [[appendVectors]] commits
+  // them. The embed job can run for hours at corpus scale, long past the
+  // lease, so nothing lands in the live index from it directly: it writes
+  // the file swap's stage, and [[replaceFiles]] re-checks (and renews) the
+  // lease AFTER the job, before the journal commits the cheap moves. A
+  // crash before that commit leaves a stage the next writer discards (the
+  // watermark never advanced, so the batch re-embeds whole); a crash
+  // after it is rolled forward by the next read, so a partly moved batch
+  // can never strand its unmoved keys below an advanced watermark.
+
+  /** `(key, text)` rows embedded into the stored layout: each row carries
+    * the md5 fingerprint of the text it embeds (what [[reembedChanged]]
+    * compares against md5 of the current text), chunked when `chunk`
+    * holds `(maxTokens, overlapTokens)`, quantized per `model_variant`.
     */
-  /** Staged commit for the embed passes. The embed job itself can run
-    * for hours at corpus scale — long past the lease — so nothing may
-    * land in the live index directly from it: the job writes into a
-    * sibling `__stage` directory, the lease is re-checked (and renewed)
-    * AFTER the job, and only then do the staged files move in (cheap
-    * renames) behind a commit marker. Crash before the marker: the
-    * orphaned stage is discarded by the next embed pass (watermark never
-    * advanced — the batch re-embeds whole). Crash mid-move: the marker
-    * rolls the REST of the moves forward before the next watermark read,
-    * so a partially-visible batch can never strand its unmoved keys
-    * below an advanced watermark. Queries never see the stage (sibling
-    * directory) and never recover it (write paths only, under the lock).
+  private def embedRows(rows: Dataset[(Long, String)], embedder: graft.embed.Embedder,
+                        batchSize: Int, chunk: Option[(Int, Int)]): DataFrame =
+    vectorLayout.encode(chunk match {
+      case Some((maxTokens, overlap)) => graft.embed.EmbedBatch.chunkedTriples(
+        rows, embedder, batchSize, maxTokens, overlap)
+      case None => graft.embed.EmbedBatch.triples(rows, embedder, batchSize)
+    })
+
+  /** `(key, text)` of `rows`' `column`. NULL text embeds as "" (reference
+    * flattens NULL to "" on batch scan, collection_actor.rs:446-449).
     */
-  private def embedStageDir(column: String) = new Path(s"${indexDir(column)}__stage")
-  private def embedStageMarker(column: String) =
-    new Path(s"${indexDir(column)}__stage_commit")
-
-  private def moveStageIn(column: String): Unit = {
-    val stage = embedStageDir(column)
-    if (fs.exists(stage)) {
-      fs.mkdirs(new Path(indexDir(column)))
-      fs.listStatus(stage).foreach { s =>
-        if (s.isFile && s.getPath.getName.endsWith(".parquet")) {
-          val dst = new Path(indexDir(column), s.getPath.getName)
-          if (fs.exists(dst)) fs.delete(s.getPath, false) // idempotent re-run
-          else if (!fs.rename(s.getPath, dst))
-            throw new java.io.IOException(
-              s"embed append commit: could not move ${s.getPath} to $dst")
-        }
-      }
-      fs.delete(stage, true)
-    }
+  private def texts(rows: DataFrame, column: String): Dataset[(Long, String)] = {
+    import spark.implicits._
+    rows.select(col(KeyCol), coalesce(col(column).cast(StringType), lit("")))
+      .as[(Long, String)]
   }
 
-  private def recoverEmbedStage(column: String): Unit = {
-    if (fs.exists(embedStageMarker(column))) {
-      moveStageIn(column) // committed: roll the moves forward
-      fs.delete(embedStageMarker(column), false)
-    } else if (fs.exists(embedStageDir(column)))
-      fs.delete(embedStageDir(column), true) // uncommitted: discard
-  }
-
-  private def fencedIndexAppend(column: String)(write: String => Unit): Unit = {
-    recoverEmbedStage(column)
-    write(embedStageDir(column).toString)
-    // the embed job may have outlived the lease; nothing is visible yet —
-    // fence (and renew) before committing the staged files
-    writeLock.checkHeld()
-    fs.create(embedStageMarker(column), true).close()
-    moveStageIn(column)
-    fs.delete(embedStageMarker(column), false)
-  }
+  /** Commit stored rows into `column`'s index: a file swap that replaces
+    * nothing. Caller holds [[writeLock]].
+    */
+  private def appendVectors(column: String, rows: DataFrame): Unit =
+    replaceFiles(indexDir(column), Nil)(rows.write.mode("overwrite").parquet(_))
 
   /** K2: insert caller-provided vectors directly into `column`'s index —
     * the reference accepts externally produced embeddings into its
@@ -796,14 +801,11 @@ class Collection private[core] (
     * (absent reads null — repair passes conservatively treat
     * fingerprint-less rows as changed). Vectors quantize per the
     * collection's `model_variant` like every embed pass and the append
-    * commits through the same fenced stage.
+    * commits through the same journaled file swap.
     */
-  def insertVectors(column: String, vectors: DataFrame): Long = {
-    import spark.implicits._
-    Identifiers.validate(column)
-    writeLock.lock()
-    try {
-      recoverEmbedStage(column)
+  def insertVectors(column: String, vectors: DataFrame): Long =
+    maintained(VectorIndex, column) { _ =>
+      import spark.implicits._
       val before = indexedCount(column)
       val cols = vectors.columns
       require(cols.length >= 2,
@@ -837,64 +839,21 @@ class Collection private[core] (
                 lit(" (key "), col(KeyCol), lit(")")))))
         case None => src0
       }
-      val variant = config.model_variant
-      val out =
-        if (variant == "f32") src
-        else src.as[(Long, String, Array[Float])]
-          .map { case (k, f, v) =>
-            (k, f, graft.embed.Quantization.encode(variant, v)) }
-          .toDF(KeyCol, "fp", "qembedding")
-      fencedIndexAppend(column)(stage =>
-        out.write.mode("overwrite").parquet(stage))
+      appendVectors(column, vectorLayout.encode(src.as[(Long, String, Array[Float])]))
       indexedCount(column) - before
-    } finally writeLock.unlock()
-  }
+    }
 
+  /** Embed `column` incrementally and append to its index (E4).
+    *
+    * The reference's incremental driver pages LIMIT/OFFSET batches starting
+    * at `index.size()` (collection_actor.rs:808-871) — O(n·batches) rescans
+    * and fragile under reordering. Spark-native: the watermark is
+    * `max(_key)` already indexed; one partitioned pass embeds everything
+    * above it. Returns the number of rows embedded.
+    */
   def embedColumn(column: String, embedder: graft.embed.Embedder,
-                  batchSize: Int = 32): Long = {
-    import spark.implicits._
-    // under the write lock (= cross-process lease): a concurrent writer's
-    // compactIndex/repair rewrite must not interleave with this append,
-    // and two embed passes racing the same watermark would double-embed
-    writeLock.lock()
-    try {
-    recoverEmbedStage(column)
-    val before = indexedCount(column)
-    // Long.MinValue, not 0: user-imported keys may be non-positive and
-    // must still embed into an empty index
-    val watermark = if (before == 0L) Long.MinValue
-      else Keys.maxKey(embeddings(column))
-    val pending = df
-      .filter(col(KeyCol) > watermark)
-      // NULL text embeds as "" (reference flattens NULL to "" on batch scan,
-      // collection_actor.rs:446-449).
-      .select(col(KeyCol), coalesce(col(column).cast(StringType), lit("")))
-      .as[(Long, String)]
-    // Cheap limit-1 probe so a no-op call appends no empty file. The full
-    // batch is NEVER cached or counted up front — at scale that cache is
-    // pure memory pressure; the embed pass flows straight into the
-    // parquet append, and the returned count comes from the (footer-
-    // metadata-cheap) before/after index counts.
-    if (pending.isEmpty) return 0L
-    val variant = config.model_variant
-    // each index row carries the md5 fingerprint of the text it embeds —
-    // the marker reembedChanged compares against md5(current text) to
-    // find rows an upsert rewrote under an unchanged key
-    val embedded0 = graft.embed.EmbedBatch.triples(pending, embedder, batchSize)
-    // f16/i8 variants quantize the stored payload (2 or ~1 bytes/dim vs 4);
-    // reads dequantize transparently in embeddings().
-    val embedded =
-      if (variant == "f32") embedded0.toDF(KeyCol, "fp", "embedding")
-      else embedded0
-        .map { case (k, f, v) => (k, f, graft.embed.Quantization.encode(variant, v)) }
-        .toDF(KeyCol, "fp", "qembedding")
-    // staged commit: the (long) embed job runs into __stage; the fence
-    // re-checks the lease AFTER it, before the cheap moves land
-    fencedIndexAppend(column)(stage =>
-      embedded.write.mode("overwrite").parquet(stage))
-    indexedCount(column) - before
-    } finally writeLock.unlock()
-  }
+                  batchSize: Int = 32): Long =
+    embedAbove(column, embedder, batchSize, chunk = None)
 
   /** Chunk-granularity twin of [[embedColumn]]: every document above the
     * watermark is markdown-chunked and each chunk embeds as its OWN
@@ -911,34 +870,28 @@ class Collection private[core] (
     */
   def embedColumnChunked(column: String, embedder: graft.embed.Embedder,
                          maxTokens: Int = 512, overlapTokens: Int = 50,
-                         batchSize: Int = 32): Long = {
-    import spark.implicits._
-    writeLock.lock() // see embedColumn: lease-covered append
-    try {
-    recoverEmbedStage(column)
-    val before = indexedCount(column)
-    // Long.MinValue, not 0: user-imported keys may be non-positive and
-    // must still embed into an empty index
-    val watermark = if (before == 0L) Long.MinValue
-      else Keys.maxKey(embeddings(column))
-    val pending = df
-      .filter(col(KeyCol) > watermark)
-      .select(col(KeyCol), coalesce(col(column).cast(StringType), lit("")))
-      .as[(Long, String)]
-    if (pending.isEmpty) return 0L
-    val variant = config.model_variant
-    val embedded0 = graft.embed.EmbedBatch.chunkedTriples(
-      pending, embedder, batchSize, maxTokens, overlapTokens)
-    val embedded =
-      if (variant == "f32") embedded0.toDF(KeyCol, "fp", "embedding")
-      else embedded0
-        .map { case (k, f, v) => (k, f, graft.embed.Quantization.encode(variant, v)) }
-        .toDF(KeyCol, "fp", "qembedding")
-    fencedIndexAppend(column)(stage =>
-      embedded.write.mode("overwrite").parquet(stage))
-    indexedCount(column) - before
-    } finally writeLock.unlock()
-  }
+                         batchSize: Int = 32): Long =
+    embedAbove(column, embedder, batchSize, Some((maxTokens, overlapTokens)))
+
+  /** [[embedColumn]]'s body: embed every row above the watermark and
+    * append it, under the write lease (a concurrent compactIndex or
+    * repair rewrite must not interleave, and two passes racing the same
+    * watermark would double-embed). A limit-1 probe keeps a no-op call
+    * from appending an empty file; the batch itself is never cached or
+    * counted up front — at scale that cache is pure memory pressure — so
+    * the returned count comes from the footer-cheap before/after counts.
+    */
+  private def embedAbove(column: String, embedder: graft.embed.Embedder,
+                         batchSize: Int, chunk: Option[(Int, Int)]): Long =
+    maintained(VectorIndex, column) { _ =>
+      val before = indexedCount(column)
+      val pending = texts(df.filter(col(KeyCol) > vectorWatermark(column)), column)
+      if (pending.isEmpty) 0L
+      else {
+        appendVectors(column, embedRows(pending, embedder, batchSize, chunk))
+        indexedCount(column) - before
+      }
+    }
 
   /** Re-embed rows whose CURRENT text no longer matches the fingerprint
     * stored next to their indexed vector — the repair step after
@@ -948,99 +901,54 @@ class Collection private[core] (
     * no-op upserts, and already-repaired rows all re-embed nothing, and
     * watermark semantics for appends are untouched.
     *
-    * Scale shape: one key-equi-join between the collection (keys + md5 of
-    * the text column only — no vectors move) and the index's (key, fp)
-    * projection; only the changed rows are embedded. The index rewrite is
-    * an anti-join copy-on-write staged-swap like [[compact]] — O(index)
-    * I/O but no shuffle beyond the key join; at 10^10 rows the same
-    * mechanics apply per index partition. Rows indexed before the
-    * fingerprint column existed read `fp` as null and conservatively
-    * re-embed. Returns the number of rows re-embedded.
+    * [[repairByFingerprint]] over the vector index: one key-equi-join
+    * between the collection (keys + md5 of the text column — no vectors
+    * move) and the index's per-key fingerprints; only the changed rows
+    * are embedded, and only index files whose footer key range holds a
+    * changed key are rewritten. Rows indexed before the fingerprint
+    * column existed read `fp` as null and conservatively re-embed. Pass
+    * the indexing-time `chunkTokens` so a chunked index repairs back to
+    * chunk granularity. Returns the number of rows re-embedded.
     */
   def reembedChanged(column: String, embedder: graft.embed.Embedder,
                      batchSize: Int = 32,
                      chunkTokens: Option[Int] = None,
                      overlapTokens: Int = 50,
-                     scope: Option[DataFrame] = None): Long = {
-    import spark.implicits._
-    writeLock.lock()
-    try {
-      val raw = indexRaw(column).getOrElse { return 0L }
-      val watermark = Keys.maxKey(raw)
-      // scoped repair prunes the fingerprint compare to the batch's key
-      // range; the default full reconcile reads every fingerprint
-      def sc(d: DataFrame): DataFrame = scope.fold(d)(k => scopedTo(d, k))
-      val idxFp = sc(
-        if (raw.schema.fieldNames.contains("fp"))
-          raw.select(col(KeyCol), col("fp"))
-        else raw.select(col(KeyCol), lit(null).cast(StringType).as("fp")))
-      // Repair domain: collection keys <= the index watermark. LEFT join —
-      // an upsert can introduce a brand-new key BELOW the watermark, which
-      // embedColumn's max-key scan will never look at; here it surfaces as
-      // a missing index row (fp null) and embeds. Keys above the watermark
-      // stay embedColumn's job (append semantics untouched).
-      val cur = sc(df.filter(col(KeyCol) <= watermark)).select(col(KeyCol),
-        coalesce(col(column).cast(StringType), lit("")).as("__txt"))
-      val changed = cur
-        .join(idxFp, Seq(KeyCol), "left_outer")
-        .filter(col("fp").isNull || col("fp") =!= md5(col("__txt")))
-        // a chunked index ([[embedColumnChunked]]) holds SEVERAL rows per
-        // key, all carrying the same per-document fingerprint — dedup so
-        // one changed doc is embedded once, not once per stale chunk
-        .select(col(KeyCol), col("__txt")).dropDuplicates(KeyCol).as[(Long, String)]
-        // the changed set drives the embed pass, the touched-file plan AND
-        // the anti-join rewrite — materialize once
-        .localCheckpoint(true)
-      val n = changed.count()
-      if (n == 0L) return 0L
-      val variant = config.model_variant
-      // pass the indexing-time chunkTokens so a chunked index repairs back
-      // to chunk granularity; None keeps the one-vector-per-doc layout
-      val embedded0 = chunkTokens match {
-        case Some(mt) => graft.embed.EmbedBatch.chunkedTriples(
-          changed, embedder, batchSize, mt, overlapTokens)
-        case None => graft.embed.EmbedBatch.triples(changed, embedder, batchSize)
+                     scope: Option[DataFrame] = None): Long =
+    maintained(VectorIndex, column) { target =>
+      indexRaw(column).fold(0L) { raw =>
+        // scoped repair prunes the fingerprint compare to the batch's key
+        // range; the default full reconcile reads every fingerprint
+        def sc(d: DataFrame): DataFrame = scope.fold(d)(scopedTo(d, _))
+        // Repair domain: collection keys <= the index watermark. An upsert
+        // can introduce a brand-new key BELOW the watermark, which
+        // embedColumn never looks at; here it has no stored fingerprint
+        // and embeds. Keys above the watermark stay embedColumn's job.
+        val text = coalesce(col(column).cast(StringType), lit(""))
+        val current = sc(df.filter(col(KeyCol) <= watermarkOf(raw)))
+          .select(col(KeyCol), md5(text).as("fp"), text.as("__txt"))
+        repairByFingerprint(target, current, vectorFps(sc(raw)),
+            layout = Some(vectorLayout.schema)) { changed =>
+          embedRows(texts(changed, "__txt"), embedder, batchSize,
+            chunkTokens.map((_, overlapTokens)))
+        } { (_, _) => () }
       }
-      val fresh =
-        if (variant == "f32") embedded0.toDF(KeyCol, "fp", "embedding")
-        else embedded0
-          .map { case (k, f, v) => (k, f, graft.embed.Quantization.encode(variant, v)) }
-          .toDF(KeyCol, "fp", "qembedding")
-      // Partition-scoped rewrite: only index files whose footer key range
-      // intersects a changed key are rewritten; the rest of the index
-      // stays byte-identical (same O(touched) story as [[upsert]]).
-      val changedKeys = changed.toDF(KeyCol, "__txt").select(KeyCol)
-      val touched = touchedFiles(indexDir(column), changedKeys)
-      val next =
-        if (touched.isEmpty) fresh
-        else spark.read.option("mergeSchema", "true")
-          .parquet(touched.map(_.path.toString).toIndexedSeq: _*)
-          .join(changedKeys, Seq(KeyCol), "left_anti")
-          .unionByName(fresh, allowMissingColumns = true)
-      val nOut = math.max(1, touched.length)
-      replaceFiles(indexDir(column), touched.map(_.path.getName)) { tmp =>
-        next.repartitionByRange(nOut, col(KeyCol)).sortWithinPartitions(KeyCol)
-          .write.mode("overwrite").parquet(tmp)
-      }
-      n
-    } finally writeLock.unlock()
-  }
+    }
 
   /** Compact the per-column embedding index — the index-side answer to the
     * small-file problem [[embedColumnStream]] creates (one parquet file
     * per micro-batch, forever). Same write-lock + staged-swap + recovery
-    * as [[compact]]; rewritten range-clustered and key-sorted so the
-    * stream's replay anti-join and [[reembedChanged]]'s touched-file
-    * planning keep tight footer intervals to prune against. Preserves the
-    * stored layout verbatim — `fp` fingerprints and quantized payloads
-    * ride through because the rewrite reads the index AS STORED (not the
-    * dequantized view). Rows indexed before the fingerprint column
-    * existed materialize `fp` as null, which [[reembedChanged]] already
-    * treats conservatively — semantics unchanged. Safe to run while an
-    * embed stream is live: micro-batch appends and this rewrite hold the
-    * same [[writeLock]], so an append can never land between the rewrite
-    * and the swap and be lost. Returns the file count written, 0 when the
-    * index is absent.
+    * as [[compact]]; rewritten range-clustered and key-sorted so
+    * [[reembedChanged]]'s touched-file planning keeps tight footer
+    * intervals to prune against. Preserves the stored layout verbatim —
+    * `fp` fingerprints and quantized payloads ride through because the
+    * rewrite reads the index AS STORED (not the dequantized view). Rows
+    * indexed before the fingerprint column existed materialize `fp` as
+    * null, which [[reembedChanged]] already treats conservatively —
+    * semantics unchanged. Safe to run while an embed stream is live:
+    * micro-batch appends and this rewrite hold the same [[writeLock]], so
+    * an append can never land between the rewrite and the swap and be
+    * lost. Returns the file count written, 0 when the index is absent.
     */
   def compactIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
     maintained(VectorIndex, column) { target =>
@@ -1052,101 +960,33 @@ class Collection private[core] (
       }
     }
 
-  /** Streaming twin of [[embedColumn]]: watch the collection's data
-    * directory as a file stream and embed every newly landed row into the
-    * index continuously. The reference's "incremental indexing" is batch
-    * catch-up re-invoked by hand (collection_actor.rs:808-826); this is
-    * the always-on version — file-source micro-batches carry only new
-    * files, so each batch embeds exactly the appended rows, exactly once
-    * (checkpointed source offsets + append-only sink).
-    */
-  /** Observability for specs/ops: number of micro-batches that took the
-    * recovery anti-join path since this Collection object was created.
-    */
-  @volatile private[graft] var streamRecoveryAntiJoins: Long = 0L
-
-  /** `chunkTokens = Some(n)` embeds each micro-batch at CHUNK granularity
-    * (multi-vector per key, [[embedColumnChunked]]'s layout) so a
-    * stream-fed index matches a batch-chunked one; the recovery anti-join
-    * and watermark logic are unchanged — they operate on document keys,
-    * which chunking never splits across batches.
+  /** Streaming twin of [[embedColumn]] ([[watermarkStream]]): watch the
+    * collection's data directory as a file stream and embed every newly
+    * landed row into the index continuously. The reference's
+    * "incremental indexing" is batch catch-up re-invoked by hand
+    * (collection_actor.rs:808-826); this is the always-on version. Each
+    * micro-batch commits through the journaled append, so a batch is in
+    * the index whole or not at all. A batch reaching down to the
+    * max-indexed-key watermark (restart, checkpoint loss, `compact()`
+    * re-delivering rewritten files, an append listed part-way) embeds
+    * only its keys the index does not hold, by an anti-join pruned to
+    * the batch's key range; steady-state batches sit wholly above the
+    * watermark and never scan the index. Bootstraps with an
+    * [[embedColumn]] pass when the index is absent. `chunkTokens =
+    * Some(n)` embeds at CHUNK granularity ([[embedColumnChunked]]'s
+    * layout), so a stream-fed index matches a batch-chunked one.
     */
   def embedColumnStream(column: String, embedder: graft.embed.Embedder,
                         checkpointDir: String, batchSize: Int = 32,
                         chunkTokens: Option[Int] = None,
-                        overlapTokens: Int = 50)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val variant = config.model_variant
-    // Replay safety, bounded: the index-scanning anti-join runs ONLY for
-    // batches that could overlap what's already indexed — detected by
-    // "batch min key <= max key this stream has seen indexed". That
-    // covers every duplicate source at once: the first batch after a
-    // restart (replay of a partially-committed batch), AND files
-    // re-delivered because compact() rewrote the data directory (the
-    // file source sees rewritten files as new, but their keys are all
-    // old). Steady-state appends carry strictly increasing keys, skip
-    // the check, and never scan the index — at 10^10 indexed rows the
-    // previous every-batch anti-join re-read the whole index key column
-    // per trigger. The recovery scan itself is pruned to the batch's key
-    // range (min-key pushdown -> parquet row-group pruning), because an
-    // append-only, monotonically-keyed index can only overlap at keys
-    // >= the batch's minimum.
-    @volatile var maxSeen = Long.MinValue // max indexed key; lazily seeded
-    @volatile var seeded = false
-    // ignoreMissingFiles: compact() may delete a source file AFTER the
-    // stream listed it but BEFORE the micro-batch read it (rewrite+swap
-    // replaces every data file). Skipping the vanished file is safe —
-    // its rows live on in the compacted files, which the source lists as
-    // new and the key-overlap anti-join above dedups — so the stream
-    // stays exactly-once instead of dying with FileNotFoundException.
-    spark.readStream.schema(df.schema)
-      .option("ignoreMissingFiles", "true").parquet(dataDir)
-      .select(col(KeyCol), coalesce(col(column).cast(StringType), lit("")))
-      .as[(Long, String)]
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[(Long, String)], _: Long) =>
-        // the whole micro-batch holds writeLock: compactIndex's rewrite+swap
-        // must never interleave with this batch's index read (recovery
-        // anti-join) or append — an append landing inside the swap window
-        // would be staged aside and deleted (same hazard compact() documents)
-        writeLock.lock()
-        try {
-        val range = batch0.agg(min(col(KeyCol)), max(col(KeyCol)))
-          .as[(Option[Long], Option[Long])].head()
-        if (!seeded) {
-          maxSeen = if (indexedCount(column) == 0L) Long.MinValue
-                    else Keys.maxKey(embeddings(column))
-          seeded = true
-        }
-        val batch = range match {
-          case (Some(mk), _) if mk <= maxSeen =>
-            streamRecoveryAntiJoins += 1
-            batch0.toDF(KeyCol, "__text")
-              .join(embeddings(column).select(KeyCol)
-                .filter(col(KeyCol) >= mk), Seq(KeyCol), "left_anti")
-              .as[(Long, String)]
-          case _ => batch0
-        }
-        // same fingerprinted layout as the batch indexer, so a stream-fed
-        // index supports reembedChanged too
-        val embedded0 = chunkTokens match {
-          case Some(mt) => graft.embed.EmbedBatch.chunkedTriples(
-            batch, embedder, batchSize, mt, overlapTokens)
-          case None => graft.embed.EmbedBatch.triples(batch, embedder, batchSize)
-        }
-        val embedded =
-          if (variant == "f32") embedded0.toDF(KeyCol, "fp", "embedding")
-          else embedded0
-            .map { case (k, f, v) => (k, f, graft.embed.Quantization.encode(variant, v)) }
-            .toDF(KeyCol, "fp", "qembedding")
-        embedded.write.mode("append").parquet(indexDir(column))
-        range._2.foreach(bx => if (bx > maxSeen) maxSeen = bx)
-        } finally writeLock.unlock()
-        ()
-      }
-      .start()
+                        overlapTokens: Int = 50): StreamingQuery = {
+    val chunk = chunkTokens.map((_, overlapTokens))
+    watermarkStream(VectorIndex, column, checkpointDir, () => vectorWatermark(column),
+        held = Some(lo => embeddings(column).select(col(KeyCol)).filter(col(KeyCol) >= lo))) {
+      embedAbove(column, embedder, batchSize, chunk)
+    } { pending =>
+      appendVectors(column, embedRows(texts(pending, column), embedder, batchSize, chunk))
+    }
   }
 
   /** Full search (K4): embed the query, exact top-k over the column's index,
@@ -1170,7 +1010,7 @@ class Collection private[core] (
   private def denseHits(column: String, qv: Array[Float], limit: Int,
                         after: Option[(Double, Long)]): DataFrame = {
     healTable(indexDir(column))
-    ServingCache.vectors(hadoopConf, indexDir(column), config.model_variant) match {
+    ServingCache.vectors(hadoopConf, indexDir(column), vectorLayout) match {
       case Some(segs) => residentPage(segs, qv, limit, after)
       case None => after match {
         case None => graft.search.Search.topK(embeddings(column), qv, limit)
@@ -2098,7 +1938,7 @@ class Collection private[core] (
   /** Stored pq_m (0 = full-vector layout); params predating the column
     * read as 0.
     */
-  private def annPqM(column: String): Int =
+  private[core] def annPqM(column: String): Int =
     Option(annParams(column).getAs[Integer]("pq_m")).fold(0)(_.intValue)
 
   /** Build-time assignment drift baseline; None for params predating the
@@ -2107,7 +1947,7 @@ class Collection private[core] (
   private def annBuildDrift(column: String): Option[Double] =
     Option(annParams(column).getAs[java.lang.Double]("build_drift")).map(_.doubleValue)
 
-  private def annParams(column: String): Row =
+  private[core] def annParams(column: String): Row =
     smallTable(s"${annIndexDir(column)}/params", AnnParamsSchema).head
 
   /** Lists rows for a batch of vectors: `(key, embedding, list_id)` in
@@ -2189,8 +2029,8 @@ class Collection private[core] (
     * selective filter prefer [[searchFiltered]]'s exact scan of the
     * survivors). Falls back to exact search when no index is built.
     * Recall is the usual IVF story (nProbe = nLists is exhaustive).
-    */
-  /** `fetchK` (PQ layout only): ADC candidate window re-ranked by exact
+    *
+    * `fetchK` (PQ layout only): ADC candidate window re-ranked by exact
     * cosine; defaults to 4x the page size. Larger recovers more
     * quantization-error recall at the cost of fetching more exact
     * vectors pointwise.
@@ -2422,22 +2262,25 @@ class Collection private[core] (
       return graft.search.Ann.knnJoinIvf(emb, KeyCol, "embedding", k,
         nLists = nLists, nProbe = nProbe)
     healTable(annListsDir(column))
-    val centers = readAnnCenters(column)
-    val lists = spark.read.parquet(annListsDir(column))
-    // full-vector lists already carry the float per chunk row — use them
-    // directly (a key-join against the vector index would cross-multiply
-    // a c-chunk document into c^2 candidate rows). PQ lists carry codes,
-    // so floats rehydrate from the vector index; deduping to the
-    // distinct (key, list) pairs first bounds the blowup to c*lists
-    // instead of c^2 (chunk identity is not stored, and the per-pair max
-    // fold makes any pairing of a key's chunk vectors correct).
-    val assigned =
-      if (lists.schema.fieldNames.contains("embedding"))
-        lists.select(col(KeyCol), col("embedding"), col("list_id"))
-      else lists.select(col(KeyCol), col("list_id")).distinct()
-        .join(emb, Seq(KeyCol))
     graft.search.Ann.knnJoinAssigned(emb, KeyCol, "embedding",
-      assigned, centers, k, nProbe)
+      annAssigned(column, emb), readAnnCenters(column), k, nProbe)
+  }
+
+  /** `(key, embedding, list_id)` for every stored list row, the candidate
+    * side of [[knnJoin]] and [[searchBatch]]. Full-vector lists already
+    * carry the float per chunk row — used directly (a key-join against
+    * the vector index `emb` would cross-multiply a c-chunk document into
+    * c^2 candidate rows). PQ lists carry codes, so floats rehydrate from
+    * `emb`; deduping to the distinct (key, list) pairs first bounds the
+    * blowup to c*lists instead of c^2 (chunk identity is not stored, and
+    * the per-pair max fold makes any pairing of a key's chunk vectors
+    * correct).
+    */
+  private def annAssigned(column: String, emb: DataFrame): DataFrame = {
+    val pqM = annPqM(column)
+    val lists = annLists(column, pqM)
+    if (pqM == 0) lists.select(col(KeyCol), col("embedding"), col("list_id"))
+    else lists.select(col(KeyCol), col("list_id")).distinct().join(emb, Seq(KeyCol))
   }
 
   /** Batch search: every row of `queries` (`_key` + `embedding
@@ -2459,16 +2302,8 @@ class Collection private[core] (
       return graft.search.Ann.searchBatchIvf(queries, emb, KeyCol,
         "embedding", k, nLists = nLists, nProbe = nProbe)
     healTable(annListsDir(column))
-    val centers = readAnnCenters(column)
-    val pqM = annPqM(column)
-    val lists = annLists(column, pqM)
-    val assigned =
-      if (pqM == 0)
-        lists.select(col(KeyCol), col("embedding"), col("list_id"))
-      else lists.select(col(KeyCol), col("list_id")).distinct()
-        .join(emb, Seq(KeyCol))
-    graft.search.Ann.knnProbedBetween(queries, assigned, centers, KeyCol,
-      "embedding", k, nProbe, excludeSelf = false)
+    graft.search.Ann.knnProbedBetween(queries, annAssigned(column, emb),
+      readAnnCenters(column), KeyCol, "embedding", k, nProbe, excludeSelf = false)
   }
 
   /** Semantic near-duplicate pairs over `column`'s vectors — the
@@ -2505,7 +2340,7 @@ class Collection private[core] (
         .groupBy(col("key_a"), col("key_b"))
         .agg(max(col("cosine")).as("cosine"))
     healTable(annListsDir(column))
-    val kl = spark.read.parquet(annListsDir(column))
+    val kl = annLists(column, annPqM(column))
       .select(col(KeyCol), col("list_id")).distinct()
     val cand = kl.as("a").join(kl.as("b"),
         col("a.list_id") === col("b.list_id") &&
@@ -2550,7 +2385,7 @@ class Collection private[core] (
     watermarkStream(AnnIndex, column, checkpointDir,
         () => watermark(annListsDir(column))) {
       buildAnnIndex(column, nLists = nLists, pqM = pqM)
-    } { pending => appendAnnRows(column, dequantView(pending), vectorFps(pending)) }
+    } { pending => appendAnnRows(column, vectorLayout.view(pending), vectorFps(pending)) }
 
   /** Repair the ANN index after [[upsert]] + [[reembedChanged]] rewrote
     * vectors under existing keys — the stored `(key, fp)` table is
@@ -2588,7 +2423,7 @@ class Collection private[core] (
             val cb = if (annPqM(column) > 0) Some(readAnnCodebooks(column)) else None
             // the fresh vectors read is file-granular too — a bare
             // semi-join would scan the whole (wide) embedding column
-            annRows(dequantView(scopedRead(indexDir(column), changed)), centers, cb)
+            annRows(vectorLayout.view(scopedRead(indexDir(column), changed)), centers, cb)
               .localCheckpoint(true)
         } { (changed, fresh) =>
           upsertByKeyRange(fps,
@@ -2636,7 +2471,7 @@ class Collection private[core] (
   private def compactKeyClustered(target: String,
                                   targetFileBytes: Long): Int = {
     if (!fs.exists(new Path(target))) return 0
-    recoverFileSwap(target)
+    discardStage(target)
     val nFiles = filesFor(target, targetFileBytes)
     val rows = spark.read.option("mergeSchema", "true").parquet(target)
       .dropDuplicates()
@@ -2757,7 +2592,7 @@ class Collection private[core] (
         val fps = s"$target/fps"
         repairByFingerprint(binarySketchDir(column), annUpstreamFps(column, scope),
             scope.fold(spark.read.parquet(fps))(scopedRead(fps, _))) { changed =>
-          binaryRows(dequantView(scopedRead(indexDir(column), changed)),
+          binaryRows(vectorLayout.view(scopedRead(indexDir(column), changed)),
             readBinaryDim(column))
         } { (changed, _) =>
           // scopedRead-pruned, not a bare semi-join: a 10-key repair reads
@@ -2779,7 +2614,7 @@ class Collection private[core] (
     watermarkStream(BinarySketch, column, checkpointDir,
         () => watermark(binarySketchDir(column))) {
       buildBinarySketch(column)
-    } { pending => appendSketch(column, dequantView(pending), vectorFps(pending)) }
+    } { pending => appendSketch(column, vectorLayout.view(pending), vectorFps(pending)) }
 
   /** Re-cluster the sketch into ~`targetFileBytes` files — heals refresh
     * small-file growth and folds away duplicate rows from a repair that
@@ -2914,7 +2749,7 @@ class Collection private[core] (
     * covers a deleted key.
     */
   private def deleteByKeyRange(target: String, del: DataFrame): Unit = {
-    recoverFileSwap(target)
+    discardStage(target)
     val touched = touchedFiles(target, del)
     if (touched.isEmpty) return
     val remaining = spark.read.option("mergeSchema", "true")
@@ -2939,7 +2774,7 @@ class Collection private[core] (
       keyClustered(updates, 1).write.mode("overwrite").parquet(target)
       return
     }
-    recoverFileSwap(target)
+    discardStage(target)
     val touched = touchedFiles(target, updates.select(KeyCol))
     val next =
       if (touched.isEmpty) updates
@@ -3418,11 +3253,12 @@ class Collection private[core] (
     * saved queries and every [[IndexFamily]] structure — so the on-disk
     * state is a complete, consistent snapshot. Used before [[backup]]:
     * copying a directory with an uncommitted journal would capture a
-    * torn write.
+    * torn write. It runs under backup's lease, so it also discards
+    * crashed writes' stages ([[discardStage]]).
     */
   private def healAll(): Unit = {
     recoverCompaction()
-    recoverFileSwap(dataDir)
+    discardStage(dataDir)
     recoverSwap(queriesDir)
     indexStructures().foreach { case (c0, f) => heal(f, c0) }
   }
@@ -3480,6 +3316,54 @@ private[core] object Collection {
   val swapMonitors = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 }
 
+/** The vector index's stored layout for a `model_variant`: `(_key, fp,
+  * embedding)` floats for f32, `(_key, fp, qembedding)` bytes for the
+  * quantized variants ([[graft.embed.Quantization]]: 2 bytes a dimension
+  * for f16; 1 for i8, plus its scale). Quantization is a storage concern
+  * only: every reader sees `array<float>`.
+  */
+private[core] final case class VectorLayout(variant: String) {
+  val quantized: Boolean = variant != "f32"
+
+  /** The stored vector column. */
+  val field: StructField =
+    if (quantized) StructField("qembedding", BinaryType)
+    else StructField("embedding", ArrayType(FloatType))
+
+  /** Payload bytes per dimension; 0 for floats, which count as values. */
+  val bytesPerDim: Int = variant match {
+    case "f32" => 0
+    case "f16" => 2
+    case _ => 1
+  }
+
+  val schema: StructType = StructType(Seq(
+    StructField(Keys.KeyCol, LongType), StructField("fp", StringType), field))
+
+  def decode(payload: Array[Byte]): Array[Float] =
+    graft.embed.Quantization.decode(variant, payload)
+
+  /** `(key, fp, vector)` triples as stored rows. */
+  def encode(rows: Dataset[(Long, String, Array[Float])]): DataFrame = {
+    import rows.sparkSession.implicits._
+    val v = variant
+    (if (quantized)
+       rows.map { case (k, fp, vec) => (k, fp, graft.embed.Quantization.encode(v, vec)) }.toDF()
+     else rows.toDF()).toDF(Keys.KeyCol, "fp", field.name)
+  }
+
+  /** `(_key, embedding)` floats over stored rows; the `fp` fingerprint
+    * stays internal.
+    */
+  def view(stored: DataFrame): DataFrame =
+    if (!quantized) stored.select(col(Keys.KeyCol), col("embedding"))
+    else {
+      val v = variant
+      val deq = udf((b: Array[Byte]) => graft.embed.Quantization.decode(v, b).toSeq)
+      stored.select(col(Keys.KeyCol), deq(col("qembedding")).as("embedding"))
+    }
+}
+
 /** One row of [[Collection.tierSweep]]'s serving-tier comparison. */
 final case class TierStats(tier: String, recall: Double, mrr: Double,
                            ndcg: Double, secPerQuery: Double,
@@ -3491,7 +3375,9 @@ final case class TierStats(tier: String, recall: Double, mrr: Double,
   */
 object Identifiers {
   /** Suffixes reserved for on-disk operational artifacts (staged swaps,
-    * compaction journals, import stages). An identifier ending with one
+    * compaction journals, import stages; `__stage`/`__stage_commit` are
+    * an older embed-append protocol's, which a collection written by an
+    * earlier build may still hold). An identifier ending with one
     * of these would make its directory (e.g. `index/<col>`)
     * indistinguishable from the transient artifacts that maintenance
     * sweeps and [[Backup.include]] must skip — a backup would silently

@@ -104,8 +104,8 @@ private[graft] object IndexFamily {
     compact = call("compactAnnIndex")((c, column, _) => c.compactAnnIndex(column)),
     // retrain with the index's stored geometry
     retrain = call("buildAnnIndex") { (c, column, _) =>
-      val p = c.spark.read.parquet(s"${c.annIndexDir(column)}/params").head()
-      c.buildAnnIndex(column, nLists = p.getAs[Int]("n_lists"), pqM = p.getAs[Int]("pq_m"))
+      c.buildAnnIndex(column, nLists = c.annParams(column).getAs[Int]("n_lists"),
+        pqM = c.annPqM(column))
       0L
     },
     erase = Some((c, column, del) => c.deleteAnnLists(column, del)),

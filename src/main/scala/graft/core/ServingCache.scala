@@ -325,22 +325,17 @@ private[graft] object ServingCache {
     * segments, one per file. None when its estimated decoded size does
     * not fit the budget or its layout is not decoded here.
     */
-  def vectors(conf: Configuration, dir: String, variant: String): Option[Seq[Vectors]] = attempt {
+  def vectors(conf: Configuration, dir: String, layout: VectorLayout): Option[Seq[Vectors]] = attempt {
     val files = listing(conf, dir)
-    val (field, perDim) = variant match {
-      case "f32" => (StructField("embedding", ArrayType(FloatType)), 0)
-      case "f16" => (StructField("qembedding", BinaryType), 2)
-      case _ => (StructField("qembedding", BinaryType), 1)
-    }
     val estimate = files.map(f => footer(conf, f).groups
-      .map(vectorEstimate(_, field.name, perDim)).sum).sum
+      .map(vectorEstimate(_, layout.field.name, layout.bytesPerDim)).sum).sum
     if (!fits(estimate, Runtime.getRuntime.maxMemory)) throw new Unsupported("over budget")
-    files.map(f => lru(("vectors", f, variant)) {
-      val Array(keys, raw) = decode(conf, f, Seq(StructField(Keys.KeyCol, LongType), field))
+    files.map(f => lru(("vectors", f, layout.variant)) {
+      val Array(keys, raw) = decode(conf, f, Seq(StructField(Keys.KeyCol, LongType), layout.field))
       val vecs = raw.map(v =>
-        if (perDim == 0) widen(v)
+        if (!layout.quantized) widen(v)
         else if (v == null) null
-        else graft.embed.Quantization.decode(variant, v.asInstanceOf[Array[Byte]]).map(_.toDouble))
+        else layout.decode(v.asInstanceOf[Array[Byte]]).map(_.toDouble))
       val v = toVectors(keys, vecs)
       (v, weight(v))
     })

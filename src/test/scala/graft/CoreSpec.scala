@@ -412,13 +412,17 @@ class PartitionScopedCowSpec extends SparkSpec {
     c.importDf((1L to 20L).map(k => (s"orig $k", k)).toDF("text", "_key")
       .repartitionByRange(2, col("_key")).sortWithinPartitions("_key"))
 
-    // CASE 1: staging dir without a journal = uncommitted write -> discarded
+    // CASE 1: staging dir without a journal = uncommitted write. A read
+    // leaves it alone (to a reader it is a write in flight, maybe on
+    // another instance); the next writer, under the lease, discards it
     val stage = new java.io.File(c.dataDir + "_staging")
     stage.mkdirs()
     java.nio.file.Files.write(stage.toPath.resolve("part-garbage.parquet"),
       "not parquet".getBytes)
     assert(c.count() == 20, "uncommitted staging must not affect reads")
-    assert(!stage.exists, "orphan staging dir must be cleaned")
+    assert(stage.exists, "a read must not delete an uncommitted stage")
+    assert(c.deleteKeys(Seq(999L)) == 0L) // a write that touches no file
+    assert(!stage.exists, "the next writer must discard the orphan stage")
 
     // CASE 2: journal present = committed -> the next read completes the
     // swap (moves staged files in, deletes the replaced file)

@@ -44,4 +44,41 @@ class RefreshJobsSpec extends SparkSpec {
       assert(jobs <= ceiling, s"$family refresh ran $jobs jobs, ceiling $ceiling")
     }
   }
+
+  test("each vector embed pass stays within its job ceiling") {
+    val root = java.nio.file.Files.createTempDirectory("graft_embed_jobs").toString
+    val cat = new Catalog(spark, root)
+    val docs = (1 to 40).map(i => s"embed fixture doc $i word$i")
+    val c = cat.create(CollectionConfig(name = "ej"))
+    c.importDf(docs.toDF("text"))
+    val chunked = cat.create(CollectionConfig(name = "ejc"))
+    chunked.importDf(docs.toDF("text"))
+
+    // each ceiling is the count measured on this fixture while every pass
+    // still wrote its own embed + quantize + append code; the set-up
+    // writes (append, upsert) run outside the counted calls
+    val counted = Seq.newBuilder[(String, Int, Int)]
+    def pass(name: String, ceiling: Int)(call: => Long): Long = {
+      val (n, jobs) = jobsOf(s"embed-jobs-$name")(call)
+      counted += ((name, jobs, ceiling))
+      n
+    }
+    assert(pass("embedColumn", 6)(c.embedColumn("text", emb)) == 40)
+    c.appendDf((41 to 45).map(i => s"appended doc $i word$i").toDF("text"))
+    assert(pass("embedColumn-incremental", 9)(c.embedColumn("text", emb)) == 5)
+    assert(pass("embedColumnChunked", 6)(
+      chunked.embedColumnChunked("text", emb, maxTokens = 4, overlapTokens = 1)) > 40)
+    c.upsert((1 to 5).map(i => (s"rewritten doc $i", i.toLong)).toDF("text", "_key"))
+    assert(pass("reembedChanged", 17)(c.reembedChanged("text", emb)) == 5)
+    val external = (101 to 105).map(i => (i.toLong, emb.embedOne(s"external $i")))
+      .toDF("_key", "v")
+    assert(pass("insertVectors", 6)(c.insertVectors("text", external)) == 5)
+    assert(c.indexedCount("text") == 50)
+
+    val jobs = counted.result()
+    info(jobs.map { case (p, j, _) => s"$p=$j" }.mkString(" "))
+    jobs.foreach { case (p, j, ceiling) =>
+      assert(j <= ceiling, s"$p ran $j jobs, ceiling $ceiling")
+    }
+  }
 }
