@@ -187,19 +187,32 @@ class Collection private[core] (
 
   /** Replace `deleteLeaves` (leaf file names under `target`) with whatever
     * `write` stages — the file-granular copy-on-write commit. Caller must
-    * hold [[writeLock]]. The journal rename and the swap share the
-    * [[recoverSwap]] monitor so a concurrent reader can't heal a
-    * half-committed swap out from under this thread.
+    * hold [[writeLock]]. Staged `.parquet` leaves are journaled by their
+    * path relative to the stage (`postings/bucket=3/part-….parquet`), so
+    * one commit can carry several sub-tables, partitioned ones included;
+    * leaves under the sub-directories named in `order` move in that
+    * order, the rest after them. A stage with no leaves commits nothing.
+    * The journal rename and the swap share the [[recoverSwap]] monitor so
+    * a concurrent reader can't heal a half-committed swap out from under
+    * this thread.
     */
-  private def replaceFiles(target: String, deleteLeaves: Seq[String])(write: String => Unit): Unit = {
+  private def replaceFiles(target: String, deleteLeaves: Seq[String],
+                           order: Seq[String] = Nil)(write: String => Unit): Unit = {
     val stage = stagingPath(target)
     fs.delete(stage, true)
     write(stage.toString)
     val stagedLeaves =
       if (!fs.exists(stage)) Seq.empty[String]
-      else fs.listStatus(stage).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName)
+      else {
+        val root = fs.makeQualified(stage).toString + "/"
+        val it = fs.listFiles(stage, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+          .filter(_.getName.endsWith(".parquet"))
+          .map(_.toString.stripPrefix(root)).toSeq
+          .sortBy { n => val i = order.indexOf(n.takeWhile(_ != '/'))
+            if (i < 0) order.length else i }
+      }
+    if (stagedLeaves.isEmpty && deleteLeaves.isEmpty) { fs.delete(stage, true); return }
     // Spark part-file names embed a per-job UUID, so a collision with an
     // existing file would mean something is deeply wrong — refuse rather
     // than let the journal's delete step destroy the staged replacement
@@ -221,9 +234,9 @@ class Collection private[core] (
   }
 
   /** Execute a committed journal to completion (idempotent — safe to
-    * re-run after a crash at any point). Moves staged files in BEFORE
-    * deleting replaced ones: a crash mid-way leaves extra rows that the
-    * next read's re-run removes, never missing rows.
+    * re-run after a crash at any point). Moves staged files in, in
+    * journal order, BEFORE deleting replaced ones: a crash mid-way leaves
+    * extra rows that the next read's re-run removes, never missing rows.
     */
   private def completeFileSwap(target: String): Unit = {
     val j = journalPath(target)
@@ -232,15 +245,17 @@ class Collection private[core] (
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList.filter(_.nonEmpty)
       finally in.close()
-    // an append may be the target's first write
-    fs.mkdirs(new Path(target))
     lines.collect { case l if l.startsWith("S ") => l.drop(2) }.foreach { n =>
       val src = new Path(stage, n)
       val dst = new Path(target, n)
       if (fs.exists(src)) {
         if (fs.exists(dst)) fs.delete(src, false)
-        else if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"file swap: could not move $n into $target")
+        else {
+          // an append may be the target's (or a partition's) first write
+          fs.mkdirs(dst.getParent)
+          if (!fs.rename(src, dst))
+            throw new java.io.IOException(s"file swap: could not move $n into $target")
+        }
       }
     }
     lines.collect { case l if l.startsWith("D ") => l.drop(2) }.foreach { n =>
@@ -448,8 +463,12 @@ class Collection private[core] (
     f.fileSwap.foreach(t => discardStage(table(f, column, t)))
   }
 
+  /** Whether the family is built; like every read, it first completes a
+    * crashed write's committed swaps.
+    */
   private[core] def built(f: IndexFamily, column: String): Boolean = {
     recoverSwap(familyDir(f, column))
+    f.fileSwap.foreach(t => recoverFileSwap(table(f, column, t)))
     fs.exists(new Path(table(f, column, f.marker)))
   }
 
@@ -473,46 +492,53 @@ class Collection private[core] (
   private def stagedBuild(target: String)(build: String => Unit): Unit =
     if (!fs.exists(new Path(target))) build(target) else swapIn(target)(build)
 
-  /** Highest key stored in `table`, the refresh/stream watermark.
-    * Long.MinValue, not 0, when empty: user-imported keys may be
-    * non-positive.
-    */
   /** Observability for specs/ops: micro-batches that took
-    * [[watermarkStream]]'s `held` anti-join since this Collection object
+    * [[watermarkStream]]'s replay anti-join since this Collection object
     * was created.
     */
   @volatile private[graft] var streamRecoveryAntiJoins: Long = 0L
 
-  private def watermark(table: String, keyCol: String = KeyCol): Long =
-    watermarkOf(spark.read.parquet(table), keyCol)
-
-  private def watermarkOf(rows: DataFrame, keyCol: String = KeyCol): Long = {
-    val r = rows.agg(max(col(keyCol))).head()
+  /** Highest key in `rows`, the refresh/stream watermark. Long.MinValue,
+    * not 0, when empty: user-imported keys may be non-positive.
+    */
+  private def watermarkOf(rows: DataFrame): Long = {
+    val r = rows.agg(max(col(KeyCol))).head()
     if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
   }
 
+  /** The keys a keyed family holds (its `keys` table, read as `_key`),
+    * None while that table has no files. Caller has healed the family.
+    */
+  private def heldKeys(f: IndexFamily, column: String): Option[DataFrame] =
+    f.keys.flatMap { case (t, keyCol) =>
+      val p = new Path(table(f, column, t))
+      Option.when(fs.exists(p) &&
+          fs.listStatus(p).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))(
+        spark.read.schema(StructType(Seq(StructField(keyCol, LongType))))
+          .parquet(p.toString).select(col(keyCol).as(KeyCol)))
+    }
+
+  /** The family's highest held key: its refresh and stream watermark. */
+  private def heldWatermark(f: IndexFamily, column: String): Long =
+    heldKeys(f, column).fold(Long.MinValue)(watermarkOf(_))
+
   /** The streaming twin of a family's refresh: watch its upstream (the
     * data directory, or the vector index directory) as a file stream and
-    * `append` every micro-batch's unseen keys. Exactly-once by a cached
-    * max-indexed-key watermark, seeded lazily by `seed` on the first
-    * batch: replays (restart, checkpoint loss, `compact()` rewrites
-    * re-delivering files) drop their already-indexed keys. In-place
-    * rewrites stay repair's job (fingerprint-driven). Each micro-batch
-    * holds [[writeLock]]; a missing structure is built by `bootstrap`.
-    * `ignoreMissingFiles`: a compaction may delete a listed source file
-    * before the batch reads it — its rows live on in files the source
-    * lists as new, which the watermark dedups.
-    *
-    * `held(lo)`, when given, is the family's stored keys at or above
-    * `lo`. A batch whose keys reach down to the watermark then keeps the
-    * rows the family does not hold instead of dropping them: the file
-    * source can list a multi-file append part-way, so a later batch may
-    * carry keys below an earlier one's. Without it such rows are left to
-    * the family's repair. A batch wholly above the watermark never reads
-    * the family.
+    * `append` every micro-batch's keys the family does not hold. The
+    * family's `keys` table is the truth: a max-held-key watermark, read
+    * on the first batch, lets a batch wholly above it append without
+    * reading the family; a batch reaching down to it (restart,
+    * checkpoint loss, `compact()` re-delivering rewritten files, or a
+    * multi-file append the file source listed part-way, so a later batch
+    * carries keys below an earlier one's) keeps only the keys the family
+    * does not hold, by an anti-join against the held keys at or above
+    * the batch minimum. In-place rewrites stay repair's job
+    * (fingerprint-driven). Each micro-batch holds [[writeLock]]; a
+    * missing structure is built by `bootstrap`. `ignoreMissingFiles`: a
+    * compaction may delete a listed source file before the batch reads
+    * it — its rows live on in files the source lists as new.
     */
-  private def watermarkStream(f: IndexFamily, column: String, checkpointDir: String,
-                              seed: () => Long, held: Option[Long => DataFrame] = None)(
+  private def watermarkStream(f: IndexFamily, column: String, checkpointDir: String)(
                               bootstrap: => Unit)(
                               append: DataFrame => Unit): StreamingQuery = {
     Identifiers.validate(column)
@@ -535,18 +561,18 @@ class Collection private[core] (
         writeLock.lock()
         try {
           heal(f, column)
-          if (!built(f, column)) { bootstrap; maxSeen = seed(); seeded = true }
+          if (!built(f, column)) { bootstrap; maxSeen = heldWatermark(f, column); seeded = true }
           else {
-            if (!seeded) { maxSeen = seed(); seeded = true }
+            if (!seeded) { maxSeen = heldWatermark(f, column); seeded = true }
             val r = batch.agg(min(col(KeyCol)), max(col(KeyCol))).head()
             if (!r.isNullAt(0)) {
               val (lo, hi) = (r.getLong(0), r.getLong(1))
-              held match {
-                case Some(keys) if lo <= maxSeen =>
-                  streamRecoveryAntiJoins += 1
-                  val pending = batch.join(keys(lo), Seq(KeyCol), "left_anti")
-                  if (!pending.isEmpty) append(pending)
-                case _ => if (hi > maxSeen) append(batch.filter(col(KeyCol) > maxSeen))
+              if (lo > maxSeen) append(batch)
+              else {
+                streamRecoveryAntiJoins += 1
+                val pending = heldKeys(f, column).fold(batch)(keys =>
+                  batch.join(keys.filter(col(KeyCol) >= lo), Seq(KeyCol), "left_anti"))
+                if (!pending.isEmpty) append(pending)
               }
               maxSeen = math.max(maxSeen, hi)
             }
@@ -744,10 +770,6 @@ class Collection private[core] (
     */
   def indexedCount(column: String): Long = embeddings(column).count()
 
-  /** The index's watermark ([[watermark]]); no read when it holds no files. */
-  private def vectorWatermark(column: String): Long =
-    indexRaw(column).fold(Long.MinValue)(watermarkOf(_))
-
   // ---- vector embed passes ----------------------------------------------
   //
   // Every pass that adds vectors (embedColumn, chunked or not, the embed
@@ -885,7 +907,7 @@ class Collection private[core] (
                          batchSize: Int, chunk: Option[(Int, Int)]): Long =
     maintained(VectorIndex, column) { _ =>
       val before = indexedCount(column)
-      val pending = texts(df.filter(col(KeyCol) > vectorWatermark(column)), column)
+      val pending = texts(df.filter(col(KeyCol) > heldWatermark(VectorIndex, column)), column)
       if (pending.isEmpty) 0L
       else {
         appendVectors(column, embedRows(pending, embedder, batchSize, chunk))
@@ -981,8 +1003,7 @@ class Collection private[core] (
                         chunkTokens: Option[Int] = None,
                         overlapTokens: Int = 50): StreamingQuery = {
     val chunk = chunkTokens.map((_, overlapTokens))
-    watermarkStream(VectorIndex, column, checkpointDir, () => vectorWatermark(column),
-        held = Some(lo => embeddings(column).select(col(KeyCol)).filter(col(KeyCol) >= lo))) {
+    watermarkStream(VectorIndex, column, checkpointDir) {
       embedAbove(column, embedder, batchSize, chunk)
     } { pending =>
       appendVectors(column, embedRows(texts(pending, column), embedder, batchSize, chunk))
@@ -1166,10 +1187,11 @@ class Collection private[core] (
 
   /** The keyword index lives beside the vector index
     * (`<index_dir>/<column>_kw/`) in `Keyword.buildIndex`'s
-    * bucket-partitioned layout; searches prune to the query terms'
-    * buckets. Rebuild (or `Keyword.appendToIndex` with the new rows)
-    * after appends — like the vector index, it does not track the
-    * collection automatically.
+    * bucket-partitioned delta-log layout; searches prune to the query
+    * terms' buckets. Like the vector index it does not track the
+    * collection by itself: [[refreshKeywordIndex]] (or
+    * [[keywordIndexStream]]) folds in appends, [[repairKeywordIndex]]
+    * upserts, and [[deleteKeys]] erases.
     */
   def keywordIndexDir(column: String): String = familyDir(KeywordIndex, column)
 
@@ -1188,51 +1210,66 @@ class Collection private[core] (
         analyzer = analyzer))
     }
 
+  // Every write to a built keyword index (refresh, the stream's
+  // micro-batches, repair, the delete erase) stages its postings, doclen
+  // and stats deltas under `<column>_kw_staging/` and commits them with
+  // ONE journal of the family directory ([[replaceFiles]]), moving
+  // postings, then doclen, then the stats row: the batch lands whole or
+  // not at all, and a reader between two moves sees at worst postings
+  // whose doclen row has not landed yet, which scoring's inner join
+  // drops. A crash before the commit leaves a stage the next writer
+  // discards; after it, the next read or write rolls the moves forward.
+
+  private val KeywordCommitOrder = Seq("postings", "doclen", "stats")
+
+  /** Stage one keyword write with `stage(stageDir, stats)` and commit
+    * it. Caller holds [[writeLock]] and has checked the index is built.
+    */
+  private def keywordCommit(column: String)(
+      stage: (String, graft.search.Keyword.Stats) => Long): Long = {
+    val st = keywordStats(column).get
+    var n = 0L
+    replaceFiles(keywordIndexDir(column), Nil, KeywordCommitOrder)(s => n = stage(s, st))
+    n
+  }
+
+  /** Append `pending` rows (new keys) to the built index; returns the
+    * token-bearing documents folded in.
+    */
+  private def appendKeyword(column: String, pending: DataFrame): Long =
+    keywordCommit(column)((stage, st) => graft.search.Keyword.appendToIndex(
+      pending, stage, st, idCol = KeyCol, textCol = column))
+
+  /** [[deleteKeys]]' keyword step: tombstones for `del`'s live keys. */
+  private[core] def eraseKeywordKeys(column: String, del: DataFrame): Unit =
+    keywordCommit(column)((stage, st) => graft.search.Keyword.deleteFromIndex(
+      del, keywordIndexDir(column), stage, st))
+
   /** Fold rows the keyword index has not seen yet into it — the keyword
     * twin of [[embedColumn]]'s watermark catch-up. The watermark is the
-    * max `_key` in the stored `doclen` table; everything above it is
-    * tokenized and appended in O(new rows) ([[graft.search.Keyword
-    * .appendToIndex]] — the corpus is never re-read, stats advance by
-    * exact integer deltas). Builds the index outright when absent.
-    * Returns the number of token-bearing documents folded in (token-less
-    * rows can never match a term and stay out of the norms on both the
-    * operator and oracle side).
+    * max `_key` in the stored `doclen` log; everything above it is
+    * tokenized and appended in O(new rows) — the corpus is never re-read,
+    * stats advance by exact integer deltas. Builds the index outright
+    * when absent. Returns the number of token-bearing documents folded
+    * in (token-less rows can never match a term and stay out of the
+    * norms on both the operator and oracle side).
     */
   def refreshKeywordIndex(column: String, nBuckets: Int = 64): Long =
-    maintained(KeywordIndex, column) { target =>
-      def nDocs(): Long =
-        spark.read.parquet(s"$target/stats").head().getAs[Long]("n_docs")
+    maintained(KeywordIndex, column) { _ =>
       if (!hasKeywordIndex(column)) {
-        graft.search.Keyword.buildIndex(
-          df.select(col(KeyCol), col(column)), target,
-          idCol = KeyCol, textCol = column, nBuckets = nBuckets)
-        nDocs()
+        buildKeywordIndex(column, nBuckets)
+        keywordStats(column).fold(0L)(_.nDocs)
       } else {
-        val pending = df.filter(col(KeyCol) > keywordWatermark(target))
+        val pending = df.filter(col(KeyCol) > heldWatermark(KeywordIndex, column))
           .select(col(KeyCol), col(column))
-        if (pending.isEmpty) 0L
-        else {
-          val before = nDocs()
-          graft.search.Keyword.appendToIndex(pending, target,
-            idCol = KeyCol, textCol = column)
-          nDocs() - before
-        }
+        if (pending.isEmpty) 0L else appendKeyword(column, pending)
       }
     }
-
-  /** Heal any crashed append BEFORE reading the watermark — a
-    * committed-but-unfinished batch must advance doclen first, or the
-    * caller would re-append its postings.
-    */
-  private def keywordWatermark(target: String): Long = {
-    graft.search.Keyword.recoverAppend(spark, target)
-    watermark(s"$target/doclen", "key")
-  }
 
   /** Repair the keyword index after [[upsert]] rewrote text under
     * existing keys — the keyword twin of [[reembedChanged]], driven by
     * the same stored-fingerprint comparison ([[graft.search.Keyword
-    * .repairIndex]]: tombstone + fresh-posting APPENDS, no rewrite of
+    * .repairIndex]]: tombstone + fresh-posting appends, no rewrite of
     * the bucket-partitioned postings log). Also catches keys the index
     * has never seen, including upsert-introduced keys below any
     * watermark. Returns the number of documents re-indexed.
@@ -1242,40 +1279,31 @@ class Collection private[core] (
       if (!hasKeywordIndex(column)) 0L
       // a scoped repair prunes the text read + fp compare to the batch's
       // keys; the tombstone generation inside is already key-range-pruned
-      else graft.search.Keyword.repairIndex(
+      else keywordCommit(column)((stage, st) => graft.search.Keyword.repairIndex(
         scope.fold(df)(scopedTo(df, _)).select(col(KeyCol), col(column)), target,
-        idCol = KeyCol, textCol = column)
+        stage, st, idCol = KeyCol, textCol = column))
     }
 
   /** Streaming twin of [[refreshKeywordIndex]] ([[watermarkStream]]):
     * fold newly appended rows into the keyword index continuously — the
-    * sparse-side companion of [[embedColumnStream]]; surviving fresh keys
-    * ride [[graft.search.Keyword.appendToIndex]]'s staged crash-safe
-    * commit. Bootstraps by building the index (with `analyzer`) when
-    * absent; an existing index keeps its stored analyzer.
+    * sparse-side companion of [[embedColumnStream]]. Each micro-batch's
+    * keys the index does not hold commit as one keyword write. Bootstraps
+    * by building the index (with `nBuckets` and `analyzer`) when absent;
+    * an existing index keeps its stored bucket count and analyzer.
     */
   def keywordIndexStream(column: String, checkpointDir: String,
                          nBuckets: Int = 64,
                          analyzer: graft.search.Analyzer =
-                           graft.search.Analyzer.Whitespace): StreamingQuery = {
-    val target = keywordIndexDir(column)
-    watermarkStream(KeywordIndex, column, checkpointDir,
-        () => keywordWatermark(target)) {
-      graft.search.Keyword.buildIndex(
-        df.select(col(KeyCol), col(column)), target,
-        idCol = KeyCol, textCol = column, nBuckets = nBuckets,
-        analyzer = analyzer)
-    } { pending =>
-      graft.search.Keyword.appendToIndex(pending, target,
-        idCol = KeyCol, textCol = column)
-    }
-  }
+                           graft.search.Analyzer.Whitespace): StreamingQuery =
+    watermarkStream(KeywordIndex, column, checkpointDir) {
+      buildKeywordIndex(column, nBuckets, analyzer)
+    } { pending => appendKeyword(column, pending) }
 
-  /** Fold the keyword index's delta log: rewrite postings/doclen as
-    * their net view (tombstones cancelled, one live row per key) via
-    * the whole-directory staged swap. Search results are unchanged —
-    * this removes the tombstone rows repairs accumulate, restoring
-    * scan cost to O(live postings).
+  /** Fold the keyword index's delta logs: rewrite postings/doclen as
+    * their net view (tombstones cancelled, one live row per key) and the
+    * stats log as one row, via the whole-directory staged swap. Search
+    * results are unchanged — this removes the tombstone rows repairs
+    * accumulate, restoring scan cost to O(live postings).
     */
   def compactKeywordIndex(column: String): Unit =
     maintained(KeywordIndex, column) { target =>
@@ -1283,21 +1311,18 @@ class Collection private[core] (
         swapIn(target)(tmp => graft.search.Keyword.compactIndexTo(spark, target, tmp))
     }
 
+  /** Whether the keyword index is built; a read rolls a committed keyword
+    * write forward first.
+    */
   private def hasKeywordIndex(column: String): Boolean = built(KeywordIndex, column)
 
-  /** `(n_buckets, analyzer id)` of the built index's one-row stats table,
-    * as [[graft.search.Keyword.storedMeta]] reads it (stats predating the
-    * analyzer column read as whitespace); None when unbuilt.
+  /** The built index's summed stats log ([[graft.search.Keyword.Stats]]:
+    * corpus stats, bucket count, analyzer), read through the serving
+    * cache; None when unbuilt.
     */
-  private def keywordMeta(column: String): Option[(Int, String)] =
-    if (!hasKeywordIndex(column)) None
-    else {
-      val r = smallTable(s"${keywordIndexDir(column)}/stats", KeywordMetaSchema).head
-      Some((r.getAs[Int](0), Option(r.getString(1)).getOrElse("ws")))
-    }
-
-  private val KeywordMetaSchema = StructType(Seq(
-    StructField("n_buckets", IntegerType), StructField("analyzer", StringType)))
+  private def keywordStats(column: String): Option[graft.search.Keyword.Stats] =
+    Option.when(hasKeywordIndex(column))(graft.search.Keyword.sumStats(
+      smallTable(s"${keywordIndexDir(column)}/stats", graft.search.Keyword.StatsSchema)))
 
   /** BM25 page over `column`, content-fetched like [[search]]. Uses the
     * pruned persistent index when built, else falls back to a one-shot
@@ -1322,17 +1347,15 @@ class Collection private[core] (
     val (negWords, posWords) = words.partition(w => w.length > 1 && w.startsWith("-"))
     require(posWords.nonEmpty,
       "keyword search requires at least one non-excluded query term")
-    val meta = keywordMeta(column)
-    val analyzer = meta.fold(graft.search.Analyzer.Whitespace: graft.search.Analyzer)(
-      m => graft.search.Analyzer.fromId(m._2))
+    val st = keywordStats(column)
+    val analyzer = keywordAnalyzer(st)
     val terms = analyzer.queryTokens(posWords.mkString(" "))
     val mustNot = analyzer.queryTokens(negWords.map(_.drop(1)).mkString(" "))
     // a non-empty query whose every term the index's analyzer filters
     // away (all stopwords) matches nothing — empty page, not an error
     // (searchHybrid already degrades the same case to dense-only)
     if (terms.isEmpty) return fetchHits(localHits(Nil), column)
-    fetchHits(keywordHits(column, terms, limit, requireAll, after, mustNot,
-      nBuckets = meta.map(_._1)), column)
+    fetchHits(keywordHits(column, st, terms, limit, requireAll, after, mustNot), column)
   }
 
   /** The column's live vocabulary `(tok, df)` — off the keyword index's
@@ -1372,9 +1395,8 @@ class Collection private[core] (
     val (negWords, posWords) = words.partition(w => w.length > 1 && w.startsWith("-"))
     require(posWords.nonEmpty,
       "keyword search requires at least one non-excluded query term")
-    val meta = keywordMeta(column)
-    val analyzer = meta.fold(graft.search.Analyzer.Whitespace: graft.search.Analyzer)(
-      m => graft.search.Analyzer.fromId(m._2))
+    val st = keywordStats(column)
+    val analyzer = keywordAnalyzer(st)
     val terms = analyzer.queryTokens(posWords.mkString(" "))
     val mustNot = analyzer.queryTokens(negWords.map(_.drop(1)).mkString(" "))
     if (terms.isEmpty) return fetchHits(localHits(Nil), column)
@@ -1385,8 +1407,8 @@ class Collection private[core] (
       keywordVocab(column).select(col("tok")), terms, maxDist)
     val corrected = terms.flatMap(resolved.get).distinct.filterNot(mustNot.contains)
     if (corrected.isEmpty) return fetchHits(localHits(Nil), column)
-    fetchHits(keywordHits(column, corrected, limit, requireAll,
-      after = None, mustNot = mustNot, nBuckets = meta.map(_._1)), column)
+    fetchHits(keywordHits(column, st, corrected, limit, requireAll,
+      after = None, mustNot = mustNot), column)
   }
 
   /** Hybrid retrieval: RRF fusion of the dense page ([[search]]'s
@@ -1397,29 +1419,39 @@ class Collection private[core] (
                    embedder: graft.embed.Embedder): DataFrame = {
     graft.search.Search.validateLimit(limit)
     val dense = denseHits(column, embedder.embedOne(query), limit, after = None)
-    val meta = keywordMeta(column)
-    val terms = meta.fold(graft.search.Keyword.queryTerms(query))(m =>
-      graft.search.Analyzer.fromId(m._2).queryTokens(query))
+    val st = keywordStats(column)
+    val terms = keywordAnalyzer(st).queryTokens(query)
     val pages =
       if (terms.isEmpty) Seq(dense)
-      else Seq(keywordHits(column, terms, limit, nBuckets = meta.map(_._1)), dense)
+      else Seq(keywordHits(column, st, terms, limit), dense)
     fetchHits(graft.search.Keyword.rrfFuse(pages, KeyCol, limit), column)
   }
 
-  private def keywordHits(column: String, terms: Seq[String], limit: Int,
+  /** The index's analyzer; the inline fallback (no index) has no stored
+    * analyzer and stays on the whitespace default.
+    */
+  private def keywordAnalyzer(st: Option[graft.search.Keyword.Stats]): graft.search.Analyzer =
+    st.fold(graft.search.Analyzer.Whitespace: graft.search.Analyzer)(s =>
+      graft.search.Analyzer.fromId(s.analyzer))
+
+  /** The BM25 `(_key, score)` page: over the index whose stats `st`
+    * were read with the query's analyzer, else one corpus scan.
+    */
+  private def keywordHits(column: String, st: Option[graft.search.Keyword.Stats],
+                          terms: Seq[String], limit: Int,
                           requireAll: Boolean = false,
                           after: Option[(Double, Long)] = None,
-                          mustNot: Seq[String] = Nil,
-                          nBuckets: Option[Int] = None): DataFrame = {
-    val hits =
-      if (hasKeywordIndex(column))
+                          mustNot: Seq[String] = Nil): DataFrame = {
+    val hits = st match {
+      case Some(_) =>
         graft.search.Keyword.searchIndex(spark, keywordIndexDir(column),
           terms, limit, requireAll = requireAll, after = after,
-          mustNot = mustNot, nBuckets = nBuckets)
-      else
+          mustNot = mustNot, stats = st)
+      case None =>
         graft.search.Keyword.bm25TopK(df, terms, limit, idCol = KeyCol,
           textCol = column, requireAll = requireAll, after = after,
           mustNot = mustNot)
+    }
     hits.withColumnRenamed("key", KeyCol)
   }
 
@@ -1589,7 +1621,7 @@ class Collection private[core] (
         buildDedupIndex(column)
         spark.read.parquet(s"$target/bands").select(col(KeyCol)).distinct().count()
       } else {
-        val pending = df.filter(col(KeyCol) > watermark(s"$target/bands"))
+        val pending = df.filter(col(KeyCol) > heldWatermark(DedupIndex, column))
           .select(col(KeyCol), col(column))
         if (pending.isEmpty) 0L
         else appendBands(column, pending).select(col(KeyCol)).distinct().count()
@@ -1661,7 +1693,7 @@ class Collection private[core] (
     maintained(NoveltyStore, column) { target =>
       if (!hasNoveltyStore(column)) { buildNoveltyStore(column); count() }
       else {
-        val pending = df.filter(col(KeyCol) > watermark(s"$target/grams"))
+        val pending = df.filter(col(KeyCol) > heldWatermark(NoveltyStore, column))
           .select(col(KeyCol), col(column))
         val nPending = pending.count()
         if (nPending > 0)
@@ -1702,8 +1734,7 @@ class Collection private[core] (
   def dedupIndexStream(column: String, checkpointDir: String,
                        p: graft.dedup.Dedup.MinHashParams =
                          graft.dedup.Dedup.MinHashParams()): StreamingQuery =
-    watermarkStream(DedupIndex, column, checkpointDir,
-        () => watermark(s"${dedupIndexDir(column)}/bands")) {
+    watermarkStream(DedupIndex, column, checkpointDir) {
       buildDedupIndex(column, p)
     } { pending => appendBands(column, pending) }
 
@@ -1726,7 +1757,6 @@ class Collection private[core] (
       return graft.dedup.Dedup.incrementalNearDups(
         newDocs.select(col(KeyCol), col(column)), corpus,
         column, KeyCol, threshold, maxBucket = maxBucket)
-    recoverFileSwap(s"${dedupIndexDir(column)}/bands")
     val p = readDedupParams(column)
     graft.dedup.Dedup.incrementalNearDupsFromBands(
       newDocs.select(col(KeyCol), col(column)),
@@ -2200,10 +2230,8 @@ class Collection private[core] (
         rows += measure(s"$name(nProbe=$nProbe)")(qv =>
           annPage(column, qv, k, nProbe, None, fetchK))
       }
-      if (hasBinarySketch(column)) {
-        recoverFileSwap(binarySketchDir(column))
+      if (hasBinarySketch(column))
         rows += measure("binary+rerank")(qv => binaryPage(column, qv, k, fetchK))
-      }
       rows.result()
     } finally spark.sparkContext.removeSparkListener(io)
   }
@@ -2220,7 +2248,7 @@ class Collection private[core] (
         buildAnnIndex(column)
         spark.read.parquet(annListsDir(column)).count()
       } else {
-        val wm = watermark(annListsDir(column))
+        val wm = heldWatermark(AnnIndex, column)
         val pending = embeddings(column).filter(col(KeyCol) > wm)
         if (pending.isEmpty) 0L
         else appendAnnRows(column, pending,
@@ -2382,8 +2410,7 @@ class Collection private[core] (
     */
   def annIndexStream(column: String, checkpointDir: String,
                      nLists: Int = 0, pqM: Int = 0): StreamingQuery =
-    watermarkStream(AnnIndex, column, checkpointDir,
-        () => watermark(annListsDir(column))) {
+    watermarkStream(AnnIndex, column, checkpointDir) {
       buildAnnIndex(column, nLists = nLists, pqM = pqM)
     } { pending => appendAnnRows(column, vectorLayout.view(pending), vectorFps(pending)) }
 
@@ -2561,7 +2588,7 @@ class Collection private[core] (
       if (!hasBinarySketch(column)) buildBinarySketch(column)
       else {
         val pending = embeddings(column)
-          .filter(col(KeyCol) > watermark(binarySketchDir(column)))
+          .filter(col(KeyCol) > heldWatermark(BinarySketch, column))
           .localCheckpoint(true)
         if (pending.isEmpty) 0L
         else {
@@ -2611,8 +2638,7 @@ class Collection private[core] (
     * when absent.
     */
   def binarySketchStream(column: String, checkpointDir: String): StreamingQuery =
-    watermarkStream(BinarySketch, column, checkpointDir,
-        () => watermark(binarySketchDir(column))) {
+    watermarkStream(BinarySketch, column, checkpointDir) {
       buildBinarySketch(column)
     } { pending => appendSketch(column, vectorLayout.view(pending), vectorFps(pending)) }
 
@@ -2643,7 +2669,6 @@ class Collection private[core] (
                    embedder: graft.embed.Embedder, fetchK: Int = 0): DataFrame = {
     graft.search.Search.validateLimit(limit)
     if (!hasBinarySketch(column)) return search(column, query, limit, embedder)
-    recoverFileSwap(binarySketchDir(column))
     val qv = embedder.embedOne(query)
     fetchHits(binaryPage(column, qv, limit, fetchK), column)
   }
@@ -2651,7 +2676,7 @@ class Collection private[core] (
   /** [[searchBinary]]'s vector-level core: Hamming stage-1 window over
     * the sign sketch, exact cosine rerank on the candidates — the hits
     * page `(KeyCol, score)` before the content fetch. Callers must have
-    * run `recoverFileSwap(binarySketchDir(column))`.
+    * checked [[hasBinarySketch]], which rolls committed swaps forward.
     */
   private[graft] def binaryPage(column: String, qv: Array[Float],
                                 limit: Int, fetchK: Int = 0): DataFrame = {
@@ -2683,9 +2708,9 @@ class Collection private[core] (
     *  - data and key-clustered index files rewrite ONLY where a footer
     *    key range intersects a deleted key (file-granular journaled
     *    swap; untouched files stay byte-identical);
-    *  - the keyword log takes tombstone APPENDS
-    *    ([[graft.search.Keyword.deleteFromIndex]]) — never a postings
-    *    rewrite — with stats recomputed exactly;
+    *  - the keyword logs take tombstone APPENDS and an exact stats delta
+    *    row ([[graft.search.Keyword.deleteFromIndex]]) — never a postings
+    *    rewrite — in one journaled commit;
     *  - ANN lists rewrite only the files covering the deleted keys'
     *    lists; the key-clustered fps sidecars take the same
     *    footer-range anti-join rewrite — no step in the sequence reads
@@ -2841,7 +2866,6 @@ class Collection private[core] (
   private def storedFps(f: IndexFamily, column: String): Option[DataFrame] =
     f.liveFps.fold(f.fps.filter(_ => built(f, column)).map { t =>
       val path = table(f, column, t)
-      recoverFileSwap(path)
       if (fs.exists(new Path(path))) spark.read.parquet(path) else emptyFps
     })(_(this, column))
 
@@ -3077,13 +3101,8 @@ class Collection private[core] (
                 requireAll: Boolean = true): DataFrame = {
     Identifiers.validate(column)
     val text = if (textCol.nonEmpty) textCol else column
-    val analyzer =
-      if (hasKeywordIndex(column))
-        graft.search.Analyzer.fromId(
-          graft.search.Keyword.storedMeta(spark, keywordIndexDir(column))._2)
-      else graft.search.Analyzer.Whitespace
-    graft.search.Keyword.percolateRowwise(docs, idCol, text,
-      savedQueries, requireAll = requireAll, analyzer = analyzer)
+    graft.search.Keyword.percolateRowwise(docs, idCol, text, savedQueries,
+      requireAll = requireAll, analyzer = keywordAnalyzer(keywordStats(column)))
   }
 
   /** SEMANTIC percolation: which saved queries does each incoming

@@ -33,6 +33,9 @@ private[graft] final case class Maintenance(
   *                   by a fresh build, so a half-written one reads absent)
   * @param dirSwap    sub-tables replaced by whole-directory staged swaps
   * @param fileSwap   sub-tables rewritten by the file-granular journal
+  * @param keys       `(table, key column)` holding the keys the family has
+  *                   indexed: its refresh and stream watermark, and the
+  *                   stream's replay filter
   * @param fps        the `(key, fp)` fingerprint sidecar, when kept
   * @param deletes    key-clustered tables `deleteKeys` rewrites by range
   * @param pressure   tables whose small-file count plans `compact`
@@ -48,6 +51,7 @@ private[graft] final case class IndexFamily(
     dirSwap: Seq[String] = Seq(""),
     fileSwap: Seq[String] = Nil,
     upstream: Upstream = Upstream.Text,
+    keys: Option[(String, String)] = None,
     fps: Option[String] = None,
     deletes: Seq[String] = Nil,
     pressure: Seq[String] = Nil,
@@ -64,13 +68,21 @@ private[graft] object IndexFamily {
     Some(Maintenance(action, (c, column, scope, _) => run(c, column, scope)))
 
   val VectorIndex: IndexFamily = IndexFamily("vector", "", "", fileSwap = Seq(""),
-    deletes = Seq(""), pressure = Seq(""),
+    keys = Some(("", Keys.KeyCol)), deletes = Seq(""), pressure = Seq(""),
     repair = Some(Maintenance("reembedChanged + embedColumn", (c, column, scope, e) =>
       c.reembedChanged(column, e(), scope = scope) + c.embedColumn(column, e()))),
     compact = call("compactIndex")((c, column, _) => c.compactIndex(column)),
     liveFps = Some((c, column) => c.vectorFpsOf(column)))
 
+  /** Every write extends the delta logs through one journaled commit of
+    * the family directory. The doclen log keeps a deleted key's
+    * tombstoned rows, so a deleted key that an upsert brings back is left
+    * to repair.
+    */
   val KeywordIndex: IndexFamily = IndexFamily("keyword", "_kw", "stats",
+    fileSwap = Seq(""), keys = Some(("doclen", "key")),
+    // the stats log grows one file per commit until a compaction folds it
+    pressure = Seq("stats"),
     repair = call("repairKeywordIndex")((c, column, scope) =>
       c.repairKeywordIndex(column, scope)),
     compact = call("compactKeywordIndex")((c, column, _) => {
@@ -79,13 +91,12 @@ private[graft] object IndexFamily {
       Option.when(c.built(KeywordIndex, column))(graft.search.Keyword
         .liveFps(c.spark, c.keywordIndexDir(column)).withColumnRenamed("key", Keys.KeyCol))),
     // the postings log takes tombstone appends, never a rewrite
-    erase = Some((c, column, del) =>
-      graft.search.Keyword.deleteFromIndex(del, c.keywordIndexDir(column))),
+    erase = Some((c, column, del) => c.eraseKeywordKeys(column, del)),
     churn = Some((c, column) =>
       graft.search.Keyword.deadFraction(c.spark, c.keywordIndexDir(column))))
 
   val DedupIndex: IndexFamily = IndexFamily("dedup", "_dd", "params",
-    fileSwap = Seq("bands", "fps"), fps = Some("fps"),
+    fileSwap = Seq("bands", "fps"), keys = Some(("bands", Keys.KeyCol)), fps = Some("fps"),
     deletes = Seq("bands", "fps"), pressure = Seq("bands", "fps"),
     repair = call("repairDedupIndex")((c, column, scope) =>
       c.repairDedupIndex(column, scope)),
@@ -94,11 +105,12 @@ private[graft] object IndexFamily {
   /** Append-only by contract: novelty asks whether the corpus EVER held
     * a gram, so deletes keep its grams and it has nothing to repair.
     */
-  val NoveltyStore: IndexFamily = IndexFamily("novelty", "_nv", "params")
+  val NoveltyStore: IndexFamily = IndexFamily("novelty", "_nv", "params",
+    keys = Some(("grams", Keys.KeyCol)))
 
   val AnnIndex: IndexFamily = IndexFamily("ann", "_ann", "params",
     dirSwap = Seq("", "lists"), fileSwap = Seq("lists", "fps"),
-    upstream = Upstream.Vectors, fps = Some("fps"),
+    upstream = Upstream.Vectors, keys = Some(("lists", Keys.KeyCol)), fps = Some("fps"),
     deletes = Seq("fps"), pressure = Seq("lists", "fps"),
     repair = call("repairAnnIndex")((c, column, scope) => c.repairAnnIndex(column, scope)),
     compact = call("compactAnnIndex")((c, column, _) => c.compactAnnIndex(column)),
@@ -112,7 +124,8 @@ private[graft] object IndexFamily {
     drift = Some((c, column) => c.annDrift(column)))
 
   val BinarySketch: IndexFamily = IndexFamily("binary", "_bin", "params",
-    fileSwap = Seq("sketch", "fps"), upstream = Upstream.Vectors, fps = Some("fps"),
+    fileSwap = Seq("sketch", "fps"), upstream = Upstream.Vectors,
+    keys = Some(("sketch", Keys.KeyCol)), fps = Some("fps"),
     deletes = Seq("sketch", "fps"), pressure = Seq("sketch", "fps"),
     repair = call("repairBinarySketch")((c, column, scope) =>
       c.repairBinarySketch(column, scope)),

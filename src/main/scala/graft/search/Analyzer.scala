@@ -17,7 +17,7 @@ import graft.functions.{TextFunctions, WordPieceTokenizer}
   * An index tokenized one way must never be queried, refreshed or
   * repaired another way — the analyzer is therefore persisted BY ID in
   * the index's stats table at build time, and every later path
-  * re-derives it from there ([[Keyword.analyzerOf]]) instead of trusting
+  * re-derives it from there ([[Keyword.stats]]) instead of trusting
   * the caller. Ids are self-contained (the stopword list rides inside
   * the id) so reconstruction needs no side channel. The md5 token-bucket
   * discipline is analyzer-independent: buckets hash the FINAL tokens,

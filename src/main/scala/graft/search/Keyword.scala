@@ -255,25 +255,24 @@ object Keyword {
 
   /** Build the persistent index: postings partitioned by token bucket
     * (query-time reads prune to the buckets of the query terms), plus
-    * doclen and the one-row stats table. One corpus scan.
+    * doclen and the stats log's first row. One corpus scan.
     *
-    * Stats are stored as EXACT integers (`n_docs`, `sum_dl`) rather than
-    * a float `avgdl` so `appendToIndex` can fold a batch's deltas in
-    * without re-reading the corpus; `avgdl` is derived at query time.
-    * sum-as-exact-long then one double division equals Spark's `avg`
-    * over longs bit-for-bit while the token count stays below 2^53 —
-    * the inline `corpusTables` path and the indexed path agree
-    * (equivalence spec'd in KeywordSpec).
-    *
-    * The stored tables are LOG-STRUCTURED: postings and doclen are
-    * delta logs that [[repairIndex]] extends with tombstones (negative
-    * `tf`/`dl`, `cnt = -1`) when an upsert rewrites text under an
-    * existing key; readers aggregate to the net view ([[netPostings]] /
-    * [[liveDoclen]]). A freshly built index is simply the log with no
-    * tombstones. doclen rows carry `fp = md5(text)` (the
+    * The stored tables are LOG-STRUCTURED. Postings and doclen are delta
+    * logs that later writes extend with new rows and tombstones (negative
+    * `tf`/`dl`, `cnt = -1`); readers aggregate to the net view
+    * ([[netPostingsOf]] / [[liveDoclenOf]]). A freshly built index is the
+    * log with no tombstones. doclen rows carry `fp = md5(text)` (the
     * `reembedChanged` staleness marker) and `cnt = 1`; token-less docs
-    * get a `dl = 0` row so their fp is tracked too — stats' `n_docs`
-    * counts only `dl > 0` rows, keeping the norm contract.
+    * get a `dl = 0` row so their fp is tracked too.
+    *
+    * `stats` is a delta log too: one row per build or commit holding
+    * EXACT integer deltas (`n_docs`, `sum_dl`) plus the index's
+    * `n_buckets` and `analyzer`; readers sum the rows ([[Stats]]), and
+    * `avgdl` is derived at query time. `n_docs` counts only `dl > 0`
+    * docs, keeping the norm contract. Sum-as-exact-long then one double
+    * division equals Spark's `avg` over longs bit-for-bit while the
+    * token count stays below 2^53 — the inline `corpusTables` path and
+    * the indexed path agree (equivalence spec'd in KeywordSpec).
     */
   def buildIndex(docs: DataFrame, dir: String,
                  idCol: String = "doc_id", textCol: String = "text",
@@ -309,11 +308,8 @@ object Keyword {
         docs.select(col(idCol).as("key")).limit(0)
           .withColumn("dl", lit(0L))
       }
-    val doclen = docFps(docs, idCol, textCol)
-      .join(doclen0, Seq("key"), "left_outer")
-      .select(col("key"), coalesce(col("dl"), lit(0L)).as("dl"),
-        col("fp"), lit(1).as("cnt"))
-    doclen.write.mode("overwrite").parquet(s"$dir/doclen")
+    doclenRows(docFps(docs, idCol, textCol), doclen0)
+      .write.mode("overwrite").parquet(s"$dir/doclen")
     writeStats(spark, dir, spark.read.parquet(s"$dir/doclen"), nBuckets,
       analyzer.id)
   }
@@ -325,8 +321,18 @@ object Keyword {
     docs.select(col(idCol).as("key"),
       md5(coalesce(col(textCol).cast("string"), lit(""))).as("fp"))
 
-  /** Exact integer stats recomputed from a doclen LOG frame (any mix of
-    * live rows and tombstones): `n_docs` counts live token-bearing docs.
+  /** One live doclen row per `(key, fp)`, its `dl` from `doclen` (0 for
+    * a token-less document).
+    */
+  private def doclenRows(fps: DataFrame, doclen: DataFrame): DataFrame =
+    fps.join(doclen, Seq("key"), "left_outer")
+      .select(col("key"), coalesce(col("dl"), lit(0L)).as("dl"),
+        col("fp"), lit(1).as("cnt"))
+
+  /** The one stats row of a build or compaction, recomputed from a doclen
+    * LOG frame (any mix of live rows and tombstones): `n_docs` counts
+    * live token-bearing docs. `dir` is a fresh build target, never a
+    * live index.
     */
   private def writeStats(spark: SparkSession, dir: String,
                          doclenLog: DataFrame, nBuckets: Int,
@@ -345,7 +351,7 @@ object Keyword {
   // read); columns missing from older files read as null, as a schema
   // merge would. Keys read as long — the collection's `_key`; an index
   // built over narrower integer keys widens on read.
-  private val StatsSchema = StructType(Seq(
+  private[graft] val StatsSchema = StructType(Seq(
     StructField("n_docs", LongType), StructField("sum_dl", LongType),
     StructField("n_buckets", IntegerType), StructField("analyzer", StringType)))
   private val DoclenSchema = StructType(Seq(
@@ -355,24 +361,25 @@ object Keyword {
     StructField("tok", StringType), StructField("key", LongType),
     StructField("tf", LongType), StructField("bucket", IntegerType)))
 
-  /** (n_buckets, analyzer id) from a stored index's stats; indexes
-    * predating the analyzer column read as whitespace.
+  /** An index's corpus stats: the summed rows of its `stats` log, with
+    * the bucket count and analyzer id every row carries (indexes
+    * predating the analyzer column read as whitespace).
     */
-  private[graft] def storedMeta(spark: SparkSession, dir: String): (Int, String) = {
-    val r = spark.read.schema(StatsSchema).parquet(s"$dir/stats").head()
-    (r.getAs[Int]("n_buckets"), Option(r.getAs[String]("analyzer")).getOrElse("ws"))
-  }
+  private[graft] final case class Stats(nDocs: Long, sumDl: Long, nBuckets: Int,
+                                        analyzer: String)
 
-  /** The analyzer a stored index was built with — every later search /
-    * refresh / repair path derives tokenization from HERE, never from a
-    * caller argument, so an index can never be read and written under
-    * different token rules.
+  /** [[Stats]] of `stats` rows read in [[StatsSchema]]. */
+  private[graft] def sumStats(rows: Seq[Row]): Stats =
+    Stats(rows.map(_.getLong(0)).sum, rows.map(_.getLong(1)).sum, rows.head.getInt(2),
+      Option(rows.head.getString(3)).getOrElse("ws"))
+
+  /** The stored index's [[Stats]]. The analyzer recorded here is the
+    * one every later search / refresh / repair derives tokenization
+    * from, never a caller argument, so an index can never be read and
+    * written under different token rules.
     */
-  def analyzerOf(spark: SparkSession, dir: String): Analyzer =
-    // pure read — NO recovery here: a lock-free query racing a live
-    // writer's staged append must never delete its staging dirs (heal
-    // runs at every WRITE entry point, under the collection write lock)
-    Analyzer.fromId(storedMeta(spark, dir)._2)
+  def stats(spark: SparkSession, dir: String): Stats =
+    sumStats(spark.read.schema(StatsSchema).parquet(s"$dir/stats").collect().toSeq)
 
   /** Net view of the postings log: per-(tok, key) summed `tf`, dropped
     * when the tombstones cancel it. Pure aggregation — exact integers,
@@ -425,193 +432,102 @@ object Keyword {
     }
   }
 
-  // --- crash-safe append protocol ----------------------------------------
+  // --- staged writes -------------------------------------------------------
   //
-  // appendToIndex must land postings AND doclen together. A plain
-  // `mode("append")` pair has a fatal window: a crash after the postings
-  // append but before the doclen append leaves fresh postings for keys
-  // the doclen watermark has not advanced past, so the next refresh
-  // re-selects those keys and appends their postings AGAIN — the net
-  // view then reports doubled `tf` and BM25 silently over-scores them.
-  // The append therefore stages both tables' files beside the index and
-  // commits with a journal marker:
-  //
-  //   1. batch postings -> `postings_staging/` (bucket-partitioned),
-  //      batch doclen rows -> `doclen_staging/`;
-  //   2. create `_appendjournal` — the commit point;
-  //   3. move the staged files in (parquet part names embed a job UUID,
-  //      so moves are collision-free and idempotent), write stats,
-  //      delete the journal, drop the staging dirs.
-  //
-  // [[recoverAppend]] runs before every WRITE to the index (all the
-  // mutating entry points call it, under the collection write lock):
-  // journal present -> roll forward (finish the moves, recompute stats
-  // exactly from the doclen log); staging dirs without a journal ->
-  // uncommitted append, discarded. The doclen watermark consequently
-  // sees either the WHOLE batch (committed) or none of it (discarded) —
-  // no half-state survives a crash. READS never recover: a lock-free
-  // query racing a live writer must not delete its staging dirs or
-  // fight its moves, and a crash-interrupted append is invisible to
-  // readers anyway (stats advance only at commit completion).
+  // A write to a built index (append, repair, delete) lands postings,
+  // doclen and stats together or not at all: postings landing without
+  // their doclen rows would let the refresh watermark re-append the same
+  // batch (doubled `tf`, silently over-scored). So these methods only
+  // WRITE DELTAS into an empty `stage` directory, in the index's own
+  // layout (`postings/bucket=N/`, `doclen/`, `stats/`), and commit
+  // nothing: the caller moves the staged files in through one journaled
+  // commit (`Collection`'s file swap). A commit never rewrites or
+  // deletes a file of the live index, so a reader beside it still finds
+  // every file it listed.
 
-  private def appendJournal(dir: String) = new org.apache.hadoop.fs.Path(
-    s"$dir/_appendjournal")
-
-  private def hadoopFs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Move every staged parquet leaf into `target`, preserving partition
-    * subdirectories (`bucket=N/`). Idempotent: a leaf already present at
-    * the destination means an earlier attempt moved it — drop the
-    * staged copy.
+  /** Stage `postings` and `doclen` deltas plus the stats row they imply:
+    * `n_docs` += count(dl > 0) - count(dl < 0), `sum_dl` += sum(dl) over
+    * the staged doclen rows (a tombstone carries its row's negated `dl`,
+    * so a re-indexed key nets out exactly). Returns the `n_docs` delta.
     */
-  private def moveStagedIn(fs: org.apache.hadoop.fs.FileSystem,
-                           stage: org.apache.hadoop.fs.Path,
-                           target: org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(stage)) return
-    fs.mkdirs(target)
-    fs.listStatus(stage).foreach { s =>
-      if (s.isDirectory)
-        moveStagedIn(fs, s.getPath, new org.apache.hadoop.fs.Path(target, s.getPath.getName))
-      else if (s.getPath.getName.endsWith(".parquet")) {
-        val dst = new org.apache.hadoop.fs.Path(target, s.getPath.getName)
-        if (fs.exists(dst)) fs.delete(s.getPath, false)
-        else if (!fs.rename(s.getPath, dst))
-          throw new java.io.IOException(s"append commit: could not move ${s.getPath} to $dst")
-      }
-    }
-  }
-
-  /** Heal a crashed [[appendToIndex]] — run before every index read or
-    * write (all the public entry points of this object call it, as does
-    * the refresh watermark read). Journal present: the append committed;
-    * finish the file moves and recompute stats exactly from the doclen
-    * log. Staging dirs without a journal: the append never committed;
-    * discard them (the watermark never advanced, so the batch re-runs
-    * in full).
-    */
-  def recoverAppend(spark: SparkSession, dir: String): Unit = {
-    val fs = hadoopFs(spark, dir)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) return
-    val j = appendJournal(dir)
-    val stageP = new org.apache.hadoop.fs.Path(s"$dir/postings_staging")
-    val stageD = new org.apache.hadoop.fs.Path(s"$dir/doclen_staging")
-    if (fs.exists(j)) {
-      moveStagedIn(fs, stageP, new org.apache.hadoop.fs.Path(s"$dir/postings"))
-      moveStagedIn(fs, stageD, new org.apache.hadoop.fs.Path(s"$dir/doclen"))
-      fs.delete(stageP, true)
-      fs.delete(stageD, true)
-      val (nBuckets, az) = storedMeta(spark, dir)
-      writeStats(spark, dir,
-        spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen"),
-        nBuckets, az)
-      fs.delete(j, false)
-    } else {
-      if (fs.exists(stageP)) fs.delete(stageP, true)
-      if (fs.exists(stageD)) fs.delete(stageD, true)
-    }
-  }
-
-  /** Stage a batch append and write the commit journal; returns the
-    * advanced exact stats for [[commitAppend]]. Package-visible so the
-    * crash spec can kill the append between the commit point and the
-    * file moves.
-    */
-  private[graft] case class StagedAppend(nDocs: Long, sumDl: Long, nBuckets: Int,
-                                         analyzerId: String)
-
-  private[graft] def stageAppend(newDocs: DataFrame, dir: String,
-                                 idCol: String, textCol: String): StagedAppend = {
-    val spark = newDocs.sparkSession
-    recoverAppend(spark, dir)
-    val old = spark.read.parquet(s"$dir/stats").head()
-    val (nBuckets, az) = storedMeta(spark, dir)
-    val (postings, doclen0, _) =
-      corpusTables(newDocs, idCol, textCol, Analyzer.fromId(az))
-    postings
-      .withColumn("bucket", tokenBucketCol(col("tok"), nBuckets))
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$dir/postings_staging")
-    docFps(newDocs, idCol, textCol)
-      .join(doclen0, Seq("key"), "left_outer")
-      .select(col("key"), coalesce(col("dl"), lit(0L)).as("dl"),
-        col("fp"), lit(1).as("cnt"))
-      .write.mode("overwrite").parquet(s"$dir/doclen_staging")
+  private def stageDeltas(stage: String, st: Stats, postings: DataFrame,
+                          doclen: DataFrame): Long = {
+    val spark = doclen.sparkSession
+    postings.write.partitionBy("bucket").parquet(s"$stage/postings")
+    doclen.write.parquet(s"$stage/doclen")
     // exact integer deltas, read back from the staged files themselves
-    val delta = spark.read.parquet(s"$dir/doclen_staging")
-      .agg(count(when(col("dl") > 0, 1)), sum(col("dl"))).head()
-    val st = StagedAppend(
-      old.getAs[Long]("n_docs") + delta.getLong(0),
-      old.getAs[Long]("sum_dl") + (if (delta.isNullAt(1)) 0L else delta.getLong(1)),
-      nBuckets, az)
-    hadoopFs(spark, dir).create(appendJournal(dir), true).close()  // commit point
-    st
-  }
-
-  private[graft] def commitAppend(spark: SparkSession, dir: String,
-                                  st: StagedAppend): Unit = {
-    val fs = hadoopFs(spark, dir)
-    moveStagedIn(fs, new org.apache.hadoop.fs.Path(s"$dir/postings_staging"),
-      new org.apache.hadoop.fs.Path(s"$dir/postings"))
-    moveStagedIn(fs, new org.apache.hadoop.fs.Path(s"$dir/doclen_staging"),
-      new org.apache.hadoop.fs.Path(s"$dir/doclen"))
+    val d = spark.read.schema(DoclenSchema).parquet(s"$stage/doclen")
+      .agg(count(when(col("dl") > 0, 1)) - count(when(col("dl") < 0, 1)),
+        coalesce(sum(col("dl")), lit(0L))).head()
     import spark.implicits._
-    Seq((st.nDocs, st.sumDl, st.nBuckets, st.analyzerId))
+    Seq((d.getLong(0), d.getLong(1), st.nBuckets, st.analyzer))
       .toDF("n_docs", "sum_dl", "n_buckets", "analyzer")
-      .write.mode("overwrite").parquet(s"$dir/stats")
-    fs.delete(appendJournal(dir), false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings_staging"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/doclen_staging"), true)
+      .write.parquet(s"$stage/stats")
+    d.getLong(0)
   }
 
-  /** Fold a batch of NEW documents into an existing index in O(batch):
-    * the batch's postings/doclen append to the stored tables (same
-    * bucket layout, so query-time pruning is unaffected) and the exact
-    * integer stats advance by the batch deltas — the corpus is never
+  /** Stage a batch of NEW documents for an index with stats `st`: their
+    * postings (same bucket layout, so query-time pruning is unaffected)
+    * and doclen rows, and the exact stats deltas — the corpus is never
     * re-read. Keys must be new (the `AppendJsonl` max+1 discipline);
-    * re-adding an indexed key would double-count its postings.
-    *
-    * Crash-safe via the staged commit protocol above: postings and
-    * doclen land atomically-as-a-pair, so the refresh watermark can
-    * never re-append a half-landed batch. Coordinate with the
-    * collection write lock as `embedColumn` does.
+    * re-adding an indexed key would double-count its postings. Returns
+    * the number of token-bearing documents staged.
     */
-  def appendToIndex(newDocs: DataFrame, dir: String,
-                    idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val st = stageAppend(newDocs, dir, idCol, textCol)
-    commitAppend(newDocs.sparkSession, dir, st)
+  private[graft] def appendToIndex(newDocs: DataFrame, stage: String, st: Stats,
+                                   idCol: String = "doc_id",
+                                   textCol: String = "text"): Long = {
+    val (postings, doclen, _) =
+      corpusTables(newDocs, idCol, textCol, Analyzer.fromId(st.analyzer))
+    stageDeltas(stage, st,
+      postings.withColumn("bucket", tokenBucketCol(col("tok"), st.nBuckets)),
+      doclenRows(docFps(newDocs, idCol, textCol), doclen))
   }
 
-  /** Repair the index after an UPSERT rewrote text under existing keys —
-    * the keyword twin of the vector index's `reembedChanged`, closing
-    * the same staleness trap: postings/doclen describe the text at
-    * indexing time, and neither watermark catch-up nor appends can see
-    * an in-place rewrite. Exact by construction: the stored `fp`
-    * (md5 of the indexed text) is compared against md5 of the CURRENT
-    * text; changed keys — plus keys the index has never seen, covering
-    * upserts that introduce new keys below any watermark — are
-    * re-indexed. Legacy fp-less rows conservatively re-index.
-    *
-    * Scale shape — append-only, no postings rewrite: the bucket-
-    * partitioned postings log cannot be pruned by KEY (it is laid out
-    * by token), so instead of rewriting it the repair APPENDS
-    * tombstones (the changed keys' net postings, negated) plus the
-    * fresh postings of the new text; readers aggregate to the net view.
-    * Cost: one key-semi-join scan of the postings log (reading, not
-    * rewriting — no write amplification, no swap window) + O(changed)
-    * appends. Stats are recomputed from the doclen log every call, so
-    * re-running a repair after a crash heals everything; re-running on
-    * a clean index is a no-op (returns 0). Compact the log periodically
-    * via `Collection.compactKeywordIndex` — tombstones accumulate until
-    * then. Returns the number of documents re-indexed.
+  /** Tombstones cancelling every live row of `keys` (a small, pinned key
+    * frame) in the index at `dir`: each key's net postings negated, and
+    * each live doclen row negated with its own fp riding along, so
+    * (key, fp) grouping cancels it. The postings read is one key-range-
+    * pruned semi-join of the log (min/max row-group pruning when the log
+    * is key-clustered) — the bucket-partitioned log is laid out by token,
+    * so it is never rewritten, only extended.
     */
-  def repairIndex(docs: DataFrame, dir: String,
-                  idCol: String = "doc_id", textCol: String = "text"): Long = {
+  private def tombstones(dir: String, doclenLog: DataFrame,
+                         keys: DataFrame): (DataFrame, DataFrame) = {
+    val range = keys.agg(min(col("key")), max(col("key"))).head()
+    val stored = keys.sparkSession.read.parquet(s"$dir/postings")
+      .filter(col("key").between(range.get(0), range.get(1)))
+      .join(keys, Seq("key"), "left_semi")
+    val postings = netPostingsOf(stored)
+      .select(col("tok"), col("key"), (-col("tf")).as("tf"), col("bucket"))
+    val doclen = liveDoclenOf(doclenLog)
+      .join(broadcast(keys), Seq("key"), "left_semi")
+      .join(liveFpsOf(doclenLog), Seq("key"), "left_outer")
+      .select(col("key"), (-col("dl")).as("dl"), col("fp"),
+        (-col("cnt")).cast("int").as("cnt"))
+    (postings, doclen)
+  }
+
+  /** Stage the repair of the index at `dir` after an UPSERT rewrote text
+    * under existing keys — the keyword twin of the vector index's
+    * `reembedChanged`, closing the same staleness trap: postings/doclen
+    * describe the text at indexing time, and neither watermark catch-up
+    * nor appends can see an in-place rewrite. Exact by construction: the
+    * stored `fp` (md5 of the indexed text) is compared against md5 of
+    * the CURRENT text; changed keys — plus keys the index has never
+    * seen, covering upserts that introduce new keys below any watermark
+    * — are re-indexed. Legacy fp-less rows conservatively re-index.
+    *
+    * Append-only: the changed keys' [[tombstones]] plus the fresh
+    * postings and doclen rows of the new text. Cost: one key-semi-join
+    * scan of the postings log + O(changed) staged rows. Re-running on a
+    * clean index stages nothing and returns 0. Compact the log
+    * periodically via `Collection.compactKeywordIndex` — tombstones
+    * accumulate until then. Returns the number of documents re-indexed.
+    */
+  private[graft] def repairIndex(docs: DataFrame, dir: String, stage: String, st: Stats,
+                                 idCol: String = "doc_id",
+                                 textCol: String = "text"): Long = {
     val spark = docs.sparkSession
-    recoverAppend(spark, dir)
-    val (nBuckets, az) = storedMeta(spark, dir)
-    val analyzer = Analyzer.fromId(az)
     val doclenLog = spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen")
     val cur = docs.select(col(idCol).as("key"),
       coalesce(col(textCol).cast("string"), lit("")).as("__txt"))
@@ -622,48 +538,25 @@ object Keyword {
       .localCheckpoint(true)
     val nUpd = upd.count()
     if (nUpd > 0) {
-      val updKeys = upd.select(col("key")).localCheckpoint(true)
-      // key range first (min/max row-group pruning when the log is
-      // key-clustered), then the exact semi-join
-      val range = updKeys.agg(min(col("key")), max(col("key"))).head()
-      val stored = spark.read.parquet(s"$dir/postings")
-        .filter(col("key").between(range.get(0), range.get(1)))
-        .join(updKeys, Seq("key"), "left_semi")
-      val tomb = netPostingsOf(stored)
-        .select(col("tok"), col("key"), (-col("tf")).as("tf"), col("bucket"))
-      val updDocs = upd.select(col("key"), col("__txt").as(textCol))
-      val (fresh, freshLen, _) = corpusTables(updDocs, "key", textCol, analyzer)
-      tomb.unionByName(
-          fresh.withColumn("bucket", tokenBucketCol(col("tok"), nBuckets)))
-        .write.partitionBy("bucket").mode("append").parquet(s"$dir/postings")
-      // doclen deltas: tombstone every live row of an updated key (its
-      // own fp rides along so (key, fp) grouping cancels it), then the
-      // fresh row with the new fp — dl = 0 when the new text is empty
-      val oldLive = liveDoclenOf(doclenLog)
-        .join(broadcast(updKeys), Seq("key"), "left_semi")
-        .join(liveFpsOf(doclenLog), Seq("key"), "left_outer")
-        .select(col("key"), (-col("dl")).as("dl"), col("fp"),
-          (-col("cnt")).cast("int").as("cnt"))
-      val freshRows = upd.select(col("key"), col("__fp").as("fp"))
-        .join(freshLen, Seq("key"), "left_outer")
-        .select(col("key"), coalesce(col("dl"), lit(0L)).as("dl"),
-          col("fp"), lit(1).as("cnt"))
-      oldLive.unionByName(freshRows).write.mode("append").parquet(s"$dir/doclen")
+      val (tombP, tombD) = tombstones(dir, doclenLog,
+        upd.select(col("key")).localCheckpoint(true))
+      val (fresh, freshLen, _) = corpusTables(
+        upd.select(col("key"), col("__txt").as(textCol)), "key", textCol,
+        Analyzer.fromId(st.analyzer))
+      stageDeltas(stage, st,
+        tombP.unionByName(fresh.withColumn("bucket", tokenBucketCol(col("tok"), st.nBuckets))),
+        // dl = 0 when the new text is empty
+        tombD.unionByName(doclenRows(upd.select(col("key"), col("__fp").as("fp")), freshLen)))
     }
-    // stats from the (re-read) doclen log — ALWAYS, so a crashed repair
-    // heals on re-run even when nUpd is then 0
-    writeStats(spark, dir,
-      spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen"),
-      nBuckets, az)
     nUpd
   }
 
   /** Live `(key, fp)` view of a stored index's doclen log — the
     * consistency-check surface (`Collection.indexStatus` compares it
-    * against the collection's current fingerprints).
+    * against the collection's current fingerprints). Reads only: a
+    * commit in flight only adds files.
     */
   def liveFps(spark: SparkSession, dir: String): DataFrame =
-    // pure read — see [[analyzerOf]] for why recovery must not run here
     liveFpsOf(spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen"))
 
   /** Live `(tok, key, tf)` postings of a stored index, net of tombstones
@@ -676,53 +569,35 @@ object Keyword {
     netPostingsOf(spark.read.parquet(s"$dir/postings"))
       .select(col("tok"), col("key"), col("tf"))
 
-  /** Delete documents from the index — the tombstone-append twin of
-    * [[repairIndex]] with no fresh side: each deleted key's net postings
-    * are negated into the log, its doclen rows are tombstoned, and stats
-    * recompute from the doclen log (so a crashed delete heals on re-run,
-    * and re-running with the same keys is a no-op). Cost: one key-pruned
-    * postings read + O(deleted) appends — the postings log is never
-    * rewritten. Returns the number of live documents removed.
+  /** Stage the deletion of `keys` from the index at `dir` — the
+    * [[repairIndex]] twin with no fresh side: the live keys'
+    * [[tombstones]] only. Cost: one key-pruned postings read + O(deleted)
+    * staged rows. Returns the number of live documents staged for
+    * removal (0 stages nothing).
     */
-  def deleteFromIndex(keys: DataFrame, dir: String): Long = {
+  private[graft] def deleteFromIndex(keys: DataFrame, dir: String, stage: String,
+                                     st: Stats): Long = {
     val spark = keys.sparkSession
-    recoverAppend(spark, dir)
-    val (nBuckets, az) = storedMeta(spark, dir)
     val doclenLog = spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen")
     val delKeys = liveDoclenOf(doclenLog)
       .join(keys.select(col(keys.columns.head).as("key")), Seq("key"), "left_semi")
       .select(col("key")).localCheckpoint(true)
     val n = delKeys.count()
     if (n > 0) {
-      val range = delKeys.agg(min(col("key")), max(col("key"))).head()
-      val stored = spark.read.parquet(s"$dir/postings")
-        .filter(col("key").between(range.get(0), range.get(1)))
-        .join(delKeys, Seq("key"), "left_semi")
-      netPostingsOf(stored)
-        .select(col("tok"), col("key"), (-col("tf")).as("tf"), col("bucket"))
-        .write.partitionBy("bucket").mode("append").parquet(s"$dir/postings")
-      liveDoclenOf(doclenLog)
-        .join(broadcast(delKeys), Seq("key"), "left_semi")
-        .join(liveFpsOf(doclenLog), Seq("key"), "left_outer")
-        .select(col("key"), (-col("dl")).as("dl"), col("fp"),
-          (-col("cnt")).cast("int").as("cnt"))
-        .write.mode("append").parquet(s"$dir/doclen")
+      val (postings, doclen) = tombstones(dir, doclenLog, delKeys)
+      stageDeltas(stage, st, postings, doclen)
     }
-    writeStats(spark, dir,
-      spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen"),
-      nBuckets, az)
     n
   }
 
   /** Write the NET view of an index at `srcDir` as a fresh tombstone-free
     * index at `dstDir` — the compaction body (the caller owns locking and
     * the staged swap). No re-tokenization: postings fold by aggregation,
-    * doclen keeps one live row per key with its current fp, stats
-    * recompute from the folded doclen.
+    * doclen keeps one live row per key with its current fp, and the stats
+    * log folds into one row recomputed from the folded doclen.
     */
   def compactIndexTo(spark: SparkSession, srcDir: String, dstDir: String): Unit = {
-    recoverAppend(spark, srcDir)
-    val (nBuckets, az) = storedMeta(spark, srcDir)
+    val st = stats(spark, srcDir)
     netPostingsOf(spark.read.parquet(s"$srcDir/postings"))
       .select(col("tok"), col("key"), col("tf"), col("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(s"$dstDir/postings")
@@ -731,7 +606,7 @@ object Keyword {
       .join(liveFpsOf(log), Seq("key"), "left_outer")
       .select(col("key"), col("dl"), col("fp"), lit(1).as("cnt"))
     folded.write.mode("overwrite").parquet(s"$dstDir/doclen")
-    writeStats(spark, dstDir, folded, nBuckets, az)
+    writeStats(spark, dstDir, folded, st.nBuckets, st.analyzer)
   }
 
   /** Query the persistent index. The postings read names the query
@@ -743,18 +618,14 @@ object Keyword {
     * tombstone folding touches only the matched buckets' rows. Every
     * read declares its table's stored layout.
     *
-    * Pure read — queries never run recovery: a lock-free search racing
-    * a live writer's staged append must not delete its staging dirs or
-    * fight its file moves. An UNCOMMITTED crashed append (no journal)
-    * is fully invisible. A crash mid-commit can leave SOME of the
-    * batch's moved files visible with pre-batch stats until the next
-    * WRITE entry point rolls the journal forward; the skew is bounded —
-    * half-landed docs without a doclen row drop out of scoring entirely
-    * (the per-key join below is inner), so at worst df/n_docs/avgdl are
-    * briefly stale, the same class of staleness a live commit's
-    * in-flight moves already expose. A read-only serving deployment
-    * should run `repairIndex`/refresh on a schedule (or after any
-    * writer crash) to heal rather than rely on query-path recovery.
+    * A read only: writers extend the logs through one journaled commit
+    * that moves postings, then doclen, then the stats row in, and never
+    * delete a file of a live index. A search beside a commit therefore
+    * sees at worst some of the batch's postings without their doclen
+    * rows — the per-key join below is inner, so those drop out of
+    * scoring — with df/n_docs/avgdl one commit stale. `stats`, when the
+    * caller has already read the stats log (`Collection` reads it for the
+    * analyzer), saves the read here.
     */
   def searchIndex(spark: SparkSession, dir: String,
                   queryTerms: Seq[String], k: Int,
@@ -762,22 +633,21 @@ object Keyword {
                   requireAll: Boolean = false,
                   after: Option[(Double, Long)] = None,
                   mustNot: Seq[String] = Nil,
-                  nBuckets: Option[Int] = None): DataFrame = {
-    val stored = spark.read.schema(StatsSchema).parquet(s"$dir/stats")
-    // a caller that already read the one-row stats table (storedMeta —
-    // the analyzer lives there too) passes the bucket count in; a bare
-    // call pays the head() job itself
-    val nB = nBuckets.getOrElse(stored.select(col("n_buckets")).head().getInt(0))
-    // nullif guards the fully-erased index (n_docs = 0): no postings
-    // survive to score anyway, but ANSI mode would fail the plan first
-    val stats = stored.select(col("n_docs"),
-      (col("sum_dl").cast("double") / nullif(col("n_docs"), lit(0))).as("avgdl"))
+                  stats: Option[Stats] = None): DataFrame = {
+    val st = stats.getOrElse(Keyword.stats(spark, dir))
+    // avgdl is null on the fully-erased index (n_docs = 0): no postings
+    // survive to score anyway, but the division must not fail first
+    import spark.implicits._
+    val statsDf = Seq((st.nDocs,
+        Option.when(st.nDocs != 0)(st.sumDl.toDouble / st.nDocs)))
+      .toDF("n_docs", "avgdl")
     val qt = queryTerms.map(_.toLowerCase).distinct
     val neg = mustNot.map(_.toLowerCase).distinct
     // excluded terms' postings live in their own buckets — read those
     // too (still O(query+mustNot buckets), never the whole postings log)
-    val fs = hadoopFs(spark, dir)
-    val bucketDirs = (qt ++ neg).map(tokenBucket(_, nB)).distinct
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bucketDirs = (qt ++ neg).map(tokenBucket(_, st.nBuckets)).distinct
       .map(b => s"$dir/postings/bucket=$b")
       .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
     val postingsLog =
@@ -788,7 +658,7 @@ object Keyword {
     val postings = netPostingsOf(postingsLog).select(col("tok"), col("key"), col("tf"))
     val doclen = liveDoclenOf(spark.read.schema(DoclenSchema).parquet(s"$dir/doclen"))
       .select(col("key"), col("dl"))
-    bm25FromTables(postings, doclen, stats, qt, k, k1, b, requireAll, after,
+    bm25FromTables(postings, doclen, statsDf, qt, k, k1, b, requireAll, after,
       neg)
   }
 

@@ -24,6 +24,11 @@ import graft.embed.HashingEmbedder
   *     batches stays within 2x the median of the second decile (the
   *     first is JVM warmup); a fold whose cost grows with corpus size
   *     instead of batch size fails here.
+  *  3. NO LOST KEYS — before each maintenance pass (whose repairs would
+  *     heal a gap) and at the end, every stream-fed family holds exactly
+  *     the data's key set: `indexStatus` reports no missing and no
+  *     orphaned keys for the vector, keyword, dedup, ANN and binary
+  *     structures.
   *
   * Prints a summary table for SCALE.md and exits nonzero on violation.
   *
@@ -95,6 +100,14 @@ object Soak {
       "dedup" -> c.dedupIndexStream("text", s"$root/_ddckpt"),
       "ann" -> c.annIndexStream("text", s"$root/_annckpt", nLists = 4),
       "binary" -> c.binarySketchStream("text", s"$root/_binckpt"))
+    // every stream-fed structure holds exactly the data's keys
+    def checkKeys(at: String): Unit = {
+      val bad = c.indexStatus("text").collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(3)))
+        .filter { case (_, missing, orphaned) => missing != 0L || orphaned != 0L }
+      require(bad.isEmpty, s"$at: structures out of step with the data's keys " +
+        bad.map { case (s, m, o) => s"$s missing=$m orphaned=$o" }.mkString(", "))
+    }
     val lat = new Array[Double](batches)
     val fileHighs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
     var deleted = 0L
@@ -106,6 +119,7 @@ object Soak {
         queries.foreach(_._2.processAllAvailable())
         lat(b) = (System.nanoTime() - t0) / 1e9
         if ((b + 1) % compactEvery == 0) {
+          checkKeys(s"batch ${b + 1}")
           // interleaved maintenance: delete a streamed-in key, compact
           // every family, then scoped repairs must find nothing broken
           val delKey = (b.toLong - 3) * rowsPerBatch + rowsPerBatch + 2
@@ -190,7 +204,9 @@ object Soak {
     val nRows = c.df.count()
     val nVecs = c.indexedCount("text")
     require(nRows == nVecs, s"rows $nRows != indexed $nVecs after soak")
-    println(s"# SOAK OK: $batches batches, $nRows rows, latency flat, state bounded")
+    checkKeys("after soak")
+    println(s"# SOAK OK: $batches batches, $nRows rows, latency flat, state bounded, " +
+      "every family holds the data's keys")
     spark.stop()
   }
 }

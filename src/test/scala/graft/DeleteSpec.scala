@@ -57,8 +57,7 @@ class DeleteSpec extends SparkSpec {
     assert(!c.checkDuplicates("text", dupProbe, threshold = 0.5)
       .collect().exists(r => Set(7L, 13L)(r.getLong(0))))
     // keyword stats shrank exactly (all docs tokenize)
-    assert(spark.read.parquet(s"${c.keywordIndexDir("text")}/stats")
-      .head().getAs[Long]("n_docs") == 58L)
+    assert(graft.search.Keyword.stats(spark, c.keywordIndexDir("text")).nDocs == 58L)
     // re-run is a no-op
     assert(c.deleteKeys(Seq(7L, 13L)) == 0L)
     assert(c.count() == 58)

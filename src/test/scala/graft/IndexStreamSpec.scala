@@ -178,4 +178,39 @@ class IndexStreamSpec extends SparkSpec {
         "full replay must not re-sketch indexed keys")
     } finally binQ2.stop()
   }
+
+  test("every keyed stream indexes new keys that land below its watermark") {
+    // a file can carry keys below what a stream has already indexed: an
+    // upsert of new low keys rewrites a data file, insertVectors lands
+    // low keys in the vector index, and a multi-file append can be listed
+    // part-way. Each family's stream must index those keys, not drop them
+    // as replays.
+    val emb = new HashingEmbedder(dim = 32)
+    val root = java.nio.file.Files.createTempDirectory("graft_lowkeys").toString
+    val c = new Catalog(spark, root).create(CollectionConfig(name = "low"))
+    c.importDf((1 to 30).map(i => (i * 10L, s"alpha beta gamma delta document number $i"))
+      .toDF("_key", "text"))
+    assert(c.embedColumn("text", emb) == 30)
+    val streams = Seq(
+      c.keywordIndexStream("text", s"$root/_kwckpt"),
+      c.dedupIndexStream("text", s"$root/_ddckpt"),
+      c.annIndexStream("text", s"$root/_annckpt", nLists = 4),
+      c.binarySketchStream("text", s"$root/_binckpt"))
+    def missing: Map[String, Long] = c.indexStatus("text").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    try {
+      streams.foreach(_.processAllAvailable()) // bootstrap builds, keys 10..300
+      assert(missing.values.forall(_ == 0L), missing.toString)
+      val low = Seq((15L, "zephyr quill low key fifteen payload"),
+        (25L, "zephyr quill low key twenty five payload"))
+      c.upsert(low.toDF("_key", "text"))
+      c.insertVectors("text", low.map { case (k, t) =>
+        (k, emb.embed(Iterator(t)).next()) }.toDF("_key", "embedding"))
+      streams.foreach(_.processAllAvailable())
+      assert(missing == Map("vector" -> 0L, "keyword" -> 0L, "dedup" -> 0L,
+        "ann" -> 0L, "binary" -> 0L), "a stream dropped keys below its watermark")
+      assert(c.searchKeyword("text", "zephyr", 5).collect().map(_.getLong(1)).toSet ==
+        Set(15L, 25L))
+    } finally streams.foreach(_.stop())
+  }
 }

@@ -114,93 +114,114 @@ class KeywordSpec extends SparkSpec {
     }
   }
 
+  /** A collection over the `_key`/`text` of `docs` (keys = doc ids). */
+  private def keyedCollection(name: String, docs: org.apache.spark.sql.DataFrame) = {
+    val c = new graft.core.Catalog(spark,
+      java.nio.file.Files.createTempDirectory(s"graft_$name").toString)
+      .create(graft.core.CollectionConfig(name = name))
+    c.importDf(docs.select(col("doc_id").as("_key"), col("text")))
+    c
+  }
+
   test("incremental append: build(old) + append(new) == inline over full corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kwincr").toString + "/idx"
     val docs = Tables.documents(spark, sf0001)
     val terms = Seq("vector", "hash", "join")
-    Keyword.buildIndex(docs.filter(col("doc_id") < 400), dir, nBuckets = 16)
-    Keyword.appendToIndex(docs.filter(col("doc_id") >= 400), dir)
-    val incr = Keyword.searchIndex(spark, dir, terms, k = 10)
+    val c = keyedCollection("kwincr", docs.filter(col("doc_id") < 400))
+    c.buildKeywordIndex("text", nBuckets = 16)
+    c.upsert(docs.filter(col("doc_id") >= 400).select(col("doc_id").as("_key"), col("text")))
+    assert(c.refreshKeywordIndex("text") > 0L)
+    def incr = Keyword.searchIndex(spark, c.keywordIndexDir("text"), terms, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val full = Keyword.bm25TopK(docs, terms, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(incr == full, "appended index must score exactly like a fresh full build")
-    // empty batch is a no-op for stats and results
-    Keyword.appendToIndex(docs.filter(col("doc_id") < 0), dir)
-    val after = Keyword.searchIndex(spark, dir, terms, k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(after == full)
+    // nothing above the watermark: a no-op for stats and results
+    assert(c.refreshKeywordIndex("text") == 0L)
+    assert(incr == full)
   }
 
   test("append crash windows: every kill point heals to the fresh-rebuild scores") {
     // the round-6 weak spot: postings landing before doclen let the
-    // refresh watermark re-append the same batch (doubled tf). The
-    // staged commit protocol must make every crash point heal.
+    // refresh watermark re-append the same batch (doubled tf). A keyword
+    // write commits through the collection's one journal; every crash
+    // point must heal — before the commit by the next writer discarding
+    // the stage, after it by the next read or write rolling forward.
+    import org.apache.hadoop.fs.Path
     val docs = Tables.documents(spark, sf0001)
     val terms = Seq("vector", "hash", "join")
-    val oldB = docs.filter(col("doc_id") < 400)
-    val newB = docs.filter(col("doc_id") >= 400)
+    val newB = docs.filter(col("doc_id") >= 400).select(col("doc_id").as("_key"), col("text"))
     val full = Keyword.bm25TopK(docs, terms, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    def scores(dir: String) = Keyword.searchIndex(spark, dir, terms, k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    def rerunAppendThenScore(dir: String): Seq[(Long, Double)] = {
-      // what refreshKeywordIndex does: heal, then re-append anything the
-      // doclen watermark has not seen
-      Keyword.recoverAppend(spark, dir)
-      val seen = spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen")
-        .agg(max(col("key"))).head().getLong(0)
-      val pending = docs.filter(col("doc_id") > seen)
-      if (pending.take(1).nonEmpty) Keyword.appendToIndex(pending, dir)
-      scores(dir)
+    val rebuilt = keyedCollection("kwcrash0", docs)
+    rebuilt.buildKeywordIndex("text", nBuckets = 16)
+    val rebuiltStats = Keyword.stats(spark, rebuilt.keywordIndexDir("text"))
+    def scores(c: graft.core.Collection) = c.searchKeyword("text", terms.mkString(" "), 10)
+      .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    // the old batch indexed, the new one in the data and staged under
+    // `<kw>_staging` exactly as a refresh stages it, nothing committed
+    def crashed(name: String) = {
+      val c = keyedCollection(name, docs.filter(col("doc_id") < 400))
+      c.buildKeywordIndex("text", nBuckets = 16)
+      c.upsert(newB)
+      val kw = c.keywordIndexDir("text")
+      Keyword.appendToIndex(newB, kw + "_staging", Keyword.stats(spark, kw),
+        idCol = "_key", textCol = "text")
+      (c, kw)
     }
-    // move every staged parquet leaf of ONE table into the live dir —
-    // the partial-commit shape the old direct appends could leave
-    def movePartial(dir: String, table: String): Unit = {
-      def walk(src: java.io.File, dst: java.io.File): Unit = {
-        dst.mkdirs()
-        src.listFiles().foreach { f =>
-          if (f.isDirectory) walk(f, new java.io.File(dst, f.getName))
-          else if (f.getName.endsWith(".parquet"))
-            assert(f.renameTo(new java.io.File(dst, f.getName)))
-        }
+    val fs = new Path(sf0001).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the commit point: the journal names the staged leaves relative to
+    // the stage, postings first, then doclen, then stats
+    def commit(kw: String): Seq[String] = {
+      val stage = fs.makeQualified(new Path(kw + "_staging")).toString + "/"
+      val it = fs.listFiles(new Path(stage), true)
+      val leaves = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+        .filter(_.endsWith(".parquet")).map(_.stripPrefix(stage)).toSeq
+        .sortBy(n => Seq("postings", "doclen", "stats").indexOf(n.takeWhile(_ != '/')))
+      val out = fs.create(new Path(kw + "_swapjournal"))
+      try out.write(leaves.map("S " + _).mkString("\n").getBytes("UTF-8")) finally out.close()
+      leaves
+    }
+    // die mid-move: the leaves of `tables` already moved in
+    def moved(kw: String, leaves: Seq[String], tables: String*): Unit =
+      leaves.filter(n => tables.contains(n.takeWhile(_ != '/'))).foreach { n =>
+        val dst = new Path(kw, n)
+        fs.mkdirs(dst.getParent)
+        assert(fs.rename(new Path(kw + "_staging", n), dst))
       }
-      walk(new java.io.File(s"$dir/${table}_staging"), new java.io.File(s"$dir/$table"))
+    def healed(c: graft.core.Collection, kw: String, point: String): Unit = {
+      assert(scores(c) == full, s"$point: read after the crash")
+      assert(c.refreshKeywordIndex("text") == 0L, s"$point: the batch must not re-append")
+      assert(scores(c) == full, s"$point: scores after the next write")
+      assert(Keyword.stats(spark, kw) == rebuiltStats, s"$point: stats")
+      assert(!fs.exists(new Path(kw + "_staging")) && !fs.exists(new Path(kw + "_swapjournal")))
     }
 
-    // kill point 1: staged but NOT committed (no journal) -> batch discarded,
-    // watermark unchanged, re-run appends it once
-    val d1 = java.nio.file.Files.createTempDirectory("graft_kwcrash1").toString + "/idx"
-    Keyword.buildIndex(oldB, d1, nBuckets = 16)
-    val st1 = Keyword.stageAppend(newB, d1, "doc_id", "text")
-    new java.io.File(s"$d1/_appendjournal").delete()  // die before the commit point
-    assert(rerunAppendThenScore(d1) == full, st1.toString)
+    // kill point 1: staged but NOT committed (no journal) -> invisible to
+    // reads, discarded by the next writer, whose refresh appends it once
+    val (c1, kw1) = crashed("kwcrash1")
+    assert(Keyword.stats(spark, kw1).nDocs < rebuiltStats.nDocs,
+      "an uncommitted stage must not be read")
+    assert(fs.exists(new Path(kw1 + "_staging")), "a read must not discard a stage")
+    assert(c1.refreshKeywordIndex("text") > 0L)
+    assert(scores(c1) == full)
+    assert(c1.refreshKeywordIndex("text") == 0L)
+    assert(Keyword.stats(spark, kw1) == rebuiltStats)
 
-    // kill point 2: committed, postings moved, doclen NOT moved — the
-    // exact double-count window of the direct-append design
-    val d2 = java.nio.file.Files.createTempDirectory("graft_kwcrash2").toString + "/idx"
-    Keyword.buildIndex(oldB, d2, nBuckets = 16)
-    Keyword.stageAppend(newB, d2, "doc_id", "text")
-    movePartial(d2, "postings")  // die mid-move, journal still present
-    assert(rerunAppendThenScore(d2) == full,
-      "postings-before-doclen crash must heal, not double-count")
+    // kill point 2: committed, nothing moved yet
+    val (c2, kw2) = crashed("kwcrash2")
+    commit(kw2)
+    healed(c2, kw2, "committed, nothing moved")
 
-    // kill point 3: committed, nothing moved yet
-    val d3 = java.nio.file.Files.createTempDirectory("graft_kwcrash3").toString + "/idx"
-    Keyword.buildIndex(oldB, d3, nBuckets = 16)
-    Keyword.stageAppend(newB, d3, "doc_id", "text")
-    assert(rerunAppendThenScore(d3) == full)
+    // kill point 3: committed, postings moved, doclen and stats NOT moved
+    // — the exact double-count window of the direct-append design
+    val (c3, kw3) = crashed("kwcrash3")
+    moved(kw3, commit(kw3), "postings")
+    healed(c3, kw3, "postings moved")
 
-    // kill point 4: everything moved, stats stale, journal present
-    val d4 = java.nio.file.Files.createTempDirectory("graft_kwcrash4").toString + "/idx"
-    Keyword.buildIndex(oldB, d4, nBuckets = 16)
-    Keyword.stageAppend(newB, d4, "doc_id", "text")
-    movePartial(d4, "postings")
-    movePartial(d4, "doclen")
-    assert(rerunAppendThenScore(d4) == full)
-    // and the healed index keeps working: one more real append
-    Keyword.appendToIndex(docs.filter(col("doc_id") < 0), d4)
-    assert(scores(d4) == full)
+    // kill point 4: everything moved, journal still present
+    val (c4, kw4) = crashed("kwcrash4")
+    moved(kw4, commit(kw4), "postings", "doclen", "stats")
+    healed(c4, kw4, "all moved")
   }
 
   test("analyzer hook: stopword and wordpiece tokenization, persisted across the lifecycle") {
@@ -219,9 +240,11 @@ class KeywordSpec extends SparkSpec {
     // --- stopworded ---
     val sw = Set("the", "a", "over", "and")
     val az = Analyzer.Stopworded(sw)
-    val d1 = java.nio.file.Files.createTempDirectory("graft_kwstop").toString + "/idx"
-    Keyword.buildIndex(docs.filter(col("doc_id") < 4), d1, nBuckets = 8, analyzer = az)
-    Keyword.appendToIndex(docs.filter(col("doc_id") === 4), d1) // analyzer from stats
+    val c1 = keyedCollection("kwstop", docs.filter(col("doc_id") < 4))
+    c1.buildKeywordIndex("text", nBuckets = 8, analyzer = az)
+    c1.upsert(docs.filter(col("doc_id") === 4).select(col("doc_id").as("_key"), col("text")))
+    assert(c1.refreshKeywordIndex("text") == 1L) // analyzer from stats
+    val d1 = c1.keywordIndexDir("text")
     val strippedDocs = raw.map { case (k, t) =>
       (k, t.toLowerCase.split("\\s+").filterNot(sw).mkString(" "))
     }.toDF("doc_id", "text")
@@ -288,8 +311,7 @@ class KeywordSpec extends SparkSpec {
       q.processAllAvailable() // watermark append of exactly the new rows
       assert(indexed(Seq("spark")) == inlineTwin(Seq("spark")))
       assert(indexed(Seq("files")) == inlineTwin(Seq("files")))
-      assert(spark.read.parquet(s"${c.keywordIndexDir("text")}/stats")
-        .head().getAs[Long]("n_docs") == 5L)
+      assert(Keyword.stats(spark, c.keywordIndexDir("text")).nDocs == 5L)
     } finally q.stop()
     // checkpoint loss: every file re-delivered; the watermark filter must
     // drop them all — scores and stats unchanged (no doubled tf)
@@ -298,8 +320,7 @@ class KeywordSpec extends SparkSpec {
       q2.processAllAvailable()
       assert(indexed(Seq("spark")) == inlineTwin(Seq("spark")),
         "full replay must not double-count postings")
-      assert(spark.read.parquet(s"${c.keywordIndexDir("text")}/stats")
-        .head().getAs[Long]("n_docs") == 5L)
+      assert(Keyword.stats(spark, c.keywordIndexDir("text")).nDocs == 5L)
     } finally q2.stop()
     // and the collection search surface serves the streamed index
     assert(c.searchKeyword("text", "streaming", 3).head().getLong(1) == 4L)
@@ -407,6 +428,54 @@ class KeywordSpec extends SparkSpec {
     assert(rawAfter < rawBefore, s"compaction must drop tombstones: $rawBefore -> $rawAfter")
     for (q <- Seq("banana", "apple pie", "road"))
       assert(indexedPage(q) == inlinePage(q), s"query '$q' diverged after compaction")
+  }
+
+  test("stats log stays exact through refresh, repair and delete; compaction folds it") {
+    val c = new graft.core.Catalog(spark,
+        java.nio.file.Files.createTempDirectory("graft_kwstats").toString)
+      .create(graft.core.CollectionConfig(name = "docs"))
+    c.importDf(Seq("apple banana fruit", "car truck road", "apple pie baking", "")
+      .toDF("text"))
+    c.buildKeywordIndex("text", nBuckets = 8)
+    val kw = c.keywordIndexDir("text")
+    // (n_docs, sum_dl) recomputed from the live rows of the doclen log
+    def recomputed: (Long, Long) = {
+      val r = spark.read.parquet(s"$kw/doclen")
+        .groupBy("key").agg(sum("dl").as("dl"), sum(coalesce(col("cnt"), lit(1))).as("cnt"))
+        .filter(col("cnt") > 0)
+        .agg(count(when(col("dl") > 0, 1)), coalesce(sum("dl"), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    def check(step: String): Unit = {
+      val st = Keyword.stats(spark, kw)
+      assert((st.nDocs, st.sumDl) == recomputed, s"$step: summed stats rows")
+      for (q <- Seq("apple", "banana road", "pie smoothie trip")) {
+        val page = c.searchKeyword("text", q, 10)
+          .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+        val inline = Keyword.bm25TopK(c.df, Keyword.queryTerms(q), 10,
+            idCol = "_key", textCol = "text")
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(page == inline, s"$step: query '$q'")
+      }
+    }
+    check("build")
+    c.appendDf(Seq("banana split", "road apple road").toDF("text"))
+    assert(c.refreshKeywordIndex("text") == 2L)
+    check("refresh")
+    // a rewrite, a rewrite to token-less text, and an unseen key
+    c.upsert(Seq((2L, "banana smoothie blend"), (3L, ""), (9L, "road trip banana"))
+      .toDF("_key", "text"))
+    assert(c.repairKeywordIndex("text") == 3L)
+    check("repair")
+    assert(c.deleteKeys(Seq(1L, 5L)) == 2L)
+    check("delete")
+    c.appendDf(Seq("pie pie apple").toDF("text"))
+    assert(c.refreshKeywordIndex("text") == 1L)
+    check("refresh after delete")
+    assert(spark.read.parquet(s"$kw/stats").count() == 5L, "one row per build or commit")
+    c.compactKeywordIndex("text")
+    assert(spark.read.parquet(s"$kw/stats").count() == 1L, "compaction folds the log")
+    check("compact")
   }
 
   test("percolate: saved queries match a doc batch (AND + any-term modes, blank-safe)") {

@@ -120,6 +120,22 @@ class MaintenanceSpec extends SparkSpec {
     assert(c.searchKeyword("text", "round", 5).count() > 0)
   }
 
+  test("a long keyword stats log plans a keyword fold") {
+    val c = new Catalog(spark, tmpRoot()).create(CollectionConfig(name = "m5"))
+    c.importDf(Seq("seed doc").toDF("text"))
+    c.buildKeywordIndex("text")
+    // every refresh commits one stats row file
+    (1 to 16).foreach { i =>
+      c.appendDf(Seq(s"appended doc $i").toDF("text"))
+      assert(c.refreshKeywordIndex("text") == 1L)
+    }
+    assert(plan(c).exists(r => r._3 == "keyword" && r._4 == "compactKeywordIndex"),
+      s"a 17-file stats log must plan a keyword fold, got ${plan(c).mkString(", ")}")
+    c.compactKeywordIndex("text")
+    assert(!plan(c).exists(_._4 == "compactKeywordIndex"))
+    assert(spark.read.parquet(s"${c.keywordIndexDir("text")}/stats").count() == 1L)
+  }
+
   test("sidecar file pressure: dedup bands/fps and ann fps fold and clear their plan rows") {
     val cat = new Catalog(spark, tmpRoot())
     val c = cat.create(CollectionConfig(name = "m4"))

@@ -124,7 +124,8 @@ class ServeLayoutSpec extends SparkSpec {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), legacy.schema)
       .write.mode("overwrite").parquet(stats)
     assert(!spark.read.parquet(stats).columns.contains("analyzer"))
-    assert(Keyword.storedMeta(spark, c.keywordIndexDir("text")) == ((16, "ws")))
+    val st = Keyword.stats(spark, c.keywordIndexDir("text"))
+    assert((st.nBuckets, st.analyzer) == ((16, "ws")))
     assert(c.searchKeyword("text", "apple harbor", 10).collect().toSeq == before)
   }
 
