@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StringType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets
 
@@ -58,6 +58,25 @@ class Collection private[core] (
   /** A family sub-table's path; `""` is the family directory itself. */
   private def table(f: IndexFamily, column: String, sub: String): String =
     if (sub.isEmpty) familyDir(f, column) else s"${familyDir(f, column)}/$sub"
+
+  /** The one read of a family sub-table: given paths (the table's
+    * directory or some of its files), the rows in the table's declared
+    * schema ([[IndexFamily.read]]). The vector index declares both vector
+    * columns and stores the one of this collection's [[VectorLayout]].
+    */
+  private def reader(f: IndexFamily, sub: String): Seq[String] => DataFrame =
+    paths => f.read(spark, sub, paths, if (f == VectorIndex) vectorLayout.columns else Nil)
+
+  private def read(f: IndexFamily, column: String, sub: String): DataFrame =
+    reader(f, sub)(Seq(table(f, column, sub)))
+
+  /** A small family table (params, centroids, codebooks, keyword stats,
+    * classifier weights) read whole through the serving cache, else
+    * through Spark, in its declared schema.
+    */
+  private def smallTable(f: IndexFamily, column: String, sub: String): Seq[Row] =
+    ServingCache.table(hadoopConf, table(f, column, sub), f.schema(sub))
+      .getOrElse(read(f, column, sub).collect().toSeq)
 
   private def fs: FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -308,14 +327,12 @@ class Collection private[core] (
     * designed metadata plane); the task data plane then reads only the
     * files a scoped key actually lives in.
     */
-  private def scopedRead(target: String, keys: DataFrame): DataFrame = {
+  private def scopedRead(target: String, keys: DataFrame,
+                         read: Seq[String] => DataFrame): DataFrame = {
     val k = keys.select(col(keys.columns.head).cast(LongType).as(KeyCol))
     val touched = touchedFiles(target, k)
-    if (touched.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(target).limit(0)
-    else spark.read.option("mergeSchema", "true")
-      .parquet(touched.map(_.path.toString): _*)
-      .join(broadcast(k), Seq(KeyCol), "left_semi")
+    if (touched.isEmpty) read(Seq(target)).limit(0)
+    else read(touched.map(_.path.toString)).join(broadcast(k), Seq(KeyCol), "left_semi")
   }
 
   /** Row count. The reference's `SELECT COUNT('{col}')` counts a string
@@ -514,8 +531,7 @@ class Collection private[core] (
       val p = new Path(table(f, column, t))
       Option.when(fs.exists(p) &&
           fs.listStatus(p).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))(
-        spark.read.schema(StructType(Seq(StructField(keyCol, LongType))))
-          .parquet(p.toString).select(col(keyCol).as(KeyCol)))
+        read(f, column, t).select(col(keyCol).as(KeyCol)))
     }
 
   /** The family's highest held key: its refresh and stream watermark. */
@@ -589,7 +605,7 @@ class Collection private[core] (
     * their rows replaced by `fresh(changed)`; `changed` keeps `current`'s
     * other columns (what `fresh` needs, e.g. the text to re-embed). Only
     * the files `touched` plans (default: footer key ranges) are
-    * rewritten, read in their declared `layout` when given, through the
+    * rewritten, read by `read` in their declared layout, through the
     * journaled file swap; `sidecar(changed, freshRows)` then records the
     * new fingerprints LAST, so a crash re-repairs conservatively and the
     * re-run is idempotent. Returns the number of changed keys.
@@ -599,9 +615,9 @@ class Collection private[core] (
     */
   private def repairByFingerprint(
       target: String, current: DataFrame, stored: DataFrame,
+      read: Seq[String] => DataFrame,
       touched: Option[DataFrame => Seq[FileKeyRange]] = None,
-      cluster: (DataFrame, Int) => DataFrame = keyClustered,
-      layout: Option[StructType] = None)(
+      cluster: (DataFrame, Int) => DataFrame = keyClustered)(
       fresh: DataFrame => DataFrame)(sidecar: (DataFrame, DataFrame) => Unit): Long = {
     val carried = current.columns.filter(_ != "fp").map(col)
     val changed = current.withColumnRenamed("fp", "__fp")
@@ -614,8 +630,7 @@ class Collection private[core] (
       val files = touched.fold(touchedFiles(target, changed))(_(changed))
       val next =
         if (files.isEmpty) rows
-        else layout.fold(spark.read)(l => spark.read.schema(l))
-          .parquet(files.map(_.path.toString): _*)
+        else read(files.map(_.path.toString))
           .join(changed, Seq(KeyCol), "left_anti")
           .unionByName(rows)
       replaceFiles(target, files.map(_.path.getName)) { tmp =>
@@ -745,21 +760,18 @@ class Collection private[core] (
 
   private val vectorLayout = VectorLayout(config.model_variant)
 
-  /** The index table as stored (including the `fp` fingerprint column when
-    * present), or None when absent/empty. "Exists but holds no data files"
-    * counts as empty too: a directory left behind with no parquet footers
-    * would make a bare read die with UNABLE_TO_INFER_SCHEMA instead of
-    * reporting an empty index. The read declares the stored layout
-    * ([[VectorLayout.schema]]) instead of inferring it, which would cost a
-    * footer job per call; pre-fingerprint index files read `fp` as
-    * null, as a schema merge would.
+  /** The index table as stored (including the `fp` fingerprint column),
+    * or None when absent/empty. "Exists but holds no data files" counts
+    * as empty too (a directory left behind by an aborted first append).
+    * The read declares the stored layout ([[VectorLayout.schema]]);
+    * pre-fingerprint index files read `fp` as null.
     */
   private def indexRaw(column: String): Option[DataFrame] = {
     healTable(indexDir(column))
     val idx = new Path(indexDir(column))
     val hasData = fs.exists(idx) &&
       fs.listStatus(idx).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    Option.when(hasData)(spark.read.schema(vectorLayout.schema).parquet(indexDir(column)))
+    Option.when(hasData)(read(VectorIndex, column, ""))
   }
 
   /** Number of indexed vectors for `column` (A2: the reference asks the
@@ -789,7 +801,8 @@ class Collection private[core] (
   /** `(key, text)` rows embedded into the stored layout: each row carries
     * the md5 fingerprint of the text it embeds (what [[reembedChanged]]
     * compares against md5 of the current text), chunked when `chunk`
-    * holds `(maxTokens, overlapTokens)`, quantized per `model_variant`.
+    * holds the index's geometry ([[chunking]]), quantized per
+    * `model_variant`.
     */
   private def embedRows(rows: Dataset[(Long, String)], embedder: graft.embed.Embedder,
                         batchSize: Int, chunk: Option[(Int, Int)]): DataFrame =
@@ -875,7 +888,7 @@ class Collection private[core] (
     */
   def embedColumn(column: String, embedder: graft.embed.Embedder,
                   batchSize: Int = 32): Long =
-    embedAbove(column, embedder, batchSize, chunk = None)
+    embedAbove(column, embedder, batchSize)
 
   /** Chunk-granularity twin of [[embedColumn]]: every document above the
     * watermark is markdown-chunked and each chunk embeds as its OWN
@@ -884,33 +897,85 @@ class Collection private[core] (
     * needs no special mode: [[graft.search.Search.topK]] scores a key by
     * its best vector and fills at most one result slot per key, so a
     * long document surfaces by its best-matching chunk without crowding
-    * out the result page. Fingerprints stay per-document (md5 of full
-    * text), so [[reembedChanged]] repairs chunked indexes too — pass the
-    * same `chunkTokens` there to re-chunk on repair. Returns the number
-    * of VECTORS appended (>= documents embedded); [[indexedCount]]
-    * counts vectors, matching the reference's index-size semantics.
+    * out the result page. Returns the number of VECTORS appended (>=
+    * documents embedded); [[indexedCount]] counts vectors, matching the
+    * reference's index-size semantics.
+    *
+    * The geometry `(maxTokens, overlapTokens)` is recorded for the
+    * column first, even when no row is pending, so every later pass over
+    * the index — [[embedColumn]], [[embedColumnStream]],
+    * [[reembedChanged]] and the registry repair, on any instance of the
+    * collection — chunks the same way; fingerprints stay per-document
+    * (md5 of full text). Raises when the column already records another
+    * geometry. An index built before geometry was recorded carries none
+    * and reads as unchunked until this call records one.
     */
   def embedColumnChunked(column: String, embedder: graft.embed.Embedder,
                          maxTokens: Int = 512, overlapTokens: Int = 50,
                          batchSize: Int = 32): Long =
-    embedAbove(column, embedder, batchSize, Some((maxTokens, overlapTokens)))
+    maintained(VectorIndex, column) { _ =>
+      val geometry = (maxTokens, overlapTokens)
+      require(maxTokens > 0 && overlapTokens >= 0, s"invalid chunk geometry $geometry")
+      chunking(column) match {
+        case Some(stored) => require(stored == geometry,
+          s"'$column' is chunked at (maxTokens, overlapTokens) = $stored, not $geometry")
+        case None => recordChunking(column, geometry)
+      }
+      embedAbove(column, embedder, batchSize)
+    }
 
-  /** [[embedColumn]]'s body: embed every row above the watermark and
-    * append it, under the write lease (a concurrent compactIndex or
-    * repair rewrite must not interleave, and two passes racing the same
-    * watermark would double-embed). A limit-1 probe keeps a no-op call
-    * from appending an empty file; the batch itself is never cached or
-    * counted up front — at scale that cache is pure memory pressure — so
-    * the returned count comes from the footer-cheap before/after counts.
+  /** Where `column`'s chunk geometry is recorded: a file beside (not in)
+    * the index directory, which compaction swaps and the serving cache
+    * lists; a column name cannot contain the '.'.
+    */
+  private def chunkingPath(column: String): Path = new Path(s"${indexDir(column)}.chunking")
+
+  /** The `(maxTokens, overlapTokens)` recorded for `column`'s index, None
+    * when unchunked. Read from disk on every call: another instance may
+    * have recorded it after this one was loaded.
+    */
+  private def chunking(column: String): Option[(Int, Int)] = {
+    val p = chunkingPath(column)
+    Option.when(fs.exists(p)) {
+      val in = fs.open(p)
+      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
+      val j = org.json4s.jackson.JsonMethods.parse(json)
+      ((j \ "max_tokens").extract[Int], (j \ "overlap_tokens").extract[Int])
+    }
+  }
+
+  /** Record `column`'s geometry: written aside, then renamed into place
+    * under the fenced lease. Caller holds [[writeLock]].
+    */
+  private def recordChunking(column: String, geometry: (Int, Int)): Unit = {
+    val tmp = new Path(s"$dir/${config.index_dir}/_$column.chunking")
+    val out = fs.create(tmp, true)
+    try out.write(s"""{"max_tokens":${geometry._1},"overlap_tokens":${geometry._2}}"""
+      .getBytes(StandardCharsets.UTF_8)) finally out.close()
+    writeLock.checkHeld()
+    if (!fs.rename(tmp, chunkingPath(column)))
+      throw new java.io.IOException(s"could not record the chunk geometry of '$column'")
+  }
+
+  /** [[embedColumn]]'s body: embed every row above the watermark at the
+    * recorded geometry and append it, under the write lease (a concurrent
+    * compactIndex or repair rewrite must not interleave, and two passes
+    * racing the same watermark would double-embed). A limit-1 probe keeps
+    * a no-op call from appending an empty file (an empty collection
+    * embeds nothing); the batch itself is never cached or counted up
+    * front — at scale that cache is pure memory pressure — so the
+    * returned count comes from the footer-cheap before/after counts.
     */
   private def embedAbove(column: String, embedder: graft.embed.Embedder,
-                         batchSize: Int, chunk: Option[(Int, Int)]): Long =
+                         batchSize: Int): Long =
     maintained(VectorIndex, column) { _ =>
       val before = indexedCount(column)
-      val pending = texts(df.filter(col(KeyCol) > heldWatermark(VectorIndex, column)), column)
-      if (pending.isEmpty) 0L
+      lazy val pending =
+        texts(df.filter(col(KeyCol) > heldWatermark(VectorIndex, column)), column)
+      if (isEmpty || pending.isEmpty) 0L
       else {
-        appendVectors(column, embedRows(pending, embedder, batchSize, chunk))
+        appendVectors(column, embedRows(pending, embedder, batchSize, chunking(column)))
         indexedCount(column) - before
       }
     }
@@ -928,14 +993,12 @@ class Collection private[core] (
     * move) and the index's per-key fingerprints; only the changed rows
     * are embedded, and only index files whose footer key range holds a
     * changed key are rewritten. Rows indexed before the fingerprint
-    * column existed read `fp` as null and conservatively re-embed. Pass
-    * the indexing-time `chunkTokens` so a chunked index repairs back to
-    * chunk granularity. Returns the number of rows re-embedded.
+    * column existed read `fp` as null and conservatively re-embed. A
+    * chunked index re-embeds at its recorded geometry
+    * ([[embedColumnChunked]]). Returns the number of rows re-embedded.
     */
   def reembedChanged(column: String, embedder: graft.embed.Embedder,
                      batchSize: Int = 32,
-                     chunkTokens: Option[Int] = None,
-                     overlapTokens: Int = 50,
                      scope: Option[DataFrame] = None): Long =
     maintained(VectorIndex, column) { target =>
       indexRaw(column).fold(0L) { raw =>
@@ -949,10 +1012,8 @@ class Collection private[core] (
         val text = coalesce(col(column).cast(StringType), lit(""))
         val current = sc(df.filter(col(KeyCol) <= watermarkOf(raw)))
           .select(col(KeyCol), md5(text).as("fp"), text.as("__txt"))
-        repairByFingerprint(target, current, vectorFps(sc(raw)),
-            layout = Some(vectorLayout.schema)) { changed =>
-          embedRows(texts(changed, "__txt"), embedder, batchSize,
-            chunkTokens.map((_, overlapTokens)))
+        repairByFingerprint(target, current, vectorFps(sc(raw)), reader(VectorIndex, "")) {
+          changed => embedRows(texts(changed, "__txt"), embedder, batchSize, chunking(column))
         } { (_, _) => () }
       }
     }
@@ -994,21 +1055,18 @@ class Collection private[core] (
     * only its keys the index does not hold, by an anti-join pruned to
     * the batch's key range; steady-state batches sit wholly above the
     * watermark and never scan the index. Bootstraps with an
-    * [[embedColumn]] pass when the index is absent. `chunkTokens =
-    * Some(n)` embeds at CHUNK granularity ([[embedColumnChunked]]'s
-    * layout), so a stream-fed index matches a batch-chunked one.
+    * [[embedColumn]] pass when the index is absent. Every batch embeds at
+    * the index's recorded chunk geometry ([[embedColumnChunked]]), so a
+    * stream-fed chunked index matches a batch-chunked one.
     */
   def embedColumnStream(column: String, embedder: graft.embed.Embedder,
-                        checkpointDir: String, batchSize: Int = 32,
-                        chunkTokens: Option[Int] = None,
-                        overlapTokens: Int = 50): StreamingQuery = {
-    val chunk = chunkTokens.map((_, overlapTokens))
+                        checkpointDir: String, batchSize: Int = 32): StreamingQuery =
     watermarkStream(VectorIndex, column, checkpointDir) {
-      embedAbove(column, embedder, batchSize, chunk)
+      embedAbove(column, embedder, batchSize)
     } { pending =>
-      appendVectors(column, embedRows(texts(pending, column), embedder, batchSize, chunk))
+      appendVectors(column,
+        embedRows(texts(pending, column), embedder, batchSize, chunking(column)))
     }
-  }
 
   /** Full search (K4): embed the query, exact top-k over the column's index,
     * hydrate content by `_key` (K1+K3, [[fetchHits]]). Returns
@@ -1155,7 +1213,7 @@ class Collection private[core] (
       .map { case (v, i) => (i.toLong, v) }.toDF("__qid", "__qvec")
     val emb0 = embeddings(column)
     val emb =
-      if (nProbe > 0 && hasAnnIndex(column)) {
+      if (nProbe > 0 && built(AnnIndex, column)) {
         healTable(annListsDir(column))
         val centers = readAnnCenters(column)
         val probes = qVecs
@@ -1197,8 +1255,9 @@ class Collection private[core] (
 
   /** Build (or REBUILD, staged and swapped like [[compact]]) the keyword
     * index — a rebuild dying mid-way must never leave stale `stats` over
-    * half-written `postings` for [[hasKeywordIndex]] (which keys on
-    * `stats`) to serve.
+    * half-written `postings` for a search (the family's marker is
+    * `stats`) to serve. The bucket count and analyzer are recorded in the
+    * stats log; every later write and search reads them from there.
     */
   def buildKeywordIndex(column: String, nBuckets: Int = 64,
                         analyzer: graft.search.Analyzer =
@@ -1252,12 +1311,13 @@ class Collection private[core] (
     * stats advance by exact integer deltas. Builds the index outright
     * when absent. Returns the number of token-bearing documents folded
     * in (token-less rows can never match a term and stay out of the
-    * norms on both the operator and oracle side).
+    * norms on both the operator and oracle side). The build uses the
+    * default bucket count and analyzer; build first for others.
     */
-  def refreshKeywordIndex(column: String, nBuckets: Int = 64): Long =
+  def refreshKeywordIndex(column: String): Long =
     maintained(KeywordIndex, column) { _ =>
-      if (!hasKeywordIndex(column)) {
-        buildKeywordIndex(column, nBuckets)
+      if (!built(KeywordIndex, column)) {
+        buildKeywordIndex(column)
         keywordStats(column).fold(0L)(_.nDocs)
       } else {
         val pending = df.filter(col(KeyCol) > heldWatermark(KeywordIndex, column))
@@ -1276,7 +1336,7 @@ class Collection private[core] (
     */
   def repairKeywordIndex(column: String, scope: Option[DataFrame] = None): Long =
     maintained(KeywordIndex, column) { target =>
-      if (!hasKeywordIndex(column)) 0L
+      if (!built(KeywordIndex, column)) 0L
       // a scoped repair prunes the text read + fp compare to the batch's
       // keys; the tombstone generation inside is already key-range-pruned
       else keywordCommit(column)((stage, st) => graft.search.Keyword.repairIndex(
@@ -1288,15 +1348,12 @@ class Collection private[core] (
     * fold newly appended rows into the keyword index continuously — the
     * sparse-side companion of [[embedColumnStream]]. Each micro-batch's
     * keys the index does not hold commit as one keyword write. Bootstraps
-    * by building the index (with `nBuckets` and `analyzer`) when absent;
-    * an existing index keeps its stored bucket count and analyzer.
+    * by building the index with the defaults when absent (build first for
+    * another bucket count or analyzer); an index keeps its stored ones.
     */
-  def keywordIndexStream(column: String, checkpointDir: String,
-                         nBuckets: Int = 64,
-                         analyzer: graft.search.Analyzer =
-                           graft.search.Analyzer.Whitespace): StreamingQuery =
+  def keywordIndexStream(column: String, checkpointDir: String): StreamingQuery =
     watermarkStream(KeywordIndex, column, checkpointDir) {
-      buildKeywordIndex(column, nBuckets, analyzer)
+      buildKeywordIndex(column)
     } { pending => appendKeyword(column, pending) }
 
   /** Fold the keyword index's delta logs: rewrite postings/doclen as
@@ -1307,22 +1364,17 @@ class Collection private[core] (
     */
   def compactKeywordIndex(column: String): Unit =
     maintained(KeywordIndex, column) { target =>
-      if (hasKeywordIndex(column))
+      if (built(KeywordIndex, column))
         swapIn(target)(tmp => graft.search.Keyword.compactIndexTo(spark, target, tmp))
     }
-
-  /** Whether the keyword index is built; a read rolls a committed keyword
-    * write forward first.
-    */
-  private def hasKeywordIndex(column: String): Boolean = built(KeywordIndex, column)
 
   /** The built index's summed stats log ([[graft.search.Keyword.Stats]]:
     * corpus stats, bucket count, analyzer), read through the serving
     * cache; None when unbuilt.
     */
   private def keywordStats(column: String): Option[graft.search.Keyword.Stats] =
-    Option.when(hasKeywordIndex(column))(graft.search.Keyword.sumStats(
-      smallTable(s"${keywordIndexDir(column)}/stats", graft.search.Keyword.StatsSchema)))
+    Option.when(built(KeywordIndex, column))(graft.search.Keyword.sumStats(
+      smallTable(KeywordIndex, column, "stats")))
 
   /** BM25 page over `column`, content-fetched like [[search]]. Uses the
     * pruned persistent index when built, else falls back to a one-shot
@@ -1331,31 +1383,34 @@ class Collection private[core] (
     * conjunctive (AND) semantics: only documents matching every query
     * term are returned.
     */
+  import Collection.KeywordQuery
+
   def searchKeyword(column: String, query: String, limit: Int,
                     requireAll: Boolean = false,
                     after: Option[(Double, Long)] = None): DataFrame = {
     graft.search.Search.validateLimit(limit)
-    // query tokenization must mirror the INDEX's analyzer (stored in its
-    // stats); the inline fallback has no stored analyzer and stays on
-    // the whitespace default
-    require(query.trim.nonEmpty, "keyword search requires a non-empty query")
-    // the search-box NOT operator: a '-'-prefixed word excludes
-    // documents containing it ("hash join -slow"). Prefixes are parsed
-    // off the RAW words, then both groups go through the index's
-    // analyzer so exclusion matches exactly what the index stores.
-    val words = query.trim.split("\\s+").toSeq
+    fetchHits(keywordQuery(column, query).fold(localHits(Nil))(
+      keywordHits(column, _, limit, requireAll, after)), column)
+  }
+
+  /** Parse `query` ([[Collection.KeywordQuery]]); None when the analyzer leaves no
+    * term (all stopwords, say), which matches nothing. `strict` rejects a
+    * blank query and one whose every word is excluded; hybrid search
+    * serves its dense page alone for those instead.
+    */
+  private def keywordQuery(column: String, query: String,
+                           strict: Boolean = true): Option[KeywordQuery] = {
+    val words = query.trim.split("\\s+").toSeq.filter(_.nonEmpty)
     val (negWords, posWords) = words.partition(w => w.length > 1 && w.startsWith("-"))
-    require(posWords.nonEmpty,
-      "keyword search requires at least one non-excluded query term")
+    if (strict) {
+      require(words.nonEmpty, "keyword search requires a non-empty query")
+      require(posWords.nonEmpty, "keyword search requires at least one non-excluded query term")
+    }
     val st = keywordStats(column)
     val analyzer = keywordAnalyzer(st)
     val terms = analyzer.queryTokens(posWords.mkString(" "))
-    val mustNot = analyzer.queryTokens(negWords.map(_.drop(1)).mkString(" "))
-    // a non-empty query whose every term the index's analyzer filters
-    // away (all stopwords) matches nothing — empty page, not an error
-    // (searchHybrid already degrades the same case to dense-only)
-    if (terms.isEmpty) return fetchHits(localHits(Nil), column)
-    fetchHits(keywordHits(column, st, terms, limit, requireAll, after, mustNot), column)
+    Option.when(terms.nonEmpty)(KeywordQuery(st, terms,
+      analyzer.queryTokens(negWords.map(_.drop(1)).mkString(" "))))
   }
 
   /** The column's live vocabulary `(tok, df)` — off the keyword index's
@@ -1363,7 +1418,7 @@ class Collection private[core] (
     * tokenization pass.
     */
   private def keywordVocab(column: String): DataFrame =
-    if (hasKeywordIndex(column))
+    if (built(KeywordIndex, column))
       graft.search.Fuzzy.vocabFromPostings(
         graft.search.Keyword.livePostings(spark, keywordIndexDir(column)))
     else graft.search.Fuzzy.vocab(df, KeyCol, column)
@@ -1390,40 +1445,31 @@ class Collection private[core] (
                          requireAll: Boolean = false,
                          maxDist: Int = 2): DataFrame = {
     graft.search.Search.validateLimit(limit)
-    require(query.trim.nonEmpty, "keyword search requires a non-empty query")
-    val words = query.trim.split("\\s+").toSeq
-    val (negWords, posWords) = words.partition(w => w.length > 1 && w.startsWith("-"))
-    require(posWords.nonEmpty,
-      "keyword search requires at least one non-excluded query term")
-    val st = keywordStats(column)
-    val analyzer = keywordAnalyzer(st)
-    val terms = analyzer.queryTokens(posWords.mkString(" "))
-    val mustNot = analyzer.queryTokens(negWords.map(_.drop(1)).mkString(" "))
-    if (terms.isEmpty) return fetchHits(localHits(Nil), column)
-    // presence check + every absent term's best correction in ONE job
-    // (the vocabulary is consumed once, so no checkpoint either);
-    // semantics pinned inside resolveTerms
-    val resolved = graft.search.Fuzzy.resolveTerms(
-      keywordVocab(column).select(col("tok")), terms, maxDist)
-    val corrected = terms.flatMap(resolved.get).distinct.filterNot(mustNot.contains)
-    if (corrected.isEmpty) return fetchHits(localHits(Nil), column)
-    fetchHits(keywordHits(column, st, corrected, limit, requireAll,
-      after = None, mustNot = mustNot), column)
+    val page = keywordQuery(column, query).flatMap { q =>
+      // presence check + every absent term's best correction in ONE job
+      // (the vocabulary is consumed once, so no checkpoint either);
+      // semantics pinned inside resolveTerms
+      val resolved = graft.search.Fuzzy.resolveTerms(
+        keywordVocab(column).select(col("tok")), q.terms, maxDist)
+      val corrected = q.terms.flatMap(resolved.get).distinct.filterNot(q.mustNot.contains)
+      Option.when(corrected.nonEmpty)(
+        keywordHits(column, q.copy(terms = corrected), limit, requireAll))
+    }
+    fetchHits(page.getOrElse(localHits(Nil)), column)
   }
 
   /** Hybrid retrieval: RRF fusion of the dense page ([[search]]'s
-    * vector top-k) and the BM25 page, one result slot per document.
-    * A query with no tokens degrades to dense-only.
+    * vector top-k) and the BM25 page, one result slot per document. The
+    * keyword side parses the query as [[searchKeyword]] does, '-term'
+    * exclusions included; a query it leaves no term degrades to
+    * dense-only.
     */
   def searchHybrid(column: String, query: String, limit: Int,
                    embedder: graft.embed.Embedder): DataFrame = {
     graft.search.Search.validateLimit(limit)
     val dense = denseHits(column, embedder.embedOne(query), limit, after = None)
-    val st = keywordStats(column)
-    val terms = keywordAnalyzer(st).queryTokens(query)
-    val pages =
-      if (terms.isEmpty) Seq(dense)
-      else Seq(keywordHits(column, st, terms, limit), dense)
+    val pages = keywordQuery(column, query, strict = false)
+      .fold(Seq(dense))(q => Seq(keywordHits(column, q, limit), dense))
     fetchHits(graft.search.Keyword.rrfFuse(pages, KeyCol, limit), column)
   }
 
@@ -1434,23 +1480,21 @@ class Collection private[core] (
     st.fold(graft.search.Analyzer.Whitespace: graft.search.Analyzer)(s =>
       graft.search.Analyzer.fromId(s.analyzer))
 
-  /** The BM25 `(_key, score)` page: over the index whose stats `st`
-    * were read with the query's analyzer, else one corpus scan.
+  /** The BM25 `(_key, score)` page of `q`: over the index whose stats
+    * it read, else one corpus scan.
     */
-  private def keywordHits(column: String, st: Option[graft.search.Keyword.Stats],
-                          terms: Seq[String], limit: Int,
+  private def keywordHits(column: String, q: KeywordQuery, limit: Int,
                           requireAll: Boolean = false,
-                          after: Option[(Double, Long)] = None,
-                          mustNot: Seq[String] = Nil): DataFrame = {
-    val hits = st match {
+                          after: Option[(Double, Long)] = None): DataFrame = {
+    val hits = q.st match {
       case Some(_) =>
         graft.search.Keyword.searchIndex(spark, keywordIndexDir(column),
-          terms, limit, requireAll = requireAll, after = after,
-          mustNot = mustNot, stats = st)
+          q.terms, limit, requireAll = requireAll, after = after,
+          mustNot = q.mustNot, stats = q.st)
       case None =>
-        graft.search.Keyword.bm25TopK(df, terms, limit, idCol = KeyCol,
+        graft.search.Keyword.bm25TopK(df, q.terms, limit, idCol = KeyCol,
           textCol = column, requireAll = requireAll, after = after,
-          mustNot = mustNot)
+          mustNot = q.mustNot)
     }
     hits.withColumnRenamed("key", KeyCol)
   }
@@ -1512,8 +1556,6 @@ class Collection private[core] (
 
   def dedupIndexDir(column: String): String = familyDir(DedupIndex, column)
 
-  private def hasDedupIndex(column: String): Boolean = built(DedupIndex, column)
-
   private def writeDedupParams(where: String,
                                p: graft.dedup.Dedup.MinHashParams): Unit = {
     import spark.implicits._
@@ -1523,10 +1565,9 @@ class Collection private[core] (
   }
 
   private def readDedupParams(column: String): graft.dedup.Dedup.MinHashParams = {
-    val r = spark.read.parquet(s"${dedupIndexDir(column)}/params").head()
-    graft.dedup.Dedup.MinHashParams(
-      numHashes = r.getAs[Int]("num_hashes"), bands = r.getAs[Int]("bands"),
-      shingleSize = r.getAs[Int]("shingle_size"), seed = r.getAs[Long]("seed"))
+    val r = smallTable(DedupIndex, column, "params").head
+    graft.dedup.Dedup.MinHashParams(numHashes = r.getInt(0), bands = r.getInt(1),
+      shingleSize = r.getInt(2), seed = r.getLong(3))
   }
 
   /** Build (or staged-swap REBUILD, like [[buildKeywordIndex]]) the
@@ -1534,9 +1575,8 @@ class Collection private[core] (
     * range-clustered and key-sorted so [[repairDedupIndex]]'s
     * touched-file planning prunes on footer key ranges; a `fps` table
     * (key, md5-of-text) records what text each key was banded from.
-    * Write order within a build is bands, fps, then `params` last —
-    * [[hasDedupIndex]] keys on `params`, so a half-written fresh build
-    * reads as "no index".
+    * Write order within a build is bands, fps, then `params` last — the
+    * family's marker, so a half-written fresh build reads as "no index".
     */
   def buildDedupIndex(column: String,
                       p: graft.dedup.Dedup.MinHashParams =
@@ -1560,9 +1600,7 @@ class Collection private[core] (
       md5(coalesce(col(column).cast(StringType), lit(""))).as("fp"))
 
   private def emptyFps: DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-    StructType(Seq(StructField(KeyCol, LongType, nullable = false),
-      StructField("fp", StringType, nullable = true))))
+    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], DedupIndex.schema("fps"))
 
   /** Repair the dedup index after [[upsert]] rewrote text under existing
     * keys — [[repairByFingerprint]] over the band table: changed keys
@@ -1574,7 +1612,7 @@ class Collection private[core] (
     */
   def repairDedupIndex(column: String, scope: Option[DataFrame] = None): Long =
     maintained(DedupIndex, column) { target =>
-      if (!hasDedupIndex(column)) 0L
+      if (!built(DedupIndex, column)) 0L
       else {
         // scoped repair prunes the fingerprint compare to the batch's key
         // range (the caller knows what its upsert touched); the default
@@ -1583,14 +1621,16 @@ class Collection private[core] (
         val fps = s"$target/fps"
         val hasFps = fs.exists(new Path(fps))
         repairByFingerprint(s"$target/bands", sc(dedupFps(column)),
-            if (hasFps) sc(spark.read.parquet(fps)) else emptyFps) { changed =>
+            if (hasFps) sc(read(DedupIndex, column, "fps")) else emptyFps,
+            reader(DedupIndex, "bands")) { changed =>
           // key-range-pruned text read — a bare semi-join would scan the
           // whole text column to re-band 10 rows
           graft.dedup.Dedup.minhashBands(
             scopedTo(df, changed).select(col(KeyCol), col(column)),
             column, KeyCol, readDedupParams(column))
         } { (changed, _) =>
-          if (hasFps) upsertByKeyRange(fps, scopedTo(dedupFps(column), changed))
+          if (hasFps) upsertByKeyRange(DedupIndex, column, "fps",
+            scopedTo(dedupFps(column), changed))
           else {
             // legacy index without a sidecar: a PARTIAL fps holding only
             // the batch's keys would flag every OTHER key as unseen forever
@@ -1616,10 +1656,10 @@ class Collection private[core] (
     * absent. Returns the number of documents banded in.
     */
   def refreshDedupIndex(column: String): Long =
-    maintained(DedupIndex, column) { target =>
-      if (!hasDedupIndex(column)) {
+    maintained(DedupIndex, column) { _ =>
+      if (!built(DedupIndex, column)) {
         buildDedupIndex(column)
-        spark.read.parquet(s"$target/bands").select(col(KeyCol)).distinct().count()
+        read(DedupIndex, column, "bands").select(col(KeyCol)).distinct().count()
       } else {
         val pending = df.filter(col(KeyCol) > heldWatermark(DedupIndex, column))
           .select(col(KeyCol), col(column))
@@ -1660,11 +1700,8 @@ class Collection private[core] (
 
   def noveltyStoreDir(column: String): String = familyDir(NoveltyStore, column)
 
-  private def hasNoveltyStore(column: String): Boolean = built(NoveltyStore, column)
-
   private def noveltyN(column: String): Int =
-    spark.read.parquet(s"${noveltyStoreDir(column)}/params")
-      .head().getAs[Int]("n")
+    smallTable(NoveltyStore, column, "params").head.getInt(0)
 
   /** Build (or staged-swap REBUILD) the gram store: distinct
     * `(key, fp)` over the column's word n-grams, key-clustered;
@@ -1691,7 +1728,7 @@ class Collection private[core] (
     */
   def refreshNoveltyStore(column: String): Long =
     maintained(NoveltyStore, column) { target =>
-      if (!hasNoveltyStore(column)) { buildNoveltyStore(column); count() }
+      if (!built(NoveltyStore, column)) { buildNoveltyStore(column); count() }
       else {
         val pending = df.filter(col(KeyCol) > heldWatermark(NoveltyStore, column))
           .select(col(KeyCol), col(column))
@@ -1713,12 +1750,10 @@ class Collection private[core] (
   def noveltyCheck(column: String, batch: DataFrame, textCol: String,
                    keyCol: String): DataFrame = {
     Identifiers.validate(column)
-    require(hasNoveltyStore(column),
+    require(built(NoveltyStore, column),
       s"no novelty store for '$column' — run buildNoveltyStore first")
     graft.dedup.Dedup.ngramNoveltyAgainst(batch, textCol, keyCol,
-      noveltyN(column),
-      spark.read.parquet(s"${noveltyStoreDir(column)}/grams")
-        .select(col("fp")))
+      noveltyN(column), read(NoveltyStore, column, "grams").select(col("fp")))
   }
 
   /** Streaming twin of [[refreshDedupIndex]] ([[watermarkStream]]): fold
@@ -1728,14 +1763,12 @@ class Collection private[core] (
     * is conservative: the keys' fps rows are missing, so
     * [[repairDedupIndex]] flags them changed and re-bands idempotently
     * (the band COW replaces, never doubles). Bootstraps by building the
-    * index (with `p`) when absent; an existing index keeps its stored
-    * params.
+    * index with the default params when absent (build first for others);
+    * an index keeps its stored params.
     */
-  def dedupIndexStream(column: String, checkpointDir: String,
-                       p: graft.dedup.Dedup.MinHashParams =
-                         graft.dedup.Dedup.MinHashParams()): StreamingQuery =
+  def dedupIndexStream(column: String, checkpointDir: String): StreamingQuery =
     watermarkStream(DedupIndex, column, checkpointDir) {
-      buildDedupIndex(column, p)
+      buildDedupIndex(column)
     } { pending => appendBands(column, pending) }
 
   /** Check an incoming batch against the indexed corpus: `(corpus_key,
@@ -1753,14 +1786,13 @@ class Collection private[core] (
                       threshold: Double = 0.8,
                       maxBucket: Int = 1000): DataFrame = {
     val corpus = df.select(col(KeyCol), col(column))
-    if (!hasDedupIndex(column))
+    if (!built(DedupIndex, column))
       return graft.dedup.Dedup.incrementalNearDups(
         newDocs.select(col(KeyCol), col(column)), corpus,
         column, KeyCol, threshold, maxBucket = maxBucket)
     val p = readDedupParams(column)
     graft.dedup.Dedup.incrementalNearDupsFromBands(
-      newDocs.select(col(KeyCol), col(column)),
-      spark.read.parquet(s"${dedupIndexDir(column)}/bands"),
+      newDocs.select(col(KeyCol), col(column)), read(DedupIndex, column, "bands"),
       corpus, column, KeyCol, threshold, p, maxBucket)
   }
 
@@ -1786,8 +1818,6 @@ class Collection private[core] (
 
   private def annListsDir(column: String): String = s"${annIndexDir(column)}/lists"
 
-  private def hasAnnIndex(column: String): Boolean = built(AnnIndex, column)
-
   /** Upstream fingerprint view for the ANN index: one `(key, fp)` row per
     * document from the VECTOR index (the table the ANN index accelerates)
     * — a chunked index carries one fp per chunk row, all equal, deduped
@@ -1803,18 +1833,15 @@ class Collection private[core] (
     // a filter on top of dropDuplicates does not reliably push below the
     // Deduplicate node, and a pushed filter still opens every file's
     // footer — scopedRead plans the touched files driver-side instead
-    vectorFps(scope.fold(raw)(scopedRead(indexDir(column), _)))
+    vectorFps(scope.fold(raw)(scopedRead(indexDir(column), _, reader(VectorIndex, ""))))
   }
 
   /** One `(key, fp)` row per key of stored vector-index rows (a chunked
     * index repeats the per-document fp on every chunk row); rows indexed
     * before the fingerprint column existed read fp null.
     */
-  private def vectorFps(stored: DataFrame): DataFrame = {
-    val fp = if (stored.schema.fieldNames.contains("fp")) col("fp")
-             else lit(null).cast(StringType)
-    stored.select(col(KeyCol), fp.as("fp")).dropDuplicates(KeyCol)
-  }
+  private def vectorFps(stored: DataFrame): DataFrame =
+    stored.select(col(KeyCol), col("fp")).dropDuplicates(KeyCol)
 
   private[core] def vectorFpsOf(column: String): Option[DataFrame] =
     indexRaw(column).map(vectorFps)
@@ -1857,54 +1884,44 @@ class Collection private[core] (
     keyRanges.zipWithIndex.collect { case (r, i) if hit(i) => r }
   }
 
-  /** The lists files holding `keys`' CURRENT rows: pair-pruned through
-    * the sidecar's (key, list_ids) when available; legacy sidecars
-    * (rows predating the column) fall back to a lists scan + list-only
-    * pruning. Fresh/moved rows need no planning — they land in new
-    * files, and [[compactAnnIndex]] restores tight clustering.
+  /** The lists files holding `keys`' CURRENT rows, pair-pruned through
+    * the sidecar's (key, list_ids). Fresh/moved rows need no planning —
+    * they land in new files, and [[compactAnnIndex]] restores tight
+    * clustering.
     */
   private def annTouchedLists(column: String, keys: DataFrame): Seq[FileKeyRange] = {
-    val fpsDf = spark.read.option("mergeSchema", "true")
-      .parquet(s"${annIndexDir(column)}/fps")
     val keysDf = keys.select(col(keys.columns.head).cast(LongType).as(KeyCol))
-    if (fpsDf.schema.fieldNames.contains("list_ids")) {
-      val rows = scopedTo(fpsDf, keysDf)
-        .filter(col("list_ids").isNotNull)
-        .select(col(KeyCol), col("list_ids")).localCheckpoint(true)
-      // Keys with no usable sidecar row — a crash between the lists and
-      // fps appends, or legacy null-list_ids rows — would silently keep
-      // their OLD lists rows if planned from the sidecar alone (a delete
-      // would never erase them, a repair would append a duplicate). Find
-      // their old lists by a key-scoped scan of the lists table's two
-      // narrow columns; a truly-new key scans to nothing.
-      val strays = keysDf.join(rows, Seq(KeyCol), "left_anti")
-        .localCheckpoint(true)
-      val sidecarPairs = rows
-        .select(col(KeyCol), explode(col("list_ids")).as("list_id"))
-      // A repair that crashed between its lists swap and its fps update
-      // leaves a non-null but STALE sidecar row — the fresh row it
-      // already wrote sits at the key's CURRENT assignment, recomputable
-      // from the stored centroids without scanning lists. Union those
-      // pairs in, so deletes and re-repairs always cover a crashed
-      // repair's fresh rows (deleteKeys runs this branch BEFORE erasing
-      // the vector index for the same reason).
-      val assignPairs = graft.search.Ann
-        .ivfAssign(scopedTo(embeddings(column), keysDf), "embedding",
-          readAnnCenters(column))
-        .select(col(KeyCol), col("list_id")).distinct()
-      val pairs0 = sidecarPairs.unionByName(assignPairs)
-      val pairs =
-        if (strays.isEmpty) pairs0
-        else pairs0.unionByName(
-          scopedTo(spark.read.parquet(annListsDir(column))
-            .select(col(KeyCol), col("list_id")), strays).distinct())
-      return touchedFilesByPair(annListsDir(column), pairs)
-    }
-    val affected = spark.read.parquet(annListsDir(column))
-      .select(col(KeyCol), col("list_id"))
-      .join(keysDf, Seq(KeyCol), "left_semi")
-      .select(col("list_id")).distinct()
-    touchedFiles(annListsDir(column), affected, "list_id")
+    val rows = scopedTo(read(AnnIndex, column, "fps"), keysDf)
+      .filter(col("list_ids").isNotNull)
+      .select(col(KeyCol), col("list_ids")).localCheckpoint(true)
+    // Keys with no usable sidecar row — a crash between the lists and
+    // fps appends, or rows written before the list_ids column (read as
+    // null) — would silently keep their OLD lists rows if planned from
+    // the sidecar alone (a delete would never erase them, a repair would
+    // append a duplicate). Find their old lists by a key-scoped scan of
+    // the lists table's two narrow columns; a truly-new key scans to
+    // nothing.
+    val strays = keysDf.join(rows, Seq(KeyCol), "left_anti")
+      .localCheckpoint(true)
+    val sidecarPairs = rows
+      .select(col(KeyCol), explode(col("list_ids")).as("list_id"))
+    // A repair that crashed between its lists swap and its fps update
+    // leaves a non-null but STALE sidecar row — the fresh row it
+    // already wrote sits at the key's CURRENT assignment, recomputable
+    // from the stored centroids without scanning lists. Union those
+    // pairs in, so deletes and re-repairs always cover a crashed
+    // repair's fresh rows (deleteKeys runs this BEFORE erasing the
+    // vector index for the same reason).
+    val assignPairs = graft.search.Ann
+      .ivfAssign(scopedTo(embeddings(column), keysDf), "embedding",
+        readAnnCenters(column))
+      .select(col(KeyCol), col("list_id")).distinct()
+    val pairs0 = sidecarPairs.unionByName(assignPairs)
+    val pairs =
+      if (strays.isEmpty) pairs0
+      else pairs0.unionByName(scopedTo(
+        annLists(column, Seq(KeyCol, "list_id")), strays).distinct())
+    touchedFilesByPair(annListsDir(column), pairs)
   }
 
   private def annCentersDf(centers: Array[Array[Double]]): DataFrame = {
@@ -1913,39 +1930,20 @@ class Collection private[core] (
       .map { case (c, i) => (i, c.toSeq) }.toDF("list_id", "centroid")
   }
 
-  // The ANN index's stored layouts. Serving reads declare them instead
-  // of inferring them, which costs a footer job per read.
-  private val AnnCentersSchema = StructType(Seq(
-    StructField("list_id", IntegerType), StructField("centroid", ArrayType(DoubleType))))
-  private val AnnCodebooksSchema = StructType(Seq(
-    StructField("subspace", IntegerType), StructField("code", IntegerType),
-    StructField("centroid", ArrayType(DoubleType))))
-  private val AnnParamsSchema = StructType(Seq(
-    StructField("n_lists", IntegerType), StructField("iters", IntegerType),
-    StructField("sample_n", IntegerType), StructField("pq_m", IntegerType),
-    StructField("build_drift", DoubleType)))
-
-  /** `(key, embedding, list_id)` lists in the full-vector layout
-    * (`pqM = 0`), `(key, code, list_id)` in the PQ layout.
+  /** The stored columns of the lists: `(key, embedding, list_id)` in the
+    * full-vector layout (`pqM = 0`), `(key, code, list_id)` in the PQ
+    * layout.
     */
-  private def annLists(column: String, pqM: Int): DataFrame =
-    spark.read.schema(StructType(Seq(
-        StructField(KeyCol, LongType),
-        if (pqM == 0) StructField("embedding", ArrayType(FloatType))
-        else StructField("code", BinaryType),
-        StructField("list_id", IntegerType))))
-      .parquet(annListsDir(column))
+  private def annListCols(pqM: Int): Seq[String] =
+    Seq(KeyCol, if (pqM == 0) "embedding" else "code", "list_id")
 
-  /** A small metadata table (ANN centroids/codebooks/params, keyword
-    * stats) read whole through the serving cache, else through Spark in
-    * its declared layout.
-    */
-  private def smallTable(dir: String, schema: StructType): Seq[Row] =
-    ServingCache.table(hadoopConf, dir, schema)
-      .getOrElse(spark.read.schema(schema).parquet(dir).collect().toSeq)
+  private def annLists(column: String, cols: Seq[String]): DataFrame =
+    AnnIndex.read(spark, "lists", Seq(annListsDir(column)), cols)
+
+  private def annLists(column: String, pqM: Int): DataFrame = annLists(column, annListCols(pqM))
 
   private def readAnnCenters(column: String): Array[Array[Double]] =
-    smallTable(s"${annIndexDir(column)}/centroids", AnnCentersSchema).toArray
+    smallTable(AnnIndex, column, "centroids").toArray
       .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   private def annClustered(dfIn: DataFrame, nOut: Int): DataFrame =
@@ -1959,7 +1957,7 @@ class Collection private[core] (
   }
 
   private def readAnnCodebooks(column: String): Array[Array[Array[Double]]] =
-    smallTable(s"${annIndexDir(column)}/codebooks", AnnCodebooksSchema).toArray
+    smallTable(AnnIndex, column, "codebooks").toArray
       .sortBy(r => (r.getInt(0), r.getInt(1)))
       .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -1978,7 +1976,7 @@ class Collection private[core] (
     Option(annParams(column).getAs[java.lang.Double]("build_drift")).map(_.doubleValue)
 
   private[core] def annParams(column: String): Row =
-    smallTable(s"${annIndexDir(column)}/params", AnnParamsSchema).head
+    smallTable(AnnIndex, column, "params").head
 
   /** Lists rows for a batch of vectors: `(key, embedding, list_id)` in
     * the full-vector layout, `(key, code, list_id)` when PQ-encoded —
@@ -1996,9 +1994,8 @@ class Collection private[core] (
 
   /** Build (or staged-swap REBUILD, like [[buildKeywordIndex]]) the
     * persistent IVF index for `column`'s embedding index. Write order is
-    * lists, centroids, codebooks, fps, then `params` last —
-    * [[hasAnnIndex]] keys on `params`, so a half-written fresh build
-    * reads as "no index". Chunk-granularity (multi-vector) indexes work
+    * lists, centroids, codebooks, fps, then `params` last — the family's
+    * marker, so a half-written fresh build reads as "no index". Chunk-granularity (multi-vector) indexes work
     * unchanged: each chunk vector is assigned independently, and
     * [[searchAnn]]'s per-key max keeps one result slot per document.
     *
@@ -2037,7 +2034,7 @@ class Collection private[core] (
         // from the just-written lists (a narrow (key, list_id) read, no
         // re-assignment)
         keyClustered(annSidecar(annUpstreamFps(column),
-            spark.read.parquet(s"$where/lists").select(col(KeyCol), col("list_id"))), n)
+            AnnIndex.read(spark, "lists", Seq(s"$where/lists"), Seq(KeyCol, "list_id"))), n)
           .write.mode("overwrite").parquet(s"$where/fps")
         import spark.implicits._
         // assignment quality at build time — indexStatus recomputes it on
@@ -2070,7 +2067,7 @@ class Collection private[core] (
                 predicate: Option[org.apache.spark.sql.Column] = None,
                 fetchK: Int = 0): DataFrame = {
     graft.search.Search.validateLimit(limit)
-    if (!hasAnnIndex(column)) return predicate match {
+    if (!built(AnnIndex, column)) return predicate match {
       case Some(p) => searchFiltered(column, query, limit, embedder, p)
       case None => search(column, query, limit, embedder)
     }
@@ -2140,7 +2137,7 @@ class Collection private[core] (
                       nQueries: Int = 32, fetchK: Int = 0): DataFrame = {
     Identifiers.validate(column)
     require(k >= 1 && nQueries >= 1, s"need k, nQueries >= 1; got $k, $nQueries")
-    require(hasAnnIndex(column), s"no ANN index for '$column' — buildAnnIndex first")
+    require(built(AnnIndex, column), s"no ANN index for '$column' — buildAnnIndex first")
     healTable(annListsDir(column))
     val emb = embeddings(column)
     val queries = emb
@@ -2192,19 +2189,9 @@ class Collection private[core] (
         "embedding", k)
       .select(col("src").as("query_id"), col("nbr").as(KeyCol))
       .localCheckpoint(true)
-    val io = new org.apache.spark.scheduler.SparkListener {
-      val read = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) read.addAndGet(m.inputMetrics.bytesRead)
-      }
-    }
-    spark.sparkContext.addSparkListener(io)
-    def drain(): Unit = org.apache.spark.graftops.ListenerBridge
-      .waitUntilListenerEmpty(spark.sparkContext)
+    val io = org.apache.spark.graftops.TaskIo.attach(spark.sparkContext)
     def measure(tier: String)(mk: Array[Float] => DataFrame): TierStats = {
-      drain(); val r0 = io.read.get(); val t0 = System.nanoTime()
+      val r0 = io.bytesRead(); val t0 = System.nanoTime()
       val pages = queries.toSeq.flatMap { case (qid, qv) =>
         val hits = mk(qv)
           .select(col(KeyCol).cast(LongType), col("score").cast("double"))
@@ -2213,7 +2200,7 @@ class Collection private[core] (
           .map { case (h, i) => (qid, h.getLong(0), (i + 1).toLong) }
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      drain(); val bytes = io.read.get() - r0
+      val bytes = io.bytesRead() - r0
       val m = graft.operators.Eval.retrievalMetrics(
           pages.toDF("query_id", KeyCol, "rank"), gold, k,
           queryCol = "query_id", keyCol = KeyCol)
@@ -2224,16 +2211,16 @@ class Collection private[core] (
     try {
       val rows = Seq.newBuilder[TierStats]
       rows += measure("exact")(qv => graft.search.Search.topK(emb, qv, k))
-      if (hasAnnIndex(column)) {
+      if (built(AnnIndex, column)) {
         healTable(annListsDir(column))
         val name = if (annPqM(column) > 0) "ivf-pq" else "ivf"
         rows += measure(s"$name(nProbe=$nProbe)")(qv =>
           annPage(column, qv, k, nProbe, None, fetchK))
       }
-      if (hasBinarySketch(column))
+      if (built(BinarySketch, column))
         rows += measure("binary+rerank")(qv => binaryPage(column, qv, k, fetchK))
       rows.result()
-    } finally spark.sparkContext.removeSparkListener(io)
+    } finally io.detach()
   }
 
   /** Fold vectors the ANN index has not seen (keys above the stored
@@ -2244,9 +2231,9 @@ class Collection private[core] (
     */
   def refreshAnnIndex(column: String): Long =
     maintained(AnnIndex, column) { _ =>
-      if (!hasAnnIndex(column)) {
+      if (!built(AnnIndex, column)) {
         buildAnnIndex(column)
-        spark.read.parquet(annListsDir(column)).count()
+        annLists(column, Seq(KeyCol)).count()
       } else {
         val wm = heldWatermark(AnnIndex, column)
         val pending = embeddings(column).filter(col(KeyCol) > wm)
@@ -2286,7 +2273,7 @@ class Collection private[core] (
               nLists: Int = 0): DataFrame = {
     Identifiers.validate(column)
     val emb = embeddings(column)
-    if (!hasAnnIndex(column))
+    if (!built(AnnIndex, column))
       return graft.search.Ann.knnJoinIvf(emb, KeyCol, "embedding", k,
         nLists = nLists, nProbe = nProbe)
     healTable(annListsDir(column))
@@ -2326,7 +2313,7 @@ class Collection private[core] (
                   nProbe: Int = 2, nLists: Int = 0): DataFrame = {
     Identifiers.validate(column)
     val emb = embeddings(column)
-    if (!hasAnnIndex(column))
+    if (!built(AnnIndex, column))
       return graft.search.Ann.searchBatchIvf(queries, emb, KeyCol,
         "embedding", k, nLists = nLists, nProbe = nProbe)
     healTable(annListsDir(column))
@@ -2360,7 +2347,7 @@ class Collection private[core] (
                    nLists: Int = 0): DataFrame = {
     Identifiers.validate(column)
     val emb = embeddings(column)
-    if (!hasAnnIndex(column))
+    if (!built(AnnIndex, column))
       return graft.dedup.SemDedup.semanticDups(emb, KeyCol, "embedding",
           k = if (nLists > 0) nLists
               else graft.dedup.SemDedup.autoK(emb.count()),
@@ -2368,8 +2355,7 @@ class Collection private[core] (
         .groupBy(col("key_a"), col("key_b"))
         .agg(max(col("cosine")).as("cosine"))
     healTable(annListsDir(column))
-    val kl = annLists(column, annPqM(column))
-      .select(col(KeyCol), col("list_id")).distinct()
+    val kl = annLists(column, Seq(KeyCol, "list_id")).distinct()
     val cand = kl.as("a").join(kl.as("b"),
         col("a.list_id") === col("b.list_id") &&
           col(s"a.$KeyCol") < col(s"b.$KeyCol"))
@@ -2431,29 +2417,31 @@ class Collection private[core] (
     */
   def repairAnnIndex(column: String, scope: Option[DataFrame] = None): Long =
     maintained(AnnIndex, column) { target =>
-      if (!hasAnnIndex(column)) 0L
+      if (!built(AnnIndex, column)) 0L
       else {
         // change detection: full reconcile compares every fingerprint
         // (narrow-column corpus scans); a SCOPED repair — the caller knows
         // which keys its upsert touched — prunes both sides to the batch's
         // key range (footer/row-group stats) before comparing
-        val fps = s"$target/fps"
+        val pqM = annPqM(column)
         repairByFingerprint(annListsDir(column), annUpstreamFps(column, scope),
-            scope.fold(spark.read.option("mergeSchema", "true").parquet(fps))(
-              scopedRead(fps, _)),
+            scope.fold(read(AnnIndex, column, "fps"))(
+              scopedRead(s"$target/fps", _, reader(AnnIndex, "fps"))),
+            AnnIndex.read(spark, "lists", _, annListCols(pqM)),
             // rewrite planning: only files holding a changed key's OLD row
             // ((list_id, key) pair pruning through the sidecar); fresh rows
             // land in new files, whatever their list
             touched = Some(annTouchedLists(column, _)), cluster = annClustered) {
           changed =>
             val centers = readAnnCenters(column)
-            val cb = if (annPqM(column) > 0) Some(readAnnCodebooks(column)) else None
+            val cb = if (pqM > 0) Some(readAnnCodebooks(column)) else None
             // the fresh vectors read is file-granular too — a bare
             // semi-join would scan the whole (wide) embedding column
-            annRows(vectorLayout.view(scopedRead(indexDir(column), changed)), centers, cb)
+            annRows(vectorLayout.view(
+                scopedRead(indexDir(column), changed, reader(VectorIndex, ""))), centers, cb)
               .localCheckpoint(true)
         } { (changed, fresh) =>
-          upsertByKeyRange(fps,
+          upsertByKeyRange(AnnIndex, column, "fps",
             annSidecar(scopedTo(annUpstreamFps(column), changed), fresh))
         }
       }
@@ -2465,8 +2453,8 @@ class Collection private[core] (
     * Returns the file count written, 0 when no index.
     */
   def compactAnnIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(AnnIndex, column) { target =>
-      if (!hasAnnIndex(column)) 0
+    maintained(AnnIndex, column) { _ =>
+      if (!built(AnnIndex, column)) 0
       else {
         val listsDir = annListsDir(column)
         val nFiles = filesFor(listsDir, targetFileBytes)
@@ -2477,14 +2465,14 @@ class Collection private[core] (
         // table; compaction is where the copies fold away. Distinct chunk
         // vectors of one document differ in their embedding/code column
         // and are never collapsed.
-        val lists = spark.read.parquet(listsDir).dropDuplicates()
+        val lists = annLists(column, annPqM(column)).dropDuplicates()
         writeAndSwap(listsDir)(tmp =>
           annClustered(lists, nFiles).write.mode("overwrite").parquet(tmp))
         // the fps sidecar accumulates one appended file per refresh/stream
         // micro-batch FOREVER if only the lists fold — the round-10 soak
         // caught exactly that (file count through the maintenance bound
         // after 100 batches despite compaction)
-        compactKeyClustered(s"$target/fps", targetFileBytes)
+        compactKeyClustered(AnnIndex, column, "fps", targetFileBytes)
         nFiles
       }
     }
@@ -2495,13 +2483,13 @@ class Collection private[core] (
     * the repair paths' footer-range pruning keeps working. No-op when
     * the directory does not exist. Callers hold the write lock.
     */
-  private def compactKeyClustered(target: String,
+  private def compactKeyClustered(f: IndexFamily, column: String, sub: String,
                                   targetFileBytes: Long): Int = {
+    val target = table(f, column, sub)
     if (!fs.exists(new Path(target))) return 0
     discardStage(target)
     val nFiles = filesFor(target, targetFileBytes)
-    val rows = spark.read.option("mergeSchema", "true").parquet(target)
-      .dropDuplicates()
+    val rows = read(f, column, sub).dropDuplicates()
     writeAndSwap(target)(tmp =>
       keyClustered(rows, nFiles).write.mode("overwrite").parquet(tmp))
     nFiles
@@ -2516,10 +2504,10 @@ class Collection private[core] (
     */
   def compactDedupIndex(column: String,
                         targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(DedupIndex, column) { t =>
-      if (!hasDedupIndex(column)) 0
-      else compactKeyClustered(s"$t/bands", targetFileBytes) +
-        compactKeyClustered(s"$t/fps", targetFileBytes)
+    maintained(DedupIndex, column) { _ =>
+      if (!built(DedupIndex, column)) 0
+      else compactKeyClustered(DedupIndex, column, "bands", targetFileBytes) +
+        compactKeyClustered(DedupIndex, column, "fps", targetFileBytes)
     }
 
   // --- binary (1-bit sign) sketch surface ---------------------------------
@@ -2541,11 +2529,8 @@ class Collection private[core] (
   private def binarySketchDir(column: String): String =
     s"${binaryIndexDir(column)}/sketch"
 
-  private def hasBinarySketch(column: String): Boolean = built(BinarySketch, column)
-
   private def readBinaryDim(column: String): Int =
-    spark.read.parquet(s"${binaryIndexDir(column)}/params")
-      .head().getAs[Int]("dim")
+    smallTable(BinarySketch, column, "params").head.getInt(0)
 
   private def binaryRows(src: DataFrame, dim: Int): DataFrame =
     src.select(col(KeyCol),
@@ -2553,8 +2538,7 @@ class Collection private[core] (
 
   /** Build (or staged-swap rebuild) the binary sign sketch for
     * `column`'s vector index. Write order: sketch, fps, `params` last —
-    * [[hasBinarySketch]] keys on `params`, so a half-written build
-    * reads as "no sketch". Chunked indexes sketch every chunk vector
+    * the family's marker, so a half-written build reads as "no sketch". Chunked indexes sketch every chunk vector
     * (one row per vector, several per key); search folds per key.
     */
   def buildBinarySketch(column: String, nFiles: Int = 0): Long =
@@ -2575,8 +2559,7 @@ class Collection private[core] (
           .toDF("dim", "n_words")
           .write.mode("overwrite").parquet(s"$where/params")
       }
-      spark.read.parquet(binarySketchDir(column))
-        .select(col(KeyCol)).distinct().count()
+      read(BinarySketch, column, "sketch").select(col(KeyCol)).distinct().count()
     }
 
   /** Fold vectors the sketch has not seen (keys above the stored max)
@@ -2585,7 +2568,7 @@ class Collection private[core] (
     */
   def refreshBinarySketch(column: String): Long =
     maintained(BinarySketch, column) { _ =>
-      if (!hasBinarySketch(column)) buildBinarySketch(column)
+      if (!built(BinarySketch, column)) buildBinarySketch(column)
       else {
         val pending = embeddings(column)
           .filter(col(KeyCol) > heldWatermark(BinarySketch, column))
@@ -2614,17 +2597,19 @@ class Collection private[core] (
     */
   def repairBinarySketch(column: String, scope: Option[DataFrame] = None): Long =
     maintained(BinarySketch, column) { target =>
-      if (!hasBinarySketch(column)) 0L
+      if (!built(BinarySketch, column)) 0L
       else {
-        val fps = s"$target/fps"
         repairByFingerprint(binarySketchDir(column), annUpstreamFps(column, scope),
-            scope.fold(spark.read.parquet(fps))(scopedRead(fps, _))) { changed =>
-          binaryRows(vectorLayout.view(scopedRead(indexDir(column), changed)),
+            scope.fold(read(BinarySketch, column, "fps"))(
+              scopedRead(s"$target/fps", _, reader(BinarySketch, "fps"))),
+            reader(BinarySketch, "sketch")) { changed =>
+          binaryRows(vectorLayout.view(
+              scopedRead(indexDir(column), changed, reader(VectorIndex, ""))),
             readBinaryDim(column))
         } { (changed, _) =>
           // scopedRead-pruned, not a bare semi-join: a 10-key repair reads
           // 10 keys' files — the ScaleProbe-audited O(touched) shape
-          upsertByKeyRange(fps, annUpstreamFps(column, Some(changed)))
+          upsertByKeyRange(BinarySketch, column, "fps", annUpstreamFps(column, Some(changed)))
         }
       }
     }
@@ -2650,11 +2635,11 @@ class Collection private[core] (
     */
   def compactBinarySketch(column: String,
                           targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(BinarySketch, column) { target =>
-      if (!hasBinarySketch(column)) 0
+    maintained(BinarySketch, column) { _ =>
+      if (!built(BinarySketch, column)) 0
       else {
-        val n = compactKeyClustered(binarySketchDir(column), targetFileBytes)
-        compactKeyClustered(s"$target/fps", targetFileBytes)
+        val n = compactKeyClustered(BinarySketch, column, "sketch", targetFileBytes)
+        compactKeyClustered(BinarySketch, column, "fps", targetFileBytes)
         n
       }
     }
@@ -2668,7 +2653,7 @@ class Collection private[core] (
   def searchBinary(column: String, query: String, limit: Int,
                    embedder: graft.embed.Embedder, fetchK: Int = 0): DataFrame = {
     graft.search.Search.validateLimit(limit)
-    if (!hasBinarySketch(column)) return search(column, query, limit, embedder)
+    if (!built(BinarySketch, column)) return search(column, query, limit, embedder)
     val qv = embedder.embedOne(query)
     fetchHits(binaryPage(column, qv, limit, fetchK), column)
   }
@@ -2676,7 +2661,8 @@ class Collection private[core] (
   /** [[searchBinary]]'s vector-level core: Hamming stage-1 window over
     * the sign sketch, exact cosine rerank on the candidates — the hits
     * page `(KeyCol, score)` before the content fetch. Callers must have
-    * checked [[hasBinarySketch]], which rolls committed swaps forward.
+    * checked that the sketch is [[built]], which rolls committed swaps
+    * forward.
     */
   private[graft] def binaryPage(column: String, qv: Array[Float],
                                 limit: Int, fetchK: Int = 0): DataFrame = {
@@ -2685,7 +2671,7 @@ class Collection private[core] (
       s"query embeds to ${qv.length} dims but the sketch stores $dim")
     val window = math.max(limit, if (fetchK > 0) fetchK else limit * 4)
     val qWords = graft.search.BinaryQuant.packSign(qv)
-    val cand = spark.read.parquet(binarySketchDir(column))
+    val cand = read(BinarySketch, column, "sketch")
       .select(col(KeyCol),
         graft.search.BinaryQuant.hamming(col("words"), qWords).as("__h"))
       .groupBy(col(KeyCol)).agg(min(col("__h")).as("__h"))
@@ -2738,7 +2724,8 @@ class Collection private[core] (
       val del = keys.select(col(keys.columns.head).cast(LongType).as(KeyCol))
         .distinct().localCheckpoint(true)
       val n = df.join(del, Seq(KeyCol), "left_semi").count()
-      deleteByKeyRange(dataDir, del)
+      deleteByKeyRange(dataDir, del,
+        spark.read.option("mergeSchema", "true").parquet(_: _*))
       // vector-upstream structures before the vector index: ANN's rewrite
       // planning reads it (current-assignment pairs, see annTouchedLists)
       // — content can no longer surface either way, data went first
@@ -2748,8 +2735,8 @@ class Collection private[core] (
           heal(f, c0)
           if (built(f, c0)) {
             f.erase.foreach(_(this, c0, del))
-            f.deletes.map(table(f, c0, _)).filter(t => fs.exists(new Path(t)))
-              .foreach(deleteByKeyRange(_, del))
+            f.deletes.filter(t => fs.exists(new Path(table(f, c0, t))))
+              .foreach(t => deleteByKeyRange(table(f, c0, t), del, reader(f, t)))
           }
         }
       n
@@ -2760,7 +2747,8 @@ class Collection private[core] (
   private[core] def deleteAnnLists(column: String, del: DataFrame): Unit = {
     val touched = annTouchedLists(column, del)
     if (touched.nonEmpty) {
-      val next = spark.read.parquet(touched.map(_.path.toString): _*)
+      val next = AnnIndex.read(spark, "lists", touched.map(_.path.toString),
+        annListCols(annPqM(column)))
         .join(del, Seq(KeyCol), "left_anti")
       replaceFiles(annListsDir(column), touched.map(_.path.getName)) { tmp =>
         annClustered(next, touched.length).write.mode("overwrite").parquet(tmp)
@@ -2769,32 +2757,35 @@ class Collection private[core] (
   }
 
   /** File-granular key deletion from a key-clustered parquet directory:
-    * anti-join rewrite of only the footer-range-intersecting files,
-    * committed through the journaled swap. No-op when no file's range
-    * covers a deleted key.
+    * anti-join rewrite of only the footer-range-intersecting files (read
+    * by `read`), committed through the journaled swap. No-op when no
+    * file's range covers a deleted key.
     */
-  private def deleteByKeyRange(target: String, del: DataFrame): Unit = {
+  private def deleteByKeyRange(target: String, del: DataFrame,
+                               read: Seq[String] => DataFrame): Unit = {
     discardStage(target)
     val touched = touchedFiles(target, del)
     if (touched.isEmpty) return
-    val remaining = spark.read.option("mergeSchema", "true")
-      .parquet(touched.map(_.path.toString).toIndexedSeq: _*)
+    val remaining = read(touched.map(_.path.toString))
       .join(del, Seq(KeyCol), "left_anti")
     replaceFiles(target, touched.map(_.path.getName)) { tmp =>
       keyClustered(remaining, touched.length).write.mode("overwrite").parquet(tmp)
     }
   }
 
-  /** File-granular key upsert into a key-clustered parquet directory —
+  /** File-granular key upsert into a family's key-clustered sub-table —
     * [[deleteByKeyRange]]'s dual, used to maintain the (key, fp)
     * fingerprint sidecars in O(touched files + batch) instead of the
     * whole-table rewrite they used to take: only files whose footer key
     * range intersects an updated key are rewritten (anti-join old rows,
-    * union the fresh ones), committed through the journaled swap; keys
-    * beyond every file's range land as new files. Creates the directory
-    * when absent (first write / legacy index without a sidecar).
+    * union the fresh ones, which carry the declared columns), committed
+    * through the journaled swap; keys beyond every file's range land as
+    * new files. Creates the directory when absent (first write / legacy
+    * index without a sidecar).
     */
-  private def upsertByKeyRange(target: String, updates: DataFrame): Unit = {
+  private def upsertByKeyRange(f: IndexFamily, column: String, sub: String,
+                               updates: DataFrame): Unit = {
+    val target = table(f, column, sub)
     if (!fs.exists(new Path(target))) {
       keyClustered(updates, 1).write.mode("overwrite").parquet(target)
       return
@@ -2803,12 +2794,9 @@ class Collection private[core] (
     val touched = touchedFiles(target, updates.select(KeyCol))
     val next =
       if (touched.isEmpty) updates
-      else spark.read.option("mergeSchema", "true")
-        .parquet(touched.map(_.path.toString).toIndexedSeq: _*)
+      else reader(f, sub)(touched.map(_.path.toString))
         .join(updates.select(KeyCol), Seq(KeyCol), "left_anti")
-        // allowMissingColumns: legacy sidecar files may predate a column
-        // the updates carry (e.g. ann fps list_ids) — old rows read null
-        .unionByName(updates, allowMissingColumns = true)
+        .unionByName(updates)
     replaceFiles(target, touched.map(_.path.getName)) { tmp =>
       keyClustered(next, touched.length).write.mode("overwrite").parquet(tmp)
     }
@@ -2865,8 +2853,7 @@ class Collection private[core] (
     */
   private def storedFps(f: IndexFamily, column: String): Option[DataFrame] =
     f.liveFps.fold(f.fps.filter(_ => built(f, column)).map { t =>
-      val path = table(f, column, t)
-      if (fs.exists(new Path(path))) spark.read.parquet(path) else emptyFps
+      if (fs.exists(new Path(table(f, column, t)))) read(f, column, t) else emptyFps
     })(_(this, column))
 
   /** ANN centroid drift: the current table's assignment distance over the
@@ -2920,7 +2907,7 @@ class Collection private[core] (
   /** The stored merge table `(rank, sym_a, sym_b, cnt)`, rank-ordered. */
   def tokenizerMerges(column: String): DataFrame = {
     recoverSwap(tokenizerDir(column))
-    spark.read.parquet(s"${tokenizerDir(column)}/merges").orderBy("rank")
+    read(Tokenizer, column, "merges").orderBy("rank")
   }
 
   /** Tokenize the collection with the stored rules: the KB-sized merge
@@ -2984,9 +2971,8 @@ class Collection private[core] (
   /** The stored weight vector (index dim = bias). */
   def classifierWeights(column: String): Array[Double] = {
     require(hasClassifier(column), s"no classifier trained for '$column'")
-    val rows = spark.read.parquet(s"${classifierDir(column)}/weights")
-      .orderBy("j").collect()
-    rows.map(_.getDouble(1)) // bounded: dim + 1 rows
+    smallTable(ClassifierModel, column, "weights").sortBy(_.getLong(0))
+      .map(_.getDouble(1)).toArray // bounded: dim + 1 rows
   }
 
   /** Score every row under the stored weights: `(_key, score)` with
@@ -3185,23 +3171,22 @@ class Collection private[core] (
     *      first because the ANN and binary repairs read the fingerprints
     *      the re-embed refreshes;
     *   2. every other family's repair (same counters per structure);
-    *   3. ANN retrain (`buildAnnIndex`) when centroid drift crossed
-    *      `driftRebuildAt` — refresh deliberately never retrains, so
-    *      accumulated drift needs an explicit rebuild;
+    *   3. ANN retrain (`buildAnnIndex`) when centroid drift reached
+    *      [[Collection.DriftRebuildAt]] — refresh deliberately never
+    *      retrains, so accumulated drift needs an explicit rebuild;
     *   4. compactions: small-file pressure on the data directory and each
-    *      family's `pressure` tables (file count > `smallFileFactor` x the
-    *      `targetFileBytes` ideal), and keyword log churn (dead log
-    *      fraction > `deadFractionAt`).
+    *      family's `pressure` tables (at least 16 files, and more than
+    *      [[Collection.SmallFileFactor]] x the file count at
+    *      [[Collection.TargetFileBytes]] a file), and keyword log churn
+    *      (dead log fraction over [[Collection.DeadFractionAt]]).
     *
     * Counting + footer metadata only — never mutates; a 100 TB
     * collection pays O(files) driver metadata plus the [[indexStatus]]
     * reconcile scans, not a rewrite. Execute with the CLI's
     * `maintain --apply` or call the named methods directly.
     */
-  def planMaintenance(driftRebuildAt: Double = 1.5,
-                      smallFileFactor: Int = 4,
-                      targetFileBytes: Long = 128L * 1024 * 1024,
-                      deadFractionAt: Double = 0.3): DataFrame = {
+  def planMaintenance(): DataFrame = {
+    import Collection.{DeadFractionAt, DriftRebuildAt, SmallFileFactor, TargetFileBytes}
     import spark.implicits._
     val acts = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, String)]
@@ -3214,7 +3199,7 @@ class Collection private[core] (
           acts += ((if (f == VectorIndex) 1 else 2, c0, f.structure, m.action,
             s"missing=$missing stale=$stale orphaned=$orphaned"))
         }
-        if (!r.isNullAt(4) && r.getDouble(4) >= driftRebuildAt) f.retrain.foreach { m =>
+        if (!r.isNullAt(4) && r.getDouble(4) >= DriftRebuildAt) f.retrain.foreach { m =>
           acts += ((3, c0, f.structure, m.action,
             f"centroid drift ${r.getDouble(4)}%.2fx the build baseline"))
         }
@@ -3230,8 +3215,8 @@ class Collection private[core] (
         val s = it.next()
         if (s.getPath.getName.endsWith(".parquet")) { n += 1; bytes += s.getLen }
       }
-      val ideal = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-      if (n >= 16 && n > smallFileFactor * ideal)
+      val ideal = math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes)
+      if (n >= 16 && n > SmallFileFactor * ideal)
         acts += ((4, c0, structure, action,
           s"$n files for $bytes bytes (ideal ~$ideal)"))
     }
@@ -3242,7 +3227,7 @@ class Collection private[core] (
         // routes to the family's compact, which folds every table
         f.pressure.foreach(t => filePressure(table(f, c0, t), c0, f.structure, m.action))
         f.churn.filter(_ => built(f, c0)).map(_(this, c0))
-          .filter(_ > deadFractionAt).foreach { dead =>
+          .filter(_ > DeadFractionAt).foreach { dead =>
             acts += ((4, c0, f.structure, m.action,
               f"${dead * 100}%.0f%% of the log is tombstone churn"))
           }
@@ -3333,6 +3318,26 @@ class Collection private[core] (
 private[core] object Collection {
   /** Rename-window monitors, one per qualified collection directory. */
   val swapMonitors = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** A keyword query read against a column's index: the index's stats
+    * (None without one) and the query's terms and '-'-excluded terms
+    * (the search-box NOT operator: "hash join -slow"). Prefixes are
+    * parsed off the RAW words, then both groups go through the index's
+    * analyzer (the whitespace default without an index), so exclusion
+    * matches exactly what the index stores.
+    */
+  final case class KeywordQuery(st: Option[graft.search.Keyword.Stats],
+                                terms: Seq[String], mustNot: Seq[String])
+
+  // planMaintenance's thresholds
+  /** ANN centroid drift, over the build baseline, that plans a retrain. */
+  val DriftRebuildAt = 1.5
+  /** File-count multiple of the ideal count that plans a compaction. */
+  val SmallFileFactor = 4
+  /** The file size the ideal count is taken at (compaction's default). */
+  val TargetFileBytes: Long = 128L * 1024 * 1024
+  /** Dead fraction of a keyword log that plans its compaction. */
+  val DeadFractionAt = 0.3
 }
 
 /** The vector index's stored layout for a `model_variant`: `(_key, fp,
@@ -3344,10 +3349,13 @@ private[core] object Collection {
 private[core] final case class VectorLayout(variant: String) {
   val quantized: Boolean = variant != "f32"
 
+  /** The stored columns, of the vector index's declared schema. */
+  val columns: Seq[String] = Seq(Keys.KeyCol, "fp", if (quantized) "qembedding" else "embedding")
+
+  val schema: StructType = IndexFamily.VectorIndex.schema("", columns)
+
   /** The stored vector column. */
-  val field: StructField =
-    if (quantized) StructField("qembedding", BinaryType)
-    else StructField("embedding", ArrayType(FloatType))
+  val field: StructField = schema(columns.last)
 
   /** Payload bytes per dimension; 0 for floats, which count as values. */
   val bytesPerDim: Int = variant match {
@@ -3355,9 +3363,6 @@ private[core] final case class VectorLayout(variant: String) {
     case "f16" => 2
     case _ => 1
   }
-
-  val schema: StructType = StructType(Seq(
-    StructField(Keys.KeyCol, LongType), StructField("fp", StringType), field))
 
   def decode(payload: Array[Byte]): Array[Float] =
     graft.embed.Quantization.decode(variant, payload)

@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Where a family's indexed rows come from: the collection's text, or
   * the column's vector index (the table the ANN index and the binary
@@ -31,6 +32,8 @@ private[graft] final case class Maintenance(
   * @param structure  name in `indexStatus` / `planMaintenance` rows
   * @param marker     sub-path whose existence means "built" (written last
   *                   by a fresh build, so a half-written one reads absent)
+  * @param tables     the stored schema of every sub-table the family reads;
+  *                   every read declares it ([[read]])
   * @param dirSwap    sub-tables replaced by whole-directory staged swaps
   * @param fileSwap   sub-tables rewritten by the file-granular journal
   * @param keys       `(table, key column)` holding the keys the family has
@@ -48,6 +51,7 @@ private[graft] final case class IndexFamily(
     structure: String,
     suffix: String,
     marker: String,
+    tables: Map[String, StructType],
     dirSwap: Seq[String] = Seq(""),
     fileSwap: Seq[String] = Nil,
     upstream: Upstream = Upstream.Text,
@@ -61,13 +65,39 @@ private[graft] final case class IndexFamily(
     liveFps: Option[(Collection, String) => Option[DataFrame]] = None,
     erase: Option[(Collection, String, DataFrame) => Unit] = None,
     churn: Option[(Collection, String) => Double] = None,
-    drift: Option[(Collection, String) => Option[Double]] = None)
+    drift: Option[(Collection, String) => Option[Double]] = None) {
+
+  /** `sub`'s declared schema, narrowed to `cols` when given. */
+  def schema(sub: String, cols: Seq[String] = Nil): StructType =
+    if (cols.isEmpty) tables(sub) else StructType(cols.map(tables(sub)(_)))
+
+  /** Sub-table `sub` read from `paths` (its directory, or some of its
+    * files) in its declared schema, narrowed to `cols` when given. An
+    * inferred schema would cost a footer job per read; a column that
+    * older files lack reads as null, as a schema merge reads it, and a
+    * directory holding no data files reads as an empty frame.
+    */
+  def read(spark: SparkSession, sub: String, paths: Seq[String],
+           cols: Seq[String] = Nil): DataFrame =
+    spark.read.schema(schema(sub, cols)).parquet(paths: _*)
+}
 
 private[graft] object IndexFamily {
+  private def schema(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (name, t) => StructField(name, t) })
+
+  private val KeyFp = schema(Keys.KeyCol -> LongType, "fp" -> StringType)
+
   private def call(action: String)(run: (Collection, String, Option[DataFrame]) => Long) =
     Some(Maintenance(action, (c, column, scope, _) => run(c, column, scope)))
 
-  val VectorIndex: IndexFamily = IndexFamily("vector", "", "", fileSwap = Seq(""),
+  /** Each collection stores one of the two vector columns: `embedding`
+    * floats for `model_variant` f32, the `qembedding` payload for the
+    * quantized variants ([[VectorLayout]]).
+    */
+  val VectorIndex: IndexFamily = IndexFamily("vector", "", "",
+    Map("" -> KeyFp.add("embedding", ArrayType(FloatType)).add("qembedding", BinaryType)),
+    fileSwap = Seq(""),
     keys = Some(("", Keys.KeyCol)), deletes = Seq(""), pressure = Seq(""),
     repair = Some(Maintenance("reembedChanged + embedColumn", (c, column, scope, e) =>
       c.reembedChanged(column, e(), scope = scope) + c.embedColumn(column, e()))),
@@ -79,7 +109,13 @@ private[graft] object IndexFamily {
     * tombstoned rows, so a deleted key that an upsert brings back is left
     * to repair.
     */
-  val KeywordIndex: IndexFamily = IndexFamily("keyword", "_kw", "stats",
+  val KeywordIndex: IndexFamily = IndexFamily("keyword", "_kw", "stats", Map(
+      "postings" -> schema("tok" -> StringType, "key" -> LongType, "tf" -> LongType,
+        "bucket" -> IntegerType),
+      "doclen" -> schema("key" -> LongType, "dl" -> LongType, "fp" -> StringType,
+        "cnt" -> IntegerType),
+      "stats" -> schema("n_docs" -> LongType, "sum_dl" -> LongType, "n_buckets" -> IntegerType,
+        "analyzer" -> StringType)),
     fileSwap = Seq(""), keys = Some(("doclen", "key")),
     // the stats log grows one file per commit until a compaction folds it
     pressure = Seq("stats"),
@@ -95,7 +131,11 @@ private[graft] object IndexFamily {
     churn = Some((c, column) =>
       graft.search.Keyword.deadFraction(c.spark, c.keywordIndexDir(column))))
 
-  val DedupIndex: IndexFamily = IndexFamily("dedup", "_dd", "params",
+  val DedupIndex: IndexFamily = IndexFamily("dedup", "_dd", "params", Map(
+      "bands" -> schema(Keys.KeyCol -> LongType, "band" -> IntegerType, "band_hash" -> LongType),
+      "fps" -> KeyFp,
+      "params" -> schema("num_hashes" -> IntegerType, "bands" -> IntegerType,
+        "shingle_size" -> IntegerType, "seed" -> LongType)),
     fileSwap = Seq("bands", "fps"), keys = Some(("bands", Keys.KeyCol)), fps = Some("fps"),
     deletes = Seq("bands", "fps"), pressure = Seq("bands", "fps"),
     repair = call("repairDedupIndex")((c, column, scope) =>
@@ -105,10 +145,23 @@ private[graft] object IndexFamily {
   /** Append-only by contract: novelty asks whether the corpus EVER held
     * a gram, so deletes keep its grams and it has nothing to repair.
     */
-  val NoveltyStore: IndexFamily = IndexFamily("novelty", "_nv", "params",
+  val NoveltyStore: IndexFamily = IndexFamily("novelty", "_nv", "params", Map(
+      "grams" -> KeyFp,
+      "params" -> schema("n" -> IntegerType)),
     keys = Some(("grams", Keys.KeyCol)))
 
-  val AnnIndex: IndexFamily = IndexFamily("ann", "_ann", "params",
+  /** The lists hold `embedding` floats in the flat layout and `code`
+    * bytes in the PQ layout (`pq_m > 0`), never both.
+    */
+  val AnnIndex: IndexFamily = IndexFamily("ann", "_ann", "params", Map(
+      "lists" -> schema(Keys.KeyCol -> LongType, "embedding" -> ArrayType(FloatType),
+        "code" -> BinaryType, "list_id" -> IntegerType),
+      "centroids" -> schema("list_id" -> IntegerType, "centroid" -> ArrayType(DoubleType)),
+      "codebooks" -> schema("subspace" -> IntegerType, "code" -> IntegerType,
+        "centroid" -> ArrayType(DoubleType)),
+      "params" -> schema("n_lists" -> IntegerType, "iters" -> IntegerType,
+        "sample_n" -> IntegerType, "pq_m" -> IntegerType, "build_drift" -> DoubleType),
+      "fps" -> KeyFp.add("list_ids", ArrayType(IntegerType))),
     dirSwap = Seq("", "lists"), fileSwap = Seq("lists", "fps"),
     upstream = Upstream.Vectors, keys = Some(("lists", Keys.KeyCol)), fps = Some("fps"),
     deletes = Seq("fps"), pressure = Seq("lists", "fps"),
@@ -123,7 +176,10 @@ private[graft] object IndexFamily {
     erase = Some((c, column, del) => c.deleteAnnLists(column, del)),
     drift = Some((c, column) => c.annDrift(column)))
 
-  val BinarySketch: IndexFamily = IndexFamily("binary", "_bin", "params",
+  val BinarySketch: IndexFamily = IndexFamily("binary", "_bin", "params", Map(
+      "sketch" -> schema(Keys.KeyCol -> LongType, "words" -> ArrayType(LongType)),
+      "fps" -> KeyFp,
+      "params" -> schema("dim" -> IntegerType, "n_words" -> IntegerType)),
     fileSwap = Seq("sketch", "fps"), upstream = Upstream.Vectors,
     keys = Some(("sketch", Keys.KeyCol)), fps = Some("fps"),
     deletes = Seq("sketch", "fps"), pressure = Seq("sketch", "fps"),
@@ -132,8 +188,13 @@ private[graft] object IndexFamily {
     compact = call("compactBinarySketch")((c, column, _) => c.compactBinarySketch(column)))
 
   /** Aggregate artifacts trained from the corpus, not keyed by rows. */
-  val Tokenizer: IndexFamily = IndexFamily("tokenizer", "_tok", "merges")
-  val ClassifierModel: IndexFamily = IndexFamily("classifier", "_clf", "weights")
+  val Tokenizer: IndexFamily = IndexFamily("tokenizer", "_tok", "merges", Map(
+    "merges" -> schema("rank" -> LongType, "sym_a" -> StringType, "sym_b" -> StringType,
+      "cnt" -> LongType)))
+  val ClassifierModel: IndexFamily = IndexFamily("classifier", "_clf", "weights", Map(
+    "weights" -> schema("j" -> LongType, "w" -> DoubleType),
+    "params" -> schema("dim" -> IntegerType, "iters" -> IntegerType, "lr" -> DoubleType,
+      "n_pos" -> LongType)))
 
   /** Dependency order: the vector index repairs first (the
     * vector-upstream families read the fingerprints its re-embed

@@ -38,7 +38,8 @@ import scala.jdk.CollectionConverters._
   *  - the flat ANN lists' segments, one per file, by `list_id`;
   *  - the data files' `(_key -> column)` row groups, chosen by their
   *    footer key ranges;
-  *  - small tables (ANN centroids/params/codebooks, keyword stats), whole;
+  *  - small tables (index params, ANN centroids/codebooks, keyword stats,
+  *    classifier weights), whole;
   *  - every file's footer facts (Spark schema, row-group key ranges and
   *    sizes), which size a load before it happens.
   *
@@ -331,7 +332,7 @@ private[graft] object ServingCache {
       .map(vectorEstimate(_, layout.field.name, layout.bytesPerDim)).sum).sum
     if (!fits(estimate, Runtime.getRuntime.maxMemory)) throw new Unsupported("over budget")
     files.map(f => lru(("vectors", f, layout.variant)) {
-      val Array(keys, raw) = decode(conf, f, Seq(StructField(Keys.KeyCol, LongType), layout.field))
+      val Array(keys, raw) = decode(conf, f, Seq(layout.schema(Keys.KeyCol), layout.field))
       val vecs = raw.map(v =>
         if (!layout.quantized) widen(v)
         else if (v == null) null
@@ -354,8 +355,8 @@ private[graft] object ServingCache {
       .filter { case (_, ft) => ft.groups.exists(g => probes.exists(p => g.covers("list_id", p))) }
       .flatMap { case (f, _) =>
         val byList = lru(("ann", f)) {
-          val Array(keys, vecs, lists) = decode(conf, f, Seq(StructField(Keys.KeyCol, LongType),
-            StructField("embedding", ArrayType(FloatType)), StructField("list_id", IntegerType)))
+          val Array(keys, vecs, lists) = decode(conf, f,
+            IndexFamily.AnnIndex.schema("lists", Seq(Keys.KeyCol, "embedding", "list_id")).fields)
           val segs = lists.indices.groupBy(lists(_)).collect {
             case (l: java.lang.Integer, rows) =>
               l.intValue -> toVectors(rows.map(keys).toArray, rows.map(i => widen(vecs(i))).toArray)

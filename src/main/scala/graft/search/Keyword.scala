@@ -2,7 +2,8 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+
+import graft.core.IndexFamily.KeywordIndex
 
 /** Keyword (BM25) search and keyword+vector hybrid rank fusion.
   *
@@ -82,20 +83,30 @@ object Keyword {
     (postings, doclen, stats)
   }
 
-  /** Score postings restricted to `queryTerms` and return the top-k
-    * `(key, score)` page, ordered by raw score (rounding, if the caller
-    * wants it, applies to survivors only — the q_topk_cosine discipline).
-    *
-    * The per-key sum folds contributions in token order via the
-    * sort_array/aggregate idiom so the f64 total is run-deterministic.
-    *
-    * `requireAll = true` selects conjunctive (AND) semantics: only
-    * documents matching EVERY query term survive to the page. The
-    * membership test rides the same per-key aggregate (postings are
-    * unique per (tok, key), so the group's row count IS its distinct
-    * matched-term count) — query cost stays O(query-term postings),
-    * the filter adds no extra pass or shuffle.
+  /** Per-key BM25 of the postings of the (lowercased, distinct) terms
+    * `qt`: `(key, score, __nt)`, `__nt` the number of terms the key
+    * matched (postings are unique per (tok, key), so the group's row
+    * count IS its distinct matched-term count). The per-key sum folds
+    * contributions in token order via the sort_array/aggregate idiom so
+    * the f64 total is run-deterministic. `df` counts the matched postings
+    * only — corpus-wide df per query term.
     */
+  private def bm25PerKey(postings: DataFrame, doclen: DataFrame, stats: DataFrame,
+                         qt: Seq[String], k1: Double, b: Double): DataFrame = {
+    require(qt.nonEmpty, "bm25 requires at least one query term")
+    val tf = postings.filter(col("tok").isin(qt: _*))
+    val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+    tf.join(broadcast(dfreq), "tok")
+      .join(doclen, "key")
+      .crossJoin(broadcast(stats))
+      .withColumn("c", bm25Contrib(col("tf"), col("df"), col("dl"),
+        col("n_docs"), col("avgdl"), k1, b))
+      .groupBy(col("key")).agg(
+        aggregate(sort_array(collect_list(struct(col("tok"), col("c")))),
+          lit(0.0), (acc, x) => acc + x.getField("c")).as("score"),
+        count(lit(1)).as("__nt"))
+  }
+
   /** Keyset (search_after) cursor: keep only rows strictly after
     * `(score, key)` in the page order `(score DESC, key ASC)`. Scores
     * compare RAW (the ordered-fold f64 is deterministic, so the cursor
@@ -110,6 +121,16 @@ object Keyword {
       scoreCol < s || (scoreCol === s && keyCol > key)
     }
 
+  /** Score postings restricted to `queryTerms` and return the top-k
+    * `(key, score)` page, ordered by raw score (rounding, if the caller
+    * wants it, applies to survivors only — the q_topk_cosine discipline);
+    * scores are [[bm25PerKey]]'s.
+    *
+    * `requireAll = true` selects conjunctive (AND) semantics: only
+    * documents matching EVERY query term survive to the page. The
+    * membership test rides the same per-key aggregate — query cost stays
+    * O(query-term postings), the filter adds no extra pass or shuffle.
+    */
   def bm25FromTables(postings: DataFrame, doclen: DataFrame, stats: DataFrame,
                      queryTerms: Seq[String], k: Int,
                      k1: Double = DefaultK1, b: Double = DefaultB,
@@ -117,23 +138,10 @@ object Keyword {
                      after: Option[(Double, Long)] = None,
                      mustNot: Seq[String] = Nil): DataFrame = {
     val qt = queryTerms.map(_.toLowerCase).distinct
-    require(qt.nonEmpty, "bm25 requires at least one query term")
     val neg = mustNot.map(_.toLowerCase).distinct
     require(qt.intersect(neg).isEmpty,
       s"terms ${qt.intersect(neg).mkString(", ")} are both required and excluded")
-    val tf = postings.filter(col("tok").isin(qt: _*))
-    // df over the matched postings only — corpus-wide df per query term
-    val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val scored = tf
-      .join(broadcast(dfreq), "tok")
-      .join(doclen, "key")
-      .crossJoin(broadcast(stats))
-      .withColumn("c", bm25Contrib(col("tf"), col("df"), col("dl"),
-        col("n_docs"), col("avgdl"), k1, b))
-    val agg = scored.groupBy(col("key")).agg(
-      aggregate(sort_array(collect_list(struct(col("tok"), col("c")))),
-        lit(0.0), (acc, x) => acc + x.getField("c")).as("score"),
-      count(lit(1)).as("__nt"))
+    val agg = bm25PerKey(postings, doclen, stats, qt, k1, b)
     val kept = if (requireAll) agg.filter(col("__nt") === qt.size) else agg
     // boolean NOT: drop documents carrying ANY excluded term. An
     // anti-join against the excluded terms' postings — cost is
@@ -298,20 +306,13 @@ object Keyword {
       .repartition(nBuckets, col("bucket"))
       .write.partitionBy("bucket").mode("overwrite")
       .parquet(s"$dir/postings")
-    // empty/token-less corpus: the partitioned write leaves no data
-    // files, so the read-back cannot infer a schema — every doc then
-    // takes the dl = 0 coalesce branch below, as before
-    val doclen0 =
-      try spark.read.parquet(s"$dir/postings")
-        .groupBy(col("key")).agg(sum(col("tf")).as("dl"))
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        docs.select(col(idCol).as("key")).limit(0)
-          .withColumn("dl", lit(0L))
-      }
+    // an empty/token-less corpus writes no postings file: the read-back
+    // is empty and every doc takes the dl = 0 coalesce branch below
+    val doclen0 = read(spark, dir, "postings")
+      .groupBy(col("key")).agg(sum(col("tf")).as("dl"))
     doclenRows(docFps(docs, idCol, textCol), doclen0)
       .write.mode("overwrite").parquet(s"$dir/doclen")
-    writeStats(spark, dir, spark.read.parquet(s"$dir/doclen"), nBuckets,
-      analyzer.id)
+    writeStats(spark, dir, read(spark, dir, "doclen"), nBuckets, analyzer.id)
   }
 
   /** `(key, fp)` for every document — md5 over the NULL-flattened text,
@@ -346,20 +347,13 @@ object Keyword {
       .write.mode("overwrite").parquet(s"$dir/stats")
   }
 
-  // The stored layouts of the index tables. Query-path reads declare
-  // them instead of inferring them (inference costs a footer job per
-  // read); columns missing from older files read as null, as a schema
-  // merge would. Keys read as long — the collection's `_key`; an index
-  // built over narrower integer keys widens on read.
-  private[graft] val StatsSchema = StructType(Seq(
-    StructField("n_docs", LongType), StructField("sum_dl", LongType),
-    StructField("n_buckets", IntegerType), StructField("analyzer", StringType)))
-  private val DoclenSchema = StructType(Seq(
-    StructField("key", LongType), StructField("dl", LongType),
-    StructField("fp", StringType), StructField("cnt", IntegerType)))
-  private val PostingsSchema = StructType(Seq(
-    StructField("tok", StringType), StructField("key", LongType),
-    StructField("tf", LongType), StructField("bucket", IntegerType)))
+  /** Table `sub` of the index at `dir` in its declared schema
+    * ([[graft.core.IndexFamily.KeywordIndex]]). Keys read as long — the
+    * collection's `_key`; an index built over narrower integer keys
+    * widens on read.
+    */
+  private def read(spark: SparkSession, dir: String, sub: String): DataFrame =
+    KeywordIndex.read(spark, sub, Seq(s"$dir/$sub"))
 
   /** An index's corpus stats: the summed rows of its `stats` log, with
     * the bucket count and analyzer id every row carries (indexes
@@ -368,7 +362,7 @@ object Keyword {
   private[graft] final case class Stats(nDocs: Long, sumDl: Long, nBuckets: Int,
                                         analyzer: String)
 
-  /** [[Stats]] of `stats` rows read in [[StatsSchema]]. */
+  /** [[Stats]] of `stats` rows read in their declared schema. */
   private[graft] def sumStats(rows: Seq[Row]): Stats =
     Stats(rows.map(_.getLong(0)).sum, rows.map(_.getLong(1)).sum, rows.head.getInt(2),
       Option(rows.head.getString(3)).getOrElse("ws"))
@@ -379,7 +373,7 @@ object Keyword {
     * written under different token rules.
     */
   def stats(spark: SparkSession, dir: String): Stats =
-    sumStats(spark.read.schema(StatsSchema).parquet(s"$dir/stats").collect().toSeq)
+    sumStats(read(spark, dir, "stats").collect().toSeq)
 
   /** Net view of the postings log: per-(tok, key) summed `tf`, dropped
     * when the tombstones cancel it. Pure aggregation — exact integers,
@@ -404,13 +398,12 @@ object Keyword {
 
   /** Live `(key, fp)` pairs from the doclen log — the repair pass's
     * staleness baseline. A tombstone carries its row's original fp, so
-    * grouping by (key, fp) cancels replaced fingerprints exactly.
+    * grouping by (key, fp) cancels replaced fingerprints exactly; rows
+    * written before the `fp` column read it as null.
     */
   private def liveFpsOf(log: DataFrame): DataFrame = {
-    val fp = if (log.schema.fieldNames.contains("fp")) col("fp")
-             else lit(null).cast("string").as("fp")
     val cnt = coalesce(col("cnt"), lit(1)).as("c")
-    log.select(col("key"), fp.as("fp"), cnt)
+    log.select(col("key"), col("fp"), cnt)
       .groupBy(col("key"), col("fp"))
       .agg(sum(col("c")).as("cnt")).filter(col("cnt") > 0)
       .select(col("key"), col("fp"))
@@ -422,7 +415,7 @@ object Keyword {
     * until [[compactIndexTo]] folds the log. Counting only.
     */
   def deadFraction(spark: SparkSession, dir: String): Double = {
-    val log = spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen")
+    val log = read(spark, dir, "doclen")
     val gross = log.count()
     if (gross == 0L) 0.0
     else {
@@ -456,7 +449,7 @@ object Keyword {
     postings.write.partitionBy("bucket").parquet(s"$stage/postings")
     doclen.write.parquet(s"$stage/doclen")
     // exact integer deltas, read back from the staged files themselves
-    val d = spark.read.schema(DoclenSchema).parquet(s"$stage/doclen")
+    val d = read(spark, stage, "doclen")
       .agg(count(when(col("dl") > 0, 1)) - count(when(col("dl") < 0, 1)),
         coalesce(sum(col("dl")), lit(0L))).head()
     import spark.implicits._
@@ -494,7 +487,7 @@ object Keyword {
   private def tombstones(dir: String, doclenLog: DataFrame,
                          keys: DataFrame): (DataFrame, DataFrame) = {
     val range = keys.agg(min(col("key")), max(col("key"))).head()
-    val stored = keys.sparkSession.read.parquet(s"$dir/postings")
+    val stored = read(keys.sparkSession, dir, "postings")
       .filter(col("key").between(range.get(0), range.get(1)))
       .join(keys, Seq("key"), "left_semi")
     val postings = netPostingsOf(stored)
@@ -528,7 +521,7 @@ object Keyword {
                                  idCol: String = "doc_id",
                                  textCol: String = "text"): Long = {
     val spark = docs.sparkSession
-    val doclenLog = spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen")
+    val doclenLog = read(spark, dir, "doclen")
     val cur = docs.select(col(idCol).as("key"),
       coalesce(col(textCol).cast("string"), lit("")).as("__txt"))
       .withColumn("__fp", md5(col("__txt")))
@@ -557,7 +550,7 @@ object Keyword {
     * commit in flight only adds files.
     */
   def liveFps(spark: SparkSession, dir: String): DataFrame =
-    liveFpsOf(spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen"))
+    liveFpsOf(read(spark, dir, "doclen"))
 
   /** Live `(tok, key, tf)` postings of a stored index, net of tombstones
     * — the vocabulary source for fuzzy suggestion
@@ -566,7 +559,7 @@ object Keyword {
     * ratio. Reads every bucket (vocabulary-wide by definition).
     */
   def livePostings(spark: SparkSession, dir: String): DataFrame =
-    netPostingsOf(spark.read.parquet(s"$dir/postings"))
+    netPostingsOf(read(spark, dir, "postings"))
       .select(col("tok"), col("key"), col("tf"))
 
   /** Stage the deletion of `keys` from the index at `dir` — the
@@ -578,7 +571,7 @@ object Keyword {
   private[graft] def deleteFromIndex(keys: DataFrame, dir: String, stage: String,
                                      st: Stats): Long = {
     val spark = keys.sparkSession
-    val doclenLog = spark.read.option("mergeSchema", "true").parquet(s"$dir/doclen")
+    val doclenLog = read(spark, dir, "doclen")
     val delKeys = liveDoclenOf(doclenLog)
       .join(keys.select(col(keys.columns.head).as("key")), Seq("key"), "left_semi")
       .select(col("key")).localCheckpoint(true)
@@ -598,10 +591,10 @@ object Keyword {
     */
   def compactIndexTo(spark: SparkSession, srcDir: String, dstDir: String): Unit = {
     val st = stats(spark, srcDir)
-    netPostingsOf(spark.read.parquet(s"$srcDir/postings"))
+    netPostingsOf(read(spark, srcDir, "postings"))
       .select(col("tok"), col("key"), col("tf"), col("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(s"$dstDir/postings")
-    val log = spark.read.option("mergeSchema", "true").parquet(s"$srcDir/doclen")
+    val log = read(spark, srcDir, "doclen")
     val folded = liveDoclenOf(log)
       .join(liveFpsOf(log), Seq("key"), "left_outer")
       .select(col("key"), col("dl"), col("fp"), lit(1).as("cnt"))
@@ -652,11 +645,12 @@ object Keyword {
       .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
     val postingsLog =
       if (bucketDirs.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), PostingsSchema)
-      else spark.read.schema(PostingsSchema)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          KeywordIndex.schema("postings"))
+      else spark.read.schema(KeywordIndex.schema("postings"))
         .option("basePath", s"$dir/postings").parquet(bucketDirs: _*)
     val postings = netPostingsOf(postingsLog).select(col("tok"), col("key"), col("tf"))
-    val doclen = liveDoclenOf(spark.read.schema(DoclenSchema).parquet(s"$dir/doclen"))
+    val doclen = liveDoclenOf(read(spark, dir, "doclen"))
       .select(col("key"), col("dl"))
     bm25FromTables(postings, doclen, statsDf, qt, k, k1, b, requireAll, after,
       neg)
@@ -733,19 +727,8 @@ object Keyword {
       lit(width))
   }
 
-  // --- reciprocal-rank fusion --------------------------------------------
+  // --- percolation -----------------------------------------------------------
 
-  /** Fuse ranked lists by RRF: score(d) = sum over lists of
-    * 1 / (c + rank_list(d)), missing entries contributing 0. Each input
-    * is a ranked page `(keyCol, score)` ordered by (score desc, key) —
-    * the shape `bm25TopK` / `Search.topK` return; ranks are re-derived
-    * from that order so fusion never trusts row order across a shuffle.
-    *
-    * Inputs are top-k pages (driver-bounded, k <= ~100), so the
-    * rank window and the fold-up run on k-sized frames — the single
-    * partition window is deliberate and cheap here, not a scale hazard.
-    * The per-key sum folds in list-index order (deterministic f64).
-    */
   /** Reverse search (percolation): match a batch of documents against a
     * standing table of saved keyword queries — the alerting/routing shape
     * (Elasticsearch calls it the percolator): "which saved searches does
@@ -850,6 +833,19 @@ object Keyword {
       .select(col("key"), col("query_id"))
   }
 
+  // --- reciprocal-rank fusion --------------------------------------------
+
+  /** Fuse ranked lists by RRF: score(d) = sum over lists of
+    * 1 / (c + rank_list(d)), missing entries contributing 0. Each input
+    * is a ranked page `(keyCol, score)` ordered by (score desc, key) —
+    * the shape `bm25TopK` / `Search.topK` return; ranks are re-derived
+    * from that order so fusion never trusts row order across a shuffle.
+    *
+    * Inputs are top-k pages (driver-bounded, k <= ~100), so the
+    * rank window and the fold-up run on k-sized frames — the single
+    * partition window is deliberate and cheap here, not a scale hazard.
+    * The per-key sum folds in list-index order (deterministic f64).
+    */
   def rrfFuse(lists: Seq[DataFrame], keyCol: String, k: Int,
               c: Int = DefaultRrfC): DataFrame = {
     require(lists.nonEmpty, "rrfFuse requires at least one ranked list")
@@ -910,18 +906,8 @@ object Keyword {
                  k1: Double = DefaultK1, b: Double = DefaultB,
                  analyzer: Analyzer = Analyzer.Whitespace): DataFrame = {
     val (postings, doclen, stats) = corpusTables(docs, idCol, textCol, analyzer)
-    val qt = queryTerms.map(_.toLowerCase).distinct
-    require(qt.nonEmpty, "bm25 requires at least one query term")
-    val tf = postings.filter(col("tok").isin(qt: _*))
-    val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfreq), "tok")
-      .join(doclen, "key")
-      .crossJoin(broadcast(stats))
-      .withColumn("c", bm25Contrib(col("tf"), col("df"), col("dl"),
-        col("n_docs"), col("avgdl"), k1, b))
-      .groupBy(col("key")).agg(
-        aggregate(sort_array(collect_list(struct(col("tok"), col("c")))),
-          lit(0.0), (acc, x) => acc + x.getField("c")).as("score"))
+    bm25PerKey(postings, doclen, stats, queryTerms.map(_.toLowerCase).distinct, k1, b)
+      .select(col("key"), col("score"))
   }
 
   /** Diversified results: the top `kPerFacet` matches WITHIN each value

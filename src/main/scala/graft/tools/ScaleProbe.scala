@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.graftops.TaskIo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,26 +24,14 @@ import graft.embed.HashingEmbedder
   * fps-sidecar rewrite would have been caught.
   *
   * Measurement is task-level `inputMetrics.bytesRead` /
-  * `outputMetrics.bytesWritten` summed by a listener, with the listener
-  * queue drained before every snapshot. Builds (import/embed/index
-  * builds) are reported too as context rows — those are O(corpus) by
-  * design and SHOULD scale with the factor.
+  * `outputMetrics.bytesWritten` summed by a listener ([[TaskIo]]), with
+  * the listener queue drained before every snapshot. Builds
+  * (import/embed/index builds) are reported too as context rows — those
+  * are O(corpus) by design and SHOULD scale with the factor.
   *
   * Usage: runMain graft.tools.ScaleProbe [sfDir] [factor]
   */
 object ScaleProbe {
-
-  private final class IoListener extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val written = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.inputMetrics.bytesRead)
-        written.addAndGet(m.outputMetrics.bytesWritten)
-      }
-    }
-  }
 
   final case class Step(name: String, readB: Long, writtenB: Long, ms: Long)
 
@@ -59,8 +47,7 @@ object ScaleProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val listener = new IoListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = TaskIo.attach(spark.sparkContext)
 
     val (small, smallBak) = runLifecycle(spark, listener, sfDir, 1)
     val (large, largeBak) = runLifecycle(spark, listener, sfDir, factor)
@@ -135,7 +122,7 @@ object ScaleProbe {
     * per-step I/O. The correction batch is the SAME 10 keys at every
     * factor — the thing whose cost must not scale with the corpus.
     */
-  private def runLifecycle(spark: SparkSession, io: IoListener, sfDir: String,
+  private def runLifecycle(spark: SparkSession, io: TaskIo, sfDir: String,
       factor: Int): (Seq[Step], (graft.core.Backup.Report, graft.core.Backup.Report)) = {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory(s"graft_probe_${factor}x").toString
@@ -151,14 +138,10 @@ object ScaleProbe {
 
     val steps = Seq.newBuilder[Step]
     def probe[T](name: String)(op: => T): T = {
-      org.apache.spark.graftops.ListenerBridge
-        .waitUntilListenerEmpty(spark.sparkContext)
-      val (r0, w0) = (io.read.get(), io.written.get())
+      val (r0, w0) = (io.bytesRead(), io.bytesWritten())
       val t0 = System.nanoTime()
       val out = op
-      org.apache.spark.graftops.ListenerBridge
-        .waitUntilListenerEmpty(spark.sparkContext)
-      steps += Step(name, io.read.get() - r0, io.written.get() - w0,
+      steps += Step(name, io.bytesRead() - r0, io.bytesWritten() - w0,
         (System.nanoTime() - t0) / 1000000)
       out
     }

@@ -632,10 +632,8 @@ class ChunkedIndexSpec extends SparkSpec {
     val newDoc = "# biology section\n" +
       Array.fill(30)("ribosome translation messenger protein").mkString(" ")
     c.upsert(Seq((newDoc, 1L)).toDF("text", "_key"))
-    assert(c.reembedChanged("text", emb, chunkTokens = Some(32),
-      overlapTokens = 4) == 1, "one changed document")
-    assert(c.reembedChanged("text", emb, chunkTokens = Some(32),
-      overlapTokens = 4) == 0, "repair is idempotent")
+    assert(c.reembedChanged("text", emb) == 1, "one changed document")
+    assert(c.reembedChanged("text", emb) == 0, "repair is idempotent")
     val hits2 = c.search("text", "ribosome translation messenger protein", 1, emb).head()
     assert(hits2.getLong(1) == 1L)
     val expected2 = graft.functions.Chunker.chunk(newDoc, cfg)

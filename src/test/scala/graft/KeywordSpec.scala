@@ -361,7 +361,7 @@ class KeywordSpec extends SparkSpec {
     c.importDf(Seq("alpha beta gamma", "beta delta", "gamma gamma echo")
       .toDF("text"))
     // refresh on an ABSENT index builds it outright
-    assert(c.refreshKeywordIndex("text", nBuckets = 8) == 3L)
+    assert(c.refreshKeywordIndex("text") == 3L)
     val page0 = c.searchKeyword("text", "gamma beta", 3)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
     assert(page0.nonEmpty)
@@ -837,6 +837,26 @@ class KeywordSpec extends SparkSpec {
     assert(e.getMessage.contains("non-excluded"))
     // a lone '-' is a term, not an exclusion marker (no crash)
     assert(c.searchKeyword("text", "spark -", 10).count() >= 1)
+  }
+
+  test("searchHybrid's keyword side honours '-term' exclusions") {
+    import graft.core.{Catalog, CollectionConfig}
+    val root = java.nio.file.Files.createTempDirectory("graft_hyneg").toString
+    val c = new Catalog(spark, root).create(CollectionConfig(name = "hn"))
+    c.importDf((1 to 30).map(i =>
+      s"apple ${if (i % 2 == 1) "banana" else "cherry"} filler$i").toDF("text"))
+    val emb = new graft.embed.HashingEmbedder(dim = 16)
+    c.embedColumn("text", emb)
+    c.buildKeywordIndex("text")
+    val query = "apple -banana"
+    val dense = c.search("text", query, 6, emb).collect().map(_.getLong(1)).toSet
+    val keywordOnly = c.searchHybrid("text", query, 6, emb).collect()
+      .filterNot(r => dense(r.getLong(1)))
+    assert(keywordOnly.nonEmpty, "the fused page holds keyword-side hits")
+    assert(keywordOnly.forall(!_.getString(0).contains("banana")),
+      keywordOnly.map(_.getString(0)).toSeq)
+    // a query whose every word is excluded serves the dense page alone
+    assert(c.searchHybrid("text", "-banana", 6, emb).count() == 6)
   }
 
   test("fuseWeighted: hand-computed min-max fusion, constant page, absent entries") {

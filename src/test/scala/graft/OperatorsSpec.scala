@@ -1821,9 +1821,10 @@ class EmbedStreamSpec extends SparkSpec {
     val nBatch = cb.embedColumnChunked("text", emb, maxTokens = 32, overlapTokens = 4)
 
     val cs = cat.create(graft.core.CollectionConfig(name = "chs"))
+    // records the geometry the stream embeds at; no row to embed yet
+    assert(cs.embedColumnChunked("text", emb, maxTokens = 32, overlapTokens = 4) == 0)
     cs.importDf(docs.toDF("text"))
-    val q = cs.embedColumnStream("text", emb, s"$root/_ckpt",
-      chunkTokens = Some(32), overlapTokens = 4)
+    val q = cs.embedColumnStream("text", emb, s"$root/_ckpt")
     try q.processAllAvailable() finally q.stop()
 
     assert(cs.indexedCount("text") == nBatch,

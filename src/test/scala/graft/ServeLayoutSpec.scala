@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.col
 
-import graft.core.{Catalog, Collection, CollectionConfig}
+import graft.core.{Catalog, Collection, CollectionConfig, IndexFamily}
 import graft.embed.HashingEmbedder
 import graft.search.Keyword
 
@@ -129,6 +129,82 @@ class ServeLayoutSpec extends SparkSpec {
     assert(c.searchKeyword("text", "apple harbor", 10).collect().toSeq == before)
   }
 
+  test("every family table a build writes is stored in its declared schema") {
+    val c = collection("declared")
+    c.embedColumn("text", emb)
+    c.buildKeywordIndex("text", nBuckets = 16)
+    c.buildDedupIndex("text")
+    c.buildNoveltyStore("text")
+    c.buildAnnIndex("text", nLists = 4, sampleN = 80)
+    c.buildBinarySketch("text")
+    c.trainTokenizer("text", numMerges = 20)
+    c.trainClassifier("text", col("text").contains("apple"), dim = 8)
+    // (name, type) pairs; nullability may be narrower than declared
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => f.name -> f.dataType.simpleString).toSet
+    def storedTables = for {
+      f <- IndexFamily.all
+      (sub, declared) <- f.tables.toSeq
+      dir = new java.io.File(c.indexDir("text") + f.suffix, sub).getPath
+      if new java.io.File(dir).exists
+    } yield {
+      val stored = fields(spark.read.parquet(dir).schema)
+      assert(stored.subsetOf(fields(declared)), s"${f.structure}/$sub: $stored vs $declared")
+      s"${f.structure}/$sub"
+    }
+    val flat = storedTables
+    assert(IndexFamily.all.flatMap(f => f.tables.keys.map(s => s"${f.structure}/$s"))
+      .diff(flat) == Seq("ann/codebooks"), flat)
+    c.buildAnnIndex("text", nLists = 4, sampleN = 80, pqM = 4)
+    assert(storedTables.contains("ann/codebooks"))
+  }
+
+  test("stored params and an ANN sidecar without list_ids read and repair") {
+    val c = collection("legacyside")
+    c.embedColumn("text", emb)
+    val p = graft.dedup.Dedup.MinHashParams(numHashes = 32, bands = 8, shingleSize = 2, seed = 7L)
+    c.buildDedupIndex("text", p)
+    c.buildNoveltyStore("text", n = 2)
+    c.buildBinarySketch("text")
+    c.buildAnnIndex("text", nLists = 4, sampleN = 80)
+    // an ANN fps sidecar written before the list_ids column
+    val fps = s"${c.annIndexDir("text")}/fps"
+    val legacy = spark.read.parquet(fps).drop("list_ids").localCheckpoint()
+    legacy.write.mode("overwrite").parquet(fps)
+    assert(!spark.read.parquet(fps).columns.contains("list_ids"))
+    // the refreshes read the stored params (the dedup ones are not the
+    // defaults), the repairs plan from the legacy sidecar
+    c.appendDf(Seq("apple harbor doc81", "jungle echo doc82").toDF("text"))
+    c.embedColumn("text", emb)
+    assert(c.refreshDedupIndex("text") == 2L)
+    assert(c.refreshNoveltyStore("text") == 2L)
+    assert(c.refreshBinarySketch("text") == 2L)
+    assert(c.refreshAnnIndex("text") == 2L)
+    c.upsert(Seq(("island garden rewritten", 5L), ("falcon delta rewritten", 40L))
+      .toDF("text", "_key"))
+    c.repairIndexes("text", emb)
+    assert(c.indexStatus("text").collect().forall(r =>
+      r.getLong(1) == 0L && r.getLong(2) == 0L && r.getLong(3) == 0L),
+      c.indexStatus("text").collect().toSeq)
+    val twin = new Catalog(spark, c.rootDir).create(CollectionConfig(name = "legacytwin"))
+    twin.importDf(c.df)
+    twin.embedColumn("text", emb)
+    twin.buildDedupIndex("text", p)
+    twin.buildBinarySketch("text")
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
+    def table(c: Collection, dir: String) = spark.read.parquet(dir)
+    assert(rows(table(c, s"${c.dedupIndexDir("text")}/bands")) ==
+      rows(table(twin, s"${twin.dedupIndexDir("text")}/bands")))
+    assert(rows(table(c, s"${c.binaryIndexDir("text")}/sketch").select("_key", "words")) ==
+      rows(table(twin, s"${twin.binaryIndexDir("text")}/sketch").select("_key", "words")))
+    // one lists row per key: the repairs left no old-list copy behind
+    val lists = table(c, s"${c.annIndexDir("text")}/lists")
+    assert(lists.count() == c.count() && lists.select("_key").distinct().count() == c.count())
+    assert(c.deleteKeys(Seq(5L, 81L)) == 2L)
+    assert(table(c, s"${c.annIndexDir("text")}/lists")
+      .filter(col("_key").isin(5L, 81L)).isEmpty)
+  }
+
   test("a query term whose bucket has no directory is skipped, not an error") {
     val c = collection("nobucket")
     c.buildKeywordIndex("text", nBuckets = 64)
@@ -152,6 +228,17 @@ class ServeLayoutSpec extends SparkSpec {
       .flatten.filter(_.contains("/postings")).distinct
     assert(roots.size == 1 &&
       roots.head.endsWith(s"/postings/bucket=${Keyword.tokenBucket("apple", 64)}"), roots)
+  }
+
+  test("a keyword index over token-less text builds empty and serves empty pages") {
+    val root = java.nio.file.Files.createTempDirectory("graft_serve_layout").toString
+    val c = new Catalog(spark, root).create(CollectionConfig(name = "notokens"))
+    c.importDf(Seq("", "   ").toDF("text"))
+    c.buildKeywordIndex("text")
+    assert(Keyword.stats(spark, c.keywordIndexDir("text")).nDocs == 0L)
+    assert(c.searchKeyword("text", "apple", 10).collect().isEmpty)
+    assert(c.indexStatus("text").filter(col("structure") === "keyword")
+      .select("missing", "stale", "orphaned").head().toSeq == Seq(0L, 0L, 0L))
   }
 
   test("a fully erased index serves empty pages") {
