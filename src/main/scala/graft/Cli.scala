@@ -693,19 +693,9 @@ object Cli {
             if (fetchK < 0) fail("--fetch-k must be >= 0")
             c.searchBinary(column, query, limit, embedder, fetchK)
           case "late" =>
-            val mt = intFlag("chunk-max-tokens",
-              flags.getOrElse("chunk-max-tokens", "512"))
-            if (mt < 1) fail("--chunk-max-tokens must be >= 1")
-            // an UNSET overlap clamps to the chunk size instead of
-            // failing small --chunk-max-tokens on the 50-token default
-            val ov = flags.get("chunk-overlap-tokens")
-              .map(intFlag("chunk-overlap-tokens", _))
-              .getOrElse(math.min(50, mt - 1))
-            if (ov < 0 || ov >= mt)
-              fail("--chunk-overlap-tokens must be in [0, chunk-max-tokens)")
             val np = intFlag("n-probe", flags.getOrElse("n-probe", "0"))
             if (np < 0) fail("--n-probe must be >= 0 (0 = exact late scoring)")
-            c.searchLate(column, query, limit, embedder, mt, ov, np)
+            c.searchLate(column, query, limit, embedder, np)
           case other => fail(s"--mode must be vector|keyword|fuzzy|hybrid|ann|binary|late, got '$other'")
         }
         page.show(limit, truncate = 80)
@@ -895,8 +885,8 @@ object Cli {
       |            # keyword/hybrid use the BM25 index when built
       |            # (buildKeywordIndex), else scan; ann probes the IVF
       |            # index when built (buildAnnIndex), else exact;
-      |            # late = ColBERT MaxSim over a chunked index (pass the
-      |            # index's --chunk-max-tokens/--chunk-overlap-tokens)
+      |            # late = ColBERT MaxSim over a chunked index (the
+      |            # query chunks at the index's recorded geometry)
 
       |  serve    [--port 7898] [--host 127.0.0.1]
       |  list

@@ -59,20 +59,20 @@ object Backup {
   case class Report(generation: Int, full: Boolean, totalFiles: Int,
                     copiedFiles: Int, copiedBytes: Long, reusedFiles: Int)
 
-  /** In-flight swap/lease artifacts that must never be captured: a healed
-    * quiescent collection has none, but the filter keeps a backup taken
-    * between heal and list honest, and keeps `_lease`/`_SUCCESS` out.
-    * The prefix/suffix tests cannot swallow real user content because
-    * [[Identifiers.validate]] rejects column/collection names that start
-    * with '_' or end with a reserved operational suffix — an index
-    * directory can therefore never look like an artifact.
+  /** In-flight commit/lease artifacts and an earlier build's leftovers
+    * ([[Identifiers.OperationalSuffixes]]) that must never be captured: a
+    * healed quiescent collection has no in-flight ones, but the filter
+    * keeps a backup taken between heal and list honest, and keeps
+    * `_lease`/`_SUCCESS` out. The prefix/suffix tests cannot swallow real
+    * user content because [[Identifiers.validate]] rejects
+    * column/collection names that start with '_' or end with a reserved
+    * operational suffix — an index directory can therefore never look
+    * like an artifact.
     */
   private[core] def include(relPath: String): Boolean =
     relPath.split('/').forall { c =>
       !c.startsWith("_") && !c.startsWith(".") &&
-        !c.endsWith("_precompact") && !c.endsWith("_compacting") &&
-        !c.endsWith("_staging") && !c.endsWith("_swapjournal") &&
-        !c.endsWith("_swapjournal_tmp") && !c.endsWith("_import")
+        !Identifiers.OperationalSuffixes.exists(c.endsWith)
     }
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =

@@ -81,17 +81,14 @@ class Collection private[core] (
   private def fs: FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Serializes data-directory WRITERS (append/import/compact) against
-    * each other. [[compact]] holds it across its whole rewrite+swap — not
-    * just the swap — because an append that lands between the rewrite and
-    * the swap would be staged to `_precompact` by the swap and then
-    * deleted (silent row loss; the roll-forward recovery would do the
-    * same after a crash). Readers stay lock-free apart from the brief
-    * rename window ([[swapMonitor]]). Cross-process (and cross-instance)
-    * safety comes from the [[WriteLease]] file beneath the JVM lock: a
-    * foreign writer refuses loudly instead of interleaving, a crashed
-    * holder's lease expires, and the commit points fence with
-    * [[WriteLease.checkHeld]].
+  /** Serializes the collection's WRITERS against each other: every write
+    * holds it across its whole stage-and-commit, so no two writes ever
+    * interleave their reads of a table with their commits to it. Readers
+    * stay lock-free apart from the commit's brief monitor window
+    * ([[swapMonitor]]). Cross-process (and cross-instance) safety comes
+    * from the [[WriteLease]] file beneath the JVM lock: a foreign writer
+    * refuses loudly instead of interleaving, a crashed holder's lease
+    * expires, and every commit fences with [[WriteLease.checkHeld]].
     */
   private[graft] val writeLock =
     new WriteLease(() => fs, new Path(dir, "_lease"), config.name)
@@ -102,183 +99,179 @@ class Collection private[core] (
     * data; rows from older files read the new columns as null.
     */
   def df: DataFrame = {
-    recoverCompaction()
     recoverFileSwap(dataDir)
     spark.read.option("mergeSchema", "true").parquet(dataDir)
   }
 
-  def isEmpty: Boolean = { recoverCompaction(); !fs.exists(new Path(dataDir)) }
+  /** No table yet; like every read, it first completes a committed write. */
+  def isEmpty: Boolean = { recoverFileSwap(dataDir); !fs.exists(new Path(dataDir)) }
 
-  /** Crash recovery for a staged directory swap ([[compact]] and
-    * [[compactIndex]] share the rename window; file-granular writes use
-    * the journal protocol below, healed by [[recoverFileSwap]]). A crash
-    * between the two renames leaves the target directory MISSING, the
-    * original staged at `_precompact`, and the rewrite at `_compacting`.
-    * Reads heal it: roll the rewrite forward when it finished (its
-    * `_SUCCESS` commit marker exists), otherwise roll the original back.
-    * Either way the directory's rows are never lost and the next read
-    * sees a complete directory.
-    */
-  private[core] def recoverSwap(target: String): Unit = swapMonitor.synchronized {
-    val dataPath = new Path(target)
-    val old = new Path(target + "_precompact")
-    if (!fs.exists(dataPath) && fs.exists(old)) {
-      val tmp = new Path(target + "_compacting")
-      val tmpComplete =
-        fs.exists(tmp) && fs.exists(new Path(tmp, "_SUCCESS"))
-      if (tmpComplete && fs.rename(tmp, dataPath)) {
-        fs.delete(old, true)
-      } else {
-        if (!fs.rename(old, dataPath))
-          throw new java.io.IOException(
-            s"swap recovery failed: original data is at $old")
-        fs.delete(tmp, true)
-      }
-    }
-  }
-
-  private[core] def recoverCompaction(): Unit = recoverSwap(dataDir)
-
-  /** The monitor every rename window of this collection holds: swap
-    * recovery, the staged directory swap and the file-swap journal
-    * commit. It is keyed by the collection directory for the whole JVM,
-    * not by this instance — an HTTP request loads its own instance, and
-    * a writer elsewhere in the process holds another, so an instance
-    * monitor would let two of them heal the same crashed swap at once.
+  /** The monitor every commit of this collection holds: the journal
+    * rename, its completion, and a read's roll-forward. It is keyed by
+    * the collection directory for the whole JVM, not by this instance —
+    * an HTTP request loads its own instance, and a writer elsewhere in
+    * the process holds another. Instances reached through another path
+    * (another process, a symlinked root) do not share it; completion is
+    * idempotent for them ([[completeFileSwap]]).
     */
   private def swapMonitor: AnyRef =
     Collection.swapMonitors.computeIfAbsent(
       fs.makeQualified(new Path(dir)).toString, _ => new Object)
 
-  // ---- file-granular copy-on-write -------------------------------------
+  // ---- the commit protocol ---------------------------------------------
   //
-  // Whole-directory staged swaps (compact's mechanism) rewrite O(table)
-  // bytes for ANY update size — a scale-killer when a 1,000-row correction
-  // batch hits a 100 TB collection. The file-granular protocol instead
-  // replaces only the parquet files whose footer `_key` range intersects
-  // the update keys ([[ParquetStats.fileKeyRanges]] — footer metadata,
-  // no data I/O), leaving every other file untouched on disk. It is the
-  // one commit path of every file-granular write: [[upsert]],
-  // [[deleteKeys]], the fingerprint repairs, and the vector embed
-  // appends (a swap that replaces nothing).
+  // Every write to a table of the collection commits through one journal
+  // of its table ROOT: `data/`, `saved_queries/` or a family directory
+  // `index/<column><suffix>/`. A commit stages its files under
+  // `<root>_staging/` and names them by their path relative to the root
+  // (`bands/part-….parquet`, `postings/bucket=3/part-….parquet`), so one
+  // commit can carry several sub-tables: a refresh's rows and their
+  // fingerprints, a rebuild's every table. Each kind of write maps onto
+  // it:
+  //   - an append replaces nothing;
+  //   - a file-granular rewrite ([[upsert]], [[deleteKeys]], the
+  //     fingerprint repairs) replaces only the files whose footer `_key`
+  //     range the batch touches ([[touchedFiles]] — footer metadata, no
+  //     data I/O), so a 1,000-row correction into a huge table costs
+  //     O(touched files), not O(table);
+  //   - a compaction, rebuild or retrain replaces every leaf of the
+  //     tables it rewrites ([[leaves]]);
+  //   - a fresh build commits into an absent root with its marker table
+  //     moving last ([[stagedBuild]]).
   //
   // Commit protocol (crash-safe, roll-forward), owned by the writer:
-  //   1. write the replacement rows to `<target>_staging/` (Spark job);
+  //   1. write the rows to `<root>_staging/` (Spark job);
   //   2. write a journal listing (files-to-delete, staged-files) to a tmp
-  //      name, fence on the lease, and RENAME it to `<target>_swapjournal`
+  //      name, fence on the lease, and RENAME it to `<root>_swapjournal`
   //      — this rename is the commit point;
-  //   3. move staged files into the target dir, then delete the replaced
+  //   3. move staged files into the root, then delete the replaced
   //      files, then drop the staging dir and the journal.
   // Readers only roll forward: a crash after (2) is completed by the next
-  // read re-running (3) — every step is idempotent (move: skip when
-  // already moved; delete: already-gone is fine), so rows are never lost
-  // and duplicates never survive past the heal that every read performs.
-  // A stage without a journal is a write in flight to every reader, on
+  // read re-running (3), and every step is idempotent, also when two
+  // processes complete one journal at once — so rows are never lost and
+  // duplicates never survive past the heal that every read performs. A
+  // stage without a journal is a write in flight to every reader, on
   // this instance or another, so only a writer under the lease discards
   // one ([[discardStage]]) — the leftovers of a crash before (2).
 
-  private def journalPath(target: String) = new Path(target + "_swapjournal")
-  private def journalTmp(target: String) = new Path(target + "_swapjournal_tmp")
-  private def stagingPath(target: String) = new Path(target + "_staging")
+  private def journalPath(root: String) = new Path(root + "_swapjournal")
+  private def journalTmp(root: String) = new Path(root + "_swapjournal_tmp")
+  private def stagingPath(root: String) = new Path(root + "_staging")
 
-  /** Read-side heal of a file-granular swap: complete a committed
-    * journal. It deletes nothing else, so it is safe beside any write.
+  /** Read-side heal: complete a committed journal of `root`. It deletes
+    * nothing else, so it is safe beside any write.
     */
-  private[core] def recoverFileSwap(target: String): Unit = swapMonitor.synchronized {
-    if (fs.exists(journalPath(target))) completeFileSwap(target)
+  private[core] def recoverFileSwap(root: String): Unit = swapMonitor.synchronized {
+    if (fs.exists(journalPath(root))) completeFileSwap(root)
   }
 
   /** Writer-side heal, under the write lease: roll a committed journal
     * forward, then discard a crashed write's uncommitted stage and tmp
     * journal — with the lease held, no other write can own them.
     */
-  private def discardStage(target: String): Unit = swapMonitor.synchronized {
-    recoverFileSwap(target)
-    fs.delete(stagingPath(target), true)
-    fs.delete(journalTmp(target), false)
+  private def discardStage(root: String): Unit = swapMonitor.synchronized {
+    recoverFileSwap(root)
+    fs.delete(stagingPath(root), true)
+    fs.delete(journalTmp(root), false)
   }
 
-  /** Heal both swap kinds on one directory before reading it. */
-  private def healTable(target: String): Unit = {
-    recoverSwap(target)
-    recoverFileSwap(target)
-  }
+  /** `sub` under `root`; `""` is the root itself. */
+  private def subPath(root: String, sub: String): String =
+    if (sub.isEmpty) root else s"$root/$sub"
 
-  /** Replace `deleteLeaves` (leaf file names under `target`) with whatever
-    * `write` stages — the file-granular copy-on-write commit. Caller must
-    * hold [[writeLock]]. Staged `.parquet` leaves are journaled by their
-    * path relative to the stage (`postings/bucket=3/part-….parquet`), so
-    * one commit can carry several sub-tables, partitioned ones included;
-    * leaves under the sub-directories named in `order` move in that
-    * order, the rest after them. A stage with no leaves commits nothing.
-    * The journal rename and the swap share the [[recoverSwap]] monitor so
-    * a concurrent reader can't heal a half-committed swap out from under
-    * this thread.
+  /** Every `.parquet` leaf of `root`'s sub-table `sub` (`""`: all of the
+    * root), by its path relative to the root; none when absent.
     */
-  private def replaceFiles(target: String, deleteLeaves: Seq[String],
+  private def leaves(root: String, sub: String = ""): Seq[String] = {
+    val dir = new Path(subPath(root, sub))
+    if (!fs.exists(dir)) return Nil
+    val base = fs.makeQualified(new Path(root)).toString + "/"
+    val it = fs.listFiles(dir, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.endsWith(".parquet")).map(_.toString.stripPrefix(base)).toSeq
+  }
+
+  /** The leaves of sub-table `sub` holding `files`. */
+  private def leavesOf(sub: String, files: Seq[FileKeyRange]): Seq[String] =
+    files.map(f => if (sub.isEmpty) f.path.getName else s"$sub/${f.path.getName}")
+
+  /** Commit one write to the table root `root`: `write` stages the rows
+    * (given the stage root, it writes sub-table `t` at `<stage>/t`), and
+    * the commit replaces the `replaced` leaves with them. Caller must
+    * hold [[writeLock]]. `replaced` is taken after a committed journal of
+    * the root was rolled forward. Leaves under the sub-tables named in
+    * `order` move in that order, the rest after them. A stage with no
+    * leaves and nothing replaced commits nothing. The journal rename and
+    * its completion hold [[swapMonitor]], so a reader in this JVM never
+    * rolls a half-completed commit forward beside this thread.
+    */
+  private def replaceFiles(root: String, replaced: => Seq[String],
                            order: Seq[String] = Nil)(write: String => Unit): Unit = {
-    val stage = stagingPath(target)
-    fs.delete(stage, true)
+    discardStage(root)
+    val deleteLeaves = replaced
+    val stage = stagingPath(root)
     write(stage.toString)
-    val stagedLeaves =
-      if (!fs.exists(stage)) Seq.empty[String]
-      else {
-        val root = fs.makeQualified(stage).toString + "/"
-        val it = fs.listFiles(stage, true)
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.toString.stripPrefix(root)).toSeq
-          .sortBy { n => val i = order.indexOf(n.takeWhile(_ != '/'))
-            if (i < 0) order.length else i }
-      }
+    val stagedLeaves = leaves(stage.toString).sortBy { n =>
+      val i = order.indexOf(n.takeWhile(_ != '/'))
+      if (i < 0) order.length else i
+    }
     if (stagedLeaves.isEmpty && deleteLeaves.isEmpty) { fs.delete(stage, true); return }
     // Spark part-file names embed a per-job UUID, so a collision with an
     // existing file would mean something is deeply wrong — refuse rather
     // than let the journal's delete step destroy the staged replacement
     stagedLeaves.foreach { n =>
-      require(!fs.exists(new Path(target, n)), s"staged file name collides with existing: $n")
+      require(!fs.exists(new Path(root, n)), s"staged file name collides with existing: $n")
     }
     val body = (deleteLeaves.map("D " + _) ++ stagedLeaves.map("S " + _)).mkString("\n")
-    val jTmp = journalTmp(target)
+    val jTmp = journalTmp(root)
     val out = fs.create(jTmp, true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
     // fencing: an op that outlived a broken lease must not commit over
     // the new holder's files
     writeLock.checkHeld()
     swapMonitor.synchronized {
-      if (!fs.rename(jTmp, journalPath(target)))
-        throw new java.io.IOException(s"could not commit swap journal for $target")
-      completeFileSwap(target)
+      if (!fs.rename(jTmp, journalPath(root)))
+        throw new java.io.IOException(s"could not commit swap journal for $root")
+      completeFileSwap(root)
     }
   }
 
-  /** Execute a committed journal to completion (idempotent — safe to
-    * re-run after a crash at any point). Moves staged files in, in
+  /** Execute a committed journal to completion. Moves staged files in, in
     * journal order, BEFORE deleting replaced ones: a crash mid-way leaves
     * extra rows that the next read's re-run removes, never missing rows.
+    * Idempotent, also beside another process completing the same journal
+    * (which this JVM's monitor cannot exclude): a move whose source is
+    * gone and whose destination exists is done, and a journal gone
+    * before it could be read was completed. A staged file gone from both
+    * places fails the completion before anything is deleted.
     */
-  private def completeFileSwap(target: String): Unit = {
-    val j = journalPath(target)
-    val stage = stagingPath(target)
-    val in = fs.open(j)
+  private def completeFileSwap(root: String): Unit = {
+    val j = journalPath(root)
+    val stage = stagingPath(root)
     val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList.filter(_.nonEmpty)
-      finally in.close()
+      try {
+        val in = fs.open(j)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList.filter(_.nonEmpty)
+        finally in.close()
+      } catch { case _: java.io.FileNotFoundException => return }
     lines.collect { case l if l.startsWith("S ") => l.drop(2) }.foreach { n =>
       val src = new Path(stage, n)
-      val dst = new Path(target, n)
+      val dst = new Path(root, n)
       if (fs.exists(src)) {
         if (fs.exists(dst)) fs.delete(src, false)
         else {
-          // an append may be the target's (or a partition's) first write
+          // an append may be the root's (or a partition's) first write
           fs.mkdirs(dst.getParent)
-          if (!fs.rename(src, dst))
-            throw new java.io.IOException(s"file swap: could not move $n into $target")
+          val moved =
+            try fs.rename(src, dst) catch { case _: java.io.FileNotFoundException => false }
+          if (!moved && (fs.exists(src) || !fs.exists(dst)))
+            throw new java.io.IOException(s"file swap: could not move $n into $root")
         }
-      }
+      } else if (!fs.exists(dst))
+        throw new java.io.IOException(s"file swap: staged $n is in neither $stage nor $root")
     }
     lines.collect { case l if l.startsWith("D ") => l.drop(2) }.foreach { n =>
-      fs.delete(new Path(target, n), false)
+      fs.delete(new Path(root, n), false)
     }
     fs.delete(stage, true)
     fs.delete(j, false)
@@ -341,31 +334,27 @@ class Collection private[core] (
     *
     * Served from parquet FOOTER metadata ([[ParquetStats.totalRows]] —
     * exact, authoritative, O(files) KB-sized reads), not a table scan: at
-    * 10^10 rows a count must not read data pages. The same swap recovery
-    * the [[df]] getter runs MUST run first — a committed-but-unfinished
-    * file swap leaves replaced files in place and their replacements in
-    * the staging sibling, and a raw footer listing of that state counts
-    * the old rows; after healing, both paths list the same file set and
-    * agree. An unreadable footer falls back to the scan rather than
-    * failing the count.
+    * 10^10 rows a count must not read data pages. [[isEmpty]] completes a
+    * committed journal first — a committed-but-unfinished commit leaves
+    * replaced files in place and their replacements in the staging
+    * sibling, and a raw footer listing of that state counts the old rows;
+    * after healing, both paths list the same file set and agree. An
+    * unreadable footer falls back to the scan rather than failing the
+    * count.
     */
   def count(): Long =
     if (isEmpty) 0L
-    else {
-      recoverFileSwap(dataDir) // the df getter's read-path heal
-      ParquetStats.totalRows(dataDir,
-          spark.sparkContext.hadoopConfiguration)
-        .getOrElse(df.count())
-    }
+    else ParquetStats.totalRows(dataDir, hadoopConf).getOrElse(df.count())
 
   /** Import a DataFrame as the initial table contents, assigning `_key`
-    * (dense 1..N) unless the source already carries one (S1/S2).
+    * (dense 1..N) unless the source already carries one (S1/S2). The
+    * rows commit into the absent data root.
     */
   def importDf(source: DataFrame): Unit = {
     writeLock.lock()
     try {
       require(isEmpty, s"collection ${config.name} already has data; use append")
-      Keys.withKey(source).write.mode("errorifexists").parquet(dataDir)
+      appendData(Keys.withKey(source))
     } finally writeLock.unlock()
   }
 
@@ -385,73 +374,38 @@ class Collection private[core] (
         if (source.schema.fieldNames.contains(f.name)) col(f.name).cast(f.dataType)
         else lit(null).cast(f.dataType).as(f.name)
       }.toIndexedSeq: _*)
-      Keys.withKey(aligned, start)
-        .select(existing.schema.fieldNames.map(col).toIndexedSeq: _*)
-        .write.mode("append").parquet(dataDir)
+      appendData(Keys.withKey(aligned, start)
+        .select(existing.schema.fieldNames.map(col).toIndexedSeq: _*))
     } finally writeLock.unlock()
   }
+
+  /** Commit `rows` into the data table: a commit that replaces nothing.
+    * Caller holds [[writeLock]].
+    */
+  private def appendData(rows: DataFrame): Unit =
+    replaceFiles(dataDir, Nil)(rows.write.parquet(_))
 
   /** Compact the collection's data files — the operational answer to the
     * small-file problem an append-heavy collection accumulates (every
     * `appendDf`/chunk import lands new parquet files; a year of appends
     * is thousands of files whose open cost dominates scans). Rewrites the
-    * data directory into ~`targetFileBytes`-sized files and swaps it in
-    * via rename, keeping `_key`s untouched. Returns the file count
-    * written. The two-rename swap is not atomic on a plain filesystem,
-    * but a crash inside the window is healed by [[recoverCompaction]] on
-    * the next read (roll forward if the rewrite committed, roll back
-    * otherwise); on object stores you'd stage-and-point like any table
-    * format.
+    * data table into ~`targetFileBytes`-sized files, keeping `_key`s
+    * untouched, and commits the rewrite in place of every data file.
+    * Returns the file count written.
     */
   def compact(targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    // writeLock across the WHOLE rewrite+swap: an append landing between
-    // the rewrite and the swap would otherwise be swept into _precompact
-    // and deleted (see writeLock doc). Readers are only excluded during
-    // the brief rename window below.
     writeLock.lock()
     try {
       if (isEmpty) return 0
-      discardStage(dataDir)
       val nFiles = filesFor(dataDir, targetFileBytes)
-      writeAndSwap(dataDir) { tmp =>
-        // range-clustered, not round-robin: compaction must PRESERVE the
-        // key clustering that upsert/delete footer pruning depends on —
-        // a hash repartition makes every file's key range span the whole
-        // table and the next 10-key upsert rewrites every file
-        keyClustered(df, nFiles).write.mode("overwrite").parquet(tmp)
-      }
+      // range-clustered, not round-robin: compaction must PRESERVE the
+      // key clustering that upsert/delete footer pruning depends on —
+      // a hash repartition makes every file's key range span the whole
+      // table and the next 10-key upsert rewrites every file
+      replaceFiles(dataDir, leaves(dataDir))(keyClustered(df, nFiles).write.parquet(_))
       nFiles
     } finally writeLock.unlock()
   }
-
-  /** Stage a replacement directory via `write(tmpPath)` then swap it in
-    * with the checked two-rename pattern ([[compactSwap]]); a crash in
-    * the window is healed by [[recoverSwap]] on the next read. Caller
-    * must hold [[writeLock]]. The swap itself holds the same monitor as
-    * recoverSwap: a concurrent read inside the rename window would
-    * otherwise "heal" the half-finished swap out from under this thread.
-    */
-  private def writeAndSwap(target: String)(write: String => Unit): Unit = {
-    val tmp = new Path(target + "_compacting")
-    fs.delete(tmp, true)
-    write(tmp.toString)
-    // fencing: an op that outlived a broken lease must not swap over
-    // the new holder's directory
-    writeLock.checkHeld()
-    swapMonitor.synchronized {
-      compactSwap(new Path(target), new Path(target + "_precompact"), tmp)
-    }
-  }
-
-  /** [[writeAndSwap]] for a multi-table structure: the sub-tables' own
-    * `_SUCCESS` files sit one level down where [[recoverSwap]] can't see
-    * them, so the roll-forward marker is written at the top.
-    */
-  private def swapIn(target: String)(write: String => Unit): Unit =
-    writeAndSwap(target) { tmp =>
-      write(tmp)
-      fs.create(new Path(tmp, "_SUCCESS"), true).close()
-    }
 
   private def keyClustered(rows: DataFrame, nFiles: Int): DataFrame =
     rows.repartitionByRange(math.max(1, nFiles), col(KeyCol)).sortWithinPartitions(KeyCol)
@@ -468,31 +422,29 @@ class Collection private[core] (
   //
   // The steps every per-column index family ([[IndexFamily]]) shares:
   // the guarded prologue, the staged build, the key watermark, the
-  // watermark stream and the fingerprint-driven repair. Family methods
-  // below hold only their own build / append / search code.
+  // watermark stream, the fingerprint-driven repair and the compaction.
+  // Family methods below hold only their own build / append / search
+  // code; every one of them commits through the family directory's
+  // journal.
 
-  /** A writer's heal of the family, under the write lease: staged
-    * directory swaps, then file-granular journals, discarding crashed
-    * writes' stages ([[discardStage]]).
+  /** A writer's heal of the family, under the write lease: roll a
+    * committed journal forward, discard a crashed write's stage.
     */
-  private[core] def heal(f: IndexFamily, column: String): Unit = {
-    f.dirSwap.foreach(t => recoverSwap(table(f, column, t)))
-    f.fileSwap.foreach(t => discardStage(table(f, column, t)))
-  }
+  private[core] def heal(f: IndexFamily, column: String): Unit =
+    discardStage(familyDir(f, column))
 
   /** Whether the family is built; like every read, it first completes a
-    * crashed write's committed swaps.
+    * committed write.
     */
   private[core] def built(f: IndexFamily, column: String): Boolean = {
-    recoverSwap(familyDir(f, column))
-    f.fileSwap.foreach(t => recoverFileSwap(table(f, column, t)))
+    recoverFileSwap(familyDir(f, column))
     fs.exists(new Path(table(f, column, f.marker)))
   }
 
   /** The prologue of every index-family write: validate the column, hold
     * [[writeLock]] across the whole call (a rewrite must never interleave
-    * with another writer's append), heal the family's swaps. `body` gets
-    * the family directory.
+    * with another writer's append), heal the family. `body` gets the
+    * family directory.
     */
   private def maintained[A](f: IndexFamily, column: String)(body: String => A): A = {
     Identifiers.validate(column)
@@ -501,13 +453,43 @@ class Collection private[core] (
     finally writeLock.unlock()
   }
 
-  /** Fresh build in place (the family's marker is written last, so a
-    * half-written build reads as absent); a REBUILD over an existing
-    * structure is staged and swapped in — an in-place overwrite that died
-    * mid-way would leave stale sub-tables over half-written ones.
+  /** A build, rebuild or retrain of family `f`: `build` writes every
+    * sub-table under the stage root it is given, and one commit replaces
+    * every leaf of the family directory with them, the marker table
+    * moving last — a fresh build reads as absent until its commit lands,
+    * and a rebuild never leaves stale sub-tables beside new ones.
     */
-  private def stagedBuild(target: String)(build: String => Unit): Unit =
-    if (!fs.exists(new Path(target))) build(target) else swapIn(target)(build)
+  private def stagedBuild(f: IndexFamily, column: String)(build: String => Unit): Unit = {
+    val root = familyDir(f, column)
+    replaceFiles(root, leaves(root),
+      f.tables.keys.filter(_ != f.marker).toSeq.sorted :+ f.marker)(build)
+  }
+
+  /** One commit rewriting family `f`'s sub-tables `subs`, those present:
+    * `rewrite(sub, nFiles)` gives a table's rows re-clustered into
+    * `nFiles` files, ~`targetFileBytes` each, and every leaf of the
+    * rewritten tables is replaced. Returns the file count per sub-table,
+    * 0 for an absent one.
+    */
+  private def compactTables(f: IndexFamily, column: String, targetFileBytes: Long,
+                            subs: String*)(rewrite: (String, Int) => DataFrame): Seq[Int] = {
+    val root = familyDir(f, column)
+    val counts = subs.map(t =>
+      if (fs.exists(new Path(root, t))) filesFor(s"$root/$t", targetFileBytes) else 0)
+    val present = subs.zip(counts).filter(_._2 > 0)
+    replaceFiles(root, present.flatMap(t => leaves(root, t._1))) { stage =>
+      present.foreach { case (t, n) => rewrite(t, n).write.parquet(s"$stage/$t") }
+    }
+    counts
+  }
+
+  /** A key-clustered sub-table's compaction rewrite: duplicate rows (a
+    * repair re-run after a crash between its rows' commit and its
+    * fingerprints' commit) fold away, and the rows re-cluster on `_key`,
+    * so the repair paths' footer-range pruning keeps working.
+    */
+  private def keyCompacted(f: IndexFamily, column: String)(sub: String, nFiles: Int): DataFrame =
+    keyClustered(read(f, column, sub).dropDuplicates(), nFiles)
 
   /** Observability for specs/ops: micro-batches that took
     * [[watermarkStream]]'s replay anti-join since this Collection object
@@ -599,14 +581,15 @@ class Collection private[core] (
   }
 
   /** Fingerprint-driven copy-on-write repair of the key-clustered
-    * `target`: keys whose `current` upstream `(key, fp)` differs from the
-    * `stored` one — or lacks one on either side (unseen keys, including
+    * sub-table `sub` of the table root `root`: keys whose `current`
+    * upstream `(key, fp)` differs from the `stored` one — or lacks one on
+    * either side (unseen keys, including
     * below-watermark upsert inserts; legacy fingerprint-less rows) — get
     * their rows replaced by `fresh(changed)`; `changed` keeps `current`'s
     * other columns (what `fresh` needs, e.g. the text to re-embed). Only
     * the files `touched` plans (default: footer key ranges) are
     * rewritten, read by `read` in their declared layout, through the
-    * journaled file swap; `sidecar(changed, freshRows)` then records the
+    * root's journal; `sidecar(changed, freshRows)` then records the
     * new fingerprints LAST, so a crash re-repairs conservatively and the
     * re-run is idempotent. Returns the number of changed keys.
     *
@@ -614,7 +597,7 @@ class Collection private[core] (
     * executor fails the repair instead of recomputing it, and a re-run heals.
     */
   private def repairByFingerprint(
-      target: String, current: DataFrame, stored: DataFrame,
+      root: String, sub: String, current: DataFrame, stored: DataFrame,
       read: Seq[String] => DataFrame,
       touched: Option[DataFrame => Seq[FileKeyRange]] = None,
       cluster: (DataFrame, Int) => DataFrame = keyClustered)(
@@ -627,14 +610,14 @@ class Collection private[core] (
     val n = changed.count()
     if (n > 0L) {
       val rows = fresh(changed)
-      val files = touched.fold(touchedFiles(target, changed))(_(changed))
+      val files = touched.fold(touchedFiles(subPath(root, sub), changed))(_(changed))
       val next =
         if (files.isEmpty) rows
         else read(files.map(_.path.toString))
           .join(changed, Seq(KeyCol), "left_anti")
           .unionByName(rows)
-      replaceFiles(target, files.map(_.path.getName)) { tmp =>
-        cluster(next, files.length).write.mode("overwrite").parquet(tmp)
+      replaceFiles(root, leavesOf(sub, files)) { stage =>
+        cluster(next, files.length).write.parquet(subPath(stage, sub))
       }
       sidecar(changed, rows)
     }
@@ -686,29 +669,10 @@ class Collection private[core] (
           }.toIndexedSeq: _*)
         }
       val merged = graft.operators.Upsert(base, aligned, KeyCol)
-      replaceFiles(dataDir, touched.map(_.path.getName)) { tmp =>
-        keyClustered(merged, touched.length).write.mode("overwrite").parquet(tmp)
+      replaceFiles(dataDir, leavesOf("", touched)) { stage =>
+        keyClustered(merged, touched.length).write.parquet(stage)
       }
     } finally writeLock.unlock()
-  }
-
-  private def compactSwap(dataPath: Path, old: Path, tmp: Path): Unit = {
-    fs.delete(old, true)
-    // every rename result is CHECKED: falling through a failed swap to
-    // the final delete would destroy the only copy of the data
-    if (!fs.rename(dataPath, old)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"compact: could not stage $dataDir aside")
-    }
-    if (!fs.rename(tmp, dataPath)) {
-      // roll the original back into place before failing
-      if (!fs.rename(old, dataPath))
-        throw new java.io.IOException(
-          s"compact: swap failed AND rollback failed; original data is at $old")
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"compact: could not swap in compacted files (rolled back)")
-    }
-    fs.delete(old, true)
   }
 
   /** Import pre-chunked text rows into `column` (S6 / DbImportMarkdownChunks):
@@ -737,10 +701,7 @@ class Collection private[core] (
       if (isEmpty) { importDf(chunkDf); return }
       val existing = df
       if (existing.schema.fieldNames.contains(column)) appendDf(chunkDf)
-      else {
-        val start = Keys.maxKey(existing) + 1
-        Keys.withKey(chunkDf, start).write.mode("append").parquet(dataDir)
-      }
+      else appendData(Keys.withKey(chunkDf, Keys.maxKey(existing) + 1))
     } finally writeLock.unlock()
   }
 
@@ -767,7 +728,7 @@ class Collection private[core] (
     * pre-fingerprint index files read `fp` as null.
     */
   private def indexRaw(column: String): Option[DataFrame] = {
-    healTable(indexDir(column))
+    recoverFileSwap(indexDir(column))
     val idx = new Path(indexDir(column))
     val hasData = fs.exists(idx) &&
       fs.listStatus(idx).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -777,7 +738,7 @@ class Collection private[core] (
   /** Number of indexed vectors for `column` (A2: the reference asks the
     * usearch index for its size, collection_actor.rs:367-378). Goes
     * through [[embeddings]] — NOT a bare directory-existence check —
-    * so a crashed staged swap ([[recoverSwap]]) heals before counting;
+    * so a committed journal rolls forward before counting;
     * the absent-index case is the empty frame, count 0.
     */
   def indexedCount(column: String): Long = embeddings(column).count()
@@ -925,7 +886,7 @@ class Collection private[core] (
     }
 
   /** Where `column`'s chunk geometry is recorded: a file beside (not in)
-    * the index directory, which compaction swaps and the serving cache
+    * the index directory, which compaction rewrites and the serving cache
     * lists; a column name cannot contain the '.'.
     */
   private def chunkingPath(column: String): Path = new Path(s"${indexDir(column)}.chunking")
@@ -1012,7 +973,7 @@ class Collection private[core] (
         val text = coalesce(col(column).cast(StringType), lit(""))
         val current = sc(df.filter(col(KeyCol) <= watermarkOf(raw)))
           .select(col(KeyCol), md5(text).as("fp"), text.as("__txt"))
-        repairByFingerprint(target, current, vectorFps(sc(raw)), reader(VectorIndex, "")) {
+        repairByFingerprint(target, "", current, vectorFps(sc(raw)), reader(VectorIndex, "")) {
           changed => embedRows(texts(changed, "__txt"), embedder, batchSize, chunking(column))
         } { (_, _) => () }
       }
@@ -1020,9 +981,9 @@ class Collection private[core] (
 
   /** Compact the per-column embedding index — the index-side answer to the
     * small-file problem [[embedColumnStream]] creates (one parquet file
-    * per micro-batch, forever). Same write-lock + staged-swap + recovery
-    * as [[compact]]; rewritten range-clustered and key-sorted so
-    * [[reembedChanged]]'s touched-file planning keeps tight footer
+    * per micro-batch, forever). Like [[compact]], one commit replaces
+    * every index file with the rewrite, range-clustered and key-sorted
+    * so [[reembedChanged]]'s touched-file planning keeps tight footer
     * intervals to prune against. Preserves the stored layout verbatim —
     * `fp` fingerprints and quantized payloads ride through because the
     * rewrite reads the index AS STORED (not the dequantized view). Rows
@@ -1030,15 +991,14 @@ class Collection private[core] (
     * null, which [[reembedChanged]] already treats conservatively —
     * semantics unchanged. Safe to run while an embed stream is live:
     * micro-batch appends and this rewrite hold the same [[writeLock]], so
-    * an append can never land between the rewrite and the swap and be
-    * lost. Returns the file count written, 0 when the index is absent.
+    * an append can never land between the rewrite and its commit.
+    * Returns the file count written, 0 when the index is absent.
     */
   def compactIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
     maintained(VectorIndex, column) { target =>
       indexRaw(column).fold(0) { raw =>
         val nFiles = filesFor(target, targetFileBytes)
-        writeAndSwap(target)(tmp =>
-          keyClustered(raw, nFiles).write.mode("overwrite").parquet(tmp))
+        replaceFiles(target, leaves(target))(keyClustered(raw, nFiles).write.parquet(_))
         nFiles
       }
     }
@@ -1088,7 +1048,7 @@ class Collection private[core] (
     */
   private def denseHits(column: String, qv: Array[Float], limit: Int,
                         after: Option[(Double, Long)]): DataFrame = {
-    healTable(indexDir(column))
+    recoverFileSwap(indexDir(column))
     ServingCache.vectors(hadoopConf, indexDir(column), vectorLayout) match {
       case Some(segs) => residentPage(segs, qv, limit, after)
       case None => after match {
@@ -1172,8 +1132,9 @@ class Collection private[core] (
     * query chunks of its best-chunk cosine — so a long query whose
     * sections match different parts of a document outranks one-best-
     * chunk search ([[search]] is exactly the single-query-vector special
-    * case). `maxTokens`/`overlapTokens` should match what the index was
-    * built with so query and document chunk granularity agree.
+    * case). The query chunks at the geometry the index records
+    * ([[embedColumnChunked]]), so query and document chunk granularity
+    * agree; an index that records none chunks it at (512, 50) tokens.
     *
     * Scores fold through the order-independent DECIMAL discipline of
     * [[graft.search.LateInteraction]] (per-term round(6) then exact
@@ -1200,10 +1161,10 @@ class Collection private[core] (
     */
   def searchLate(column: String, query: String, limit: Int,
                  embedder: graft.embed.Embedder,
-                 maxTokens: Int = 512, overlapTokens: Int = 50,
                  nProbe: Int = 0, fetchK: Int = 0): DataFrame = {
     graft.search.Search.validateLimit(limit)
     import spark.implicits._
+    val (maxTokens, overlapTokens) = chunking(column).getOrElse((512, 50))
     val cfg = graft.functions.Chunker.ChunkerConfig(
       maxTokens = maxTokens, overlapTokens = overlapTokens)
     val pieces0 = graft.functions.Chunker.chunk(query, cfg)
@@ -1214,7 +1175,6 @@ class Collection private[core] (
     val emb0 = embeddings(column)
     val emb =
       if (nProbe > 0 && built(AnnIndex, column)) {
-        healTable(annListsDir(column))
         val centers = readAnnCenters(column)
         val probes = qVecs
           .flatMap(v => graft.search.Ann.ivfProbes(centers, v,
@@ -1253,17 +1213,18 @@ class Collection private[core] (
     */
   def keywordIndexDir(column: String): String = familyDir(KeywordIndex, column)
 
-  /** Build (or REBUILD, staged and swapped like [[compact]]) the keyword
-    * index — a rebuild dying mid-way must never leave stale `stats` over
-    * half-written `postings` for a search (the family's marker is
-    * `stats`) to serve. The bucket count and analyzer are recorded in the
-    * stats log; every later write and search reads them from there.
+  /** Build (or REBUILD, [[stagedBuild]]) the keyword index — one commit
+    * of the family directory, so a rebuild dying mid-way never leaves
+    * stale `stats` over half-written `postings` for a search (the
+    * family's marker is `stats`) to serve. The bucket count and
+    * analyzer are recorded in the stats log; every later write and search
+    * reads them from there.
     */
   def buildKeywordIndex(column: String, nBuckets: Int = 64,
                         analyzer: graft.search.Analyzer =
                           graft.search.Analyzer.Whitespace): Unit =
-    maintained(KeywordIndex, column) { target =>
-      stagedBuild(target)(where => graft.search.Keyword.buildIndex(
+    maintained(KeywordIndex, column) { _ =>
+      stagedBuild(KeywordIndex, column)(where => graft.search.Keyword.buildIndex(
         df.select(col(KeyCol), col(column)), where,
         idCol = KeyCol, textCol = column, nBuckets = nBuckets,
         analyzer = analyzer))
@@ -1271,8 +1232,8 @@ class Collection private[core] (
 
   // Every write to a built keyword index (refresh, the stream's
   // micro-batches, repair, the delete erase) stages its postings, doclen
-  // and stats deltas under `<column>_kw_staging/` and commits them with
-  // ONE journal of the family directory ([[replaceFiles]]), moving
+  // and stats deltas and commits them with ONE journal of the family
+  // directory ([[replaceFiles]]), moving
   // postings, then doclen, then the stats row: the batch lands whole or
   // not at all, and a reader between two moves sees at worst postings
   // whose doclen row has not landed yet, which scoring's inner join
@@ -1358,14 +1319,15 @@ class Collection private[core] (
 
   /** Fold the keyword index's delta logs: rewrite postings/doclen as
     * their net view (tombstones cancelled, one live row per key) and the
-    * stats log as one row, via the whole-directory staged swap. Search
+    * stats log as one row, one commit replacing every log file. Search
     * results are unchanged — this removes the tombstone rows repairs
     * accumulate, restoring scan cost to O(live postings).
     */
   def compactKeywordIndex(column: String): Unit =
     maintained(KeywordIndex, column) { target =>
       if (built(KeywordIndex, column))
-        swapIn(target)(tmp => graft.search.Keyword.compactIndexTo(spark, target, tmp))
+        replaceFiles(target, leaves(target), KeywordCommitOrder)(
+          graft.search.Keyword.compactIndexTo(spark, target, _))
     }
 
   /** The built index's summed stats log ([[graft.search.Keyword.Stats]]:
@@ -1517,7 +1479,6 @@ class Collection private[core] (
     val keyAt = hits.schema.fieldIndex(KeyCol)
     def keyOf(r: Row, i: Int) = r.getAs[Number](i).longValue
     val keys = page.map(keyOf(_, keyAt)).distinct
-    recoverCompaction()
     recoverFileSwap(dataDir)
     val (contentType, content) =
       ServingCache.content(hadoopConf, dataDir, column, keys.toIndexedSeq).getOrElse {
@@ -1570,34 +1531,32 @@ class Collection private[core] (
       shingleSize = r.getInt(2), seed = r.getLong(3))
   }
 
-  /** Build (or staged-swap REBUILD, like [[buildKeywordIndex]]) the
-    * persistent MinHash band index for `column`. Bands are written
-    * range-clustered and key-sorted so [[repairDedupIndex]]'s
-    * touched-file planning prunes on footer key ranges; a `fps` table
-    * (key, md5-of-text) records what text each key was banded from.
-    * Write order within a build is bands, fps, then `params` last — the
-    * family's marker, so a half-written fresh build reads as "no index".
+  /** Build (or REBUILD, [[stagedBuild]]) the persistent MinHash band
+    * index for `column`. Bands are written range-clustered and key-sorted
+    * so [[repairDedupIndex]]'s touched-file planning prunes on footer key
+    * ranges; a `fps` table (key, md5-of-text) records what text each key
+    * was banded from; `params` is the family's marker.
     */
   def buildDedupIndex(column: String,
                       p: graft.dedup.Dedup.MinHashParams =
                         graft.dedup.Dedup.MinHashParams(),
                       nFiles: Int = 0): Unit =
-    maintained(DedupIndex, column) { target =>
-      stagedBuild(target) { where =>
+    maintained(DedupIndex, column) { _ =>
+      stagedBuild(DedupIndex, column) { where =>
         val n = buildFiles(nFiles)
         keyClustered(graft.dedup.Dedup.minhashBands(
             df.select(col(KeyCol), col(column)), column, KeyCol, p), n)
           .write.mode("overwrite").parquet(s"$where/bands")
         // fps is key-clustered too: repair/delete maintain it through the
         // same footer-range copy-on-write as the bands
-        keyClustered(dedupFps(column), n).write.mode("overwrite").parquet(s"$where/fps")
+        keyClustered(textFps(df, column), n).write.mode("overwrite").parquet(s"$where/fps")
         writeDedupParams(where, p)
       }
     }
 
-  private def dedupFps(column: String): DataFrame =
-    df.select(col(KeyCol),
-      md5(coalesce(col(column).cast(StringType), lit(""))).as("fp"))
+  /** `(key, fp)` of `rows`' `column`: md5 of the text, NULL as "". */
+  private def textFps(rows: DataFrame, column: String): DataFrame =
+    rows.select(col(KeyCol), md5(coalesce(col(column).cast(StringType), lit(""))).as("fp"))
 
   private def emptyFps: DataFrame = spark.createDataFrame(
     spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], DedupIndex.schema("fps"))
@@ -1618,9 +1577,8 @@ class Collection private[core] (
         // range (the caller knows what its upsert touched); the default
         // full reconcile reads every fingerprint
         def sc(d: DataFrame): DataFrame = scope.fold(d)(scopedTo(d, _))
-        val fps = s"$target/fps"
-        val hasFps = fs.exists(new Path(fps))
-        repairByFingerprint(s"$target/bands", sc(dedupFps(column)),
+        val hasFps = fs.exists(new Path(s"$target/fps"))
+        repairByFingerprint(target, "bands", sc(textFps(df, column)),
             if (hasFps) sc(read(DedupIndex, column, "fps")) else emptyFps,
             reader(DedupIndex, "bands")) { changed =>
           // key-range-pruned text read — a bare semi-join would scan the
@@ -1630,7 +1588,7 @@ class Collection private[core] (
             column, KeyCol, readDedupParams(column))
         } { (changed, _) =>
           if (hasFps) upsertByKeyRange(DedupIndex, column, "fps",
-            scopedTo(dedupFps(column), changed))
+            scopedTo(textFps(df, column), changed))
           else {
             // legacy index without a sidecar: a PARTIAL fps holding only
             // the batch's keys would flag every OTHER key as unseen forever
@@ -1640,11 +1598,12 @@ class Collection private[core] (
             // other key gets fp null, which still counts as changed,
             // because their band rows may describe older text (an unscoped
             // repair heals them exactly once and writes their true fps).
-            keyClustered(scopedTo(dedupFps(column), changed)
-                .unionByName(df.select(col(KeyCol))
-                  .join(changed, Seq(KeyCol), "left_anti")
-                  .withColumn("fp", lit(null).cast(StringType))), buildFiles(0))
-              .write.mode("overwrite").parquet(fps)
+            val backfill = scopedTo(textFps(df, column), changed)
+              .unionByName(df.select(col(KeyCol))
+                .join(changed, Seq(KeyCol), "left_anti")
+                .withColumn("fp", lit(null).cast(StringType)))
+            replaceFiles(target, Nil)(stage =>
+              keyClustered(backfill, buildFiles(0)).write.parquet(s"$stage/fps"))
           }
         }
       }
@@ -1669,20 +1628,21 @@ class Collection private[core] (
     }
 
   /** Band `pending` rows into the dedup index and record their
-    * fingerprints, so a later [[repairDedupIndex]] doesn't flag them as
-    * unseen. Appended keys are monotone, so the appends stay
-    * key-clustered. Pre-fps legacy indexes stay fps-less: a partial
-    * sidecar would flag every old key as unseen. Returns the bands.
+    * fingerprints in the same commit, so a later [[repairDedupIndex]]
+    * doesn't flag them as unseen. Appended keys are monotone, so the
+    * appends stay key-clustered. Pre-fps legacy indexes stay fps-less: a
+    * partial sidecar would flag every old key as unseen. Returns the
+    * bands.
     */
   private def appendBands(column: String, pending: DataFrame): DataFrame = {
     val target = dedupIndexDir(column)
     val bands = graft.dedup.Dedup.minhashBands(pending, column, KeyCol,
       readDedupParams(column)).localCheckpoint(true)
-    bands.write.mode("append").parquet(s"$target/bands")
-    if (fs.exists(new Path(s"$target/fps")))
-      pending.select(col(KeyCol),
-          md5(coalesce(col(column).cast(StringType), lit(""))).as("fp"))
-        .write.mode("append").parquet(s"$target/fps")
+    val hasFps = fs.exists(new Path(s"$target/fps"))
+    replaceFiles(target, Nil) { stage =>
+      bands.write.parquet(s"$stage/bands")
+      if (hasFps) textFps(pending, column).write.parquet(s"$stage/fps")
+    }
     bands
   }
 
@@ -1703,15 +1663,14 @@ class Collection private[core] (
   private def noveltyN(column: String): Int =
     smallTable(NoveltyStore, column, "params").head.getInt(0)
 
-  /** Build (or staged-swap REBUILD) the gram store: distinct
-    * `(key, fp)` over the column's word n-grams, key-clustered;
-    * `params` (the gram width) written LAST so a half-written fresh
-    * build reads as "no store" (the dedup-index commit discipline).
+  /** Build (or REBUILD, [[stagedBuild]]) the gram store: distinct
+    * `(key, fp)` over the column's word n-grams, key-clustered; `params`
+    * (the gram width) is the family's marker.
     */
   def buildNoveltyStore(column: String, n: Int = 3, nFiles: Int = 0): Unit =
-    maintained(NoveltyStore, column) { target =>
+    maintained(NoveltyStore, column) { _ =>
       require(n >= 1, s"n must be >= 1, got $n")
-      stagedBuild(target) { where =>
+      stagedBuild(NoveltyStore, column) { where =>
         keyClustered(graft.dedup.Dedup.ngramFingerprints(
             df.select(col(KeyCol), col(column)), column, KeyCol, n), buildFiles(nFiles))
           .write.mode("overwrite").parquet(s"$where/grams")
@@ -1733,10 +1692,9 @@ class Collection private[core] (
         val pending = df.filter(col(KeyCol) > heldWatermark(NoveltyStore, column))
           .select(col(KeyCol), col(column))
         val nPending = pending.count()
-        if (nPending > 0)
-          graft.dedup.Dedup.ngramFingerprints(pending, column, KeyCol,
-              noveltyN(column))
-            .write.mode("append").parquet(s"$target/grams")
+        if (nPending > 0) replaceFiles(target, Nil)(stage =>
+          graft.dedup.Dedup.ngramFingerprints(pending, column, KeyCol, noveltyN(column))
+            .write.parquet(s"$stage/grams"))
         nPending
       }
     }
@@ -1759,12 +1717,10 @@ class Collection private[core] (
   /** Streaming twin of [[refreshDedupIndex]] ([[watermarkStream]]): fold
     * newly appended rows' MinHash bands into the persistent dedup index
     * continuously, so [[checkDuplicates]] always sees the current corpus
-    * without a manual refresh. A crash between the bands and fps appends
-    * is conservative: the keys' fps rows are missing, so
-    * [[repairDedupIndex]] flags them changed and re-bands idempotently
-    * (the band COW replaces, never doubles). Bootstraps by building the
-    * index with the default params when absent (build first for others);
-    * an index keeps its stored params.
+    * without a manual refresh; a micro-batch's bands and fingerprints
+    * commit together. Bootstraps by building the index with the default
+    * params when absent (build first for others); an index keeps its
+    * stored params.
     */
   def dedupIndexStream(column: String, checkpointDir: String): StreamingQuery =
     watermarkStream(DedupIndex, column, checkpointDir) {
@@ -1808,11 +1764,9 @@ class Collection private[core] (
   // (list_id, _key) — a flat clustered layout, NOT hive partitionBy, so
   // probe filters skip non-probed files/row groups from footer stats
   // (the Layout.writeRangeSorted discipline) while the file-granular
-  // copy-on-write journal stays usable: [[repairAnnIndex]] rewrites only
+  // copy-on-write commit stays usable: [[repairAnnIndex]] rewrites only
   // files whose list_id range intersects a changed key's old or new
-  // list — the same O(touched) story as [[upsert]], which a
-  // directory-per-list layout cannot express without a swap window per
-  // directory.
+  // list — the same O(touched) story as [[upsert]].
 
   def annIndexDir(column: String): String = familyDir(AnnIndex, column)
 
@@ -1905,7 +1859,7 @@ class Collection private[core] (
       .localCheckpoint(true)
     val sidecarPairs = rows
       .select(col(KeyCol), explode(col("list_ids")).as("list_id"))
-    // A repair that crashed between its lists swap and its fps update
+    // A repair that crashed between its lists commit and its fps update
     // leaves a non-null but STALE sidecar row — the fresh row it
     // already wrote sits at the key's CURRENT assignment, recomputable
     // from the stored centroids without scanning lists. Union those
@@ -1992,10 +1946,10 @@ class Collection private[core] (
     }
   }
 
-  /** Build (or staged-swap REBUILD, like [[buildKeywordIndex]]) the
-    * persistent IVF index for `column`'s embedding index. Write order is
-    * lists, centroids, codebooks, fps, then `params` last — the family's
-    * marker, so a half-written fresh build reads as "no index". Chunk-granularity (multi-vector) indexes work
+  /** Build (or REBUILD, [[stagedBuild]]) the persistent IVF index for
+    * `column`'s embedding index: lists, centroids, codebooks, fps and
+    * `params`, the family's marker. Chunk-granularity (multi-vector)
+    * indexes work
     * unchanged: each chunk vector is assigned independently, and
     * [[searchAnn]]'s per-key max keeps one result slot per document.
     *
@@ -2010,7 +1964,7 @@ class Collection private[core] (
     */
   def buildAnnIndex(column: String, nLists: Int = 0, iters: Int = 10,
                     sampleN: Int = 10000, nFiles: Int = 0, pqM: Int = 0): Unit =
-    maintained(AnnIndex, column) { target =>
+    maintained(AnnIndex, column) { _ =>
       val emb = embeddings(column)
       // nLists = 0 (default) sizes lists by the sqrt rule so probed work
       // stays linear as the corpus grows (Ann.autoLists; 16 at fixture
@@ -2022,7 +1976,7 @@ class Collection private[core] (
         if (pqM <= 0) None
         else Some(graft.search.Ann.pqTrain(emb, KeyCol, "embedding",
           m = pqM, iters = iters, sampleN = sampleN))
-      stagedBuild(target) { where =>
+      stagedBuild(AnnIndex, column) { where =>
         val n = buildFiles(nFiles)
         annClustered(annRows(emb, centers, cb), n)
           .write.mode("overwrite").parquet(s"$where/lists")
@@ -2071,14 +2025,14 @@ class Collection private[core] (
       case Some(p) => searchFiltered(column, query, limit, embedder, p)
       case None => search(column, query, limit, embedder)
     }
-    healTable(annListsDir(column))
     fetchHits(annPage(column, embedder.embedOne(query), limit, nProbe,
       predicate, fetchK), column)
   }
 
   /** The probed `(key, score)` page for a query VECTOR through the
     * stored index — [[searchAnn]] minus embed and fetch; callers must
-    * have healed swaps. Shared by serving and [[annRecallReport]] so the
+    * have checked that the index is [[built]], which rolls a committed
+    * journal forward. Shared by serving and [[annRecallReport]] so the
     * report measures exactly the page the API returns.
     */
   private def annPage(column: String, qv: Array[Float], limit: Int,
@@ -2138,7 +2092,6 @@ class Collection private[core] (
     Identifiers.validate(column)
     require(k >= 1 && nQueries >= 1, s"need k, nQueries >= 1; got $k, $nQueries")
     require(built(AnnIndex, column), s"no ANN index for '$column' — buildAnnIndex first")
-    healTable(annListsDir(column))
     val emb = embeddings(column)
     val queries = emb
       .orderBy(md5(col(KeyCol).cast("string")), col(KeyCol)).limit(nQueries)
@@ -2212,7 +2165,6 @@ class Collection private[core] (
       val rows = Seq.newBuilder[TierStats]
       rows += measure("exact")(qv => graft.search.Search.topK(emb, qv, k))
       if (built(AnnIndex, column)) {
-        healTable(annListsDir(column))
         val name = if (annPqM(column) > 0) "ivf-pq" else "ivf"
         rows += measure(s"$name(nProbe=$nProbe)")(qv =>
           annPage(column, qv, k, nProbe, None, fetchK))
@@ -2244,16 +2196,18 @@ class Collection private[core] (
     }
 
   /** Assign `vectors` against the STORED centroids (PQ-encoded when the
-    * index carries codebooks) and append them to the lists, their `fps`
-    * rows to the sidecar. Returns the appended lists rows.
+    * index carries codebooks) and commit them to the lists with their
+    * `fps` sidecar rows, in one commit. Returns the appended lists rows.
     */
   private def appendAnnRows(column: String, vectors: DataFrame,
                             fps: DataFrame): DataFrame = {
     val centers = readAnnCenters(column)
     val cb = if (annPqM(column) > 0) Some(readAnnCodebooks(column)) else None
     val fresh = annRows(vectors, centers, cb).localCheckpoint(true)
-    annClustered(fresh, 1).write.mode("append").parquet(annListsDir(column))
-    annSidecar(fps, fresh).write.mode("append").parquet(s"${annIndexDir(column)}/fps")
+    replaceFiles(annIndexDir(column), Nil) { stage =>
+      annClustered(fresh, 1).write.parquet(s"$stage/lists")
+      annSidecar(fps, fresh).write.parquet(s"$stage/fps")
+    }
     fresh
   }
 
@@ -2276,7 +2230,6 @@ class Collection private[core] (
     if (!built(AnnIndex, column))
       return graft.search.Ann.knnJoinIvf(emb, KeyCol, "embedding", k,
         nLists = nLists, nProbe = nProbe)
-    healTable(annListsDir(column))
     graft.search.Ann.knnJoinAssigned(emb, KeyCol, "embedding",
       annAssigned(column, emb), readAnnCenters(column), k, nProbe)
   }
@@ -2316,7 +2269,6 @@ class Collection private[core] (
     if (!built(AnnIndex, column))
       return graft.search.Ann.searchBatchIvf(queries, emb, KeyCol,
         "embedding", k, nLists = nLists, nProbe = nProbe)
-    healTable(annListsDir(column))
     graft.search.Ann.knnProbedBetween(queries, annAssigned(column, emb),
       readAnnCenters(column), KeyCol, "embedding", k, nProbe, excludeSelf = false)
   }
@@ -2354,7 +2306,6 @@ class Collection private[core] (
           threshold = threshold)
         .groupBy(col("key_a"), col("key_b"))
         .agg(max(col("cosine")).as("cosine"))
-    healTable(annListsDir(column))
     val kl = annLists(column, Seq(KeyCol, "list_id")).distinct()
     val cand = kl.as("a").join(kl.as("b"),
         col("a.list_id") === col("b.list_id") &&
@@ -2380,15 +2331,13 @@ class Collection private[core] (
     * newly embedded vectors into the IVF lists continuously: assign
     * against the STORED centroids (never retrained — IVF practice; the
     * `drift` column of [[indexStatus]] says when a rebuild is due),
-    * PQ-encode when the index carries codebooks, append lists + fps
-    * sidecar. With [[keywordIndexStream]], [[dedupIndexStream]] and
+    * PQ-encode when the index carries codebooks, commit lists + fps
+    * sidecar together. With [[keywordIndexStream]], [[dedupIndexStream]] and
     * [[binarySketchStream]] every keyed index family maintains itself
     * under a live ingest ([[watermarkStream]]). Exactly-once by the same
     * cached max-listed-key watermark (replays, checkpoint loss and
     * [[compactIndex]] rewrites re-deliver only keys the filter drops).
-    * Crash between the lists and fps appends is conservative: keys
-    * missing from the sidecar count as changed in [[repairAnnIndex]]
-    * and re-assign idempotently. Vector REWRITES under existing keys
+    * Vector REWRITES under existing keys
     * ([[reembedChanged]]) are repair's job, same as the other streams.
     * Requires the vector index to exist (its stored schema seeds the
     * file stream); bootstraps the ANN index (with `nLists`/`pqM`) when
@@ -2406,8 +2355,8 @@ class Collection private[core] (
     * keys (plus keys the ANN index has never seen, including
     * below-watermark inserts) are re-assigned against the stored
     * centroids. Only lists files whose `list_id` footer range intersects
-    * a changed key's old or new list are rewritten (file-granular
-    * journaled swap); finding the old lists scans just the (key,
+    * a changed key's old or new list are rewritten (a file-granular
+    * commit); finding the old lists scans just the (key,
     * list_id) columns, never the vectors. The key-clustered fps sidecar
     * takes only the changed keys' fresh fingerprints, through the same
     * [[upsertByKeyRange]] copy-on-write, last — a crash re-repairs
@@ -2424,7 +2373,7 @@ class Collection private[core] (
         // which keys its upsert touched — prunes both sides to the batch's
         // key range (footer/row-group stats) before comparing
         val pqM = annPqM(column)
-        repairByFingerprint(annListsDir(column), annUpstreamFps(column, scope),
+        repairByFingerprint(target, "lists", annUpstreamFps(column, scope),
             scope.fold(read(AnnIndex, column, "fps"))(
               scopedRead(s"$target/fps", _, reader(AnnIndex, "fps"))),
             AnnIndex.read(spark, "lists", _, annListCols(pqM)),
@@ -2449,54 +2398,30 @@ class Collection private[core] (
 
   /** Re-cluster the ANN lists table into ~`targetFileBytes` files —
     * refresh appends accumulate small, wide-range files that erode the
-    * probe filter's footer pruning; same staged swap as [[compactIndex]].
-    * Returns the file count written, 0 when no index.
+    * probe filter's footer pruning — and fold the fps sidecar with it,
+    * one commit ([[compactTables]]). Returns the lists file count
+    * written, 0 when no index.
     */
   def compactAnnIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
     maintained(AnnIndex, column) { _ =>
       if (!built(AnnIndex, column)) 0
-      else {
-        val listsDir = annListsDir(column)
-        val nFiles = filesFor(listsDir, targetFileBytes)
+      else compactTables(AnnIndex, column, targetFileBytes, "lists", "fps") {
         // dropDuplicates over ALL columns: a repair that crashed between
-        // its lists swap and its fps sidecar update re-appends the same
+        // its lists commit and its fps sidecar update re-appends the same
         // (key, list, vector/code) row on re-run — benign for serving
         // (every read path folds per-key/pair max) but it inflates the
         // table; compaction is where the copies fold away. Distinct chunk
         // vectors of one document differ in their embedding/code column
         // and are never collapsed.
-        val lists = annLists(column, annPqM(column)).dropDuplicates()
-        writeAndSwap(listsDir)(tmp =>
-          annClustered(lists, nFiles).write.mode("overwrite").parquet(tmp))
+        case ("lists", n) => annClustered(annLists(column, annPqM(column)).dropDuplicates(), n)
         // the fps sidecar accumulates one appended file per refresh/stream
-        // micro-batch FOREVER if only the lists fold — the round-10 soak
-        // caught exactly that (file count through the maintenance bound
-        // after 100 batches despite compaction)
-        compactKeyClustered(AnnIndex, column, "fps", targetFileBytes)
-        nFiles
-      }
+        // micro-batch FOREVER if only the lists fold
+        case (sub, n) => keyCompacted(AnnIndex, column)(sub, n)
+      }.head
     }
 
-  /** Fold an append-accumulated, key-clustered table (band/fps sidecars)
-    * back to a target file count: dropDuplicates (crash re-appends fold
-    * away, the [[compactAnnIndex]] rationale), re-cluster on `_key` so
-    * the repair paths' footer-range pruning keeps working. No-op when
-    * the directory does not exist. Callers hold the write lock.
-    */
-  private def compactKeyClustered(f: IndexFamily, column: String, sub: String,
-                                  targetFileBytes: Long): Int = {
-    val target = table(f, column, sub)
-    if (!fs.exists(new Path(target))) return 0
-    discardStage(target)
-    val nFiles = filesFor(target, targetFileBytes)
-    val rows = read(f, column, sub).dropDuplicates()
-    writeAndSwap(target)(tmp =>
-      keyClustered(rows, nFiles).write.mode("overwrite").parquet(tmp))
-    nFiles
-  }
-
   /** Fold the dedup index's stream/refresh appends: bands and the fps
-    * sidecar both re-cluster to a small file count. The band/fps tables
+    * sidecar both re-cluster to a small file count, in one commit. The band/fps tables
     * were the one index family with NO compact path — their file counts
     * grew by one per micro-batch unboundedly (found by the round-10
     * streaming soak); reads stayed correct throughout, this is purely
@@ -2506,8 +2431,8 @@ class Collection private[core] (
                         targetFileBytes: Long = 128L * 1024 * 1024): Int =
     maintained(DedupIndex, column) { _ =>
       if (!built(DedupIndex, column)) 0
-      else compactKeyClustered(DedupIndex, column, "bands", targetFileBytes) +
-        compactKeyClustered(DedupIndex, column, "fps", targetFileBytes)
+      else compactTables(DedupIndex, column, targetFileBytes, "bands", "fps")(
+        keyCompacted(DedupIndex, column)).sum
     }
 
   // --- binary (1-bit sign) sketch surface ---------------------------------
@@ -2526,9 +2451,6 @@ class Collection private[core] (
 
   def binaryIndexDir(column: String): String = familyDir(BinarySketch, column)
 
-  private def binarySketchDir(column: String): String =
-    s"${binaryIndexDir(column)}/sketch"
-
   private def readBinaryDim(column: String): Int =
     smallTable(BinarySketch, column, "params").head.getInt(0)
 
@@ -2536,20 +2458,20 @@ class Collection private[core] (
     src.select(col(KeyCol),
       graft.search.BinaryQuant.signWords(col("embedding"), dim).as("words"))
 
-  /** Build (or staged-swap rebuild) the binary sign sketch for
-    * `column`'s vector index. Write order: sketch, fps, `params` last —
-    * the family's marker, so a half-written build reads as "no sketch". Chunked indexes sketch every chunk vector
-    * (one row per vector, several per key); search folds per key.
+  /** Build (or rebuild, [[stagedBuild]]) the binary sign sketch for
+    * `column`'s vector index: sketch, fps and `params`, the family's
+    * marker. Chunked indexes sketch every chunk vector (one row per
+    * vector, several per key); search folds per key.
     */
   def buildBinarySketch(column: String, nFiles: Int = 0): Long =
-    maintained(BinarySketch, column) { target =>
+    maintained(BinarySketch, column) { _ =>
       val emb = embeddings(column)
       val first = emb.select(col("embedding")).limit(1).collect()
       require(first.nonEmpty,
         s"no embedding index for '$column'; run embedColumn first")
       val dim = first.head.getSeq[Float](0).length
       val n = buildFiles(nFiles)
-      stagedBuild(target) { where =>
+      stagedBuild(BinarySketch, column) { where =>
         import spark.implicits._
         keyClustered(binaryRows(emb, dim), n)
           .write.mode("overwrite").parquet(s"$where/sketch")
@@ -2582,11 +2504,15 @@ class Collection private[core] (
       }
     }
 
-  /** Append `vectors`' sign words to the sketch and `fps` to its sidecar. */
+  /** Commit `vectors`' sign words to the sketch and `fps` to its
+    * sidecar, in one commit.
+    */
   private def appendSketch(column: String, vectors: DataFrame, fps: DataFrame): Unit = {
-    binaryRows(vectors, readBinaryDim(column))
-      .write.mode("append").parquet(binarySketchDir(column))
-    fps.write.mode("append").parquet(s"${binaryIndexDir(column)}/fps")
+    val dim = readBinaryDim(column)
+    replaceFiles(binaryIndexDir(column), Nil) { stage =>
+      binaryRows(vectors, dim).write.parquet(s"$stage/sketch")
+      fps.write.parquet(s"$stage/fps")
+    }
   }
 
   /** Fingerprint-driven repair ([[repairByFingerprint]]) after
@@ -2599,7 +2525,7 @@ class Collection private[core] (
     maintained(BinarySketch, column) { target =>
       if (!built(BinarySketch, column)) 0L
       else {
-        repairByFingerprint(binarySketchDir(column), annUpstreamFps(column, scope),
+        repairByFingerprint(target, "sketch", annUpstreamFps(column, scope),
             scope.fold(read(BinarySketch, column, "fps"))(
               scopedRead(s"$target/fps", _, reader(BinarySketch, "fps"))),
             reader(BinarySketch, "sketch")) { changed =>
@@ -2615,33 +2541,27 @@ class Collection private[core] (
     }
 
   /** Streaming twin of [[refreshBinarySketch]] ([[watermarkStream]] over
-    * the VECTOR index directory). A crash between the sketch and fps
-    * appends is conservative: the keys' fps rows are missing, so
-    * [[repairBinarySketch]] flags them changed and re-sketches
-    * idempotently (the COW rewrite replaces; serving's per-key min fold
-    * is duplicate-tolerant meanwhile). Bootstraps by building the sketch
-    * when absent.
+    * the VECTOR index directory); a micro-batch's sketch and fps rows
+    * commit together. Bootstraps by building the sketch when absent.
     */
   def binarySketchStream(column: String, checkpointDir: String): StreamingQuery =
     watermarkStream(BinarySketch, column, checkpointDir) {
       buildBinarySketch(column)
     } { pending => appendSketch(column, vectorLayout.view(pending), vectorFps(pending)) }
 
-  /** Re-cluster the sketch into ~`targetFileBytes` files — heals refresh
-    * small-file growth and folds away duplicate rows from a repair that
-    * crashed between its sketch swap and fps update (duplicates are
-    * benign for serving — the per-key fold is a min — but inflate the
-    * table). Same discipline as [[compactAnnIndex]].
+  /** Re-cluster the sketch and its fps sidecar into ~`targetFileBytes`
+    * files, one commit — heals refresh small-file growth and folds away
+    * duplicate rows from a repair that crashed between its sketch commit
+    * and fps update (duplicates are benign for serving — the per-key fold
+    * is a min — but inflate the table). Same discipline as
+    * [[compactAnnIndex]]; returns the sketch file count.
     */
   def compactBinarySketch(column: String,
                           targetFileBytes: Long = 128L * 1024 * 1024): Int =
     maintained(BinarySketch, column) { _ =>
       if (!built(BinarySketch, column)) 0
-      else {
-        val n = compactKeyClustered(BinarySketch, column, "sketch", targetFileBytes)
-        compactKeyClustered(BinarySketch, column, "fps", targetFileBytes)
-        n
-      }
+      else compactTables(BinarySketch, column, targetFileBytes, "sketch", "fps")(
+        keyCompacted(BinarySketch, column)).head
     }
 
   /** Two-stage binary serving: Hamming over the stored sketch ranks
@@ -2661,8 +2581,8 @@ class Collection private[core] (
   /** [[searchBinary]]'s vector-level core: Hamming stage-1 window over
     * the sign sketch, exact cosine rerank on the candidates — the hits
     * page `(KeyCol, score)` before the content fetch. Callers must have
-    * checked that the sketch is [[built]], which rolls committed swaps
-    * forward.
+    * checked that the sketch is [[built]], which rolls a committed
+    * journal forward.
     */
   private[graft] def binaryPage(column: String, qv: Array[Float],
                                 limit: Int, fetchK: Int = 0): DataFrame = {
@@ -2692,8 +2612,8 @@ class Collection private[core] (
     * partition-scoped machinery as [[upsert]]:
     *
     *  - data and key-clustered index files rewrite ONLY where a footer
-    *    key range intersects a deleted key (file-granular journaled
-    *    swap; untouched files stay byte-identical);
+    *    key range intersects a deleted key (a file-granular commit;
+    *    untouched files stay byte-identical);
     *  - the keyword logs take tombstone APPENDS and an exact stats delta
     *    row ([[graft.search.Keyword.deleteFromIndex]]) — never a postings
     *    rewrite — in one journaled commit;
@@ -2704,7 +2624,7 @@ class Collection private[core] (
     *    delete of every remaining row needs no surviving upstream to
     *    re-derive from).
     *
-    * Each structure commits through its own journaled swap, so a crash
+    * Each table root commits separately, so a crash
     * mid-sequence leaves a consistent prefix deleted (data goes first —
     * an index row whose document is already gone can never surface
     * content through the fetch join); re-running with the same keys
@@ -2724,7 +2644,7 @@ class Collection private[core] (
       val del = keys.select(col(keys.columns.head).cast(LongType).as(KeyCol))
         .distinct().localCheckpoint(true)
       val n = df.join(del, Seq(KeyCol), "left_semi").count()
-      deleteByKeyRange(dataDir, del,
+      deleteByKeyRange(dataDir, "", del,
         spark.read.option("mergeSchema", "true").parquet(_: _*))
       // vector-upstream structures before the vector index: ANN's rewrite
       // planning reads it (current-assignment pairs, see annTouchedLists)
@@ -2736,7 +2656,7 @@ class Collection private[core] (
           if (built(f, c0)) {
             f.erase.foreach(_(this, c0, del))
             f.deletes.filter(t => fs.exists(new Path(table(f, c0, t))))
-              .foreach(t => deleteByKeyRange(table(f, c0, t), del, reader(f, t)))
+              .foreach(t => deleteByKeyRange(familyDir(f, c0), t, del, reader(f, t)))
           }
         }
       n
@@ -2750,26 +2670,26 @@ class Collection private[core] (
       val next = AnnIndex.read(spark, "lists", touched.map(_.path.toString),
         annListCols(annPqM(column)))
         .join(del, Seq(KeyCol), "left_anti")
-      replaceFiles(annListsDir(column), touched.map(_.path.getName)) { tmp =>
-        annClustered(next, touched.length).write.mode("overwrite").parquet(tmp)
+      replaceFiles(annIndexDir(column), leavesOf("lists", touched)) { stage =>
+        annClustered(next, touched.length).write.parquet(s"$stage/lists")
       }
     }
   }
 
-  /** File-granular key deletion from a key-clustered parquet directory:
-    * anti-join rewrite of only the footer-range-intersecting files (read
-    * by `read`), committed through the journaled swap. No-op when no
-    * file's range covers a deleted key.
+  /** File-granular key deletion from the key-clustered sub-table `sub`
+    * of the table root `root`: anti-join rewrite of only the
+    * footer-range-intersecting files (read by `read`), committed through
+    * the root's journal. No-op when no file's range covers a deleted key.
     */
-  private def deleteByKeyRange(target: String, del: DataFrame,
+  private def deleteByKeyRange(root: String, sub: String, del: DataFrame,
                                read: Seq[String] => DataFrame): Unit = {
-    discardStage(target)
-    val touched = touchedFiles(target, del)
+    discardStage(root)
+    val touched = touchedFiles(subPath(root, sub), del)
     if (touched.isEmpty) return
     val remaining = read(touched.map(_.path.toString))
       .join(del, Seq(KeyCol), "left_anti")
-    replaceFiles(target, touched.map(_.path.getName)) { tmp =>
-      keyClustered(remaining, touched.length).write.mode("overwrite").parquet(tmp)
+    replaceFiles(root, leavesOf(sub, touched)) { stage =>
+      keyClustered(remaining, touched.length).write.parquet(subPath(stage, sub))
     }
   }
 
@@ -2779,26 +2699,20 @@ class Collection private[core] (
     * whole-table rewrite they used to take: only files whose footer key
     * range intersects an updated key are rewritten (anti-join old rows,
     * union the fresh ones, which carry the declared columns), committed
-    * through the journaled swap; keys beyond every file's range land as
-    * new files. Creates the directory when absent (first write / legacy
-    * index without a sidecar).
+    * through the family directory's journal; keys beyond every file's
+    * range land as new files, and so does the whole batch when the
+    * sub-table is absent (a legacy index without a sidecar).
     */
   private def upsertByKeyRange(f: IndexFamily, column: String, sub: String,
                                updates: DataFrame): Unit = {
-    val target = table(f, column, sub)
-    if (!fs.exists(new Path(target))) {
-      keyClustered(updates, 1).write.mode("overwrite").parquet(target)
-      return
-    }
-    discardStage(target)
-    val touched = touchedFiles(target, updates.select(KeyCol))
+    val touched = touchedFiles(table(f, column, sub), updates.select(KeyCol))
     val next =
       if (touched.isEmpty) updates
       else reader(f, sub)(touched.map(_.path.toString))
         .join(updates.select(KeyCol), Seq(KeyCol), "left_anti")
         .unionByName(updates)
-    replaceFiles(target, touched.map(_.path.getName)) { tmp =>
-      keyClustered(next, touched.length).write.mode("overwrite").parquet(tmp)
+    replaceFiles(familyDir(f, column), leavesOf(sub, touched)) { stage =>
+      keyClustered(next, touched.length).write.parquet(s"$stage/$sub")
     }
   }
 
@@ -2813,7 +2727,7 @@ class Collection private[core] (
     *    upstream state (the upsert trap the repair passes close; legacy
     *    fingerprint-less rows count — repairs treat them the same way);
     *  - `orphaned`: structure rows whose key no longer exists upstream
-    *    (e.g. a deletion interrupted before this structure's swap).
+    *    (e.g. a deletion interrupted before this structure's commit).
     *
     * "Upstream" is the family's [[Upstream]]: the collection's text for
     * vector/keyword/dedup and the VECTOR index for ann/binary (an ANN
@@ -2828,9 +2742,7 @@ class Collection private[core] (
   def indexStatus(column: String): DataFrame = {
     import spark.implicits._
     Identifiers.validate(column)
-    val cur = df.select(col(KeyCol),
-        md5(coalesce(col(column).cast(StringType), lit(""))).as("__fp"))
-      .localCheckpoint(true)
+    val cur = textFps(df, column).withColumnRenamed("fp", "__fp").localCheckpoint(true)
     val rows = IndexFamily.all.flatMap { f =>
       storedFps(f, column).map { stored =>
         val upstream =
@@ -2881,22 +2793,22 @@ class Collection private[core] (
 
   def hasTokenizer(column: String): Boolean = built(Tokenizer, column)
 
-  /** Train a BPE merge table over `column` and persist it — fresh build
-    * writes in place, retrain is a staged swap ([[writeAndSwap]], the
-    * keyword-rebuild discipline: readers never see a half-written merge
-    * list and a crash rolls back or forward on the next read). The
+  /** Train a BPE merge table over `column` and persist it in one commit
+    * of the family directory ([[stagedBuild]]; a retrain replaces the old
+    * table whole): readers never see a half-written merge list, and a
+    * crash leaves the old table or rolls the new one forward. The
     * corpus scan is [[graft.functions.Bpe.learn]]'s single word-freq
     * pass; every merge round after it is vocab-sized. Returns the
     * number of learned rules.
     */
   def trainTokenizer(column: String, numMerges: Int = 200,
                      minCount: Long = 2L): Int =
-    maintained(Tokenizer, column) { target =>
+    maintained(Tokenizer, column) { _ =>
       val merges =
         graft.functions.Bpe.learn(df.select(col(column)), column,
           numMerges, minCount)
       import spark.implicits._
-      stagedBuild(target)(where =>
+      stagedBuild(Tokenizer, column)(where =>
         merges.zipWithIndex
           .map { case (m, i) => ((i + 1).toLong, m.a, m.b, m.count) }
           .toDF("rank", "sym_a", "sym_b", "cnt")
@@ -2906,7 +2818,7 @@ class Collection private[core] (
 
   /** The stored merge table `(rank, sym_a, sym_b, cnt)`, rank-ordered. */
   def tokenizerMerges(column: String): DataFrame = {
-    recoverSwap(tokenizerDir(column))
+    recoverFileSwap(tokenizerDir(column))
     read(Tokenizer, column, "merges").orderBy("rank")
   }
 
@@ -2939,15 +2851,15 @@ class Collection private[core] (
     * y = 1.0 where `positive` holds, 0.0 elsewhere
     * ([[graft.operators.Classifier]]'s fixed-point logistic GD — trained
     * weights are bit-deterministic), and persist the weights beside the
-    * other per-column index artifacts (fresh build in place, retrain via
-    * the staged swap readers heal). Returns the positive-label count the
+    * other per-column index artifacts in one commit ([[stagedBuild]]).
+    * Returns the positive-label count the
     * model was fit on (0 or all-positive corpora train a useless
     * constant model — the count lets callers notice).
     */
   def trainClassifier(column: String, positive: org.apache.spark.sql.Column,
                       dim: Int = 64, iters: Int = 3,
                       lr: Double = 1e-5): Long =
-    maintained(ClassifierModel, column) { target =>
+    maintained(ClassifierModel, column) { _ =>
       val labeled = df.select(col(KeyCol), col(column),
         when(positive, 1.0).otherwise(0.0).as("__y"))
       val feats = graft.operators.Classifier
@@ -2957,7 +2869,7 @@ class Collection private[core] (
         dim, iters, lr)
       val nPos = labeled.filter(col("__y") === 1.0).count()
       import spark.implicits._
-      stagedBuild(target) { where =>
+      stagedBuild(ClassifierModel, column) { where =>
         w.toIndexedSeq.zipWithIndex.map { case (wj, j) => (j.toLong, wj) }
           .toDF("j", "w")
           .coalesce(1).write.mode("overwrite").parquet(s"$where/weights")
@@ -3005,7 +2917,9 @@ class Collection private[core] (
   /** Register saved queries (MERGE by `query_id`: same-id rows replaced,
     * new ids added). First two columns of `queries` are taken as
     * (query_id, query). The table is tiny (it broadcasts at percolate
-    * time), so the write is a whole-table staged swap, not COW.
+    * time), so every write rewrites it whole: one commit of the
+    * `saved_queries` root replacing every file, the first one into the
+    * absent root.
     */
   def putQueries(queries: DataFrame): Long = {
     writeLock.lock()
@@ -3025,23 +2939,7 @@ class Collection private[core] (
         .limit(5).collect().map(_.getLong(0))
       require(conflicted.isEmpty,
         s"batch carries conflicting texts for query_id(s) ${conflicted.mkString(", ")}")
-      recoverSwap(queriesDir)
-      if (!fs.exists(new Path(queriesDir))) {
-        // first write lands atomically: stage + rename, so a crash
-        // mid-write leaves NO queries dir (clean empty state) instead of
-        // a torn parquet directory; the stale stage is swept next call
-        val tmp = new Path(queriesDir + "_import")
-        fs.delete(tmp, true)
-        q.coalesce(1).write.parquet(tmp.toString)
-        if (!fs.rename(tmp, new Path(queriesDir)))
-          throw new java.io.IOException(
-            s"could not move staged saved-queries into $queriesDir")
-      } else {
-        val merged = spark.read.parquet(queriesDir)
-          .join(q, Seq("query_id"), "left_anti").unionByName(q)
-          .localCheckpoint(true)
-        swapIn(queriesDir)(tmp => merged.coalesce(1).write.parquet(tmp))
-      }
+      rewriteQueries(savedQueries.join(q, Seq("query_id"), "left_anti").unionByName(q))
       q.count()
     } finally writeLock.unlock()
   }
@@ -3050,29 +2948,31 @@ class Collection private[core] (
   def deleteQueries(ids: Seq[Long]): Long = {
     writeLock.lock()
     try {
-      recoverSwap(queriesDir)
-      if (!fs.exists(new Path(queriesDir))) return 0L
       import spark.implicits._
       val del = ids.toDF("query_id")
-      val cur = spark.read.parquet(queriesDir)
+      val cur = savedQueries
       val n = cur.join(del, Seq("query_id"), "left_semi").count()
-      if (n > 0) {
-        val kept = cur.join(del, Seq("query_id"), "left_anti")
-          .localCheckpoint(true)
-        swapIn(queriesDir)(tmp => kept.coalesce(1).write.parquet(tmp))
-      }
+      if (n > 0) rewriteQueries(cur.join(del, Seq("query_id"), "left_anti"))
       n
     } finally writeLock.unlock()
   }
 
-  /** The saved-queries table (empty frame when none registered). */
+  /** Commit `rows` as the whole saved-queries table. Caller holds
+    * [[writeLock]].
+    */
+  private def rewriteQueries(rows: DataFrame): Unit = {
+    val next = rows.localCheckpoint(true) // read before its files are replaced
+    replaceFiles(queriesDir, leaves(queriesDir))(next.coalesce(1).write.parquet(_))
+  }
+
+  /** The saved-queries table in its declared `(query_id, query)` schema
+    * (empty frame when none registered).
+    */
   def savedQueries: DataFrame = {
-    recoverSwap(queriesDir)
-    if (fs.exists(new Path(queriesDir))) spark.read.parquet(queriesDir)
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, String)].toDF("query_id", "query")
-    }
+    recoverFileSwap(queriesDir)
+    if (fs.exists(new Path(queriesDir)))
+      spark.read.schema(Collection.SavedQueries).parquet(queriesDir)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Collection.SavedQueries)
   }
 
   /** Percolate a document batch against the saved queries: which saved
@@ -3253,17 +3153,16 @@ class Collection private[core] (
     IndexFamily.all.flatMap(f => f.repair.map(m =>
       f.structure -> m.run(this, column, scope, () => embedder)))
 
-  /** Heal every pending swap across the collection — data directory,
-    * saved queries and every [[IndexFamily]] structure — so the on-disk
-    * state is a complete, consistent snapshot. Used before [[backup]]:
-    * copying a directory with an uncommitted journal would capture a
-    * torn write. It runs under backup's lease, so it also discards
-    * crashed writes' stages ([[discardStage]]).
+  /** Heal every table root of the collection — data directory, saved
+    * queries and every [[IndexFamily]] structure — so the on-disk state
+    * is a complete, consistent snapshot. Used before [[backup]]: copying
+    * a root with an uncompleted journal would capture a torn write. It
+    * runs under backup's lease, so it also discards crashed writes'
+    * stages ([[discardStage]]).
     */
   private def healAll(): Unit = {
-    recoverCompaction()
     discardStage(dataDir)
-    recoverSwap(queriesDir)
+    discardStage(queriesDir)
     indexStructures().foreach { case (c0, f) => heal(f, c0) }
   }
 
@@ -3293,17 +3192,14 @@ class Collection private[core] (
   }
 
   /** `(column, family)` for every persisted index structure under the
-    * index root, vector indexes first. A structure staged aside by a
-    * crashed directory swap (`<dir>_precompact`, the live directory
-    * missing) counts too, so [[healAll]] can roll it back or forward.
+    * index root, vector indexes first.
     */
   private def indexStructures(): Seq[(String, IndexFamily)] = {
     val root = new Path(s"$dir/${config.index_dir}")
     if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName.stripSuffix("_precompact"))
+    fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
       .filterNot(n => Identifiers.OperationalSuffixes.exists(n.endsWith))
-      .distinct.map(IndexFamily.of)
+      .map(IndexFamily.of)
       .sortBy { case (c0, f) => (f != VectorIndex, c0) }
   }
 
@@ -3316,8 +3212,12 @@ class Collection private[core] (
 }
 
 private[core] object Collection {
-  /** Rename-window monitors, one per qualified collection directory. */
+  /** Commit monitors, one per qualified collection directory. */
   val swapMonitors = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** The saved-queries table's declared schema. */
+  val SavedQueries: StructType = StructType(Seq(
+    StructField("query_id", LongType), StructField("query", StringType)))
 
   /** A keyword query read against a column's index: the index's stats
     * (None without one) and the query's terms and '-'-excluded terms
@@ -3398,11 +3298,12 @@ final case class TierStats(tier: String, recall: Double, mrr: Double,
   * `Column`s rather than SQL strings, but keep the validation for parity.
   */
 object Identifiers {
-  /** Suffixes reserved for on-disk operational artifacts (staged swaps,
-    * compaction journals, import stages; `__stage`/`__stage_commit` are
-    * an older embed-append protocol's, which a collection written by an
-    * earlier build may still hold). An identifier ending with one
-    * of these would make its directory (e.g. `index/<col>`)
+  /** Suffixes reserved for on-disk operational artifacts: a commit's
+    * stage and journal (`_staging`, `_swapjournal`, `_swapjournal_tmp`),
+    * and the leftovers an earlier build's protocols may have left in a
+    * collection (`_import`, the `_precompact`/`_compacting` directory
+    * swap, the `__stage`/`__stage_commit` embed append). An identifier
+    * ending with one of these would make its directory (e.g. `index/<col>`)
     * indistinguishable from the transient artifacts that maintenance
     * sweeps and [[Backup.include]] must skip — a backup would silently
     * drop that index and a restore would silently lose it. Leading '_'

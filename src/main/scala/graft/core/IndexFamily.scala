@@ -26,16 +26,15 @@ private[graft] final case class Maintenance(
   * so the collection-wide passes ([[Collection.deleteKeys]], heal before
   * backup, `indexStatus`, `planMaintenance`) and the reserved identifier
   * suffixes can never drift apart. A family lives in
-  * `<index_dir>/<column><suffix>/`; sub-table paths are relative to it,
-  * `""` naming the directory itself.
+  * `<index_dir>/<column><suffix>/`, the table root every write to it
+  * commits through (one journal, [[Collection]]'s commit protocol);
+  * sub-table paths are relative to it, `""` naming the directory itself.
   *
   * @param structure  name in `indexStatus` / `planMaintenance` rows
-  * @param marker     sub-path whose existence means "built" (written last
-  *                   by a fresh build, so a half-written one reads absent)
+  * @param marker     sub-path whose existence means "built" (it moves
+  *                   last in a build's commit)
   * @param tables     the stored schema of every sub-table the family reads;
   *                   every read declares it ([[read]])
-  * @param dirSwap    sub-tables replaced by whole-directory staged swaps
-  * @param fileSwap   sub-tables rewritten by the file-granular journal
   * @param keys       `(table, key column)` holding the keys the family has
   *                   indexed: its refresh and stream watermark, and the
   *                   stream's replay filter
@@ -52,8 +51,6 @@ private[graft] final case class IndexFamily(
     suffix: String,
     marker: String,
     tables: Map[String, StructType],
-    dirSwap: Seq[String] = Seq(""),
-    fileSwap: Seq[String] = Nil,
     upstream: Upstream = Upstream.Text,
     keys: Option[(String, String)] = None,
     fps: Option[String] = None,
@@ -97,7 +94,6 @@ private[graft] object IndexFamily {
     */
   val VectorIndex: IndexFamily = IndexFamily("vector", "", "",
     Map("" -> KeyFp.add("embedding", ArrayType(FloatType)).add("qembedding", BinaryType)),
-    fileSwap = Seq(""),
     keys = Some(("", Keys.KeyCol)), deletes = Seq(""), pressure = Seq(""),
     repair = Some(Maintenance("reembedChanged + embedColumn", (c, column, scope, e) =>
       c.reembedChanged(column, e(), scope = scope) + c.embedColumn(column, e()))),
@@ -116,7 +112,7 @@ private[graft] object IndexFamily {
         "cnt" -> IntegerType),
       "stats" -> schema("n_docs" -> LongType, "sum_dl" -> LongType, "n_buckets" -> IntegerType,
         "analyzer" -> StringType)),
-    fileSwap = Seq(""), keys = Some(("doclen", "key")),
+    keys = Some(("doclen", "key")),
     // the stats log grows one file per commit until a compaction folds it
     pressure = Seq("stats"),
     repair = call("repairKeywordIndex")((c, column, scope) =>
@@ -136,7 +132,7 @@ private[graft] object IndexFamily {
       "fps" -> KeyFp,
       "params" -> schema("num_hashes" -> IntegerType, "bands" -> IntegerType,
         "shingle_size" -> IntegerType, "seed" -> LongType)),
-    fileSwap = Seq("bands", "fps"), keys = Some(("bands", Keys.KeyCol)), fps = Some("fps"),
+    keys = Some(("bands", Keys.KeyCol)), fps = Some("fps"),
     deletes = Seq("bands", "fps"), pressure = Seq("bands", "fps"),
     repair = call("repairDedupIndex")((c, column, scope) =>
       c.repairDedupIndex(column, scope)),
@@ -162,7 +158,6 @@ private[graft] object IndexFamily {
       "params" -> schema("n_lists" -> IntegerType, "iters" -> IntegerType,
         "sample_n" -> IntegerType, "pq_m" -> IntegerType, "build_drift" -> DoubleType),
       "fps" -> KeyFp.add("list_ids", ArrayType(IntegerType))),
-    dirSwap = Seq("", "lists"), fileSwap = Seq("lists", "fps"),
     upstream = Upstream.Vectors, keys = Some(("lists", Keys.KeyCol)), fps = Some("fps"),
     deletes = Seq("fps"), pressure = Seq("lists", "fps"),
     repair = call("repairAnnIndex")((c, column, scope) => c.repairAnnIndex(column, scope)),
@@ -180,7 +175,7 @@ private[graft] object IndexFamily {
       "sketch" -> schema(Keys.KeyCol -> LongType, "words" -> ArrayType(LongType)),
       "fps" -> KeyFp,
       "params" -> schema("dim" -> IntegerType, "n_words" -> IntegerType)),
-    fileSwap = Seq("sketch", "fps"), upstream = Upstream.Vectors,
+    upstream = Upstream.Vectors,
     keys = Some(("sketch", Keys.KeyCol)), fps = Some("fps"),
     deletes = Seq("sketch", "fps"), pressure = Seq("sketch", "fps"),
     repair = call("repairBinarySketch")((c, column, scope) =>

@@ -24,8 +24,9 @@ import java.nio.charset.StandardCharsets
   * lease expires (`graft.lease.ms`, default 30 min) and the next writer
   * breaks it. Expiry makes fencing necessary: an operation that
   * outlives a broken lease must not commit over the usurper's work, so
-  * the commit points ([[Collection]]'s journal rename and directory
-  * swap) call [[checkHeld]] and abort when ownership was lost.
+  * every commit ([[Collection]]'s journal rename, which every write to
+  * a collection goes through) calls [[checkHeld]] and aborts when
+  * ownership was lost.
   *
   * `lock()`/`unlock()` keep the `ReentrantLock` call-site contract;
   * the lease is claimed at hold-count 0→1 and released at 1→0, so

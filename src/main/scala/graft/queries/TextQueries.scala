@@ -1042,7 +1042,7 @@ object TextQueries {
         .select((col("doc_id") + 1).as(Keys.KeyCol), col("text")))
       val emb = new graft.embed.HashingEmbedder(dim = 384)
       c.embedColumnChunked("text", emb, maxTokens = 8, overlapTokens = 0)
-      c.searchLate("text", LateQuery, 10, emb, maxTokens = 8, overlapTokens = 0)
+      c.searchLate("text", LateQuery, 10, emb)
     }),
 
     // Hard-negative mining: each vector's 3 most-similar DIFFERENT-label

@@ -585,7 +585,7 @@ object Keyword {
 
   /** Write the NET view of an index at `srcDir` as a fresh tombstone-free
     * index at `dstDir` — the compaction body (the caller owns locking and
-    * the staged swap). No re-tokenization: postings fold by aggregation,
+    * the commit). No re-tokenization: postings fold by aggregation,
     * doclen keeps one live row per key with its current fp, and the stats
     * log folds into one row recomputed from the folded doclen.
     */

@@ -163,19 +163,12 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
             require(fetchK >= 0, s"fetch_k must be >= 0, got $fetchK")
             coll.searchBinary(column, query, limit, embedder, fetchK)
           case "late" =>
-            // MaxSim over a chunked index; chunk_tokens should match the
-            // granularity the index was embedded with. n_probe > 0 routes
-            // candidate generation through the ANN index (PLAID shape)
-            val mt = opt[Int](req, "chunk_tokens").getOrElse(512)
-            require(mt >= 1, s"chunk_tokens must be >= 1, got $mt")
-            // an absent overlap clamps to the chunk size instead of
-            // failing small chunk_tokens on the 50-token default
-            val ov = opt[Int](req, "chunk_overlap").getOrElse(math.min(50, mt - 1))
-            require(ov >= 0 && ov < mt,
-              s"need 0 <= chunk_overlap < chunk_tokens, got ($mt, $ov)")
+            // MaxSim over a chunked index, the query chunked at the
+            // index's recorded geometry. n_probe > 0 routes candidate
+            // generation through the ANN index (PLAID shape)
             val np = opt[Int](req, "n_probe").getOrElse(0)
             require(np >= 0, s"n_probe must be >= 0, got $np")
-            coll.searchLate(column, query, limit, embedder, mt, ov, np)
+            coll.searchLate(column, query, limit, embedder, np)
           case other => throw new IllegalArgumentException(
             s"mode must be vector|keyword|fuzzy|hybrid|ann|binary|late, got '$other'")
         }).collect()

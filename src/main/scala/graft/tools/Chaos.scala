@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import scala.jdk.CollectionConverters._
+
 import graft.core.{Catalog, CollectionConfig}
 import graft.embed.HashingEmbedder
 
@@ -27,14 +29,21 @@ import graft.embed.HashingEmbedder
   *     consistent: rows == indexed vectors, no leftover swap journals,
   *     full scan + search still serve.
   *
-  * Prints CHAOS OK and exits 0 only when every claim held.
+  * Prints CHAOS OK and exits 0 only when every claim held. A child that
+  * dies of an exception prints `CHILD-ERR <class>: <message>` first, and
+  * a phase whose child left no summary quotes the child's last lines.
   *
   * Usage: runMain graft.tools.Chaos            (parent)
   *        [internally: Chaos child-spam|child-mix|child-churn <root>]
   */
 object Chaos {
 
-  private val LeaseMs = 3000L
+  /** Longer than a cold child JVM's first write under load: every write
+    * fences at its commit, so a write that outlives its lease dies there
+    * once the other process has broken it — phase C's expiry story, not
+    * what phases A and B test.
+    */
+  private val LeaseMs = 10000L
   private val RowsPerAppend = 8
 
   private def session(app: String): SparkSession = {
@@ -65,10 +74,7 @@ object Chaos {
     val end = System.currentTimeMillis() + 4000
     while (System.currentTimeMillis() < end) {
       try { c.appendDf(rows(spark, "spam")); wrote += 1 }
-      catch {
-        case _: graft.core.WriteLease.HeldElsewhereException => refused += 1
-        case e: Throwable => println(s"CHILD-ERR ${e.getClass.getSimpleName}"); throw e
-      }
+      catch { case _: graft.core.WriteLease.HeldElsewhereException => refused += 1 }
       Thread.sleep(100)
     }
     println(s"CHILD refused=$refused wrote=$wrote")
@@ -117,30 +123,57 @@ object Chaos {
 
   // ---- parent ------------------------------------------------------------
 
-  private def fork(mode: String, root: String): Process = {
-    import scala.jdk.CollectionConverters._
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx")).toSeq
-    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
-      "-Xmx4g", s"-Dgraft.lease.ms=$LeaseMs",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.tools.Chaos", mode, root)
-    new ProcessBuilder(cmd.asJava).redirectErrorStream(true).start()
+  /** A forked child mode. Its output is read as it is written: a child
+    * that prints more than a pipe holds (a dying one's stack traces)
+    * would otherwise block forever instead of exiting.
+    */
+  private final class Child(mode: String, root: String) {
+    val process: Process = {
+      val javaBin = System.getProperty("java.home") + "/bin/java"
+      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.filterNot(_.startsWith("-Xmx")).toSeq
+      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
+        "-Xmx4g", s"-Dgraft.lease.ms=$LeaseMs",
+        "-cp", System.getProperty("java.class.path"),
+        "graft.tools.Chaos", mode, root)
+      new ProcessBuilder(cmd.asJava).redirectErrorStream(true).start()
+    }
+    private val out = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    private val reader = new Thread(() =>
+      scala.io.Source.fromInputStream(process.getInputStream, "UTF-8")
+        .getLines().foreach(out.add), s"$mode-reader")
+    reader.setDaemon(true)
+    reader.start()
+
+    /** The lines printed so far. */
+    def lines: Seq[String] = out.asScala.toSeq
+
+    /** Every line, once the child exited. */
+    def finish(): Seq[String] = { process.waitFor(); reader.join(); lines }
   }
 
-  private def drain(p: Process): Seq[String] = {
-    val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8")
-      .getLines().toList
-    p.waitFor()
-    out
-  }
+  /** Run a child mode; an exception that ends it is named on stdout,
+    * where the parent reads it, before it propagates.
+    */
+  private def child(body: => Unit): Unit =
+    try body
+    catch { case e: Throwable =>
+      println(s"CHILD-ERR ${e.getClass.getName}: ${e.getMessage}")
+      throw e
+    }
+
+  /** The failure of a phase whose child printed no summary: the error it
+    * named, if any, and its last lines.
+    */
+  private def noSummary(mode: String, out: Seq[String]): Nothing =
+    sys.error((s"$mode produced no summary" +: out.filter(_.startsWith("CHILD-ERR")) ++:
+      "its last lines:" +: out.takeRight(8)).mkString("\n"))
 
   def main(args: Array[String]): Unit = {
     args.headOption match {
-      case Some("child-spam") => childSpam(args(1)); return
-      case Some("child-mix") => childMix(args(1)); return
-      case Some("child-churn") => childChurn(args(1)); return
+      case Some("child-spam") => child(childSpam(args(1))); return
+      case Some("child-mix") => child(childMix(args(1))); return
+      case Some("child-churn") => child(childChurn(args(1))); return
       case _ => ()
     }
     sys.props("graft.lease.ms") = LeaseMs.toString
@@ -160,15 +193,12 @@ object Chaos {
     // is legitimately breakable — that would test expiry, not exclusion)
     sys.props("graft.lease.ms") = "60000"
     c.writeLock.lock()
-    val a = try {
-      val p = fork("child-spam", root)
-      drain(p)
-    } finally {
+    val a = try new Child("child-spam", root).finish()
+    finally {
       c.writeLock.unlock()
       sys.props("graft.lease.ms") = LeaseMs.toString
     }
-    val aLine = a.find(_.startsWith("CHILD ")).getOrElse(
-      sys.error(s"child-spam produced no summary: ${a.takeRight(5)}"))
+    val aLine = a.find(_.startsWith("CHILD ")).getOrElse(noSummary("child-spam", a))
     val refused = "refused=(\\d+)".r.findFirstMatchIn(aLine).get.group(1).toInt
     val wroteA = "wrote=(\\d+)".r.findFirstMatchIn(aLine).get.group(1).toInt
     require(wroteA == 0, s"child committed $wroteA writes THROUGH a held lease")
@@ -178,15 +208,15 @@ object Chaos {
 
     // ---- B: interleaved writers lose nothing ------------------------------
     println("=== B. interleaved refuse-retry writers, exact row accounting ===")
-    val pB = fork("child-mix", root)
+    val pB = new Child("child-mix", root)
     var parentWrote = 0
-    while (pB.isAlive) {
+    while (pB.process.isAlive) {
       try { c.appendDf(rows(spark, "parent")); parentWrote += 1 }
       catch { case _: graft.core.WriteLease.HeldElsewhereException => () }
       Thread.sleep(60)
     }
-    val bLine = drain(pB).find(_.startsWith("CHILD ")).getOrElse(
-      sys.error("child-mix produced no summary"))
+    val b = pB.finish()
+    val bLine = b.find(_.startsWith("CHILD ")).getOrElse(noSummary("child-mix", b))
     val childWrote = "wrote=(\\d+)".r.findFirstMatchIn(bLine).get.group(1).toInt
     val expected = seed + (parentWrote + childWrote) * RowsPerAppend
     val actual = c.df.count()
@@ -200,26 +230,22 @@ object Chaos {
     val killDelaysMs = Seq(100L, 700L, 1500L)
     killDelaysMs.zipWithIndex.foreach { case (delay, round) =>
       val before = c.df.count()
-      val p = fork("child-churn", root)
+      val p = new Child("child-churn", root)
       // arm the kill only after the child has COMMITTED at least one
       // write — a kill during the ~10s JVM/Spark spin-up would test
       // nothing but startup. The staggered delay then lands the death
       // mid-append / mid-embed / mid-compact.
-      val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-      val reader = new Thread(() =>
-        scala.io.Source.fromInputStream(p.getInputStream, "UTF-8")
-          .getLines().foreach { line =>
-            if (line.startsWith("CHILD-WROTE")) seen.incrementAndGet(): Unit
-          }, s"churn-reader-$round")
-      reader.setDaemon(true)
-      reader.start()
+      def committed = p.lines.exists(_.startsWith("CHILD-WROTE"))
       val armDeadline = System.currentTimeMillis() + 90000
-      while (seen.get() == 0 && System.currentTimeMillis() < armDeadline)
+      while (!committed && p.process.isAlive && System.currentTimeMillis() < armDeadline)
         Thread.sleep(50)
-      require(seen.get() > 0, s"round $round: child never committed a write")
+      if (!committed) {
+        p.process.destroyForcibly()
+        noSummary(s"round $round child-churn", p.finish())
+      }
       Thread.sleep(delay)
-      p.destroyForcibly()
-      p.waitFor()
+      p.process.destroyForcibly()
+      p.finish()
       // the dead child may hold the lease for up to LeaseMs: the parent's
       // next write must succeed once it expires (breaking the dead lease)
       val deadline = System.currentTimeMillis() + LeaseMs + 8000

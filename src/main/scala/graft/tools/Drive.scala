@@ -203,7 +203,7 @@ object Drive {
       require(cleaned == 1L, s"the loop doc cleans: $cleaned")
       println(s"quality: ${rep.count()} analyzed, $cleaned cleaned")
 
-      // tokenizer artifact: train, retrain (staged swap), row-local apply
+      // tokenizer artifact: train, retrain (one commit), row-local apply
       val nRules = coll.trainTokenizer("text", numMerges = 16)
       require(nRules > 0 && coll.hasTokenizer("text"), "tokenizer trains")
       require(coll.trainTokenizer("text", numMerges = 16) == nRules,

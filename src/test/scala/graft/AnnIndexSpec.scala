@@ -197,6 +197,37 @@ class AnnIndexSpec extends SparkSpec {
       == page(c.search("text", q, 5, emb)))
   }
 
+  test("a committed, unmoved ANN or binary refresh journal rolls rows and fps forward together") {
+    // a refresh commits its lists (sketch) rows and their fps rows in one
+    // journal of the family directory: killed right after the commit,
+    // the next read moves both, so the index never holds rows without
+    // fingerprints (stale) or fingerprints without rows (missing)
+    val c = mkCollection("ann_jr", n = 20)
+    c.buildAnnIndex("text", nLists = 2, sampleN = 100)
+    c.buildBinarySketch("text")
+    c.appendDf((1 to 3).map(i => s"fresh refresh row $i").toDF("text"))
+    assert(c.embedColumn("text", emb) == 3)
+    def counts(structure: String) = c.indexStatus("text")
+      .filter(col("structure") === structure)
+      .select("missing", "stale").head().toSeq
+    Seq("ann" -> c.annIndexDir("text"), "binary" -> c.binaryIndexDir("text")).foreach {
+      case (structure, root) =>
+        CrashPoints.staged(c)(
+          if (structure == "ann") c.refreshAnnIndex("text") else c.refreshBinarySketch("text"))
+        assert(CrashPoints.stagedLeaves(root).map(_.takeWhile(_ != '/')).toSet ==
+          Set(if (structure == "ann") "lists" else "sketch", "fps"), structure)
+        CrashPoints.commit(root, moved = 0)
+        assert(counts(structure) == Seq(0L, 0L), s"$structure: rows and fps roll forward together")
+        assert(!CrashPoints.hasJournal(root) && !CrashPoints.hasStage(root), structure)
+    }
+    assert(c.refreshAnnIndex("text") == 0L && c.refreshBinarySketch("text") == 0L,
+      "the rolled-forward refreshes are whole")
+    val q = "fresh refresh row 2"
+    assert(page(c.searchAnn("text", q, 5, emb, nProbe = 2)) == page(c.search("text", q, 5, emb)))
+    assert(page(c.searchBinary("text", q, 5, emb, fetchK = 23)) ==
+      page(c.search("text", q, 5, emb)))
+  }
+
   test("knnJoin: stored-index exhaustive == exact twin == fallback; refresh folds new keys") {
     val c = mkCollection("ann6")
     def pairs(df: org.apache.spark.sql.DataFrame) =

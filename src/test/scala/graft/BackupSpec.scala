@@ -276,6 +276,24 @@ class BackupSpec extends SparkSpec {
     assert(c.backup(dest).generation == 2, "released -> backup proceeds")
   }
 
+  test("an earlier build's leftover stages and swap sides are never captured") {
+    val cat = new Catalog(spark, tmpRoot("graft_bak_cat"))
+    val c = mkCollection(cat, "src_left")
+    assert(c.embedColumn("text", emb) == 60)
+    // beside the live index: an older embed-append protocol's stage and
+    // commit marker, the old directory swap's two sides, an import stage
+    Seq("__stage", "__stage_commit", "_precompact", "_compacting", "_import").foreach { sfx =>
+      val d = java.nio.file.Paths.get(c.indexDir("text") + sfx)
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.write(d.resolve("part-00000-leftover.parquet"), "leftover".getBytes)
+    }
+    val dest = tmpRoot("graft_bak_dest")
+    c.backup(dest)
+    val captured = Backup.manifest(spark, dest, 1).entries.map(_.path)
+    assert(!captured.exists(_.contains("leftover")), captured)
+    assert(cat.restore(dest, "left2").indexedCount("text") == 60)
+  }
+
   test("edges: config-only collection round-trips; missing generation errors cleanly") {
     val cat = new Catalog(spark, tmpRoot("graft_bak_cat"))
     val c = cat.create(CollectionConfig(name = "hollow")) // never imported

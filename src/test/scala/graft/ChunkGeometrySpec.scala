@@ -92,6 +92,22 @@ class ChunkGeometrySpec extends SparkSpec {
     assert(vectors(restored, 1L) == vectors(chunkedTwin(cat, "twin2", restored), 1L))
   }
 
+  test("searchLate chunks the query at the index's recorded geometry") {
+    val cat = catalog("graft_geom_late")
+    val c = fresh(cat, "g", (1 to 8).map(text(_, 12)))
+    assert(c.embedColumnChunked("text", emb, maxTokens = 4, overlapTokens = 0) > 8)
+    val query = text(3, 12)
+    // the explicit (4, 0) page: the query in 4-token chunks, MaxSim-summed
+    val pieces = graft.functions.Chunker.chunk(query,
+      graft.functions.Chunker.ChunkerConfig(maxTokens = 4, overlapTokens = 0))
+    assert(pieces.size > 1, "the query spans several 4-token chunks")
+    val qDf = emb.embed(pieces.iterator).toSeq.zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }.toDF("__qid", "__qvec")
+    val explicit = c.fetchHits(graft.search.LateInteraction.topK(qDf, "__qid", "__qvec",
+      c.embeddings("text"), "_key", "embedding", 5), "text").collect().toSeq
+    assert(c.searchLate("text", query, 5, emb).collect().toSeq == explicit)
+  }
+
   test("embedColumnChunked at another geometry raises; the same geometry is a no-op") {
     val cat = catalog("graft_geom_conflict")
     val c = fresh(cat, "g", (1 to 3).map(text(_, 6)))

@@ -159,84 +159,105 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("crashed compaction swap recovers on next read (roll back and roll forward)") {
-    // CASE 1: crash after the original was staged aside, rewrite
-    // incomplete -> reads roll the original back
+    // a compaction commits through the data root's journal: crashed
+    // before the commit it rolls back (the stage is never read, the next
+    // writer discards it); crashed after it, with none, some or all of
+    // the rewrite moved in, the next read rolls it forward
     val cat = new Catalog(spark, tmpRoot())
     val c = cat.create(CollectionConfig(name = "crash1"))
-    c.importDf(Seq("a", "b", "c").toDF("text"))
+    c.importDf((1 to 12).map(i => s"row $i").toDF("text"))
+    (1 to 3).foreach(i => c.appendDf(Seq(s"x$i", s"y$i").toDF("text")))
     val rows = c.df.orderBy("_key").collect().map(_.toSeq).toSeq
-    val data = new java.io.File(c.dataDir)
-    val old = new java.io.File(c.dataDir + "_precompact")
-    val tmp = new java.io.File(c.dataDir + "_compacting")
-    assert(data.renameTo(old), "test setup: stage data aside")
-    tmp.mkdirs() // incomplete rewrite: no _SUCCESS marker
-    java.nio.file.Files.write(tmp.toPath.resolve("part-garbage.parquet"),
-      "not parquet".getBytes)
-    assert(c.df.orderBy("_key").collect().map(_.toSeq).toSeq == rows,
-      "read after crash must see the original data")
-    assert(!old.exists && !tmp.exists, "recovery must clean the staging dirs")
-
-    // CASE 2: crash after the rewrite committed (_SUCCESS present) but
-    // before the final swap -> reads roll the rewrite forward
-    val c2 = cat.create(CollectionConfig(name = "crash2"))
-    c2.importDf(Seq("x", "y").toDF("text"))
-    val rows2 = c2.df.orderBy("_key").collect().map(_.toSeq).toSeq
-    val data2 = new java.io.File(c2.dataDir)
-    val tmp2 = new java.io.File(c2.dataDir + "_compacting")
-    // build a COMPLETE rewrite of the same rows, then simulate the crash
-    c2.df.repartition(1).write.mode("overwrite").parquet(tmp2.toString)
-    assert(new java.io.File(tmp2, "_SUCCESS").exists)
-    assert(data2.renameTo(new java.io.File(c2.dataDir + "_precompact")))
-    assert(c2.df.orderBy("_key").collect().map(_.toSeq).toSeq == rows2,
-      "read after crash must see the committed rewrite")
-    assert(new java.io.File(c2.dataDir).exists)
-    assert(!new java.io.File(c2.dataDir + "_precompact").exists)
+    def parquetFiles = new java.io.File(c.dataDir).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    val before = parquetFiles
+    // tiny files: the rewrite stages several leaves, so a crash can
+    // land between two moves
+    CrashPoints.each(c, c.dataDir)(c.compact(targetFileBytes = 1)) { point =>
+      assert(!c.isEmpty, s"$point: a crashed compaction must never read as empty")
+      assert(c.count() == rows.length, s"$point: old rows or new rows, never both")
+      assert(c.df.orderBy("_key").collect().map(_.toSeq).toSeq == rows, point)
+      if (point == "staged") {
+        assert(parquetFiles == before, "an uncommitted rewrite is not read")
+        assert(CrashPoints.hasStage(c.dataDir), "a read must not delete an uncommitted stage")
+      }
+    }
+    // the next compaction (a writer) leaves no stage and the same rows
+    assert(c.compact() == 1)
+    assert(!CrashPoints.hasStage(c.dataDir) && !CrashPoints.hasJournal(c.dataDir))
+    assert(c.df.orderBy("_key").collect().map(_.toSeq).toSeq == rows)
   }
 
   test("instances healing one crashed swap at once: every read succeeds, no rows lost") {
     // an HTTP request loads its own Collection instance and a writer may
-    // hold another, so the heal's rename window must be exclusive per
-    // collection directory, not per instance
-    val cat = new Catalog(spark, tmpRoot())
+    // hold another; instances reached through distinct roots (another
+    // process, here a symlinked root) share no JVM monitor, so they may
+    // complete one committed journal at the same time
+    val real = tmpRoot()
+    val cat = new Catalog(spark, real)
     val c = cat.create(CollectionConfig(name = "race"))
     c.importDf((1 to 20).map(i => s"row $i").toDF("text"))
     val rows = c.df.orderBy("_key").collect().map(_.toSeq).toSeq
+    val roots = (1 to 4).map { i =>
+      val link = java.nio.file.Files.createTempDirectory("graft_link").resolve(s"root$i")
+      java.nio.file.Files.createSymbolicLink(link, java.nio.file.Paths.get(real)).toString
+    }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try (1 to 20).foreach { round =>
-      assert(new java.io.File(c.dataDir).renameTo(new java.io.File(c.dataDir + "_precompact")),
-        "test setup: stage data aside")
-      val readers = Seq.fill(4)(cat.load("race"))
+      CrashPoints.staged(c)(c.compact(targetFileBytes = 1))
+      CrashPoints.commit(c.dataDir, moved = 0)
+      val readers = roots.map(r => new Catalog(spark, r).load("race"))
       val go = new java.util.concurrent.CountDownLatch(1)
       val counts = readers.map(r => pool.submit(new java.util.concurrent.Callable[Long] {
         def call(): Long = { go.await(); r.count() }
       }))
       go.countDown()
       counts.foreach(f => assert(f.get() == 20L, s"round $round"))
-      assert(!new java.io.File(c.dataDir + "_precompact").exists, s"round $round")
+      assert(!CrashPoints.hasJournal(c.dataDir) && !CrashPoints.hasStage(c.dataDir),
+        s"round $round")
     } finally pool.shutdown()
     assert(c.df.orderBy("_key").collect().map(_.toSeq).toSeq == rows)
   }
 
   test("crashed index-rewrite swap recovers on next read") {
-    // reembedChanged replaces the index dir with the same staged-swap
-    // compact uses; a crash inside the rename window must heal on read
+    // reembedChanged commits its rewrite of the touched index files
+    // through the index root's journal; every crash point reads the old
+    // vectors or the new ones, never both and never none
     val cat = new Catalog(spark, tmpRoot())
     val c = cat.create(CollectionConfig(name = "crash3"))
-    c.importDf(Seq("aa bb", "cc dd").toDF("text"))
+    c.importDf(Seq("aa bb", "cc dd", "ee ff", "gg hh").toDF("text"))
     val emb = new HashingEmbedder(dim = 32)
-    assert(c.embedColumn("text", emb) == 2)
-    val idx = new java.io.File(c.indexDir("text"))
-    val old = new java.io.File(c.indexDir("text") + "_precompact")
-    val tmp = new java.io.File(c.indexDir("text") + "_compacting")
-    // crash after the original was staged aside, rewrite incomplete
-    // (no _SUCCESS) -> reads roll the original back
-    assert(idx.renameTo(old), "test setup: stage index aside")
-    tmp.mkdirs()
-    java.nio.file.Files.write(tmp.toPath.resolve("part-garbage.parquet"),
-      "not parquet".getBytes)
-    assert(c.indexedCount("text") == 2, "read must heal the index swap")
-    assert(!old.exists && !tmp.exists, "recovery must clean the staging dirs")
-    assert(c.reembedChanged("text", emb) == 0, "healed index is current")
+    assert(c.embedColumn("text", emb) == 4)
+    c.compactIndex("text", targetFileBytes = 1) // one file per key
+    def vectors = c.embeddings("text").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq.sortBy(_._1)
+    val old = vectors
+    c.upsert(Seq((1L, "xx yy"), (3L, "zz ww")).toDF("_key", "text"))
+    val fresh = old.map { case (k, v) =>
+      k -> (if (k == 1L) emb.embedOne("xx yy").toSeq
+            else if (k == 3L) emb.embedOne("zz ww").toSeq else v) }
+    val root = c.indexDir("text")
+    CrashPoints.staged(c)(c.reembedChanged("text", emb))
+    assert(c.indexedCount("text") == 4 && vectors == old,
+      "an uncommitted rewrite must not be read")
+    assert(CrashPoints.hasStage(root))
+    CrashPoints.staged(c)(c.reembedChanged("text", emb))
+    val n = CrashPoints.stagedLeaves(root).size
+    assert(n == 2, "the rewrite replaces the two touched files")
+    Seq("none" -> 0, "some" -> 1, "all" -> n).zipWithIndex.foreach { case ((point, moved), i) =>
+      if (i > 0) {
+        // back to the pre-repair index: re-stage the same rewrite
+        c.upsert(Seq((1L, "aa bb"), (3L, "ee ff")).toDF("_key", "text"))
+        assert(c.reembedChanged("text", emb) == 2 && vectors == old)
+        c.upsert(Seq((1L, "xx yy"), (3L, "zz ww")).toDF("_key", "text"))
+        CrashPoints.staged(c)(c.reembedChanged("text", emb))
+      }
+      CrashPoints.commit(root, moved)
+      assert(c.indexedCount("text") == 4, s"$point: the new vectors, never both")
+      assert(vectors == fresh, point)
+      assert(!CrashPoints.hasJournal(root) && !CrashPoints.hasStage(root), point)
+      assert(c.reembedChanged("text", emb) == 0, s"$point: healed index is current")
+    }
   }
 
   test("importChunks widens schema with a new column") {

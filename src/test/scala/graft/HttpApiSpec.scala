@@ -79,10 +79,6 @@ class HttpApiSpec extends SparkSpec {
       val (tc, tb) = post(port, "/collections/docs/search",
         """{"column_name":"text","query":"apple fruit","limit":2,"mode":"late"}""")
       assert(tc == 200 && tb.contains("apple"), tb)
-      val (uc, ub) = post(port, "/collections/docs/search",
-        """{"column_name":"text","query":"x","limit":2,"mode":"late",""" +
-          """"chunk_tokens":8,"chunk_overlap":8}""")
-      assert(uc == 400 && ub.contains("chunk_overlap"), ub)
 
       // ops status: clean collection reports zero inconsistencies and
       // an empty maintenance plan

@@ -93,8 +93,7 @@ class LateInteractionSpec extends SparkSpec {
       Array.fill(20)("parquet footer row group metadata").mkString(" ") +
       "\n\n# physics\n" +
       Array.fill(20)("quantum entanglement teleportation photon").mkString(" ")
-    val page = c.searchLate("text", query, 3, emb,
-      maxTokens = 32, overlapTokens = 4).collect()
+    val page = c.searchLate("text", query, 3, emb).collect()
     assert(page.head.getLong(1) == 1L,
       s"the both-topics doc must win MaxSim, got key ${page.head.getLong(1)}")
     assert(page.head.getString(0) == both, "content hydrates to the full doc")
@@ -114,7 +113,7 @@ class LateInteractionSpec extends SparkSpec {
     // a single-chunk query ranks exactly like vector search (same keys,
     // scores equal after the round-6 fold)
     val short = "quantum entanglement teleportation photon"
-    val late = c.searchLate("text", short, 3, emb, 32, 4).collect()
+    val late = c.searchLate("text", short, 3, emb).collect()
     val vec = c.search("text", short, 3, emb).collect()
     assert(late.map(_.getLong(1)).toSeq == vec.map(_.getLong(1)).toSeq)
     late.zip(vec).foreach { case (l, v) =>
@@ -126,15 +125,15 @@ class LateInteractionSpec extends SparkSpec {
     // Exhaustive probing == the exact path bit-for-bit (every key is a
     // candidate, and candidates score with ALL their chunks)
     c.buildAnnIndex("text", nLists = 3)
-    val exactPage = c.searchLate("text", query, 3, emb, 32, 4).collect()
+    val exactPage = c.searchLate("text", query, 3, emb).collect()
       .map(r => (r.getLong(1), r.getDouble(2))).toSeq
-    val probedAll = c.searchLate("text", query, 3, emb, 32, 4, nProbe = 3)
+    val probedAll = c.searchLate("text", query, 3, emb, nProbe = 3)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
     assert(probedAll == exactPage,
       s"exhaustive probe must equal exact: $probedAll vs $exactPage")
     // narrow probing returns a (possibly shorter) page whose every
     // entry carries its EXACT full-chunk score
-    val probed1 = c.searchLate("text", query, 3, emb, 32, 4, nProbe = 1)
+    val probed1 = c.searchLate("text", query, 3, emb, nProbe = 1)
       .collect().map(r => (r.getLong(1), r.getDouble(2)))
     val exactByKey = exactPage.toMap
     probed1.foreach { case (k, s) =>
@@ -145,7 +144,7 @@ class LateInteractionSpec extends SparkSpec {
     val c2 = cat.create(graft.core.CollectionConfig(name = "late2"))
     c2.importDf(Seq(both, storageOnly, physicsOnly).toDF("text"))
     c2.embedColumnChunked("text", emb, maxTokens = 32, overlapTokens = 4)
-    assert(c2.searchLate("text", query, 3, emb, 32, 4, nProbe = 2)
+    assert(c2.searchLate("text", query, 3, emb, nProbe = 2)
       .collect().map(_.getLong(1)).toSeq == exactPage.map(_._1))
   }
 

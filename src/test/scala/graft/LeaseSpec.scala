@@ -65,7 +65,10 @@ class WriteLeaseSpec extends SparkSpec {
     val cat = new Catalog(spark, tmpRoot())
     val a = cat.create(CollectionConfig(name = "fence"))
     a.importDf(Seq("one", "two").toDF("text"))
+    a.buildDedupIndex("text")
     val b = cat.load("fence")
+    def bandKeys = spark.read.parquet(s"${b.dedupIndexDir("text")}/bands")
+      .select("_key").distinct().count()
     sys.props(WriteLease.LeaseMsProp) = "150"
     try {
       a.writeLock.lock() // A "crashes" here: never releases
@@ -79,6 +82,12 @@ class WriteLeaseSpec extends SparkSpec {
       // otherwise replace the directory B just appended to)
       intercept[java.io.IOException] { a.compact() }
       assert(b.count() == 3, "the fenced compact must not have swapped")
+      // every write commits through the fence: an append...
+      intercept[java.io.IOException] { a.appendDf(Seq("late").toDF("text")) }
+      assert(b.count() == 3, "the fenced append must not land")
+      // ...and a family refresh (B's row 3 is not banded yet)
+      intercept[java.io.IOException] { a.refreshDedupIndex("text") }
+      assert(bandKeys == 2L, "the fenced refresh must not land")
     } finally {
       a.writeLock.unlock()
       sys.props.remove(WriteLease.LeaseMsProp)
@@ -86,5 +95,6 @@ class WriteLeaseSpec extends SparkSpec {
     // the collection remains fully operational
     b.appendDf(Seq("four").toDF("text"))
     assert(b.count() == 4)
+    assert(b.refreshDedupIndex("text") == 2L && bandKeys == 4L)
   }
 }

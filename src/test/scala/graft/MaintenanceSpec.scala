@@ -188,17 +188,23 @@ class MaintenanceSpec extends SparkSpec {
     c.buildNoveltyStore("text")
     assert(plan(c).isEmpty, "a clean collection with a novelty store plans nothing")
 
-    // a rebuild that crashed between its two renames leaves the live
-    // store staged aside; backup must roll it back before copying
-    val nv = new java.io.File(c.noveltyStoreDir("text"))
-    assert(nv.renameTo(new java.io.File(nv.getPath + "_precompact")))
-    val dest = tmpRoot()
-    c.backup(dest)
-    assert(nv.isDirectory, "backup heals the novelty store's swap")
-    val restored = cat.restore(dest, "m5r")
+    // a rebuild killed before its commit leaves a stage, after it a
+    // journal with none, some or all of its files moved; backup heals
+    // either (discards the stage, completes the journal) before copying
+    val nv = c.noveltyStoreDir("text")
     val probe = Seq((100L, "novelty fixture doc 3 word3")).toDF("_key", "text")
-    assert(restored.noveltyCheck("text", probe, "text", "_key")
-      .head().getAs[Long]("n_novel") == 0L, "the restored store still knows the grams")
+    def grams = spark.read.parquet(s"$nv/grams").count()
+    val nGrams = grams
+    CrashPoints.each(c, nv)(c.buildNoveltyStore("text")) { point =>
+      val dest = tmpRoot()
+      c.backup(dest)
+      assert(grams == nGrams, s"$point: the old grams or the new ones, never both")
+      assert(!CrashPoints.hasStage(nv) && !CrashPoints.hasJournal(nv),
+        s"$point: backup heals the novelty store's commit")
+      val restored = cat.restore(dest, s"m5r_$point")
+      assert(restored.noveltyCheck("text", probe, "text", "_key")
+        .head().getAs[Long]("n_novel") == 0L, s"$point: the restored store still knows the grams")
+    }
   }
 
   test("the upsert repair flow (repairIndexes) leaves the binary sketch clean") {

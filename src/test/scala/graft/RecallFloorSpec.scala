@@ -116,8 +116,7 @@ class RecallFloorSpec extends SparkSpec {
       s"${words(i % 12)} document section ${words((i * 3) % 12)} " +
         s"number ${i * 29} tail ${words((i * 13) % 12)}")
     def page(q: String, nProbe: Int): Set[Long] =
-      c.searchLate("text", q, limit = 10, emb, maxTokens = 4,
-          overlapTokens = 1, nProbe = nProbe)
+      c.searchLate("text", q, limit = 10, emb, nProbe = nProbe)
         .select(col("key")).collect().map(_.getLong(0)).toSet
     val recalls = queries.map { q =>
       val gold = page(q, nProbe = 0)

@@ -58,15 +58,17 @@ class TokenizerSpec extends SparkSpec {
     c.importDf((texts :+ null).toDF("text"))
     c.trainTokenizer("text", numMerges = 4)
     val first = c.tokenizerMerges("text").collect().toSeq
-    // retrain over the same corpus (exercises writeAndSwap, not the
-    // fresh-build branch) — identical rules, no leftover swap artifacts
+    // retrain over the same corpus (one commit replacing the old table)
+    // — identical rules, no leftover commit artifacts
     c.trainTokenizer("text", numMerges = 4)
     assert(c.tokenizerMerges("text").collect().toSeq == first)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    Seq("_precompact", "_compacting").foreach { sfx =>
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(
-        c.tokenizerDir("text") + sfx)), s"leftover $sfx")
+    val dir = c.tokenizerDir("text")
+    assert(!CrashPoints.hasStage(dir) && !CrashPoints.hasJournal(dir), "leftover commit files")
+    // a retrain killed before or after its commit serves the old rules
+    // or the new ones, never both and never none
+    CrashPoints.each(c, dir)(c.trainTokenizer("text", numMerges = 4)) { point =>
+      assert(c.hasTokenizer("text"), point)
+      assert(c.tokenizerMerges("text").collect().toSeq == first, point)
     }
     // append shifts counts -> retrain reflects the new corpus
     c.appendDf(Seq.fill(8)("zzz zzz").toDF("text"))
