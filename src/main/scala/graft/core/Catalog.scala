@@ -28,10 +28,15 @@ import java.nio.charset.StandardCharsets
   * in-memory graph is the one reference design that does not survive a
   * 1000-executor cluster.
   *
+  * Each of `data/`, `saved_queries/` and the index family directories is
+  * a [[TableRoot]]: every write commits through the root's journal, and
+  * every driver-side look at the root's files comes from one of its
+  * snapshots, which first roll a committed write forward.
+  *
   * Serving reads go through [[ServingCache]], a per-driver read cache of
   * these same Parquet tables keyed by file identity — not a second
   * storage format: what a search returns is what a Spark read of the
-  * listed files would rank and fetch.
+  * snapshot's files would rank and fetch.
   */
 class Collection private[core] (
     val spark: SparkSession,
@@ -55,9 +60,15 @@ class Collection private[core] (
     s"$dir/${config.index_dir}/$column${f.suffix}"
   }
 
-  /** A family sub-table's path; `""` is the family directory itself. */
-  private def table(f: IndexFamily, column: String, sub: String): String =
-    if (sub.isEmpty) familyDir(f, column) else s"${familyDir(f, column)}/$sub"
+  /** The table root at `path`; its commits fence on [[writeLock]]. */
+  private def root(path: String): TableRoot = new TableRoot(fs, path, writeLock)
+  private def dataRoot: TableRoot = root(dataDir)
+  private def queriesRoot: TableRoot = root(queriesDir)
+  private def familyRoot(f: IndexFamily, column: String): TableRoot = root(familyDir(f, column))
+
+  /** Family `f`'s files for `column`, after a committed write rolled forward. */
+  private[core] def snapshot(f: IndexFamily, column: String): TableRoot.Snapshot =
+    familyRoot(f, column).snapshot()
 
   /** The one read of a family sub-table: given paths (the table's
     * directory or some of its files), the rows in the table's declared
@@ -67,16 +78,19 @@ class Collection private[core] (
   private def reader(f: IndexFamily, sub: String): Seq[String] => DataFrame =
     paths => f.read(spark, sub, paths, if (f == VectorIndex) vectorLayout.columns else Nil)
 
+  private def read(f: IndexFamily, s: TableRoot.Snapshot, sub: String): DataFrame =
+    reader(f, sub)(Seq(s.path(sub)))
+
   private def read(f: IndexFamily, column: String, sub: String): DataFrame =
-    reader(f, sub)(Seq(table(f, column, sub)))
+    read(f, snapshot(f, column), sub)
 
   /** A small family table (params, centroids, codebooks, keyword stats,
-    * classifier weights) read whole through the serving cache, else
-    * through Spark, in its declared schema.
+    * classifier weights) of snapshot `s` read whole through the serving
+    * cache, else through Spark, in its declared schema.
     */
-  private def smallTable(f: IndexFamily, column: String, sub: String): Seq[Row] =
-    ServingCache.table(hadoopConf, table(f, column, sub), f.schema(sub))
-      .getOrElse(read(f, column, sub).collect().toSeq)
+  private def smallTable(f: IndexFamily, s: TableRoot.Snapshot, sub: String): Seq[Row] =
+    ServingCache.table(hadoopConf, s, sub, f.schema(sub))
+      .getOrElse(read(f, s, sub).collect().toSeq)
 
   private def fs: FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -84,8 +98,8 @@ class Collection private[core] (
   /** Serializes the collection's WRITERS against each other: every write
     * holds it across its whole stage-and-commit, so no two writes ever
     * interleave their reads of a table with their commits to it. Readers
-    * stay lock-free apart from the commit's brief monitor window
-    * ([[swapMonitor]]). Cross-process (and cross-instance) safety comes
+    * stay lock-free apart from a commit's brief monitor window
+    * ([[TableRoot.commit]]). Cross-process (and cross-instance) safety comes
     * from the [[WriteLease]] file beneath the JVM lock: a foreign writer
     * refuses loudly instead of interleaving, a crashed holder's lease
     * expires, and every commit fences with [[WriteLease.checkHeld]].
@@ -98,36 +112,15 @@ class Collection private[core] (
     * (importChunks adding a new column) never require rewriting existing
     * data; rows from older files read the new columns as null.
     */
-  def df: DataFrame = {
-    recoverFileSwap(dataDir)
-    spark.read.option("mergeSchema", "true").parquet(dataDir)
-  }
+  def df: DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(dataRoot.snapshot().dir)
 
-  /** No table yet; like every read, it first completes a committed write. */
-  def isEmpty: Boolean = { recoverFileSwap(dataDir); !fs.exists(new Path(dataDir)) }
+  /** No table yet. */
+  def isEmpty: Boolean = !dataRoot.snapshot().has()
 
-  /** The monitor every commit of this collection holds: the journal
-    * rename, its completion, and a read's roll-forward. It is keyed by
-    * the collection directory for the whole JVM, not by this instance —
-    * an HTTP request loads its own instance, and a writer elsewhere in
-    * the process holds another. Instances reached through another path
-    * (another process, a symlinked root) do not share it; completion is
-    * idempotent for them ([[completeFileSwap]]).
-    */
-  private def swapMonitor: AnyRef =
-    Collection.swapMonitors.computeIfAbsent(
-      fs.makeQualified(new Path(dir)).toString, _ => new Object)
-
-  // ---- the commit protocol ---------------------------------------------
-  //
-  // Every write to a table of the collection commits through one journal
-  // of its table ROOT: `data/`, `saved_queries/` or a family directory
-  // `index/<column><suffix>/`. A commit stages its files under
-  // `<root>_staging/` and names them by their path relative to the root
-  // (`bands/part-….parquet`, `postings/bucket=3/part-….parquet`), so one
-  // commit can carry several sub-tables: a refresh's rows and their
-  // fingerprints, a rebuild's every table. Each kind of write maps onto
-  // it:
+  // Every write to a table of the collection commits through the journal
+  // of its table root ([[TableRoot.commit]]). Each kind of write maps
+  // onto it:
   //   - an append replaces nothing;
   //   - a file-granular rewrite ([[upsert]], [[deleteKeys]], the
   //     fingerprint repairs) replaces only the files whose footer `_key`
@@ -135,157 +128,23 @@ class Collection private[core] (
   //     data I/O), so a 1,000-row correction into a huge table costs
   //     O(touched files), not O(table);
   //   - a compaction, rebuild or retrain replaces every leaf of the
-  //     tables it rewrites ([[leaves]]);
+  //     tables it rewrites;
   //   - a fresh build commits into an absent root with its marker table
   //     moving last ([[stagedBuild]]).
-  //
-  // Commit protocol (crash-safe, roll-forward), owned by the writer:
-  //   1. write the rows to `<root>_staging/` (Spark job);
-  //   2. write a journal listing (files-to-delete, staged-files) to a tmp
-  //      name, fence on the lease, and RENAME it to `<root>_swapjournal`
-  //      — this rename is the commit point;
-  //   3. move staged files into the root, then delete the replaced
-  //      files, then drop the staging dir and the journal.
-  // Readers only roll forward: a crash after (2) is completed by the next
-  // read re-running (3), and every step is idempotent, also when two
-  // processes complete one journal at once — so rows are never lost and
-  // duplicates never survive past the heal that every read performs. A
-  // stage without a journal is a write in flight to every reader, on
-  // this instance or another, so only a writer under the lease discards
-  // one ([[discardStage]]) — the leftovers of a crash before (2).
-
-  private def journalPath(root: String) = new Path(root + "_swapjournal")
-  private def journalTmp(root: String) = new Path(root + "_swapjournal_tmp")
-  private def stagingPath(root: String) = new Path(root + "_staging")
-
-  /** Read-side heal: complete a committed journal of `root`. It deletes
-    * nothing else, so it is safe beside any write.
-    */
-  private[core] def recoverFileSwap(root: String): Unit = swapMonitor.synchronized {
-    if (fs.exists(journalPath(root))) completeFileSwap(root)
-  }
-
-  /** Writer-side heal, under the write lease: roll a committed journal
-    * forward, then discard a crashed write's uncommitted stage and tmp
-    * journal — with the lease held, no other write can own them.
-    */
-  private def discardStage(root: String): Unit = swapMonitor.synchronized {
-    recoverFileSwap(root)
-    fs.delete(stagingPath(root), true)
-    fs.delete(journalTmp(root), false)
-  }
-
-  /** `sub` under `root`; `""` is the root itself. */
-  private def subPath(root: String, sub: String): String =
-    if (sub.isEmpty) root else s"$root/$sub"
-
-  /** Every `.parquet` leaf of `root`'s sub-table `sub` (`""`: all of the
-    * root), by its path relative to the root; none when absent.
-    */
-  private def leaves(root: String, sub: String = ""): Seq[String] = {
-    val dir = new Path(subPath(root, sub))
-    if (!fs.exists(dir)) return Nil
-    val base = fs.makeQualified(new Path(root)).toString + "/"
-    val it = fs.listFiles(dir, true)
-    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
-      .filter(_.getName.endsWith(".parquet")).map(_.toString.stripPrefix(base)).toSeq
-  }
 
   /** The leaves of sub-table `sub` holding `files`. */
   private def leavesOf(sub: String, files: Seq[FileKeyRange]): Seq[String] =
     files.map(f => if (sub.isEmpty) f.path.getName else s"$sub/${f.path.getName}")
 
-  /** Commit one write to the table root `root`: `write` stages the rows
-    * (given the stage root, it writes sub-table `t` at `<stage>/t`), and
-    * the commit replaces the `replaced` leaves with them. Caller must
-    * hold [[writeLock]]. `replaced` is taken after a committed journal of
-    * the root was rolled forward. Leaves under the sub-tables named in
-    * `order` move in that order, the rest after them. A stage with no
-    * leaves and nothing replaced commits nothing. The journal rename and
-    * its completion hold [[swapMonitor]], so a reader in this JVM never
-    * rolls a half-completed commit forward beside this thread.
+  /** The files of `s`'s sub-table `sub` whose footer `_key` range
+    * intersects at least one key in `keys` — the "which files does this
+    * batch touch" planning step. Footer ranges are O(files) driver-side
+    * metadata; the intersection is one broadcast range-join collecting
+    * only file ids.
     */
-  private def replaceFiles(root: String, replaced: => Seq[String],
-                           order: Seq[String] = Nil)(write: String => Unit): Unit = {
-    discardStage(root)
-    val deleteLeaves = replaced
-    val stage = stagingPath(root)
-    write(stage.toString)
-    val stagedLeaves = leaves(stage.toString).sortBy { n =>
-      val i = order.indexOf(n.takeWhile(_ != '/'))
-      if (i < 0) order.length else i
-    }
-    if (stagedLeaves.isEmpty && deleteLeaves.isEmpty) { fs.delete(stage, true); return }
-    // Spark part-file names embed a per-job UUID, so a collision with an
-    // existing file would mean something is deeply wrong — refuse rather
-    // than let the journal's delete step destroy the staged replacement
-    stagedLeaves.foreach { n =>
-      require(!fs.exists(new Path(root, n)), s"staged file name collides with existing: $n")
-    }
-    val body = (deleteLeaves.map("D " + _) ++ stagedLeaves.map("S " + _)).mkString("\n")
-    val jTmp = journalTmp(root)
-    val out = fs.create(jTmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    // fencing: an op that outlived a broken lease must not commit over
-    // the new holder's files
-    writeLock.checkHeld()
-    swapMonitor.synchronized {
-      if (!fs.rename(jTmp, journalPath(root)))
-        throw new java.io.IOException(s"could not commit swap journal for $root")
-      completeFileSwap(root)
-    }
-  }
-
-  /** Execute a committed journal to completion. Moves staged files in, in
-    * journal order, BEFORE deleting replaced ones: a crash mid-way leaves
-    * extra rows that the next read's re-run removes, never missing rows.
-    * Idempotent, also beside another process completing the same journal
-    * (which this JVM's monitor cannot exclude): a move whose source is
-    * gone and whose destination exists is done, and a journal gone
-    * before it could be read was completed. A staged file gone from both
-    * places fails the completion before anything is deleted.
-    */
-  private def completeFileSwap(root: String): Unit = {
-    val j = journalPath(root)
-    val stage = stagingPath(root)
-    val lines =
-      try {
-        val in = fs.open(j)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList.filter(_.nonEmpty)
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => return }
-    lines.collect { case l if l.startsWith("S ") => l.drop(2) }.foreach { n =>
-      val src = new Path(stage, n)
-      val dst = new Path(root, n)
-      if (fs.exists(src)) {
-        if (fs.exists(dst)) fs.delete(src, false)
-        else {
-          // an append may be the root's (or a partition's) first write
-          fs.mkdirs(dst.getParent)
-          val moved =
-            try fs.rename(src, dst) catch { case _: java.io.FileNotFoundException => false }
-          if (!moved && (fs.exists(src) || !fs.exists(dst)))
-            throw new java.io.IOException(s"file swap: could not move $n into $root")
-        }
-      } else if (!fs.exists(dst))
-        throw new java.io.IOException(s"file swap: staged $n is in neither $stage nor $root")
-    }
-    lines.collect { case l if l.startsWith("D ") => l.drop(2) }.foreach { n =>
-      fs.delete(new Path(root, n), false)
-    }
-    fs.delete(stage, true)
-    fs.delete(j, false)
-  }
-
-  /** The files under `target` whose footer `_key` range intersects at
-    * least one key in `keys` — the "which files does this batch touch"
-    * planning step. Footer ranges are O(files) driver-side metadata; the
-    * intersection is one broadcast range-join collecting only file ids.
-    */
-  private def touchedFiles(target: String, keys: DataFrame,
+  private def touchedFiles(s: TableRoot.Snapshot, sub: String, keys: DataFrame,
                            colName: String = KeyCol): Seq[FileKeyRange] = {
-    val ranges = ParquetStats.fileKeyRanges(target, colName,
-      spark.sparkContext.hadoopConfiguration)
+    val ranges = ParquetStats.fileKeyRanges(s.paths(sub), colName, hadoopConf)
     if (ranges.isEmpty) return Seq.empty
     import spark.implicits._
     val rangesDf = ranges.zipWithIndex
@@ -320,11 +179,12 @@ class Collection private[core] (
     * designed metadata plane); the task data plane then reads only the
     * files a scoped key actually lives in.
     */
-  private def scopedRead(target: String, keys: DataFrame,
+  private def scopedRead(root: TableRoot, sub: String, keys: DataFrame,
                          read: Seq[String] => DataFrame): DataFrame = {
     val k = keys.select(col(keys.columns.head).cast(LongType).as(KeyCol))
-    val touched = touchedFiles(target, k)
-    if (touched.isEmpty) read(Seq(target)).limit(0)
+    val s = root.snapshot()
+    val touched = touchedFiles(s, sub, k)
+    if (touched.isEmpty) read(Seq(s.path(sub))).limit(0)
     else read(touched.map(_.path.toString)).join(broadcast(k), Seq(KeyCol), "left_semi")
   }
 
@@ -334,17 +194,20 @@ class Collection private[core] (
     *
     * Served from parquet FOOTER metadata ([[ParquetStats.totalRows]] —
     * exact, authoritative, O(files) KB-sized reads), not a table scan: at
-    * 10^10 rows a count must not read data pages. [[isEmpty]] completes a
-    * committed journal first — a committed-but-unfinished commit leaves
-    * replaced files in place and their replacements in the staging
-    * sibling, and a raw footer listing of that state counts the old rows;
-    * after healing, both paths list the same file set and agree. An
+    * 10^10 rows a count must not read data pages. The footers are those
+    * of the data root's snapshot, which completes a committed journal
+    * first — a committed-but-unfinished commit leaves replaced files in
+    * place and their replacements in the staging sibling, and a footer
+    * listing of that state would count the old rows; after the
+    * roll-forward, both paths read the same file set and agree. An
     * unreadable footer falls back to the scan rather than failing the
     * count.
     */
-  def count(): Long =
-    if (isEmpty) 0L
-    else ParquetStats.totalRows(dataDir, hadoopConf).getOrElse(df.count())
+  def count(): Long = {
+    val s = dataRoot.snapshot()
+    if (!s.has()) 0L
+    else ParquetStats.totalRows(s.paths(), hadoopConf).getOrElse(df.count())
+  }
 
   /** Import a DataFrame as the initial table contents, assigning `_key`
     * (dense 1..N) unless the source already carries one (S1/S2). The
@@ -383,7 +246,7 @@ class Collection private[core] (
     * Caller holds [[writeLock]].
     */
   private def appendData(rows: DataFrame): Unit =
-    replaceFiles(dataDir, Nil)(rows.write.parquet(_))
+    dataRoot.commit(Nil)(rows.write.parquet(_))
 
   /** Compact the collection's data files — the operational answer to the
     * small-file problem an append-heavy collection accumulates (every
@@ -396,13 +259,14 @@ class Collection private[core] (
   def compact(targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     writeLock.lock()
     try {
-      if (isEmpty) return 0
-      val nFiles = filesFor(dataDir, targetFileBytes)
+      val s = dataRoot.snapshot()
+      if (!s.has()) return 0
+      val nFiles = filesFor(s.bytes(), targetFileBytes)
       // range-clustered, not round-robin: compaction must PRESERVE the
       // key clustering that upsert/delete footer pruning depends on —
       // a hash repartition makes every file's key range span the whole
       // table and the next 10-key upsert rewrites every file
-      replaceFiles(dataDir, leaves(dataDir))(keyClustered(df, nFiles).write.parquet(_))
+      dataRoot.commit(s.names())(keyClustered(df, nFiles).write.parquet(_))
       nFiles
     } finally writeLock.unlock()
   }
@@ -410,9 +274,9 @@ class Collection private[core] (
   private def keyClustered(rows: DataFrame, nFiles: Int): DataFrame =
     rows.repartitionByRange(math.max(1, nFiles), col(KeyCol)).sortWithinPartitions(KeyCol)
 
-  /** File count that rewrites `target` at ~`targetFileBytes` per file. */
-  private def filesFor(target: String, targetFileBytes: Long): Int = math.max(1,
-    math.ceil(fs.getContentSummary(new Path(target)).getLength.toDouble / targetFileBytes).toInt)
+  /** File count that rewrites `bytes` at ~`targetFileBytes` per file. */
+  private def filesFor(bytes: Long, targetFileBytes: Long): Int =
+    math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
 
   /** A build's file count: `nFiles`, or a quarter of the parallelism. */
   private def buildFiles(nFiles: Int): Int =
@@ -427,29 +291,19 @@ class Collection private[core] (
   // code; every one of them commits through the family directory's
   // journal.
 
-  /** A writer's heal of the family, under the write lease: roll a
-    * committed journal forward, discard a crashed write's stage.
-    */
-  private[core] def heal(f: IndexFamily, column: String): Unit =
-    discardStage(familyDir(f, column))
-
-  /** Whether the family is built; like every read, it first completes a
-    * committed write.
-    */
-  private[core] def built(f: IndexFamily, column: String): Boolean = {
-    recoverFileSwap(familyDir(f, column))
-    fs.exists(new Path(table(f, column, f.marker)))
-  }
+  /** Whether the family is built. */
+  private[core] def built(f: IndexFamily, column: String): Boolean =
+    snapshot(f, column).has(f.marker)
 
   /** The prologue of every index-family write: validate the column, hold
     * [[writeLock]] across the whole call (a rewrite must never interleave
-    * with another writer's append), heal the family. `body` gets the
-    * family directory.
+    * with another writer's append), heal the family ([[TableRoot.discard]]).
+    * `body` gets the family's root.
     */
-  private def maintained[A](f: IndexFamily, column: String)(body: String => A): A = {
+  private def maintained[A](f: IndexFamily, column: String)(body: TableRoot => A): A = {
     Identifiers.validate(column)
     writeLock.lock()
-    try { heal(f, column); body(familyDir(f, column)) }
+    try { val r = familyRoot(f, column); r.discard(); body(r) }
     finally writeLock.unlock()
   }
 
@@ -460,24 +314,22 @@ class Collection private[core] (
     * and a rebuild never leaves stale sub-tables beside new ones.
     */
   private def stagedBuild(f: IndexFamily, column: String)(build: String => Unit): Unit = {
-    val root = familyDir(f, column)
-    replaceFiles(root, leaves(root),
+    val r = familyRoot(f, column)
+    r.commit(r.snapshot().names(),
       f.tables.keys.filter(_ != f.marker).toSeq.sorted :+ f.marker)(build)
   }
 
-  /** One commit rewriting family `f`'s sub-tables `subs`, those present:
-    * `rewrite(sub, nFiles)` gives a table's rows re-clustered into
-    * `nFiles` files, ~`targetFileBytes` each, and every leaf of the
-    * rewritten tables is replaced. Returns the file count per sub-table,
-    * 0 for an absent one.
+  /** One commit rewriting the sub-tables `subs` of `root`, those present
+    * in its snapshot `s`: `rewrite(sub, nFiles)` gives a table's rows
+    * re-clustered into `nFiles` files, ~`targetFileBytes` each, and every
+    * leaf of the rewritten tables is replaced. Returns the file count per
+    * sub-table, 0 for an absent one.
     */
-  private def compactTables(f: IndexFamily, column: String, targetFileBytes: Long,
+  private def compactTables(root: TableRoot, s: TableRoot.Snapshot, targetFileBytes: Long,
                             subs: String*)(rewrite: (String, Int) => DataFrame): Seq[Int] = {
-    val root = familyDir(f, column)
-    val counts = subs.map(t =>
-      if (fs.exists(new Path(root, t))) filesFor(s"$root/$t", targetFileBytes) else 0)
+    val counts = subs.map(t => if (s.has(t)) filesFor(s.bytes(t), targetFileBytes) else 0)
     val present = subs.zip(counts).filter(_._2 > 0)
-    replaceFiles(root, present.flatMap(t => leaves(root, t._1))) { stage =>
+    root.commit(present.flatMap(t => s.names(t._1))) { stage =>
       present.foreach { case (t, n) => rewrite(t, n).write.parquet(s"$stage/$t") }
     }
     counts
@@ -506,14 +358,12 @@ class Collection private[core] (
   }
 
   /** The keys a keyed family holds (its `keys` table, read as `_key`),
-    * None while that table has no files. Caller has healed the family.
+    * None while that table has no files.
     */
   private def heldKeys(f: IndexFamily, column: String): Option[DataFrame] =
     f.keys.flatMap { case (t, keyCol) =>
-      val p = new Path(table(f, column, t))
-      Option.when(fs.exists(p) &&
-          fs.listStatus(p).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))(
-        read(f, column, t).select(col(keyCol).as(KeyCol)))
+      val s = snapshot(f, column)
+      Option.when(s.files(t).nonEmpty)(read(f, s, t).select(col(keyCol).as(KeyCol)))
     }
 
   /** The family's highest held key: its refresh and stream watermark. */
@@ -558,7 +408,7 @@ class Collection private[core] (
       .foreachBatch { (batch: DataFrame, _: Long) =>
         writeLock.lock()
         try {
-          heal(f, column)
+          familyRoot(f, column).discard()
           if (!built(f, column)) { bootstrap; maxSeen = heldWatermark(f, column); seeded = true }
           else {
             if (!seeded) { maxSeen = heldWatermark(f, column); seeded = true }
@@ -581,7 +431,7 @@ class Collection private[core] (
   }
 
   /** Fingerprint-driven copy-on-write repair of the key-clustered
-    * sub-table `sub` of the table root `root`: keys whose `current`
+    * sub-table `sub` of `root`: keys whose `current`
     * upstream `(key, fp)` differs from the `stored` one — or lacks one on
     * either side (unseen keys, including
     * below-watermark upsert inserts; legacy fingerprint-less rows) — get
@@ -597,7 +447,7 @@ class Collection private[core] (
     * executor fails the repair instead of recomputing it, and a re-run heals.
     */
   private def repairByFingerprint(
-      root: String, sub: String, current: DataFrame, stored: DataFrame,
+      root: TableRoot, sub: String, current: DataFrame, stored: DataFrame,
       read: Seq[String] => DataFrame,
       touched: Option[DataFrame => Seq[FileKeyRange]] = None,
       cluster: (DataFrame, Int) => DataFrame = keyClustered)(
@@ -610,14 +460,14 @@ class Collection private[core] (
     val n = changed.count()
     if (n > 0L) {
       val rows = fresh(changed)
-      val files = touched.fold(touchedFiles(subPath(root, sub), changed))(_(changed))
+      val files = touched.fold(touchedFiles(root.snapshot(), sub, changed))(_(changed))
       val next =
         if (files.isEmpty) rows
         else read(files.map(_.path.toString))
           .join(changed, Seq(KeyCol), "left_anti")
           .unionByName(rows)
-      replaceFiles(root, leavesOf(sub, files)) { stage =>
-        cluster(next, files.length).write.parquet(subPath(stage, sub))
+      root.commit(leavesOf(sub, files)) { stage =>
+        cluster(next, files.length).write.parquet(TableRoot.subPath(stage, sub))
       }
       sidecar(changed, rows)
     }
@@ -637,7 +487,7 @@ class Collection private[core] (
     * existing file's range (genuinely new keys) simply become new files.
     * The replacement is range-clustered and key-sorted on write so future
     * upserts keep tight footer intervals to prune against. Commit is the
-    * journaled file swap ([[replaceFiles]]) — crash-safe with
+    * data root's journal ([[TableRoot.commit]]) — crash-safe with
     * roll-forward recovery on the next read.
     *
     * An upsert on an INDEXED collection leaves changed rows' embeddings
@@ -648,12 +498,13 @@ class Collection private[core] (
   def upsert(updates: DataFrame): Unit = {
     writeLock.lock()
     try {
-      require(!isEmpty, s"collection ${config.name} has no data; use import")
+      val s = dataRoot.snapshot()
+      require(s.has(), s"collection ${config.name} has no data; use import")
       val existing = df
       val fields = existing.schema.fields
       val aligned = updates.select(
         existing.schema.fieldNames.map(col).toIndexedSeq: _*)
-      val touched = touchedFiles(dataDir, aligned.select(KeyCol))
+      val touched = touchedFiles(s, "", aligned.select(KeyCol))
       val base =
         if (touched.isEmpty)
           spark.createDataFrame(
@@ -669,7 +520,7 @@ class Collection private[core] (
           }.toIndexedSeq: _*)
         }
       val merged = graft.operators.Upsert(base, aligned, KeyCol)
-      replaceFiles(dataDir, leavesOf("", touched)) { stage =>
+      dataRoot.commit(leavesOf("", touched)) { stage =>
         keyClustered(merged, touched.length).write.parquet(stage)
       }
     } finally writeLock.unlock()
@@ -728,18 +579,13 @@ class Collection private[core] (
     * pre-fingerprint index files read `fp` as null.
     */
   private def indexRaw(column: String): Option[DataFrame] = {
-    recoverFileSwap(indexDir(column))
-    val idx = new Path(indexDir(column))
-    val hasData = fs.exists(idx) &&
-      fs.listStatus(idx).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    Option.when(hasData)(read(VectorIndex, column, ""))
+    val s = snapshot(VectorIndex, column)
+    Option.when(s.files().nonEmpty)(read(VectorIndex, s, ""))
   }
 
   /** Number of indexed vectors for `column` (A2: the reference asks the
-    * usearch index for its size, collection_actor.rs:367-378). Goes
-    * through [[embeddings]] — NOT a bare directory-existence check —
-    * so a committed journal rolls forward before counting;
-    * the absent-index case is the empty frame, count 0.
+    * usearch index for its size, collection_actor.rs:367-378), through
+    * [[embeddings]]; the absent-index case is the empty frame, count 0.
     */
   def indexedCount(column: String): Long = embeddings(column).count()
 
@@ -752,8 +598,8 @@ class Collection private[core] (
   // `(key, text)` rows into stored rows and [[appendVectors]] commits
   // them. The embed job can run for hours at corpus scale, long past the
   // lease, so nothing lands in the live index from it directly: it writes
-  // the file swap's stage, and [[replaceFiles]] re-checks (and renews) the
-  // lease AFTER the job, before the journal commits the cheap moves. A
+  // the commit's stage, and [[TableRoot.commit]] re-checks (and renews)
+  // the lease AFTER the job, before the journal commits the cheap moves. A
   // crash before that commit leaves a stage the next writer discards (the
   // watermark never advanced, so the batch re-embeds whole); a crash
   // after it is rolled forward by the next read, so a partly moved batch
@@ -782,11 +628,11 @@ class Collection private[core] (
       .as[(Long, String)]
   }
 
-  /** Commit stored rows into `column`'s index: a file swap that replaces
+  /** Commit stored rows into `column`'s index: a commit that replaces
     * nothing. Caller holds [[writeLock]].
     */
   private def appendVectors(column: String, rows: DataFrame): Unit =
-    replaceFiles(indexDir(column), Nil)(rows.write.mode("overwrite").parquet(_))
+    familyRoot(VectorIndex, column).commit(Nil)(rows.write.mode("overwrite").parquet(_))
 
   /** K2: insert caller-provided vectors directly into `column`'s index —
     * the reference accepts externally produced embeddings into its
@@ -797,7 +643,7 @@ class Collection private[core] (
     * (absent reads null — repair passes conservatively treat
     * fingerprint-less rows as changed). Vectors quantize per the
     * collection's `model_variant` like every embed pass and the append
-    * commits through the same journaled file swap.
+    * commits through the same journal.
     */
   def insertVectors(column: String, vectors: DataFrame): Long =
     maintained(VectorIndex, column) { _ =>
@@ -961,7 +807,7 @@ class Collection private[core] (
   def reembedChanged(column: String, embedder: graft.embed.Embedder,
                      batchSize: Int = 32,
                      scope: Option[DataFrame] = None): Long =
-    maintained(VectorIndex, column) { target =>
+    maintained(VectorIndex, column) { root =>
       indexRaw(column).fold(0L) { raw =>
         // scoped repair prunes the fingerprint compare to the batch's key
         // range; the default full reconcile reads every fingerprint
@@ -973,7 +819,7 @@ class Collection private[core] (
         val text = coalesce(col(column).cast(StringType), lit(""))
         val current = sc(df.filter(col(KeyCol) <= watermarkOf(raw)))
           .select(col(KeyCol), md5(text).as("fp"), text.as("__txt"))
-        repairByFingerprint(target, "", current, vectorFps(sc(raw)), reader(VectorIndex, "")) {
+        repairByFingerprint(root, "", current, vectorFps(sc(raw)), reader(VectorIndex, "")) {
           changed => embedRows(texts(changed, "__txt"), embedder, batchSize, chunking(column))
         } { (_, _) => () }
       }
@@ -995,10 +841,12 @@ class Collection private[core] (
     * Returns the file count written, 0 when the index is absent.
     */
   def compactIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(VectorIndex, column) { target =>
-      indexRaw(column).fold(0) { raw =>
-        val nFiles = filesFor(target, targetFileBytes)
-        replaceFiles(target, leaves(target))(keyClustered(raw, nFiles).write.parquet(_))
+    maintained(VectorIndex, column) { root =>
+      val s = root.snapshot()
+      if (s.files().isEmpty) 0
+      else {
+        val nFiles = filesFor(s.bytes(), targetFileBytes)
+        root.commit(s.names())(keyClustered(read(VectorIndex, s, ""), nFiles).write.parquet(_))
         nFiles
       }
     }
@@ -1048,8 +896,7 @@ class Collection private[core] (
     */
   private def denseHits(column: String, qv: Array[Float], limit: Int,
                         after: Option[(Double, Long)]): DataFrame = {
-    recoverFileSwap(indexDir(column))
-    ServingCache.vectors(hadoopConf, indexDir(column), vectorLayout) match {
+    ServingCache.vectors(hadoopConf, snapshot(VectorIndex, column), vectorLayout) match {
       case Some(segs) => residentPage(segs, qv, limit, after)
       case None => after match {
         case None => graft.search.Search.topK(embeddings(column), qv, limit)
@@ -1173,14 +1020,15 @@ class Collection private[core] (
     val qDf = qVecs.zipWithIndex
       .map { case (v, i) => (i.toLong, v) }.toDF("__qid", "__qvec")
     val emb0 = embeddings(column)
+    val ann = snapshot(AnnIndex, column)
     val emb =
-      if (nProbe > 0 && built(AnnIndex, column)) {
-        val centers = readAnnCenters(column)
+      if (nProbe > 0 && ann.has(AnnIndex.marker)) {
+        val centers = readAnnCenters(ann)
         val probes = qVecs
           .flatMap(v => graft.search.Ann.ivfProbes(centers, v,
             math.min(nProbe, centers.length)))
           .distinct.map(Integer.valueOf)
-        val pqM = annPqM(column)
+        val pqM = annPqM(ann)
         val lists = annLists(column, pqM).filter(col("list_id").isin(probes: _*))
         val window = math.max(limit, if (fetchK > 0) fetchK else limit * 4)
         if (pqM == 0) {
@@ -1233,7 +1081,7 @@ class Collection private[core] (
   // Every write to a built keyword index (refresh, the stream's
   // micro-batches, repair, the delete erase) stages its postings, doclen
   // and stats deltas and commits them with ONE journal of the family
-  // directory ([[replaceFiles]]), moving
+  // directory ([[TableRoot.commit]]), moving
   // postings, then doclen, then the stats row: the batch lands whole or
   // not at all, and a reader between two moves sees at worst postings
   // whose doclen row has not landed yet, which scoring's inner join
@@ -1247,9 +1095,10 @@ class Collection private[core] (
     */
   private def keywordCommit(column: String)(
       stage: (String, graft.search.Keyword.Stats) => Long): Long = {
-    val st = keywordStats(column).get
+    val r = familyRoot(KeywordIndex, column)
+    val st = keywordStats(r.snapshot()).get
     var n = 0L
-    replaceFiles(keywordIndexDir(column), Nil, KeywordCommitOrder)(s => n = stage(s, st))
+    r.commit(Nil, KeywordCommitOrder)(s => n = stage(s, st))
     n
   }
 
@@ -1279,7 +1128,7 @@ class Collection private[core] (
     maintained(KeywordIndex, column) { _ =>
       if (!built(KeywordIndex, column)) {
         buildKeywordIndex(column)
-        keywordStats(column).fold(0L)(_.nDocs)
+        keywordStats(snapshot(KeywordIndex, column)).fold(0L)(_.nDocs)
       } else {
         val pending = df.filter(col(KeyCol) > heldWatermark(KeywordIndex, column))
           .select(col(KeyCol), col(column))
@@ -1296,12 +1145,12 @@ class Collection private[core] (
     * watermark. Returns the number of documents re-indexed.
     */
   def repairKeywordIndex(column: String, scope: Option[DataFrame] = None): Long =
-    maintained(KeywordIndex, column) { target =>
+    maintained(KeywordIndex, column) { root =>
       if (!built(KeywordIndex, column)) 0L
       // a scoped repair prunes the text read + fp compare to the batch's
       // keys; the tombstone generation inside is already key-range-pruned
       else keywordCommit(column)((stage, st) => graft.search.Keyword.repairIndex(
-        scope.fold(df)(scopedTo(df, _)).select(col(KeyCol), col(column)), target,
+        scope.fold(df)(scopedTo(df, _)).select(col(KeyCol), col(column)), root.dir,
         stage, st, idCol = KeyCol, textCol = column))
     }
 
@@ -1324,19 +1173,20 @@ class Collection private[core] (
     * accumulate, restoring scan cost to O(live postings).
     */
   def compactKeywordIndex(column: String): Unit =
-    maintained(KeywordIndex, column) { target =>
-      if (built(KeywordIndex, column))
-        replaceFiles(target, leaves(target), KeywordCommitOrder)(
-          graft.search.Keyword.compactIndexTo(spark, target, _))
+    maintained(KeywordIndex, column) { root =>
+      val s = root.snapshot()
+      if (s.has(KeywordIndex.marker))
+        root.commit(s.names(), KeywordCommitOrder)(
+          graft.search.Keyword.compactIndexTo(spark, root.dir, _))
     }
 
-  /** The built index's summed stats log ([[graft.search.Keyword.Stats]]:
-    * corpus stats, bucket count, analyzer), read through the serving
-    * cache; None when unbuilt.
+  /** The summed stats log ([[graft.search.Keyword.Stats]]: corpus stats,
+    * bucket count, analyzer) of keyword index snapshot `s`, read through
+    * the serving cache; None when unbuilt.
     */
-  private def keywordStats(column: String): Option[graft.search.Keyword.Stats] =
-    Option.when(built(KeywordIndex, column))(graft.search.Keyword.sumStats(
-      smallTable(KeywordIndex, column, "stats")))
+  private def keywordStats(s: TableRoot.Snapshot): Option[graft.search.Keyword.Stats] =
+    Option.when(s.has(KeywordIndex.marker))(graft.search.Keyword.sumStats(
+      smallTable(KeywordIndex, s, "stats")))
 
   /** BM25 page over `column`, content-fetched like [[search]]. Uses the
     * pruned persistent index when built, else falls back to a one-shot
@@ -1368,19 +1218,20 @@ class Collection private[core] (
       require(words.nonEmpty, "keyword search requires a non-empty query")
       require(posWords.nonEmpty, "keyword search requires at least one non-excluded query term")
     }
-    val st = keywordStats(column)
+    val index = snapshot(KeywordIndex, column)
+    val st = keywordStats(index)
     val analyzer = keywordAnalyzer(st)
     val terms = analyzer.queryTokens(posWords.mkString(" "))
-    Option.when(terms.nonEmpty)(KeywordQuery(st, terms,
+    Option.when(terms.nonEmpty)(KeywordQuery(index, st, terms,
       analyzer.queryTokens(negWords.map(_.drop(1)).mkString(" "))))
   }
 
   /** The column's live vocabulary `(tok, df)` — off the keyword index's
-    * postings log when built (vocabulary-sized read), else one corpus
+    * postings log when `indexed` (vocabulary-sized read), else one corpus
     * tokenization pass.
     */
-  private def keywordVocab(column: String): DataFrame =
-    if (built(KeywordIndex, column))
+  private def keywordVocab(column: String, indexed: Boolean): DataFrame =
+    if (indexed)
       graft.search.Fuzzy.vocabFromPostings(
         graft.search.Keyword.livePostings(spark, keywordIndexDir(column)))
     else graft.search.Fuzzy.vocab(df, KeyCol, column)
@@ -1392,7 +1243,8 @@ class Collection private[core] (
     */
   def suggest(column: String, term: String, k: Int = 5,
               maxDist: Int = 3): DataFrame =
-    graft.search.Fuzzy.vocabMatch(keywordVocab(column), term, k, maxDist)
+    graft.search.Fuzzy.vocabMatch(keywordVocab(column, built(KeywordIndex, column)),
+      term, k, maxDist)
 
   /** [[searchKeyword]] with typo auto-correction: query terms ABSENT
     * from the column's vocabulary are replaced by their best fuzzy match
@@ -1412,7 +1264,7 @@ class Collection private[core] (
       // (the vocabulary is consumed once, so no checkpoint either);
       // semantics pinned inside resolveTerms
       val resolved = graft.search.Fuzzy.resolveTerms(
-        keywordVocab(column).select(col("tok")), q.terms, maxDist)
+        keywordVocab(column, q.st.isDefined).select(col("tok")), q.terms, maxDist)
       val corrected = q.terms.flatMap(resolved.get).distinct.filterNot(q.mustNot.contains)
       Option.when(corrected.nonEmpty)(
         keywordHits(column, q.copy(terms = corrected), limit, requireAll))
@@ -1450,9 +1302,9 @@ class Collection private[core] (
                           after: Option[(Double, Long)] = None): DataFrame = {
     val hits = q.st match {
       case Some(_) =>
-        graft.search.Keyword.searchIndex(spark, keywordIndexDir(column),
+        graft.search.Keyword.searchIndex(spark, q.index.dir,
           q.terms, limit, requireAll = requireAll, after = after,
-          mustNot = q.mustNot, stats = q.st)
+          mustNot = q.mustNot, stats = q.st, index = Some(q.index))
       case None =>
         graft.search.Keyword.bm25TopK(df, q.terms, limit, idCol = KeyCol,
           textCol = column, requireAll = requireAll, after = after,
@@ -1479,9 +1331,8 @@ class Collection private[core] (
     val keyAt = hits.schema.fieldIndex(KeyCol)
     def keyOf(r: Row, i: Int) = r.getAs[Number](i).longValue
     val keys = page.map(keyOf(_, keyAt)).distinct
-    recoverFileSwap(dataDir)
     val (contentType, content) =
-      ServingCache.content(hadoopConf, dataDir, column, keys.toIndexedSeq).getOrElse {
+      ServingCache.content(hadoopConf, dataRoot.snapshot(), column, keys.toIndexedSeq).getOrElse {
         val data = df
         (data.schema(column).dataType,
           if (keys.isEmpty) Map.empty[Long, Seq[Any]]
@@ -1525,8 +1376,8 @@ class Collection private[core] (
       .write.mode("overwrite").parquet(s"$where/params")
   }
 
-  private def readDedupParams(column: String): graft.dedup.Dedup.MinHashParams = {
-    val r = smallTable(DedupIndex, column, "params").head
+  private def readDedupParams(s: TableRoot.Snapshot): graft.dedup.Dedup.MinHashParams = {
+    val r = smallTable(DedupIndex, s, "params").head
     graft.dedup.Dedup.MinHashParams(numHashes = r.getInt(0), bands = r.getInt(1),
       shingleSize = r.getInt(2), seed = r.getLong(3))
   }
@@ -1570,22 +1421,23 @@ class Collection private[core] (
     * Returns the number of documents re-banded.
     */
   def repairDedupIndex(column: String, scope: Option[DataFrame] = None): Long =
-    maintained(DedupIndex, column) { target =>
-      if (!built(DedupIndex, column)) 0L
+    maintained(DedupIndex, column) { root =>
+      val s = root.snapshot()
+      if (!s.has(DedupIndex.marker)) 0L
       else {
         // scoped repair prunes the fingerprint compare to the batch's key
         // range (the caller knows what its upsert touched); the default
         // full reconcile reads every fingerprint
         def sc(d: DataFrame): DataFrame = scope.fold(d)(scopedTo(d, _))
-        val hasFps = fs.exists(new Path(s"$target/fps"))
-        repairByFingerprint(target, "bands", sc(textFps(df, column)),
-            if (hasFps) sc(read(DedupIndex, column, "fps")) else emptyFps,
+        val hasFps = s.has("fps")
+        repairByFingerprint(root, "bands", sc(textFps(df, column)),
+            if (hasFps) sc(read(DedupIndex, s, "fps")) else emptyFps,
             reader(DedupIndex, "bands")) { changed =>
           // key-range-pruned text read — a bare semi-join would scan the
           // whole text column to re-band 10 rows
           graft.dedup.Dedup.minhashBands(
             scopedTo(df, changed).select(col(KeyCol), col(column)),
-            column, KeyCol, readDedupParams(column))
+            column, KeyCol, readDedupParams(s))
         } { (changed, _) =>
           if (hasFps) upsertByKeyRange(DedupIndex, column, "fps",
             scopedTo(textFps(df, column), changed))
@@ -1602,7 +1454,7 @@ class Collection private[core] (
               .unionByName(df.select(col(KeyCol))
                 .join(changed, Seq(KeyCol), "left_anti")
                 .withColumn("fp", lit(null).cast(StringType)))
-            replaceFiles(target, Nil)(stage =>
+            root.commit(Nil)(stage =>
               keyClustered(backfill, buildFiles(0)).write.parquet(s"$stage/fps"))
           }
         }
@@ -1635,11 +1487,12 @@ class Collection private[core] (
     * bands.
     */
   private def appendBands(column: String, pending: DataFrame): DataFrame = {
-    val target = dedupIndexDir(column)
+    val root = familyRoot(DedupIndex, column)
+    val s = root.snapshot()
     val bands = graft.dedup.Dedup.minhashBands(pending, column, KeyCol,
-      readDedupParams(column)).localCheckpoint(true)
-    val hasFps = fs.exists(new Path(s"$target/fps"))
-    replaceFiles(target, Nil) { stage =>
+      readDedupParams(s)).localCheckpoint(true)
+    val hasFps = s.has("fps")
+    root.commit(Nil) { stage =>
       bands.write.parquet(s"$stage/bands")
       if (hasFps) textFps(pending, column).write.parquet(s"$stage/fps")
     }
@@ -1660,8 +1513,8 @@ class Collection private[core] (
 
   def noveltyStoreDir(column: String): String = familyDir(NoveltyStore, column)
 
-  private def noveltyN(column: String): Int =
-    smallTable(NoveltyStore, column, "params").head.getInt(0)
+  private def noveltyN(s: TableRoot.Snapshot): Int =
+    smallTable(NoveltyStore, s, "params").head.getInt(0)
 
   /** Build (or REBUILD, [[stagedBuild]]) the gram store: distinct
     * `(key, fp)` over the column's word n-grams, key-clustered; `params`
@@ -1686,14 +1539,15 @@ class Collection private[core] (
     * store with the default width.
     */
   def refreshNoveltyStore(column: String): Long =
-    maintained(NoveltyStore, column) { target =>
-      if (!built(NoveltyStore, column)) { buildNoveltyStore(column); count() }
+    maintained(NoveltyStore, column) { root =>
+      val s = root.snapshot()
+      if (!s.has(NoveltyStore.marker)) { buildNoveltyStore(column); count() }
       else {
         val pending = df.filter(col(KeyCol) > heldWatermark(NoveltyStore, column))
           .select(col(KeyCol), col(column))
         val nPending = pending.count()
-        if (nPending > 0) replaceFiles(target, Nil)(stage =>
-          graft.dedup.Dedup.ngramFingerprints(pending, column, KeyCol, noveltyN(column))
+        if (nPending > 0) root.commit(Nil)(stage =>
+          graft.dedup.Dedup.ngramFingerprints(pending, column, KeyCol, noveltyN(s))
             .write.parquet(s"$stage/grams"))
         nPending
       }
@@ -1707,11 +1561,11 @@ class Collection private[core] (
     */
   def noveltyCheck(column: String, batch: DataFrame, textCol: String,
                    keyCol: String): DataFrame = {
-    Identifiers.validate(column)
-    require(built(NoveltyStore, column),
+    val s = snapshot(NoveltyStore, column)
+    require(s.has(NoveltyStore.marker),
       s"no novelty store for '$column' — run buildNoveltyStore first")
     graft.dedup.Dedup.ngramNoveltyAgainst(batch, textCol, keyCol,
-      noveltyN(column), read(NoveltyStore, column, "grams").select(col("fp")))
+      noveltyN(s), read(NoveltyStore, s, "grams").select(col("fp")))
   }
 
   /** Streaming twin of [[refreshDedupIndex]] ([[watermarkStream]]): fold
@@ -1742,11 +1596,12 @@ class Collection private[core] (
                       threshold: Double = 0.8,
                       maxBucket: Int = 1000): DataFrame = {
     val corpus = df.select(col(KeyCol), col(column))
-    if (!built(DedupIndex, column))
+    val s = snapshot(DedupIndex, column)
+    if (!s.has(DedupIndex.marker))
       return graft.dedup.Dedup.incrementalNearDups(
         newDocs.select(col(KeyCol), col(column)), corpus,
         column, KeyCol, threshold, maxBucket = maxBucket)
-    val p = readDedupParams(column)
+    val p = readDedupParams(s)
     graft.dedup.Dedup.incrementalNearDupsFromBands(
       newDocs.select(col(KeyCol), col(column)), read(DedupIndex, column, "bands"),
       corpus, column, KeyCol, threshold, p, maxBucket)
@@ -1770,8 +1625,6 @@ class Collection private[core] (
 
   def annIndexDir(column: String): String = familyDir(AnnIndex, column)
 
-  private def annListsDir(column: String): String = s"${annIndexDir(column)}/lists"
-
   /** Upstream fingerprint view for the ANN index: one `(key, fp)` row per
     * document from the VECTOR index (the table the ANN index accelerates)
     * — a chunked index carries one fp per chunk row, all equal, deduped
@@ -1787,7 +1640,8 @@ class Collection private[core] (
     // a filter on top of dropDuplicates does not reliably push below the
     // Deduplicate node, and a pushed filter still opens every file's
     // footer — scopedRead plans the touched files driver-side instead
-    vectorFps(scope.fold(raw)(scopedRead(indexDir(column), _, reader(VectorIndex, ""))))
+    vectorFps(scope.fold(raw)(
+      scopedRead(familyRoot(VectorIndex, column), "", _, reader(VectorIndex, ""))))
   }
 
   /** One `(key, fp)` row per key of stored vector-index rows (a chunked
@@ -1818,11 +1672,10 @@ class Collection private[core] (
     * files), but only the files actually holding a changed key's old row
     * need rewriting.
     */
-  private def touchedFilesByPair(target: String, pairs: DataFrame): Seq[FileKeyRange] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val keyRanges = ParquetStats.fileKeyRanges(target, KeyCol, conf)
+  private def touchedFilesByPair(s: TableRoot.Snapshot, pairs: DataFrame): Seq[FileKeyRange] = {
+    val keyRanges = ParquetStats.fileKeyRanges(s.paths("lists"), KeyCol, hadoopConf)
     if (keyRanges.isEmpty) return Seq.empty
-    val listByPath = ParquetStats.fileKeyRanges(target, "list_id", conf)
+    val listByPath = ParquetStats.fileKeyRanges(s.paths("lists"), "list_id", hadoopConf)
       .map(r => r.path.toString -> r).toMap
     import spark.implicits._
     val rows = keyRanges.zipWithIndex.flatMap { case (kr, i) =>
@@ -1844,8 +1697,9 @@ class Collection private[core] (
     * clustering.
     */
   private def annTouchedLists(column: String, keys: DataFrame): Seq[FileKeyRange] = {
+    val ann = snapshot(AnnIndex, column)
     val keysDf = keys.select(col(keys.columns.head).cast(LongType).as(KeyCol))
-    val rows = scopedTo(read(AnnIndex, column, "fps"), keysDf)
+    val rows = scopedTo(read(AnnIndex, ann, "fps"), keysDf)
       .filter(col("list_ids").isNotNull)
       .select(col(KeyCol), col("list_ids")).localCheckpoint(true)
     // Keys with no usable sidecar row — a crash between the lists and
@@ -1867,15 +1721,14 @@ class Collection private[core] (
     // repair's fresh rows (deleteKeys runs this BEFORE erasing the
     // vector index for the same reason).
     val assignPairs = graft.search.Ann
-      .ivfAssign(scopedTo(embeddings(column), keysDf), "embedding",
-        readAnnCenters(column))
+      .ivfAssign(scopedTo(embeddings(column), keysDf), "embedding", readAnnCenters(ann))
       .select(col(KeyCol), col("list_id")).distinct()
     val pairs0 = sidecarPairs.unionByName(assignPairs)
     val pairs =
       if (strays.isEmpty) pairs0
       else pairs0.unionByName(scopedTo(
         annLists(column, Seq(KeyCol, "list_id")), strays).distinct())
-    touchedFilesByPair(annListsDir(column), pairs)
+    touchedFilesByPair(ann, pairs)
   }
 
   private def annCentersDf(centers: Array[Array[Double]]): DataFrame = {
@@ -1892,12 +1745,12 @@ class Collection private[core] (
     Seq(KeyCol, if (pqM == 0) "embedding" else "code", "list_id")
 
   private def annLists(column: String, cols: Seq[String]): DataFrame =
-    AnnIndex.read(spark, "lists", Seq(annListsDir(column)), cols)
+    AnnIndex.read(spark, "lists", Seq(snapshot(AnnIndex, column).path("lists")), cols)
 
   private def annLists(column: String, pqM: Int): DataFrame = annLists(column, annListCols(pqM))
 
-  private def readAnnCenters(column: String): Array[Array[Double]] =
-    smallTable(AnnIndex, column, "centroids").toArray
+  private def readAnnCenters(s: TableRoot.Snapshot): Array[Array[Double]] =
+    smallTable(AnnIndex, s, "centroids").toArray
       .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   private def annClustered(dfIn: DataFrame, nOut: Int): DataFrame =
@@ -1910,8 +1763,8 @@ class Collection private[core] (
       yield (s, j, cent.toSeq)).toSeq.toDF("subspace", "code", "centroid")
   }
 
-  private def readAnnCodebooks(column: String): Array[Array[Array[Double]]] =
-    smallTable(AnnIndex, column, "codebooks").toArray
+  private def readAnnCodebooks(s: TableRoot.Snapshot): Array[Array[Array[Double]]] =
+    smallTable(AnnIndex, s, "codebooks").toArray
       .sortBy(r => (r.getInt(0), r.getInt(1)))
       .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -1920,17 +1773,17 @@ class Collection private[core] (
   /** Stored pq_m (0 = full-vector layout); params predating the column
     * read as 0.
     */
-  private[core] def annPqM(column: String): Int =
-    Option(annParams(column).getAs[Integer]("pq_m")).fold(0)(_.intValue)
+  private[core] def annPqM(s: TableRoot.Snapshot): Int =
+    Option(annParams(s).getAs[Integer]("pq_m")).fold(0)(_.intValue)
 
   /** Build-time assignment drift baseline; None for params predating the
     * column (legacy index — no baseline to compare against).
     */
-  private def annBuildDrift(column: String): Option[Double] =
-    Option(annParams(column).getAs[java.lang.Double]("build_drift")).map(_.doubleValue)
+  private def annBuildDrift(s: TableRoot.Snapshot): Option[Double] =
+    Option(annParams(s).getAs[java.lang.Double]("build_drift")).map(_.doubleValue)
 
-  private[core] def annParams(column: String): Row =
-    smallTable(AnnIndex, column, "params").head
+  private[core] def annParams(s: TableRoot.Snapshot): Row =
+    smallTable(AnnIndex, s, "params").head
 
   /** Lists rows for a batch of vectors: `(key, embedding, list_id)` in
     * the full-vector layout, `(key, code, list_id)` when PQ-encoded —
@@ -2021,33 +1874,33 @@ class Collection private[core] (
                 predicate: Option[org.apache.spark.sql.Column] = None,
                 fetchK: Int = 0): DataFrame = {
     graft.search.Search.validateLimit(limit)
-    if (!built(AnnIndex, column)) return predicate match {
+    val ann = snapshot(AnnIndex, column)
+    if (!ann.has(AnnIndex.marker)) return predicate match {
       case Some(p) => searchFiltered(column, query, limit, embedder, p)
       case None => search(column, query, limit, embedder)
     }
-    fetchHits(annPage(column, embedder.embedOne(query), limit, nProbe,
+    fetchHits(annPage(column, ann, embedder.embedOne(query), limit, nProbe,
       predicate, fetchK), column)
   }
 
   /** The probed `(key, score)` page for a query VECTOR through the
-    * stored index — [[searchAnn]] minus embed and fetch; callers must
-    * have checked that the index is [[built]], which rolls a committed
-    * journal forward. Shared by serving and [[annRecallReport]] so the
-    * report measures exactly the page the API returns.
+    * stored index of snapshot `ann` — [[searchAnn]] minus embed and
+    * fetch. Shared by serving and [[annRecallReport]] so the report
+    * measures exactly the page the API returns.
     */
-  private def annPage(column: String, qv: Array[Float], limit: Int,
+  private def annPage(column: String, ann: TableRoot.Snapshot, qv: Array[Float], limit: Int,
                       nProbe: Int,
                       predicate: Option[org.apache.spark.sql.Column],
                       fetchK: Int): DataFrame = {
-    val centers = readAnnCenters(column)
+    val centers = readAnnCenters(ann)
     val probes = graft.search.Ann.ivfProbes(centers, qv,
       math.min(nProbe, centers.length)).map(Integer.valueOf)
-    val pqM = annPqM(column)
+    val pqM = annPqM(ann)
     // flat lists without a predicate score on the driver over the probed
     // lists' resident segments
     val resident =
       if (pqM == 0 && predicate.isEmpty)
-        ServingCache.annLists(hadoopConf, annListsDir(column), probes.map(_.intValue).toSet)
+        ServingCache.annLists(hadoopConf, ann, probes.map(_.intValue).toSet)
       else None
     resident.map(residentPage(_, qv, limit, after = None)).getOrElse {
       val lists = annLists(column, pqM).filter(col("list_id").isin(probes: _*))
@@ -2060,7 +1913,7 @@ class Collection private[core] (
         // re-ranks it through the vector index (floats fetched pointwise
         // for <= fetchK rows — Ann.pqTopKRerank's two-stage shape, with
         // the probe filter already applied)
-        val books = readAnnCodebooks(column)
+        val books = readAnnCodebooks(ann)
         val window = math.max(limit, if (fetchK > 0) fetchK else limit * 4)
         val cands = graft.search.Ann.pqTopK(cand, books, qv, window)
           .select(col(KeyCol)).distinct()
@@ -2099,7 +1952,7 @@ class Collection private[core] (
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)) // bounded: nQueries rows
     require(queries.nonEmpty, s"vector index for '$column' is empty")
     val pages = queries.toSeq.map { case (qid, qv) =>
-      annPage(column, qv, k, nProbe, None, fetchK)
+      annPage(column, snapshot(AnnIndex, column), qv, k, nProbe, None, fetchK)
         .select(lit(qid).as("query_id"), col(KeyCol),
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(lit(1)).orderBy(desc("score"), col(KeyCol)))
@@ -2164,13 +2017,15 @@ class Collection private[core] (
     try {
       val rows = Seq.newBuilder[TierStats]
       rows += measure("exact")(qv => graft.search.Search.topK(emb, qv, k))
-      if (built(AnnIndex, column)) {
-        val name = if (annPqM(column) > 0) "ivf-pq" else "ivf"
+      val ann = snapshot(AnnIndex, column)
+      if (ann.has(AnnIndex.marker)) {
+        val name = if (annPqM(ann) > 0) "ivf-pq" else "ivf"
         rows += measure(s"$name(nProbe=$nProbe)")(qv =>
-          annPage(column, qv, k, nProbe, None, fetchK))
+          annPage(column, snapshot(AnnIndex, column), qv, k, nProbe, None, fetchK))
       }
       if (built(BinarySketch, column))
-        rows += measure("binary+rerank")(qv => binaryPage(column, qv, k, fetchK))
+        rows += measure("binary+rerank")(qv =>
+          binaryPage(column, snapshot(BinarySketch, column), qv, k, fetchK))
       rows.result()
     } finally io.detach()
   }
@@ -2201,10 +2056,11 @@ class Collection private[core] (
     */
   private def appendAnnRows(column: String, vectors: DataFrame,
                             fps: DataFrame): DataFrame = {
-    val centers = readAnnCenters(column)
-    val cb = if (annPqM(column) > 0) Some(readAnnCodebooks(column)) else None
-    val fresh = annRows(vectors, centers, cb).localCheckpoint(true)
-    replaceFiles(annIndexDir(column), Nil) { stage =>
+    val root = familyRoot(AnnIndex, column)
+    val s = root.snapshot()
+    val cb = if (annPqM(s) > 0) Some(readAnnCodebooks(s)) else None
+    val fresh = annRows(vectors, readAnnCenters(s), cb).localCheckpoint(true)
+    root.commit(Nil) { stage =>
       annClustered(fresh, 1).write.parquet(s"$stage/lists")
       annSidecar(fps, fresh).write.parquet(s"$stage/fps")
     }
@@ -2225,13 +2081,13 @@ class Collection private[core] (
     */
   def knnJoin(column: String, k: Int, nProbe: Int = 2,
               nLists: Int = 0): DataFrame = {
-    Identifiers.validate(column)
     val emb = embeddings(column)
-    if (!built(AnnIndex, column))
+    val ann = snapshot(AnnIndex, column)
+    if (!ann.has(AnnIndex.marker))
       return graft.search.Ann.knnJoinIvf(emb, KeyCol, "embedding", k,
         nLists = nLists, nProbe = nProbe)
     graft.search.Ann.knnJoinAssigned(emb, KeyCol, "embedding",
-      annAssigned(column, emb), readAnnCenters(column), k, nProbe)
+      annAssigned(column, ann, emb), readAnnCenters(ann), k, nProbe)
   }
 
   /** `(key, embedding, list_id)` for every stored list row, the candidate
@@ -2244,8 +2100,8 @@ class Collection private[core] (
     * the per-pair max fold makes any pairing of a key's chunk vectors
     * correct).
     */
-  private def annAssigned(column: String, emb: DataFrame): DataFrame = {
-    val pqM = annPqM(column)
+  private def annAssigned(column: String, ann: TableRoot.Snapshot, emb: DataFrame): DataFrame = {
+    val pqM = annPqM(ann)
     val lists = annLists(column, pqM)
     if (pqM == 0) lists.select(col(KeyCol), col("embedding"), col("list_id"))
     else lists.select(col(KeyCol), col("list_id")).distinct().join(emb, Seq(KeyCol))
@@ -2264,13 +2120,13 @@ class Collection private[core] (
     */
   def searchBatch(queries: DataFrame, column: String, k: Int,
                   nProbe: Int = 2, nLists: Int = 0): DataFrame = {
-    Identifiers.validate(column)
     val emb = embeddings(column)
-    if (!built(AnnIndex, column))
+    val ann = snapshot(AnnIndex, column)
+    if (!ann.has(AnnIndex.marker))
       return graft.search.Ann.searchBatchIvf(queries, emb, KeyCol,
         "embedding", k, nLists = nLists, nProbe = nProbe)
-    graft.search.Ann.knnProbedBetween(queries, annAssigned(column, emb),
-      readAnnCenters(column), KeyCol, "embedding", k, nProbe, excludeSelf = false)
+    graft.search.Ann.knnProbedBetween(queries, annAssigned(column, ann, emb),
+      readAnnCenters(ann), KeyCol, "embedding", k, nProbe, excludeSelf = false)
   }
 
   /** Semantic near-duplicate pairs over `column`'s vectors — the
@@ -2365,29 +2221,29 @@ class Collection private[core] (
     * documents re-assigned.
     */
   def repairAnnIndex(column: String, scope: Option[DataFrame] = None): Long =
-    maintained(AnnIndex, column) { target =>
-      if (!built(AnnIndex, column)) 0L
+    maintained(AnnIndex, column) { root =>
+      val s = root.snapshot()
+      if (!s.has(AnnIndex.marker)) 0L
       else {
         // change detection: full reconcile compares every fingerprint
         // (narrow-column corpus scans); a SCOPED repair — the caller knows
         // which keys its upsert touched — prunes both sides to the batch's
         // key range (footer/row-group stats) before comparing
-        val pqM = annPqM(column)
-        repairByFingerprint(target, "lists", annUpstreamFps(column, scope),
-            scope.fold(read(AnnIndex, column, "fps"))(
-              scopedRead(s"$target/fps", _, reader(AnnIndex, "fps"))),
+        val pqM = annPqM(s)
+        repairByFingerprint(root, "lists", annUpstreamFps(column, scope),
+            scope.fold(read(AnnIndex, s, "fps"))(
+              scopedRead(root, "fps", _, reader(AnnIndex, "fps"))),
             AnnIndex.read(spark, "lists", _, annListCols(pqM)),
             // rewrite planning: only files holding a changed key's OLD row
             // ((list_id, key) pair pruning through the sidecar); fresh rows
             // land in new files, whatever their list
             touched = Some(annTouchedLists(column, _)), cluster = annClustered) {
           changed =>
-            val centers = readAnnCenters(column)
-            val cb = if (pqM > 0) Some(readAnnCodebooks(column)) else None
+            val cb = if (pqM > 0) Some(readAnnCodebooks(s)) else None
             // the fresh vectors read is file-granular too — a bare
             // semi-join would scan the whole (wide) embedding column
-            annRows(vectorLayout.view(
-                scopedRead(indexDir(column), changed, reader(VectorIndex, ""))), centers, cb)
+            annRows(vectorLayout.view(scopedRead(familyRoot(VectorIndex, column), "", changed,
+              reader(VectorIndex, ""))), readAnnCenters(s), cb)
               .localCheckpoint(true)
         } { (changed, fresh) =>
           upsertByKeyRange(AnnIndex, column, "fps",
@@ -2403,9 +2259,10 @@ class Collection private[core] (
     * written, 0 when no index.
     */
   def compactAnnIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(AnnIndex, column) { _ =>
-      if (!built(AnnIndex, column)) 0
-      else compactTables(AnnIndex, column, targetFileBytes, "lists", "fps") {
+    maintained(AnnIndex, column) { root =>
+      val s = root.snapshot()
+      if (!s.has(AnnIndex.marker)) 0
+      else compactTables(root, s, targetFileBytes, "lists", "fps") {
         // dropDuplicates over ALL columns: a repair that crashed between
         // its lists commit and its fps sidecar update re-appends the same
         // (key, list, vector/code) row on re-run — benign for serving
@@ -2413,7 +2270,7 @@ class Collection private[core] (
         // table; compaction is where the copies fold away. Distinct chunk
         // vectors of one document differ in their embedding/code column
         // and are never collapsed.
-        case ("lists", n) => annClustered(annLists(column, annPqM(column)).dropDuplicates(), n)
+        case ("lists", n) => annClustered(annLists(column, annPqM(s)).dropDuplicates(), n)
         // the fps sidecar accumulates one appended file per refresh/stream
         // micro-batch FOREVER if only the lists fold
         case (sub, n) => keyCompacted(AnnIndex, column)(sub, n)
@@ -2429,9 +2286,10 @@ class Collection private[core] (
     */
   def compactDedupIndex(column: String,
                         targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(DedupIndex, column) { _ =>
-      if (!built(DedupIndex, column)) 0
-      else compactTables(DedupIndex, column, targetFileBytes, "bands", "fps")(
+    maintained(DedupIndex, column) { root =>
+      val s = root.snapshot()
+      if (!s.has(DedupIndex.marker)) 0
+      else compactTables(root, s, targetFileBytes, "bands", "fps")(
         keyCompacted(DedupIndex, column)).sum
     }
 
@@ -2451,8 +2309,8 @@ class Collection private[core] (
 
   def binaryIndexDir(column: String): String = familyDir(BinarySketch, column)
 
-  private def readBinaryDim(column: String): Int =
-    smallTable(BinarySketch, column, "params").head.getInt(0)
+  private def readBinaryDim(s: TableRoot.Snapshot): Int =
+    smallTable(BinarySketch, s, "params").head.getInt(0)
 
   private def binaryRows(src: DataFrame, dim: Int): DataFrame =
     src.select(col(KeyCol),
@@ -2508,8 +2366,9 @@ class Collection private[core] (
     * sidecar, in one commit.
     */
   private def appendSketch(column: String, vectors: DataFrame, fps: DataFrame): Unit = {
-    val dim = readBinaryDim(column)
-    replaceFiles(binaryIndexDir(column), Nil) { stage =>
+    val root = familyRoot(BinarySketch, column)
+    val dim = readBinaryDim(root.snapshot())
+    root.commit(Nil) { stage =>
       binaryRows(vectors, dim).write.parquet(s"$stage/sketch")
       fps.write.parquet(s"$stage/fps")
     }
@@ -2522,16 +2381,16 @@ class Collection private[core] (
     * Returns keys re-sketched.
     */
   def repairBinarySketch(column: String, scope: Option[DataFrame] = None): Long =
-    maintained(BinarySketch, column) { target =>
-      if (!built(BinarySketch, column)) 0L
+    maintained(BinarySketch, column) { root =>
+      val s = root.snapshot()
+      if (!s.has(BinarySketch.marker)) 0L
       else {
-        repairByFingerprint(target, "sketch", annUpstreamFps(column, scope),
-            scope.fold(read(BinarySketch, column, "fps"))(
-              scopedRead(s"$target/fps", _, reader(BinarySketch, "fps"))),
+        repairByFingerprint(root, "sketch", annUpstreamFps(column, scope),
+            scope.fold(read(BinarySketch, s, "fps"))(
+              scopedRead(root, "fps", _, reader(BinarySketch, "fps"))),
             reader(BinarySketch, "sketch")) { changed =>
-          binaryRows(vectorLayout.view(
-              scopedRead(indexDir(column), changed, reader(VectorIndex, ""))),
-            readBinaryDim(column))
+          binaryRows(vectorLayout.view(scopedRead(familyRoot(VectorIndex, column), "", changed,
+              reader(VectorIndex, ""))), readBinaryDim(s))
         } { (changed, _) =>
           // scopedRead-pruned, not a bare semi-join: a 10-key repair reads
           // 10 keys' files — the ScaleProbe-audited O(touched) shape
@@ -2558,9 +2417,10 @@ class Collection private[core] (
     */
   def compactBinarySketch(column: String,
                           targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(BinarySketch, column) { _ =>
-      if (!built(BinarySketch, column)) 0
-      else compactTables(BinarySketch, column, targetFileBytes, "sketch", "fps")(
+    maintained(BinarySketch, column) { root =>
+      val s = root.snapshot()
+      if (!s.has(BinarySketch.marker)) 0
+      else compactTables(root, s, targetFileBytes, "sketch", "fps")(
         keyCompacted(BinarySketch, column)).head
     }
 
@@ -2573,20 +2433,20 @@ class Collection private[core] (
   def searchBinary(column: String, query: String, limit: Int,
                    embedder: graft.embed.Embedder, fetchK: Int = 0): DataFrame = {
     graft.search.Search.validateLimit(limit)
-    if (!built(BinarySketch, column)) return search(column, query, limit, embedder)
+    val sketch = snapshot(BinarySketch, column)
+    if (!sketch.has(BinarySketch.marker)) return search(column, query, limit, embedder)
     val qv = embedder.embedOne(query)
-    fetchHits(binaryPage(column, qv, limit, fetchK), column)
+    fetchHits(binaryPage(column, sketch, qv, limit, fetchK), column)
   }
 
-  /** [[searchBinary]]'s vector-level core: Hamming stage-1 window over
-    * the sign sketch, exact cosine rerank on the candidates — the hits
-    * page `(KeyCol, score)` before the content fetch. Callers must have
-    * checked that the sketch is [[built]], which rolls a committed
-    * journal forward.
+  /** [[searchBinary]]'s vector-level core over the sketch of snapshot
+    * `sketch`: Hamming stage-1 window over the sign sketch, exact cosine
+    * rerank on the candidates — the hits page `(KeyCol, score)` before
+    * the content fetch.
     */
-  private[graft] def binaryPage(column: String, qv: Array[Float],
-                                limit: Int, fetchK: Int = 0): DataFrame = {
-    val dim = readBinaryDim(column)
+  private def binaryPage(column: String, sketch: TableRoot.Snapshot, qv: Array[Float],
+                         limit: Int, fetchK: Int): DataFrame = {
+    val dim = readBinaryDim(sketch)
     require(qv.length == dim,
       s"query embeds to ${qv.length} dims but the sketch stores $dim")
     val window = math.max(limit, if (fetchK > 0) fetchK else limit * 4)
@@ -2631,6 +2491,10 @@ class Collection private[core] (
     * completes the rest and is a no-op where already applied. Returns
     * the number of collection rows removed. Deleting EVERY row leaves
     * an empty data directory — use [[Catalog.drop]] for full removal.
+    *
+    * The deleted keys are pinned with `localCheckpoint`: on a cluster,
+    * losing an executor fails the delete instead of recomputing them,
+    * and a re-run with the same keys completes it.
     */
   def deleteKeys(keys: Seq[Long]): Long = {
     import spark.implicits._
@@ -2644,7 +2508,7 @@ class Collection private[core] (
       val del = keys.select(col(keys.columns.head).cast(LongType).as(KeyCol))
         .distinct().localCheckpoint(true)
       val n = df.join(del, Seq(KeyCol), "left_semi").count()
-      deleteByKeyRange(dataDir, "", del,
+      deleteByKeyRange(dataRoot, "", del,
         spark.read.option("mergeSchema", "true").parquet(_: _*))
       // vector-upstream structures before the vector index: ANN's rewrite
       // planning reads it (current-assignment pairs, see annTouchedLists)
@@ -2652,11 +2516,11 @@ class Collection private[core] (
       indexStructures().sortBy(_._2.upstream != Upstream.Vectors)
         .filter { case (_, f) => f.deletes.nonEmpty || f.erase.isDefined }
         .foreach { case (c0, f) =>
-          heal(f, c0)
-          if (built(f, c0)) {
+          val r = familyRoot(f, c0)
+          r.discard()
+          if (r.snapshot().has(f.marker)) {
             f.erase.foreach(_(this, c0, del))
-            f.deletes.filter(t => fs.exists(new Path(table(f, c0, t))))
-              .foreach(t => deleteByKeyRange(familyDir(f, c0), t, del, reader(f, t)))
+            f.deletes.foreach(t => deleteByKeyRange(r, t, del, reader(f, t)))
           }
         }
       n
@@ -2667,29 +2531,30 @@ class Collection private[core] (
   private[core] def deleteAnnLists(column: String, del: DataFrame): Unit = {
     val touched = annTouchedLists(column, del)
     if (touched.nonEmpty) {
+      val root = familyRoot(AnnIndex, column)
       val next = AnnIndex.read(spark, "lists", touched.map(_.path.toString),
-        annListCols(annPqM(column)))
+        annListCols(annPqM(root.snapshot())))
         .join(del, Seq(KeyCol), "left_anti")
-      replaceFiles(annIndexDir(column), leavesOf("lists", touched)) { stage =>
+      root.commit(leavesOf("lists", touched)) { stage =>
         annClustered(next, touched.length).write.parquet(s"$stage/lists")
       }
     }
   }
 
   /** File-granular key deletion from the key-clustered sub-table `sub`
-    * of the table root `root`: anti-join rewrite of only the
-    * footer-range-intersecting files (read by `read`), committed through
-    * the root's journal. No-op when no file's range covers a deleted key.
+    * of `root`: anti-join rewrite of only the footer-range-intersecting
+    * files (read by `read`), committed through the root's journal. No-op
+    * when the sub-table is absent or no file's range covers a deleted key.
     */
-  private def deleteByKeyRange(root: String, sub: String, del: DataFrame,
+  private def deleteByKeyRange(root: TableRoot, sub: String, del: DataFrame,
                                read: Seq[String] => DataFrame): Unit = {
-    discardStage(root)
-    val touched = touchedFiles(subPath(root, sub), del)
+    root.discard()
+    val touched = touchedFiles(root.snapshot(), sub, del)
     if (touched.isEmpty) return
     val remaining = read(touched.map(_.path.toString))
       .join(del, Seq(KeyCol), "left_anti")
-    replaceFiles(root, leavesOf(sub, touched)) { stage =>
-      keyClustered(remaining, touched.length).write.parquet(subPath(stage, sub))
+    root.commit(leavesOf(sub, touched)) { stage =>
+      keyClustered(remaining, touched.length).write.parquet(TableRoot.subPath(stage, sub))
     }
   }
 
@@ -2705,13 +2570,14 @@ class Collection private[core] (
     */
   private def upsertByKeyRange(f: IndexFamily, column: String, sub: String,
                                updates: DataFrame): Unit = {
-    val touched = touchedFiles(table(f, column, sub), updates.select(KeyCol))
+    val root = familyRoot(f, column)
+    val touched = touchedFiles(root.snapshot(), sub, updates.select(KeyCol))
     val next =
       if (touched.isEmpty) updates
       else reader(f, sub)(touched.map(_.path.toString))
         .join(updates.select(KeyCol), Seq(KeyCol), "left_anti")
         .unionByName(updates)
-    replaceFiles(familyDir(f, column), leavesOf(sub, touched)) { stage =>
+    root.commit(leavesOf(sub, touched)) { stage =>
       keyClustered(next, touched.length).write.parquet(s"$stage/$sub")
     }
   }
@@ -2738,6 +2604,10 @@ class Collection private[core] (
     * maintenance call that clears it (embedColumn/refresh* for missing,
     * repair* for stale, deleteKeys re-run for orphaned). Counting only —
     * never rewrites anything; O(structure key/fp columns) scans.
+    *
+    * The current fingerprints are pinned with `localCheckpoint`: on a
+    * cluster, losing an executor fails the report instead of recomputing
+    * them, and a re-run succeeds.
     */
   def indexStatus(column: String): DataFrame = {
     import spark.implicits._
@@ -2764,9 +2634,10 @@ class Collection private[core] (
     * sidecar reads as empty (every key missing).
     */
   private def storedFps(f: IndexFamily, column: String): Option[DataFrame] =
-    f.liveFps.fold(f.fps.filter(_ => built(f, column)).map { t =>
-      if (fs.exists(new Path(table(f, column, t)))) read(f, column, t) else emptyFps
-    })(_(this, column))
+    f.liveFps.fold {
+      val s = snapshot(f, column)
+      f.fps.filter(_ => s.has(f.marker)).map(t => if (s.has(t)) read(f, s, t) else emptyFps)
+    }(_(this, column))
 
   /** ANN centroid drift: the current table's assignment distance over the
     * build-time baseline. ~1.0 = the appended data still matches the
@@ -2774,11 +2645,13 @@ class Collection private[core] (
     * centroids never saw — a rebuild (retrain) lowers it back. Refresh
     * deliberately never retrains, so this is the one signal.
     */
-  private[core] def annDrift(column: String): Option[Double] =
-    annBuildDrift(column).filter(_ > 0).map { b =>
+  private[core] def annDrift(column: String): Option[Double] = {
+    val ann = snapshot(AnnIndex, column)
+    annBuildDrift(ann).filter(_ > 0).map { b =>
       graft.search.Ann.assignmentDrift(
-        embeddings(column), KeyCol, "embedding", readAnnCenters(column)) / b
+        embeddings(column), KeyCol, "embedding", readAnnCenters(ann)) / b
     }
+  }
 
   // ---- trained tokenizer artifact (BPE merge table) -------------------
   //
@@ -2817,10 +2690,8 @@ class Collection private[core] (
     }
 
   /** The stored merge table `(rank, sym_a, sym_b, cnt)`, rank-ordered. */
-  def tokenizerMerges(column: String): DataFrame = {
-    recoverFileSwap(tokenizerDir(column))
+  def tokenizerMerges(column: String): DataFrame =
     read(Tokenizer, column, "merges").orderBy("rank")
-  }
 
   /** Tokenize the collection with the stored rules: the KB-sized merge
     * list collects once and broadcasts; application is row-local (no
@@ -2882,8 +2753,9 @@ class Collection private[core] (
 
   /** The stored weight vector (index dim = bias). */
   def classifierWeights(column: String): Array[Double] = {
-    require(hasClassifier(column), s"no classifier trained for '$column'")
-    smallTable(ClassifierModel, column, "weights").sortBy(_.getLong(0))
+    val s = snapshot(ClassifierModel, column)
+    require(s.has(ClassifierModel.marker), s"no classifier trained for '$column'")
+    smallTable(ClassifierModel, s, "weights").sortBy(_.getLong(0))
       .map(_.getDouble(1)).toArray // bounded: dim + 1 rows
   }
 
@@ -2920,6 +2792,10 @@ class Collection private[core] (
     * time), so every write rewrites it whole: one commit of the
     * `saved_queries` root replacing every file, the first one into the
     * absent root.
+    *
+    * The batch is pinned with `localCheckpoint`: on a cluster, losing an
+    * executor fails the call instead of recomputing it, and a re-run
+    * applies it.
     */
   def putQueries(queries: DataFrame): Long = {
     writeLock.lock()
@@ -2958,20 +2834,21 @@ class Collection private[core] (
   }
 
   /** Commit `rows` as the whole saved-queries table. Caller holds
-    * [[writeLock]].
+    * [[writeLock]]. `rows` is pinned with `localCheckpoint` before the
+    * files it reads are replaced: on a cluster, losing an executor fails
+    * the write instead of recomputing them, and the table is unchanged.
     */
   private def rewriteQueries(rows: DataFrame): Unit = {
     val next = rows.localCheckpoint(true) // read before its files are replaced
-    replaceFiles(queriesDir, leaves(queriesDir))(next.coalesce(1).write.parquet(_))
+    queriesRoot.commit(queriesRoot.snapshot().names())(next.coalesce(1).write.parquet(_))
   }
 
   /** The saved-queries table in its declared `(query_id, query)` schema
     * (empty frame when none registered).
     */
   def savedQueries: DataFrame = {
-    recoverFileSwap(queriesDir)
-    if (fs.exists(new Path(queriesDir)))
-      spark.read.schema(Collection.SavedQueries).parquet(queriesDir)
+    val s = queriesRoot.snapshot()
+    if (s.has()) spark.read.schema(Collection.SavedQueries).parquet(s.dir)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Collection.SavedQueries)
   }
 
@@ -2988,7 +2865,8 @@ class Collection private[core] (
     Identifiers.validate(column)
     val text = if (textCol.nonEmpty) textCol else column
     graft.search.Keyword.percolateRowwise(docs, idCol, text, savedQueries,
-      requireAll = requireAll, analyzer = keywordAnalyzer(keywordStats(column)))
+      requireAll = requireAll,
+      analyzer = keywordAnalyzer(keywordStats(snapshot(KeywordIndex, column))))
   }
 
   /** SEMANTIC percolation: which saved queries does each incoming
@@ -3105,28 +2983,22 @@ class Collection private[core] (
         }
       }
     }
-    def filePressure(target: String, c0: String, structure: String,
+    def filePressure(s: TableRoot.Snapshot, sub: String, c0: String, structure: String,
                      action: String): Unit = {
-      val p = new Path(target)
-      if (!fs.exists(p)) return
-      var n = 0; var bytes = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.getPath.getName.endsWith(".parquet")) { n += 1; bytes += s.getLen }
-      }
+      val (n, bytes) = (s.files(sub).size, s.bytes(sub))
       val ideal = math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes)
       if (n >= 16 && n > SmallFileFactor * ideal)
         acts += ((4, c0, structure, action,
           s"$n files for $bytes bytes (ideal ~$ideal)"))
     }
-    filePressure(dataDir, "", "data", "compact")
+    filePressure(dataRoot.snapshot(), "", "", "data", "compact")
     structs.foreach { case (c0, f) =>
       f.compact.foreach { m =>
+        val s = snapshot(f, c0)
         // a sidecar grows one file per refresh/stream batch; its pressure
         // routes to the family's compact, which folds every table
-        f.pressure.foreach(t => filePressure(table(f, c0, t), c0, f.structure, m.action))
-        f.churn.filter(_ => built(f, c0)).map(_(this, c0))
+        f.pressure.foreach(t => filePressure(s, t, c0, f.structure, m.action))
+        f.churn.filter(_ => s.has(f.marker)).map(_(this, c0))
           .filter(_ > DeadFractionAt).foreach { dead =>
             acts += ((4, c0, f.structure, m.action,
               f"${dead * 100}%.0f%% of the log is tombstone churn"))
@@ -3158,13 +3030,11 @@ class Collection private[core] (
     * is a complete, consistent snapshot. Used before [[backup]]: copying
     * a root with an uncompleted journal would capture a torn write. It
     * runs under backup's lease, so it also discards crashed writes'
-    * stages ([[discardStage]]).
+    * stages ([[TableRoot.discard]]).
     */
-  private def healAll(): Unit = {
-    discardStage(dataDir)
-    discardStage(queriesDir)
-    indexStructures().foreach { case (c0, f) => heal(f, c0) }
-  }
+  private def healAll(): Unit =
+    (Seq(dataRoot, queriesRoot) ++ indexStructures().map { case (c0, f) => familyRoot(f, c0) })
+      .foreach(_.discard())
 
   /** Back up the whole collection (config + data + every index) into
     * `destRoot` as a new backup generation — full on the first call,
@@ -3212,21 +3082,19 @@ class Collection private[core] (
 }
 
 private[core] object Collection {
-  /** Commit monitors, one per qualified collection directory. */
-  val swapMonitors = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
   /** The saved-queries table's declared schema. */
   val SavedQueries: StructType = StructType(Seq(
     StructField("query_id", LongType), StructField("query", StringType)))
 
-  /** A keyword query read against a column's index: the index's stats
-    * (None without one) and the query's terms and '-'-excluded terms
+  /** A keyword query read against a column's index: the index's snapshot,
+    * its stats (None without one) and the query's terms and '-'-excluded terms
     * (the search-box NOT operator: "hash join -slow"). Prefixes are
     * parsed off the RAW words, then both groups go through the index's
     * analyzer (the whitespace default without an index), so exclusion
     * matches exactly what the index stores.
     */
-  final case class KeywordQuery(st: Option[graft.search.Keyword.Stats],
+  final case class KeywordQuery(index: TableRoot.Snapshot,
+                                st: Option[graft.search.Keyword.Stats],
                                 terms: Seq[String], mustNot: Seq[String])
 
   // planMaintenance's thresholds
@@ -3299,10 +3167,10 @@ final case class TierStats(tier: String, recall: Double, mrr: Double,
   */
 object Identifiers {
   /** Suffixes reserved for on-disk operational artifacts: a commit's
-    * stage and journal (`_staging`, `_swapjournal`, `_swapjournal_tmp`),
-    * and the leftovers an earlier build's protocols may have left in a
-    * collection (`_import`, the `_precompact`/`_compacting` directory
-    * swap, the `__stage`/`__stage_commit` embed append). An identifier
+    * stage and journals ([[TableRoot.Suffixes]]), and the leftovers an
+    * earlier build's protocols may have left in a collection (`_import`,
+    * the `_precompact`/`_compacting` directory swap, the
+    * `__stage`/`__stage_commit` embed append). An identifier
     * ending with one of these would make its directory (e.g. `index/<col>`)
     * indistinguishable from the transient artifacts that maintenance
     * sweeps and [[Backup.include]] must skip — a backup would silently
@@ -3311,9 +3179,8 @@ object Identifiers {
     * both shapes are rejected at creation time instead of being
     * mishandled later.
     */
-  private[graft] val OperationalSuffixes = Seq(
-    "_staging", "_swapjournal", "_swapjournal_tmp", "_import",
-    "_precompact", "_compacting", "__stage", "__stage_commit")
+  private[graft] val OperationalSuffixes = TableRoot.Suffixes ++
+    Seq("_import", "_precompact", "_compacting", "__stage", "__stage_commit")
 
   /** Plus every index family's directory suffix: column "body_kw" would
     * collide with column "body"'s keyword index directory under index/.

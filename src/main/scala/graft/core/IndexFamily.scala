@@ -26,8 +26,8 @@ private[graft] final case class Maintenance(
   * so the collection-wide passes ([[Collection.deleteKeys]], heal before
   * backup, `indexStatus`, `planMaintenance`) and the reserved identifier
   * suffixes can never drift apart. A family lives in
-  * `<index_dir>/<column><suffix>/`, the table root every write to it
-  * commits through (one journal, [[Collection]]'s commit protocol);
+  * `<index_dir>/<column><suffix>/`, the [[TableRoot]] every write to it
+  * commits through (one journal);
   * sub-table paths are relative to it, `""` naming the directory itself.
   *
   * @param structure  name in `indexStatus` / `planMaintenance` rows
@@ -164,8 +164,9 @@ private[graft] object IndexFamily {
     compact = call("compactAnnIndex")((c, column, _) => c.compactAnnIndex(column)),
     // retrain with the index's stored geometry
     retrain = call("buildAnnIndex") { (c, column, _) =>
-      c.buildAnnIndex(column, nLists = c.annParams(column).getAs[Int]("n_lists"),
-        pqM = c.annPqM(column))
+      val ann = c.snapshot(AnnIndex, column)
+      c.buildAnnIndex(column, nLists = c.annParams(ann).getAs[Int]("n_lists"),
+        pqM = c.annPqM(ann))
       0L
     },
     erase = Some((c, column, del) => c.deleteAnnLists(column, del)),

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
@@ -31,17 +31,11 @@ final case class FileKeyRange(path: Path, min: Long, max: Long) {
   */
 object ParquetStats {
 
-  /** Footer-derived `[min, max]` of long column `keyCol` for every
-    * `*.parquet` file directly under `dir`.
+  /** Footer-derived `[min, max]` of long column `keyCol` for each of the
+    * Parquet `files` (a table root snapshot's, [[TableRoot.Snapshot]]).
     */
-  def fileKeyRanges(dir: String, keyCol: String, conf: Configuration): Seq[FileKeyRange] = {
-    val dirPath = new Path(dir)
-    val fs: FileSystem = dirPath.getFileSystem(conf)
-    if (!fs.exists(dirPath)) return Seq.empty
-    fs.listStatus(dirPath).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .flatMap(s => fileKeyRange(s.getPath, keyCol, conf))
-  }
+  def fileKeyRanges(files: Seq[Path], keyCol: String, conf: Configuration): Seq[FileKeyRange] =
+    files.flatMap(fileKeyRange(_, keyCol, conf))
 
   private def fileKeyRange(file: Path, keyCol: String, conf: Configuration): Option[FileKeyRange] = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
@@ -75,28 +69,23 @@ object ParquetStats {
     } finally reader.close()
   }
 
-  /** Exact row count of every `*.parquet` file directly under `dir`,
-    * summed from footer block metadata — NO data pages read. Parquet
+  /** Exact row count of the Parquet `files`, summed from footer block
+    * metadata — NO data pages read. Parquet
     * footers record the authoritative per-row-group row count, so this
     * equals a full `COUNT(*)` scan on any committed file set; at 100 TB
     * it is O(files) KB-sized footer reads instead of a corpus pass (the
     * same manifest discipline as [[fileKeyRanges]]). Returns `None` when
     * any footer is unreadable (caller falls back to the scan).
     */
-  def totalRows(dir: String, conf: Configuration): Option[Long] = {
-    val dirPath = new Path(dir)
-    val fs: FileSystem = dirPath.getFileSystem(conf)
-    if (!fs.exists(dirPath)) return Some(0L)
+  def totalRows(files: Seq[Path], conf: Configuration): Option[Long] = {
     var total = 0L
-    fs.listStatus(dirPath).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .foreach { s =>
-        try {
-          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(s.getPath, conf))
-          try total += reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-          finally reader.close()
-        } catch { case _: Exception => return None }
-      }
+    files.foreach { f =>
+      try {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try total += reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        finally reader.close()
+      } catch { case _: Exception => return None }
+    }
     Some(total)
   }
 }

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.column.{ColumnDescriptor, ColumnReader}
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -26,11 +26,12 @@ import scala.jdk.CollectionConverters._
   * Entries are keyed by a file's identity ([[FileId]]: qualified path,
   * length, modification time). Writers never change a file in place —
   * appends add files, swaps and rewrites replace them under new names — so
-  * an entry can never go stale. A reader heals and lists the directory it
-  * reads first, exactly as a Spark read would, and asks only for the files
-  * it listed; a committed write is therefore visible to the next read, and
-  * a replaced file's entries simply stop being asked for until the LRU
-  * drops them. There is no TTL.
+  * an entry can never go stale. A reader passes its table root's snapshot
+  * ([[TableRoot.snapshot]]), which rolls a committed write forward before
+  * it lists, and the cache asks only for the files the snapshot lists; a
+  * committed write is therefore visible to the next read, and a replaced
+  * file's entries simply stop being asked for until the LRU drops them.
+  * There is no TTL.
   *
   * What it holds:
   *  - the vector index's `(key, vector)` segments, one per file,
@@ -46,8 +47,8 @@ import scala.jdk.CollectionConverters._
   * One byte-weighted LRU budget, a fixed share of the heap ([[fits]]),
   * covers all entries. A read whose estimated size does not fit, or that
   * meets a layout this reader does not decode (a nested content type, a
-  * null vector element, a sub-directory), answers None and its caller
-  * takes the Spark read instead.
+  * null vector element, a file below a sub-directory), answers None and
+  * its caller takes the Spark read instead.
   */
 private[graft] object ServingCache {
 
@@ -125,25 +126,19 @@ private[graft] object ServingCache {
   private def attempt[A](body: => A): Option[A] =
     try Some(body) catch { case _: Unsupported => None }
 
-  // ---- listings and footers ---------------------------------------------
+  // ---- files and footers ------------------------------------------------
 
-  /** The data files of `dir` as a Spark read lists them (hidden `_`/`.`
-    * names skipped); empty when the directory is absent. Unsupported when
-    * it holds anything but Parquet files.
+  /** The files of `snap`'s sub-table `sub` as a Spark read of it takes
+    * them (hidden `_`/`.` names skipped). Unsupported when one lies below
+    * a sub-directory.
     */
-  private def listing(conf: Configuration, dir: String): IndexedSeq[FileId] = {
-    val p = new Path(dir)
-    val fs: FileSystem = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Vector.empty
-    fs.listStatus(p).toIndexedSeq
-      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
-      .map { s =>
-        if (s.isDirectory || !s.getPath.getName.endsWith(".parquet"))
-          throw new Unsupported(s"not a flat Parquet table: ${s.getPath}")
-        FileId(fs.makeQualified(s.getPath).toString, s.getLen, s.getModificationTime)
-      }
-      .sortBy(_.path)
-  }
+  private def fileIds(snap: TableRoot.Snapshot, sub: String): IndexedSeq[FileId] =
+    snap.files(sub).toIndexedSeq.flatMap { l =>
+      val name = if (sub.isEmpty) l.rel else l.rel.stripPrefix(sub + "/")
+      if (name.startsWith("_") || name.startsWith(".")) None
+      else if (name.contains('/')) throw new Unsupported(s"not a flat Parquet table: $name")
+      else Some(FileId(snap.pathOf(l).toString, l.length, l.mtime))
+    }
 
   /** One row group's footer facts: row count, `[min, max]` of its
     * integral top-level columns, and per top-level column the leaf value
@@ -322,12 +317,13 @@ private[graft] object ServingCache {
     case d: Array[Double] => d
   }
 
-  /** The vector index under `dir` (healed by the caller) as resident
-    * segments, one per file. None when its estimated decoded size does
-    * not fit the budget or its layout is not decoded here.
+  /** The vector index of snapshot `snap` as resident segments, one per
+    * file. None when its estimated decoded size does not fit the budget
+    * or its layout is not decoded here.
     */
-  def vectors(conf: Configuration, dir: String, layout: VectorLayout): Option[Seq[Vectors]] = attempt {
-    val files = listing(conf, dir)
+  def vectors(conf: Configuration, snap: TableRoot.Snapshot,
+              layout: VectorLayout): Option[Seq[Vectors]] = attempt {
+    val files = fileIds(snap, "")
     val estimate = files.map(f => footer(conf, f).groups
       .map(vectorEstimate(_, layout.field.name, layout.bytesPerDim)).sum).sum
     if (!fits(estimate, Runtime.getRuntime.maxMemory)) throw new Unsupported("over budget")
@@ -342,12 +338,13 @@ private[graft] object ServingCache {
     })
   }
 
-  /** The flat ANN lists under `dir` (healed by the caller): the resident
+  /** The flat ANN lists of ANN index snapshot `snap`: the resident
     * segments of the `probes` lists, read only from the files whose
     * footer `list_id` range meets a probe. None as for [[vectors]].
     */
-  def annLists(conf: Configuration, dir: String, probes: Set[Int]): Option[Seq[Vectors]] = attempt {
-    val files = listing(conf, dir)
+  def annLists(conf: Configuration, snap: TableRoot.Snapshot,
+               probes: Set[Int]): Option[Seq[Vectors]] = attempt {
+    val files = fileIds(snap, "lists")
     val footers = files.map(footer(conf, _))
     val estimate = footers.map(_.groups.map(vectorEstimate(_, "embedding", 0)).sum).sum
     if (!fits(estimate, Runtime.getRuntime.maxMemory)) throw new Unsupported("over budget")
@@ -367,15 +364,15 @@ private[graft] object ServingCache {
       }
   }
 
-  /** `column` of the data files under `dir` (healed by the caller) for
-    * `keys`: the column's stored type and each key's values. Only the row
-    * groups whose footer `_key` range holds a key are read. None when the
-    * files disagree on the column's type, none has it, the type is not
-    * decoded here, or the row groups to read do not fit the budget.
+  /** `column` of the data files of data root snapshot `snap` for `keys`:
+    * the column's stored type and each key's values. Only the row groups
+    * whose footer `_key` range holds a key are read. None when the files
+    * disagree on the column's type, none has it, the type is not decoded
+    * here, or the row groups to read do not fit the budget.
     */
-  def content(conf: Configuration, dir: String, column: String,
+  def content(conf: Configuration, snap: TableRoot.Snapshot, column: String,
               keys: Seq[Long]): Option[(DataType, Map[Long, Seq[Any]])] = attempt {
-    val files = listing(conf, dir)
+    val files = fileIds(snap, "")
     val footers = files.map(footer(conf, _))
     val types = footers.flatMap(_.schema.map(_.find(_.name == column).map(_.dataType)))
     if (types.size != files.size) throw new Unsupported("a data file without a Spark schema")
@@ -404,14 +401,16 @@ private[graft] object ServingCache {
     (dt, found.groupMapReduce(_._1)(_._2)(_ ++ _))
   }
 
-  /** Every row of the small table under `dir` in the declared `schema`
-    * (columns a file lacks read as null; lists as `Seq`), cached whole
-    * per listing. None when its layout is not decoded here.
+  /** Every row of the small sub-table `sub` of snapshot `snap` in the
+    * declared `schema` (columns a file lacks read as null; lists as
+    * `Seq`), cached whole per file set. None when its layout is not
+    * decoded here.
     */
-  def table(conf: Configuration, dir: String, schema: StructType): Option[Seq[Row]] = attempt {
-    val files = listing(conf, dir)
+  def table(conf: Configuration, snap: TableRoot.Snapshot, sub: String,
+            schema: StructType): Option[Seq[Row]] = attempt {
+    val files = fileIds(snap, sub)
     // an empty table has no row to answer with; the Spark read reports it
-    if (files.isEmpty) throw new Unsupported(s"no files under $dir")
+    if (files.isEmpty) throw new Unsupported(s"no files under ${snap.path(sub)}")
     lru(("table", files, schema)) {
       val cols = files.map(decode(conf, _, schema.fields.toSeq))
       val rows = cols.flatMap(c => c.head.indices.map(i =>

@@ -274,7 +274,7 @@ object Chaos {
         Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
           .flatMap(x => if (x.isDirectory) x +: walk(x) else Seq(x))
       val leftovers = walk(new java.io.File(s"$root/chaos"))
-        .filter(_.getName.contains("_swapjournal"))
+        .filter(_.getName.contains(graft.core.TableRoot.JournalSuffix))
       require(leftovers.isEmpty,
         s"round $round: unhealed swap journals: ${leftovers.map(_.getName).mkString(", ")}")
       val hits = c.search("text", "alpha beta", limit = 5, emb).count()

@@ -244,7 +244,7 @@ class BackupSpec extends SparkSpec {
       .find(_.getName.endsWith(".parquet")).get.getName
     val conf = spark.sparkContext.hadoopConfiguration
     val victim = graft.core.ParquetStats
-      .fileKeyRanges(c.dataDir, "_key", conf)
+      .fileKeyRanges(parquetFilesUnder(c.dataDir), "_key", conf)
       .find(_.intersects(1L)).get.path.getName
     java.nio.file.Files.write(
       java.nio.file.Paths.get(c.dataDir + "_swapjournal"),

@@ -84,7 +84,7 @@ class CatalogSpec extends SparkSpec {
     c.upsert(Seq(("rewritten", 5L)).toDF("text", "_key"))
     assert(c.count() == 39L && c.count() == c.df.count())
     // the footer path really engages (totalRows reads this dir cleanly)
-    assert(graft.core.ParquetStats.totalRows(c.dataDir,
+    assert(graft.core.ParquetStats.totalRows(parquetFilesUnder(c.dataDir),
       spark.sparkContext.hadoopConfiguration).contains(39L))
   }
 
@@ -167,6 +167,8 @@ class CatalogSpec extends SparkSpec {
     val c = cat.create(CollectionConfig(name = "crash1"))
     c.importDf((1 to 12).map(i => s"row $i").toDF("text"))
     (1 to 3).foreach(i => c.appendDf(Seq(s"x$i", s"y$i").toDF("text")))
+    val emb = new HashingEmbedder(dim = 32)
+    assert(c.embedColumn("text", emb) == 18)
     val rows = c.df.orderBy("_key").collect().map(_.toSeq).toSeq
     def parquetFiles = new java.io.File(c.dataDir).listFiles()
       .count(_.getName.endsWith(".parquet"))
@@ -174,6 +176,9 @@ class CatalogSpec extends SparkSpec {
     // tiny files: the rewrite stages several leaves, so a crash can
     // land between two moves
     CrashPoints.each(c, c.dataDir)(c.compact(targetFileBytes = 1)) { point =>
+      // the cached read first: its content fetch meets the crash point
+      assertCachedPage(c, "text", emb.embedOne("row 7"), 5, point)(
+        c.search("text", "row 7", 5, emb))
       assert(!c.isEmpty, s"$point: a crashed compaction must never read as empty")
       assert(c.count() == rows.length, s"$point: old rows or new rows, never both")
       assert(c.df.orderBy("_key").collect().map(_.toSeq).toSeq == rows, point)
@@ -237,7 +242,12 @@ class CatalogSpec extends SparkSpec {
       k -> (if (k == 1L) emb.embedOne("xx yy").toSeq
             else if (k == 3L) emb.embedOne("zz ww").toSeq else v) }
     val root = c.indexDir("text")
+    // at every crash point the cached vector read runs first
+    def cachedPage(point: String): Unit =
+      assertCachedPage(c, "text", emb.embedOne("xx yy"), 4, point)(
+        c.search("text", "xx yy", 4, emb))
     CrashPoints.staged(c)(c.reembedChanged("text", emb))
+    cachedPage("staged")
     assert(c.indexedCount("text") == 4 && vectors == old,
       "an uncommitted rewrite must not be read")
     assert(CrashPoints.hasStage(root))
@@ -253,6 +263,7 @@ class CatalogSpec extends SparkSpec {
         CrashPoints.staged(c)(c.reembedChanged("text", emb))
       }
       CrashPoints.commit(root, moved)
+      cachedPage(point)
       assert(c.indexedCount("text") == 4, s"$point: the new vectors, never both")
       assert(vectors == fresh, point)
       assert(!CrashPoints.hasJournal(root) && !CrashPoints.hasStage(root), point)
@@ -451,7 +462,7 @@ class PartitionScopedCowSpec extends SparkSpec {
       .repartition(1).write.mode("overwrite").parquet(stage.toString)
     val stagedName = stage.listFiles().find(_.getName.endsWith(".parquet")).get.getName
     val conf = spark.sparkContext.hadoopConfiguration
-    val victim = graft.core.ParquetStats.fileKeyRanges(c.dataDir, "_key", conf)
+    val victim = graft.core.ParquetStats.fileKeyRanges(parquetFilesUnder(c.dataDir), "_key", conf)
       .find(_.intersects(1L)).get.path.getName
     java.nio.file.Files.write(
       java.nio.file.Paths.get(c.dataDir + "_swapjournal"),

@@ -11,6 +11,29 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
 
+  /** The Parquet files directly under `dir`. */
+  def parquetFilesUnder(dir: String): Seq[org.apache.hadoop.fs.Path] =
+    new java.io.File(dir).listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+      .map(f => new org.apache.hadoop.fs.Path(f.toURI))
+
+  /** Assert that `read`, a serving-path search of `c`'s `column` for the
+    * query vector `qv`, runs no Spark job (the serving cache answers it)
+    * and returns the Spark path's `k`-row page: `Search.topK` over the
+    * column's embeddings, its content joined from the collection's rows,
+    * by (score desc, key).
+    */
+  def assertCachedPage(c: graft.core.Collection, column: String, qv: Array[Float], k: Int,
+                       clue: String)(read: => org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.functions.{col, desc}
+    val (cached, jobs) = jobsOf(s"cached-page-$clue")(read.collect().toSeq)
+    assert(jobs == 0, s"$clue: the cached read ran $jobs Spark jobs")
+    val sparkPage = graft.search.Search.topK(c.embeddings(column), qv, k)
+      .join(c.df.select(col("_key"), col(column).as("content")), "_key")
+      .select(col("content"), col("_key").as("key"), col("score"))
+      .orderBy(desc("score"), col("key")).collect().toSeq
+    assert(cached.map(_.toSeq) == sparkPage.map(_.toSeq), clue)
+  }
+
   /** Spark jobs launched by `body` on this thread (job-group scoped, so
     * a stray job from another thread never counts).
     */
