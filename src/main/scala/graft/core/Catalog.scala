@@ -132,9 +132,16 @@ class Collection private[core] (
   //   - a fresh build commits into an absent root with its marker table
   //     moving last ([[stagedBuild]]).
 
-  /** The leaves of sub-table `sub` holding `files`. */
-  private def leavesOf(sub: String, files: Seq[FileKeyRange]): Seq[String] =
-    files.map(f => if (sub.isEmpty) f.path.getName else s"$sub/${f.path.getName}")
+  /** Footer `[min, max]` of long column `colName` per file of `s`'s
+    * sub-table `sub` ([[ParquetStats.fileKeyRanges]]; empty files
+    * omitted).
+    */
+  private def keyRanges(s: TableRoot.Snapshot, sub: String,
+                        colName: String): Seq[(TableRoot.Leaf, FileKeyRange)] = {
+    val leaves = s.files(sub)
+    val leafOf = leaves.map(l => l.path -> l).toMap
+    ParquetStats.fileKeyRanges(leaves.map(_.path), colName, hadoopConf).map(r => leafOf(r.path) -> r)
+  }
 
   /** The files of `s`'s sub-table `sub` whose footer `_key` range
     * intersects at least one key in `keys` — the "which files does this
@@ -143,17 +150,17 @@ class Collection private[core] (
     * only file ids.
     */
   private def touchedFiles(s: TableRoot.Snapshot, sub: String, keys: DataFrame,
-                           colName: String = KeyCol): Seq[FileKeyRange] = {
-    val ranges = ParquetStats.fileKeyRanges(s.paths(sub), colName, hadoopConf)
+                           colName: String = KeyCol): Seq[TableRoot.Leaf] = {
+    val ranges = keyRanges(s, sub, colName)
     if (ranges.isEmpty) return Seq.empty
     import spark.implicits._
     val rangesDf = ranges.zipWithIndex
-      .map { case (r, i) => (i, r.min, r.max) }.toDF("__file", "__min", "__max")
+      .map { case ((_, r), i) => (i, r.min, r.max) }.toDF("__file", "__min", "__max")
     val hit = keys.select(col(colName).cast(LongType).as(colName))
       .join(broadcast(rangesDf),
         col(colName) >= col("__min") && col(colName) <= col("__max"))
       .select("__file").distinct().collect().map(_.getInt(0)).toSet
-    ranges.zipWithIndex.collect { case (r, i) if hit(i) => r }
+    ranges.zipWithIndex.collect { case ((l, _), i) if hit(i) => l }
   }
 
   /** Prune a key-clustered scan to a (small) key batch: min/max range
@@ -206,7 +213,7 @@ class Collection private[core] (
   def count(): Long = {
     val s = dataRoot.snapshot()
     if (!s.has()) 0L
-    else ParquetStats.totalRows(s.paths(), hadoopConf).getOrElse(df.count())
+    else ParquetStats.totalRows(s.files().map(_.path), hadoopConf).getOrElse(df.count())
   }
 
   /** Import a DataFrame as the initial table contents, assigning `_key`
@@ -449,7 +456,7 @@ class Collection private[core] (
   private def repairByFingerprint(
       root: TableRoot, sub: String, current: DataFrame, stored: DataFrame,
       read: Seq[String] => DataFrame,
-      touched: Option[DataFrame => Seq[FileKeyRange]] = None,
+      touched: Option[DataFrame => Seq[TableRoot.Leaf]] = None,
       cluster: (DataFrame, Int) => DataFrame = keyClustered)(
       fresh: DataFrame => DataFrame)(sidecar: (DataFrame, DataFrame) => Unit): Long = {
     val carried = current.columns.filter(_ != "fp").map(col)
@@ -466,7 +473,7 @@ class Collection private[core] (
         else read(files.map(_.path.toString))
           .join(changed, Seq(KeyCol), "left_anti")
           .unionByName(rows)
-      root.commit(leavesOf(sub, files)) { stage =>
+      root.commit(files.map(_.rel)) { stage =>
         cluster(next, files.length).write.parquet(TableRoot.subPath(stage, sub))
       }
       sidecar(changed, rows)
@@ -520,7 +527,7 @@ class Collection private[core] (
           }.toIndexedSeq: _*)
         }
       val merged = graft.operators.Upsert(base, aligned, KeyCol)
-      dataRoot.commit(leavesOf("", touched)) { stage =>
+      dataRoot.commit(touched.map(_.rel)) { stage =>
         keyClustered(merged, touched.length).write.parquet(stage)
       }
     } finally writeLock.unlock()
@@ -1218,11 +1225,10 @@ class Collection private[core] (
       require(words.nonEmpty, "keyword search requires a non-empty query")
       require(posWords.nonEmpty, "keyword search requires at least one non-excluded query term")
     }
-    val index = snapshot(KeywordIndex, column)
-    val st = keywordStats(index)
+    val st = keywordStats(snapshot(KeywordIndex, column))
     val analyzer = keywordAnalyzer(st)
     val terms = analyzer.queryTokens(posWords.mkString(" "))
-    Option.when(terms.nonEmpty)(KeywordQuery(index, st, terms,
+    Option.when(terms.nonEmpty)(KeywordQuery(st, terms,
       analyzer.queryTokens(negWords.map(_.drop(1)).mkString(" "))))
   }
 
@@ -1302,9 +1308,9 @@ class Collection private[core] (
                           after: Option[(Double, Long)] = None): DataFrame = {
     val hits = q.st match {
       case Some(_) =>
-        graft.search.Keyword.searchIndex(spark, q.index.dir,
+        graft.search.Keyword.searchIndex(spark, keywordIndexDir(column),
           q.terms, limit, requireAll = requireAll, after = after,
-          mustNot = q.mustNot, stats = q.st, index = Some(q.index))
+          mustNot = q.mustNot, stats = q.st)
       case None =>
         graft.search.Keyword.bm25TopK(df, q.terms, limit, idCol = KeyCol,
           textCol = column, requireAll = requireAll, after = after,
@@ -1672,14 +1678,13 @@ class Collection private[core] (
     * files), but only the files actually holding a changed key's old row
     * need rewriting.
     */
-  private def touchedFilesByPair(s: TableRoot.Snapshot, pairs: DataFrame): Seq[FileKeyRange] = {
-    val keyRanges = ParquetStats.fileKeyRanges(s.paths("lists"), KeyCol, hadoopConf)
-    if (keyRanges.isEmpty) return Seq.empty
-    val listByPath = ParquetStats.fileKeyRanges(s.paths("lists"), "list_id", hadoopConf)
-      .map(r => r.path.toString -> r).toMap
+  private def touchedFilesByPair(s: TableRoot.Snapshot, pairs: DataFrame): Seq[TableRoot.Leaf] = {
+    val byKey = keyRanges(s, "lists", KeyCol)
+    if (byKey.isEmpty) return Seq.empty
+    val byList = keyRanges(s, "lists", "list_id").toMap
     import spark.implicits._
-    val rows = keyRanges.zipWithIndex.flatMap { case (kr, i) =>
-      listByPath.get(kr.path.toString).map(lr => (i, kr.min, kr.max, lr.min, lr.max))
+    val rows = byKey.zipWithIndex.flatMap { case ((l, kr), i) =>
+      byList.get(l).map(lr => (i, kr.min, kr.max, lr.min, lr.max))
     }.toDF("__file", "__kmin", "__kmax", "__lmin", "__lmax")
     val hit = pairs
       .select(col(KeyCol).cast(LongType).as(KeyCol),
@@ -1688,7 +1693,7 @@ class Collection private[core] (
         col(KeyCol) >= col("__kmin") && col(KeyCol) <= col("__kmax") &&
           col("__list") >= col("__lmin") && col("__list") <= col("__lmax"))
       .select("__file").distinct().collect().map(_.getInt(0)).toSet
-    keyRanges.zipWithIndex.collect { case (r, i) if hit(i) => r }
+    byKey.zipWithIndex.collect { case ((l, _), i) if hit(i) => l }
   }
 
   /** The lists files holding `keys`' CURRENT rows, pair-pruned through
@@ -1696,7 +1701,7 @@ class Collection private[core] (
     * they land in new files, and [[compactAnnIndex]] restores tight
     * clustering.
     */
-  private def annTouchedLists(column: String, keys: DataFrame): Seq[FileKeyRange] = {
+  private def annTouchedLists(column: String, keys: DataFrame): Seq[TableRoot.Leaf] = {
     val ann = snapshot(AnnIndex, column)
     val keysDf = keys.select(col(keys.columns.head).cast(LongType).as(KeyCol))
     val rows = scopedTo(read(AnnIndex, ann, "fps"), keysDf)
@@ -2535,7 +2540,7 @@ class Collection private[core] (
       val next = AnnIndex.read(spark, "lists", touched.map(_.path.toString),
         annListCols(annPqM(root.snapshot())))
         .join(del, Seq(KeyCol), "left_anti")
-      root.commit(leavesOf("lists", touched)) { stage =>
+      root.commit(touched.map(_.rel)) { stage =>
         annClustered(next, touched.length).write.parquet(s"$stage/lists")
       }
     }
@@ -2553,7 +2558,7 @@ class Collection private[core] (
     if (touched.isEmpty) return
     val remaining = read(touched.map(_.path.toString))
       .join(del, Seq(KeyCol), "left_anti")
-    root.commit(leavesOf(sub, touched)) { stage =>
+    root.commit(touched.map(_.rel)) { stage =>
       keyClustered(remaining, touched.length).write.parquet(TableRoot.subPath(stage, sub))
     }
   }
@@ -2577,7 +2582,7 @@ class Collection private[core] (
       else reader(f, sub)(touched.map(_.path.toString))
         .join(updates.select(KeyCol), Seq(KeyCol), "left_anti")
         .unionByName(updates)
-    root.commit(leavesOf(sub, touched)) { stage =>
+    root.commit(touched.map(_.rel)) { stage =>
       keyClustered(next, touched.length).write.parquet(s"$stage/$sub")
     }
   }
@@ -3086,15 +3091,14 @@ private[core] object Collection {
   val SavedQueries: StructType = StructType(Seq(
     StructField("query_id", LongType), StructField("query", StringType)))
 
-  /** A keyword query read against a column's index: the index's snapshot,
-    * its stats (None without one) and the query's terms and '-'-excluded terms
+  /** A keyword query read against a column's index: the index's stats
+    * (None without one) and the query's terms and '-'-excluded terms
     * (the search-box NOT operator: "hash join -slow"). Prefixes are
     * parsed off the RAW words, then both groups go through the index's
     * analyzer (the whitespace default without an index), so exclusion
     * matches exactly what the index stores.
     */
-  final case class KeywordQuery(index: TableRoot.Snapshot,
-                                st: Option[graft.search.Keyword.Stats],
+  final case class KeywordQuery(st: Option[graft.search.Keyword.Stats],
                                 terms: Seq[String], mustNot: Seq[String])
 
   // planMaintenance's thresholds

@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.column.{ColumnDescriptor, ColumnReader}
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -23,8 +22,8 @@ import scala.jdk.CollectionConverters._
   * every [[Collection]] instance in the JVM. It is a read cache over the
   * same tables, not a storage format.
   *
-  * Entries are keyed by a file's identity ([[FileId]]: qualified path,
-  * length, modification time). Writers never change a file in place —
+  * Entries are keyed by a file's identity ([[TableRoot.Leaf]]: qualified
+  * path, length, modification time). Writers never change a file in place —
   * appends add files, swaps and rewrites replace them under new names — so
   * an entry can never go stale. A reader passes its table root's snapshot
   * ([[TableRoot.snapshot]]), which rolls a committed write forward before
@@ -51,11 +50,6 @@ import scala.jdk.CollectionConverters._
   * its caller takes the Spark read instead.
   */
 private[graft] object ServingCache {
-
-  /** An immutable Parquet file: one path holds one content for as long as
-    * its length and modification time are unchanged.
-    */
-  final case class FileId(path: String, length: Long, mtime: Long)
 
   /** Resident `(key, vector)` rows of one segment; vectors widened to f64
     * as the scoring expression reads them.
@@ -128,17 +122,13 @@ private[graft] object ServingCache {
 
   // ---- files and footers ------------------------------------------------
 
-  /** The files of `snap`'s sub-table `sub` as a Spark read of it takes
-    * them (hidden `_`/`.` names skipped). Unsupported when one lies below
-    * a sub-directory.
+  /** The files of `snap`'s sub-table `sub`. Unsupported unless it is a
+    * flat Parquet table ([[TableRoot.Snapshot.flat]]).
     */
-  private def fileIds(snap: TableRoot.Snapshot, sub: String): IndexedSeq[FileId] =
-    snap.files(sub).toIndexedSeq.flatMap { l =>
-      val name = if (sub.isEmpty) l.rel else l.rel.stripPrefix(sub + "/")
-      if (name.startsWith("_") || name.startsWith(".")) None
-      else if (name.contains('/')) throw new Unsupported(s"not a flat Parquet table: $name")
-      else Some(FileId(snap.pathOf(l).toString, l.length, l.mtime))
-    }
+  private def fileIds(snap: TableRoot.Snapshot, sub: String): IndexedSeq[TableRoot.Leaf] = {
+    if (!snap.flat(sub)) throw new Unsupported(s"not a flat Parquet table: ${snap.path(sub)}")
+    snap.files(sub).toIndexedSeq
+  }
 
   /** One row group's footer facts: row count, `[min, max]` of its
     * integral top-level columns, and per top-level column the leaf value
@@ -154,8 +144,8 @@ private[graft] object ServingCache {
 
   private final case class Footer(schema: Option[StructType], groups: IndexedSeq[RowGroup])
 
-  private def footer(conf: Configuration, f: FileId): Footer = lru(("footer", f)) {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.path), conf))
+  private def footer(conf: Configuration, f: TableRoot.Leaf): Footer = lru(("footer", f)) {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.path, conf))
     val ft = try reader.getFooter finally reader.close()
     val schema = Option(ft.getFileMetaData.getKeyValueMetaData
         .get("org.apache.spark.sql.parquet.row.metadata"))
@@ -188,9 +178,9 @@ private[graft] object ServingCache {
     * long/int/double/float/boolean/string/binary columns and lists of
     * floats or doubles (as `Array[Float]` / `Array[Double]`).
     */
-  private def decode(conf: Configuration, f: FileId, fields: Seq[StructField],
+  private def decode(conf: Configuration, f: TableRoot.Leaf, fields: Seq[StructField],
                      group: Int = -1): Array[Array[AnyRef]] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.path), conf))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.path, conf))
     try {
       val fileSchema = reader.getFooter.getFileMetaData.getSchema
       val present = fields.filter(fd => fileSchema.containsField(fd.name))

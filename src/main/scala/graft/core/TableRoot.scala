@@ -160,15 +160,25 @@ private[graft] object TableRoot {
   def subPath(dir: String, sub: String): String = if (sub.isEmpty) dir else s"$dir/$sub"
 
   /** A live `.parquet` file of a root: its path relative to the root,
-    * its length and its modification time.
+    * its qualified path, its length and its modification time. Files are
+    * immutable, so one path holds one content for as long as its length
+    * and modification time are unchanged.
     */
-  final case class Leaf(rel: String, length: Long, mtime: Long)
+  final case class Leaf(rel: String, path: Path, length: Long, mtime: Long)
 
-  /** The files of the directory `dir` (a table root, or a stage): its
-    * `.parquet` leaves and its sub-tables, `sub` naming a directory under
-    * `dir` and `""` the whole of it. Each directory is listed at most
-    * once, when first asked about, so a read pays only for the
-    * sub-tables it looks at.
+  /** Names a Spark read of a directory skips, at any depth: `_` and `.`
+    * names other than partition directories (`_c=1`), and files still
+    * being copied in.
+    */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** The files of the directory `dir` (a table root, or a stage) as a
+    * Spark read of it takes them: its visible `.parquet` leaves and its
+    * sub-tables, `sub` naming a directory under `dir` and `""` the whole
+    * of it. Each directory is listed at most once, when first asked
+    * about, so a read pays only for the sub-tables it looks at.
     */
   final class Snapshot(fs: FileSystem, val dir: String) {
     private val listed = scala.collection.concurrent.TrieMap.empty[String, Option[Seq[FileStatus]]]
@@ -179,32 +189,46 @@ private[graft] object TableRoot {
         try Some(fs.listStatus(new Path(path(sub))).toSeq)
         catch { case _: java.io.FileNotFoundException => None })
 
+    /** The visible entries of `sub`. */
+    private def visible(sub: String): Seq[FileStatus] =
+      entries(sub).toSeq.flatten.filterNot(s => hidden(s.getPath.getName))
+
     /** `sub`'s path, what a Spark read of it is given. */
     def path(sub: String = ""): String = subPath(dir, sub)
 
-    /** Whether `sub` exists (`""`: whether the root does). */
-    def has(sub: String = ""): Boolean = entries(sub).isDefined
+    /** Whether `sub` exists (`""`: whether the root does): from a listing
+      * already taken, else from the listing of its parent directory (one
+      * listing answers every sibling), the root itself by a probe.
+      */
+    def has(sub: String = ""): Boolean = listed.get(sub) match {
+      case Some(e) => e.isDefined
+      case None if sub.isEmpty => fs.exists(new Path(dir))
+      case None =>
+        val i = sub.lastIndexOf('/')
+        entries(sub.take(i max 0)).exists(_.exists(_.getPath.getName == sub.drop(i + 1)))
+    }
 
-    /** The leaves under `sub`, at any depth, by path order. */
+    /** The visible `.parquet` leaves under `sub`, at any depth, by path
+      * order.
+      */
     def files(sub: String = ""): Seq[Leaf] = {
-      def walk(rel: String): Seq[Leaf] = entries(rel).toSeq.flatten.flatMap { s =>
+      def walk(rel: String): Seq[Leaf] = visible(rel).flatMap { s =>
         val r = if (rel.isEmpty) s.getPath.getName else s"$rel/${s.getPath.getName}"
         if (s.isDirectory) walk(r)
-        else Option.when(r.endsWith(".parquet"))(Leaf(r, s.getLen, s.getModificationTime))
+        else Option.when(r.endsWith(".parquet"))(
+          Leaf(r, fs.makeQualified(s.getPath), s.getLen, s.getModificationTime))
       }
       walk(sub).sortBy(_.rel)
     }
 
+    /** Whether `sub` is a flat Parquet table: every visible entry directly
+      * under it is a `.parquet` file.
+      */
+    def flat(sub: String = ""): Boolean =
+      visible(sub).forall(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+
     /** [[files]] by their paths relative to the root. */
     def names(sub: String = ""): Seq[String] = files(sub).map(_.rel)
-
-    private lazy val root = fs.makeQualified(new Path(dir))
-
-    /** A leaf's qualified path. */
-    def pathOf(l: Leaf): Path = new Path(root, l.rel)
-
-    /** [[files]] as qualified paths. */
-    def paths(sub: String = ""): Seq[Path] = files(sub).map(pathOf)
 
     /** The bytes of [[files]]. */
     def bytes(sub: String = ""): Long = files(sub).map(_.length).sum

@@ -606,9 +606,9 @@ object Keyword {
     * terms' `bucket=N` directories (derived driver-side), so only those
     * are listed and scanned — reading the postings root would list every
     * bucket first, a parallel-listing job costing more than the query. A
-    * bucket no posting hashed to has no directory in the index's snapshot
-    * `index` (by default, a listing of `dir`) and is skipped. Both
-    * logs aggregate to their net view AFTER the pruning, so the
+    * bucket no posting hashed to has no directory and is skipped (one
+    * listing of `postings` answers every bucket). Both logs aggregate to
+    * their net view AFTER the pruning, so the
     * tombstone folding touches only the matched buckets' rows. Every
     * read declares its table's stored layout.
     *
@@ -627,8 +627,7 @@ object Keyword {
                   requireAll: Boolean = false,
                   after: Option[(Double, Long)] = None,
                   mustNot: Seq[String] = Nil,
-                  stats: Option[Stats] = None,
-                  index: Option[graft.core.TableRoot.Snapshot] = None): DataFrame = {
+                  stats: Option[Stats] = None): DataFrame = {
     val st = stats.getOrElse(Keyword.stats(spark, dir))
     // avgdl is null on the fully-erased index (n_docs = 0): no postings
     // survive to score anyway, but the division must not fail first
@@ -640,10 +639,8 @@ object Keyword {
     val neg = mustNot.map(_.toLowerCase).distinct
     // excluded terms' postings live in their own buckets — read those
     // too (still O(query+mustNot buckets), never the whole postings log)
-    val snap = index.getOrElse {
-      val conf = spark.sparkContext.hadoopConfiguration
-      new graft.core.TableRoot.Snapshot(new org.apache.hadoop.fs.Path(dir).getFileSystem(conf), dir)
-    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val snap = new graft.core.TableRoot.Snapshot(new org.apache.hadoop.fs.Path(dir).getFileSystem(conf), dir)
     val bucketDirs = (qt ++ neg).map(tokenBucket(_, st.nBuckets)).distinct
       .map(b => s"postings/bucket=$b").filter(snap.has).map(snap.path)
     val postingsLog =

@@ -88,6 +88,27 @@ class CatalogSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration).contains(39L))
   }
 
+  test("counts, rewrites and the serving cache take a table's files as a Spark read does") {
+    // a crashed direct Spark write leaves valid part files under a hidden
+    // `_temporary` directory; no read of the table may see them
+    val cat = new Catalog(spark, tmpRoot())
+    val c = cat.create(CollectionConfig(name = "hidden"))
+    c.importDf((1 to 10).map(i => s"doc $i").toDF("text"))
+    val emb = new HashingEmbedder(dim = 32)
+    assert(c.embedColumn("text", emb) == 10)
+    val src = parquetFilesUnder(c.dataDir).head
+    val stray = java.nio.file.Paths.get(c.dataDir, "_temporary", "0", "task_0", src.getName)
+    java.nio.file.Files.createDirectories(stray.getParent)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(src.toUri), stray)
+    assert(c.count() == 10L && c.count() == c.df.count())
+    c.upsert(Seq(("rewritten", 5L)).toDF("text", "_key"))
+    assert(c.count() == 10L && c.count() == c.df.count())
+    assert(java.nio.file.Files.exists(stray), "a rewrite replaces only the table's own files")
+    assert(c.reembedChanged("text", emb) == 1)
+    assertCachedPage(c, "text", emb.embedOne("rewritten"), 3, "hidden")(
+      c.search("text", "rewritten", 3, emb))
+  }
+
   test("identifiers: artifact-colliding names are rejected at creation time") {
     import graft.core.Identifiers
     // plain names, including interior underscores, are fine
@@ -176,12 +197,15 @@ class CatalogSpec extends SparkSpec {
     // tiny files: the rewrite stages several leaves, so a crash can
     // land between two moves
     CrashPoints.each(c, c.dataDir)(c.compact(targetFileBytes = 1)) { point =>
-      // the cached read first: its content fetch meets the crash point
-      assertCachedPage(c, "text", emb.embedOne("row 7"), 5, point)(
+      // the cached read first, its content fetch meeting the crash point;
+      // at "none" the Spark-path reads below meet it first instead
+      def cachedPage(): Unit = assertCachedPage(c, "text", emb.embedOne("row 7"), 5, point)(
         c.search("text", "row 7", 5, emb))
+      if (point != "none") cachedPage()
       assert(!c.isEmpty, s"$point: a crashed compaction must never read as empty")
       assert(c.count() == rows.length, s"$point: old rows or new rows, never both")
       assert(c.df.orderBy("_key").collect().map(_.toSeq).toSeq == rows, point)
+      if (point == "none") cachedPage()
       if (point == "staged") {
         assert(parquetFiles == before, "an uncommitted rewrite is not read")
         assert(CrashPoints.hasStage(c.dataDir), "a read must not delete an uncommitted stage")
@@ -242,7 +266,8 @@ class CatalogSpec extends SparkSpec {
       k -> (if (k == 1L) emb.embedOne("xx yy").toSeq
             else if (k == 3L) emb.embedOne("zz ww").toSeq else v) }
     val root = c.indexDir("text")
-    // at every crash point the cached vector read runs first
+    // the cached vector read runs first at every crash point but "none",
+    // where the Spark-path reads meet it first
     def cachedPage(point: String): Unit =
       assertCachedPage(c, "text", emb.embedOne("xx yy"), 4, point)(
         c.search("text", "xx yy", 4, emb))
@@ -263,9 +288,10 @@ class CatalogSpec extends SparkSpec {
         CrashPoints.staged(c)(c.reembedChanged("text", emb))
       }
       CrashPoints.commit(root, moved)
-      cachedPage(point)
+      if (point != "none") cachedPage(point)
       assert(c.indexedCount("text") == 4, s"$point: the new vectors, never both")
       assert(vectors == fresh, point)
+      if (point == "none") cachedPage(point)
       assert(!CrashPoints.hasJournal(root) && !CrashPoints.hasStage(root), point)
       assert(c.reembedChanged("text", emb) == 0, s"$point: healed index is current")
     }
