@@ -670,34 +670,12 @@ object Cli {
             case _ => fail("--after must be score,key")
           }
         }
-        val mode = flags.getOrElse("mode", "vector")
-        if (after.isDefined && mode != "vector" && mode != "keyword")
-          fail(s"--after supports --mode vector|keyword, not '$mode'")
-        val page = mode match {
-          case "vector" => c.search(column, query, limit, embedder, after)
-          case "keyword" =>
-            c.searchKeyword(column, query, limit,
-              requireAll = flags.contains("require-all"), after = after)
-          case "fuzzy" =>
-            val maxDist = flags.getOrElse("max-dist", "2").toInt
-            if (maxDist < 1) fail("--max-dist must be >= 1")
-            c.searchKeywordFuzzy(column, query, limit,
-              requireAll = flags.contains("require-all"), maxDist = maxDist)
-          case "hybrid" => c.searchHybrid(column, query, limit, embedder)
-          case "ann" =>
-            val nProbe = flags.getOrElse("n-probe", "2").toInt
-            if (nProbe < 1) fail("--n-probe must be >= 1")
-            c.searchAnn(column, query, limit, embedder, nProbe)
-          case "binary" =>
-            val fetchK = flags.getOrElse("fetch-k", "0").toInt
-            if (fetchK < 0) fail("--fetch-k must be >= 0")
-            c.searchBinary(column, query, limit, embedder, fetchK)
-          case "late" =>
-            val np = intFlag("n-probe", flags.getOrElse("n-probe", "0"))
-            if (np < 0) fail("--n-probe must be >= 0 (0 = exact late scoring)")
-            c.searchLate(column, query, limit, embedder, np)
-          case other => fail(s"--mode must be vector|keyword|fuzzy|hybrid|ann|binary|late, got '$other'")
-        }
+        // a parameter's flag: search_after is --after, n_probe --n-probe
+        def flag(name: String) = if (name == "search_after") "after" else name.replace('_', '-')
+        val page = graft.serve.SearchModes.run(c, column, query, limit,
+          flags.getOrElse("mode", "vector"), after, embedder, graft.serve.SearchModes.Params(
+            n => flags.get(flag(n)).map(intFlag(flag(n), _)), n => flags.contains(flag(n)),
+            n => s"--${flag(n)}", fail(_)))
         page.show(limit, truncate = 80)
       case "serve" =>
         val host = flags.getOrElse("host", "127.0.0.1")

@@ -46,6 +46,7 @@ class Collection private[core] (
   import Keys.KeyCol
 
   import IndexFamily._
+  import Collection.Fold
 
   val dir: String = s"$rootDir/${config.name}"
   val dataDir: String = s"$dir/${config.db_path}"
@@ -260,23 +261,13 @@ class Collection private[core] (
     * `appendDf`/chunk import lands new parquet files; a year of appends
     * is thousands of files whose open cost dominates scans). Rewrites the
     * data table into ~`targetFileBytes`-sized files, keeping `_key`s
-    * untouched, and commits the rewrite in place of every data file.
-    * Returns the file count written.
+    * untouched, and commits the rewrite in place of every data file
+    * ([[compaction]]). Range-clustered, not round-robin: compaction must
+    * PRESERVE the key clustering that upsert/delete footer pruning
+    * depends on. Returns the file count written.
     */
-  def compact(targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    writeLock.lock()
-    try {
-      val s = dataRoot.snapshot()
-      if (!s.has()) return 0
-      val nFiles = filesFor(s.bytes(), targetFileBytes)
-      // range-clustered, not round-robin: compaction must PRESERVE the
-      // key clustering that upsert/delete footer pruning depends on —
-      // a hash repartition makes every file's key range span the whole
-      // table and the next 10-key upsert rewrites every file
-      dataRoot.commit(s.names())(keyClustered(df, nFiles).write.parquet(_))
-      nFiles
-    } finally writeLock.unlock()
-  }
+  def compact(targetFileBytes: Long = 128L * 1024 * 1024): Int =
+    compaction(dataRoot, targetFileBytes, "")((_, _, n) => keyClustered(df, n)).head
 
   private def keyClustered(rows: DataFrame, nFiles: Int): DataFrame =
     rows.repartitionByRange(math.max(1, nFiles), col(KeyCol)).sortWithinPartitions(KeyCol)
@@ -291,28 +282,32 @@ class Collection private[core] (
 
   // ---- index-family lifecycle ----------------------------------------
   //
-  // The steps every per-column index family ([[IndexFamily]]) shares:
-  // the guarded prologue, the staged build, the key watermark, the
-  // watermark stream, the fingerprint-driven repair and the compaction.
-  // Family methods below hold only their own build / append / search
-  // code; every one of them commits through the family directory's
-  // journal.
+  // The steps every per-column index family ([[IndexFamily]]) shares,
+  // each written once: the guarded prologue ([[maintained]]), the staged
+  // build, the key watermark, the refresh and its streaming twin (both
+  // fold the same unseen batch through the family's [[Collection.Fold]]),
+  // the fingerprint-driven repair and the compaction, whose one guarded
+  // commit also serves the data table. Family methods below hold only
+  // their own build / append / search code; every one of them commits
+  // through its table root's journal.
 
   /** Whether the family is built. */
   private[core] def built(f: IndexFamily, column: String): Boolean =
     snapshot(f, column).has(f.marker)
 
-  /** The prologue of every index-family write: validate the column, hold
-    * [[writeLock]] across the whole call (a rewrite must never interleave
-    * with another writer's append), heal the family ([[TableRoot.discard]]).
-    * `body` gets the family's root.
+  /** The prologue of every write to `root`: hold [[writeLock]] across the
+    * whole call (a rewrite must never interleave with another writer's
+    * append) and heal the root ([[TableRoot.discard]]).
     */
-  private def maintained[A](f: IndexFamily, column: String)(body: TableRoot => A): A = {
-    Identifiers.validate(column)
+  private def guarded[A](root: TableRoot)(body: TableRoot => A): A = {
     writeLock.lock()
-    try { val r = familyRoot(f, column); r.discard(); body(r) }
+    try { root.discard(); body(root) }
     finally writeLock.unlock()
   }
+
+  /** [[guarded]] over family `f`'s root; the column must be an identifier. */
+  private def maintained[A](f: IndexFamily, column: String)(body: TableRoot => A): A =
+    guarded(familyRoot(f, column))(body)
 
   /** A build, rebuild or retrain of family `f`: `build` writes every
     * sub-table under the stage root it is given, and one commit replaces
@@ -326,29 +321,33 @@ class Collection private[core] (
       f.tables.keys.filter(_ != f.marker).toSeq.sorted :+ f.marker)(build)
   }
 
-  /** One commit rewriting the sub-tables `subs` of `root`, those present
-    * in its snapshot `s`: `rewrite(sub, nFiles)` gives a table's rows
-    * re-clustered into `nFiles` files, ~`targetFileBytes` each, and every
-    * leaf of the rewritten tables is replaced. Returns the file count per
-    * sub-table, 0 for an absent one.
+  /** Every compaction: one guarded commit rewriting the sub-tables `subs`
+    * of `root` that hold files. `rewrite(s, sub, nFiles)` gives a table
+    * of snapshot `s` re-clustered into `nFiles` files, ~`targetFileBytes`
+    * each, and every leaf of the rewritten tables is replaced. Returns
+    * the file count per sub-table, 0 for a file-less one; with none, it
+    * commits nothing.
     */
-  private def compactTables(root: TableRoot, s: TableRoot.Snapshot, targetFileBytes: Long,
-                            subs: String*)(rewrite: (String, Int) => DataFrame): Seq[Int] = {
-    val counts = subs.map(t => if (s.has(t)) filesFor(s.bytes(t), targetFileBytes) else 0)
-    val present = subs.zip(counts).filter(_._2 > 0)
-    root.commit(present.flatMap(t => s.names(t._1))) { stage =>
-      present.foreach { case (t, n) => rewrite(t, n).write.parquet(s"$stage/$t") }
+  private def compaction(root: TableRoot, targetFileBytes: Long, subs: String*)(
+                         rewrite: (TableRoot.Snapshot, String, Int) => DataFrame): Seq[Int] =
+    guarded(root) { r =>
+      val s = r.snapshot()
+      val counts = subs.map(t => if (s.files(t).isEmpty) 0 else filesFor(s.bytes(t), targetFileBytes))
+      val present = subs.zip(counts).filter(_._2 > 0)
+      r.commit(present.flatMap(t => s.names(t._1))) { stage =>
+        present.foreach { case (t, n) => rewrite(s, t, n).write.parquet(TableRoot.subPath(stage, t)) }
+      }
+      counts
     }
-    counts
-  }
 
   /** A key-clustered sub-table's compaction rewrite: duplicate rows (a
     * repair re-run after a crash between its rows' commit and its
     * fingerprints' commit) fold away, and the rows re-cluster on `_key`,
     * so the repair paths' footer-range pruning keeps working.
     */
-  private def keyCompacted(f: IndexFamily, column: String)(sub: String, nFiles: Int): DataFrame =
-    keyClustered(read(f, column, sub).dropDuplicates(), nFiles)
+  private def keyCompacted(f: IndexFamily)(s: TableRoot.Snapshot, sub: String,
+                                           nFiles: Int): DataFrame =
+    keyClustered(read(f, s, sub).dropDuplicates(), nFiles)
 
   /** Observability for specs/ops: micro-batches that took
     * [[watermarkStream]]'s replay anti-join since this Collection object
@@ -373,29 +372,57 @@ class Collection private[core] (
       Option.when(s.files(t).nonEmpty)(read(f, s, t).select(col(keyCol).as(KeyCol)))
     }
 
-  /** The family's highest held key: its refresh and stream watermark. */
+  /** The family's highest held key: its refresh and stream watermark,
+    * from the `keys` table's file footers ([[keyRanges]], no Spark job)
+    * when every file records its key range, else by a scan.
+    */
   private def heldWatermark(f: IndexFamily, column: String): Long =
-    heldKeys(f, column).fold(Long.MinValue)(watermarkOf(_))
+    f.keys.fold(Long.MinValue) { case (t, keyCol) =>
+      val ranges = keyRanges(snapshot(f, column), t, keyCol).map(_._2)
+      if (ranges.exists(_.max == Long.MaxValue)) heldKeys(f, column).fold(Long.MinValue)(watermarkOf(_))
+      else ranges.map(_.max).maxOption.getOrElse(Long.MinValue)
+    }
+
+  /** Every refresh: fold the rows of family `f`'s upstream it has not
+    * seen into it, under [[maintained]]. An unbuilt family with a
+    * bootstrap builds; otherwise the unseen batch — the upstream's rows
+    * above [[heldWatermark]], in the shape [[watermarkStream]]'s file
+    * source delivers them (`(_key, column)` of the data, or the vector
+    * index's stored rows) — goes to `fold.append`, and an empty one
+    * returns 0. Returns what the bootstrap or the append counts.
+    */
+  private def refresh(f: IndexFamily, column: String)(fold: Fold): Long =
+    maintained(f, column) { _ =>
+      fold.bootstrap.filterNot(_ => built(f, column)) match {
+        case Some(build) => build()
+        case None =>
+          val upstream = f.upstream match {
+            case Upstream.Text => Option.unless(isEmpty)(df.select(col(KeyCol), col(column)))
+            case Upstream.Vectors => indexRaw(column)
+          }
+          val wm = heldWatermark(f, column)
+          upstream.map(_.filter(col(KeyCol) > wm)).filterNot(_.isEmpty).fold(0L)(fold.append)
+      }
+    }
 
   /** The streaming twin of a family's refresh: watch its upstream (the
     * data directory, or the vector index directory) as a file stream and
-    * `append` every micro-batch's keys the family does not hold. The
-    * family's `keys` table is the truth: a max-held-key watermark, read
-    * on the first batch, lets a batch wholly above it append without
-    * reading the family; a batch reaching down to it (restart,
-    * checkpoint loss, `compact()` re-delivering rewritten files, or a
-    * multi-file append the file source listed part-way, so a later batch
-    * carries keys below an earlier one's) keeps only the keys the family
-    * does not hold, by an anti-join against the held keys at or above
-    * the batch minimum. In-place rewrites stay repair's job
+    * pass every micro-batch's keys the family does not hold to the same
+    * `fold.append`. The family's `keys` table is the truth: a
+    * max-held-key watermark, read on the first batch, lets a batch wholly
+    * above it append without reading the family; a batch reaching down to
+    * it (restart, checkpoint loss, `compact()` re-delivering rewritten
+    * files, or a multi-file append the file source listed part-way, so a
+    * later batch carries keys below an earlier one's) keeps only the keys
+    * the family does not hold, by an anti-join against the held keys at
+    * or above the batch minimum. In-place rewrites stay repair's job
     * (fingerprint-driven). Each micro-batch holds [[writeLock]]; a
-    * missing structure is built by `bootstrap`. `ignoreMissingFiles`: a
-    * compaction may delete a listed source file before the batch reads
+    * missing structure is built by the [[refresh]]. `ignoreMissingFiles`:
+    * a compaction may delete a listed source file before the batch reads
     * it — its rows live on in files the source lists as new.
     */
   private def watermarkStream(f: IndexFamily, column: String, checkpointDir: String)(
-                              bootstrap: => Unit)(
-                              append: DataFrame => Unit): StreamingQuery = {
+                              fold: Fold): StreamingQuery = {
     Identifiers.validate(column)
     val source = f.upstream match {
       case Upstream.Text =>
@@ -416,18 +443,19 @@ class Collection private[core] (
         writeLock.lock()
         try {
           familyRoot(f, column).discard()
-          if (!built(f, column)) { bootstrap; maxSeen = heldWatermark(f, column); seeded = true }
-          else {
+          if (!built(f, column)) {
+            refresh(f, column)(fold); maxSeen = heldWatermark(f, column); seeded = true
+          } else {
             if (!seeded) { maxSeen = heldWatermark(f, column); seeded = true }
             val r = batch.agg(min(col(KeyCol)), max(col(KeyCol))).head()
             if (!r.isNullAt(0)) {
               val (lo, hi) = (r.getLong(0), r.getLong(1))
-              if (lo > maxSeen) append(batch)
+              if (lo > maxSeen) fold.append(batch)
               else {
                 streamRecoveryAntiJoins += 1
                 val pending = heldKeys(f, column).fold(batch)(keys =>
                   batch.join(keys.filter(col(KeyCol) >= lo), Seq(KeyCol), "left_anti"))
-                if (!pending.isEmpty) append(pending)
+                if (!pending.isEmpty) fold.append(pending)
               }
               maxSeen = math.max(maxSeen, hi)
             }
@@ -636,10 +664,23 @@ class Collection private[core] (
   }
 
   /** Commit stored rows into `column`'s index: a commit that replaces
-    * nothing. Caller holds [[writeLock]].
+    * nothing. Returns the rows it added, counted from the footers of the
+    * files it committed. Caller holds [[writeLock]].
     */
-  private def appendVectors(column: String, rows: DataFrame): Unit =
-    familyRoot(VectorIndex, column).commit(Nil)(rows.write.mode("overwrite").parquet(_))
+  private def appendVectors(column: String, rows: DataFrame): Long = {
+    val r = familyRoot(VectorIndex, column)
+    val added = r.commit(Nil)(rows.write.mode("overwrite").parquet(_)).map(new Path(r.dir, _))
+    ParquetStats.totalRows(added, hadoopConf)
+      .getOrElse(reader(VectorIndex, "")(added.map(_.toString)).count())
+  }
+
+  /** The vector index's fold ([[Fold]]): embed the unseen rows' text at
+    * the recorded geometry and append it. Its first fold is an append of
+    * every row, so it has no bootstrap.
+    */
+  private def vectorFold(column: String, embedder: graft.embed.Embedder, batchSize: Int): Fold =
+    Fold(None, rows =>
+      appendVectors(column, embedRows(texts(rows, column), embedder, batchSize, chunking(column))))
 
   /** K2: insert caller-provided vectors directly into `column`'s index —
     * the reference accepts externally produced embeddings into its
@@ -689,7 +730,6 @@ class Collection private[core] (
         case None => src0
       }
       appendVectors(column, vectorLayout.encode(src.as[(Long, String, Array[Float])]))
-      indexedCount(column) - before
     }
 
   /** Embed `column` incrementally and append to its index (E4).
@@ -698,11 +738,14 @@ class Collection private[core] (
     * at `index.size()` (collection_actor.rs:808-871) — O(n·batches) rescans
     * and fragile under reordering. Spark-native: the watermark is
     * `max(_key)` already indexed; one partitioned pass embeds everything
-    * above it. Returns the number of rows embedded.
+    * above it ([[refresh]]), at the recorded chunk geometry, under the
+    * write lease: a concurrent compactIndex or repair rewrite must not
+    * interleave, and two passes racing the same watermark would
+    * double-embed. Returns the number of vectors appended.
     */
   def embedColumn(column: String, embedder: graft.embed.Embedder,
                   batchSize: Int = 32): Long =
-    embedAbove(column, embedder, batchSize)
+    refresh(VectorIndex, column)(vectorFold(column, embedder, batchSize))
 
   /** Chunk-granularity twin of [[embedColumn]]: every document above the
     * watermark is markdown-chunked and each chunk embeds as its OWN
@@ -735,7 +778,7 @@ class Collection private[core] (
           s"'$column' is chunked at (maxTokens, overlapTokens) = $stored, not $geometry")
         case None => recordChunking(column, geometry)
       }
-      embedAbove(column, embedder, batchSize)
+      embedColumn(column, embedder, batchSize)
     }
 
   /** Where `column`'s chunk geometry is recorded: a file beside (not in)
@@ -771,28 +814,6 @@ class Collection private[core] (
     if (!fs.rename(tmp, chunkingPath(column)))
       throw new java.io.IOException(s"could not record the chunk geometry of '$column'")
   }
-
-  /** [[embedColumn]]'s body: embed every row above the watermark at the
-    * recorded geometry and append it, under the write lease (a concurrent
-    * compactIndex or repair rewrite must not interleave, and two passes
-    * racing the same watermark would double-embed). A limit-1 probe keeps
-    * a no-op call from appending an empty file (an empty collection
-    * embeds nothing); the batch itself is never cached or counted up
-    * front — at scale that cache is pure memory pressure — so the
-    * returned count comes from the footer-cheap before/after counts.
-    */
-  private def embedAbove(column: String, embedder: graft.embed.Embedder,
-                         batchSize: Int): Long =
-    maintained(VectorIndex, column) { _ =>
-      val before = indexedCount(column)
-      lazy val pending =
-        texts(df.filter(col(KeyCol) > heldWatermark(VectorIndex, column)), column)
-      if (isEmpty || pending.isEmpty) 0L
-      else {
-        appendVectors(column, embedRows(pending, embedder, batchSize, chunking(column)))
-        indexedCount(column) - before
-      }
-    }
 
   /** Re-embed rows whose CURRENT text no longer matches the fingerprint
     * stored next to their indexed vector — the repair step after
@@ -848,15 +869,8 @@ class Collection private[core] (
     * Returns the file count written, 0 when the index is absent.
     */
   def compactIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(VectorIndex, column) { root =>
-      val s = root.snapshot()
-      if (s.files().isEmpty) 0
-      else {
-        val nFiles = filesFor(s.bytes(), targetFileBytes)
-        root.commit(s.names())(keyClustered(read(VectorIndex, s, ""), nFiles).write.parquet(_))
-        nFiles
-      }
-    }
+    compaction(familyRoot(VectorIndex, column), targetFileBytes, "")(
+      (s, t, n) => keyClustered(read(VectorIndex, s, t), n)).head
 
   /** Streaming twin of [[embedColumn]] ([[watermarkStream]]): watch the
     * collection's data directory as a file stream and embed every newly
@@ -876,12 +890,7 @@ class Collection private[core] (
     */
   def embedColumnStream(column: String, embedder: graft.embed.Embedder,
                         checkpointDir: String, batchSize: Int = 32): StreamingQuery =
-    watermarkStream(VectorIndex, column, checkpointDir) {
-      embedAbove(column, embedder, batchSize)
-    } { pending =>
-      appendVectors(column,
-        embedRows(texts(pending, column), embedder, batchSize, chunking(column)))
-    }
+    watermarkStream(VectorIndex, column, checkpointDir)(vectorFold(column, embedder, batchSize))
 
   /** Full search (K4): embed the query, exact top-k over the column's index,
     * hydrate content by `_key` (K1+K3, [[fetchHits]]). Returns
@@ -1132,16 +1141,15 @@ class Collection private[core] (
     * default bucket count and analyzer; build first for others.
     */
   def refreshKeywordIndex(column: String): Long =
-    maintained(KeywordIndex, column) { _ =>
-      if (!built(KeywordIndex, column)) {
-        buildKeywordIndex(column)
-        keywordStats(snapshot(KeywordIndex, column)).fold(0L)(_.nDocs)
-      } else {
-        val pending = df.filter(col(KeyCol) > heldWatermark(KeywordIndex, column))
-          .select(col(KeyCol), col(column))
-        if (pending.isEmpty) 0L else appendKeyword(column, pending)
-      }
-    }
+    refresh(KeywordIndex, column)(keywordFold(column))
+
+  /** The keyword index's fold ([[Fold]]): build with the defaults,
+    * counting the indexed documents, or append the unseen rows.
+    */
+  private def keywordFold(column: String): Fold = Fold(Some { () =>
+    buildKeywordIndex(column)
+    keywordStats(snapshot(KeywordIndex, column)).fold(0L)(_.nDocs)
+  }, appendKeyword(column, _))
 
   /** Repair the keyword index after [[upsert]] rewrote text under
     * existing keys — the keyword twin of [[reembedChanged]], driven by
@@ -1169,9 +1177,7 @@ class Collection private[core] (
     * another bucket count or analyzer); an index keeps its stored ones.
     */
   def keywordIndexStream(column: String, checkpointDir: String): StreamingQuery =
-    watermarkStream(KeywordIndex, column, checkpointDir) {
-      buildKeywordIndex(column)
-    } { pending => appendKeyword(column, pending) }
+    watermarkStream(KeywordIndex, column, checkpointDir)(keywordFold(column))
 
   /** Fold the keyword index's delta logs: rewrite postings/doclen as
     * their net view (tombstones cancelled, one live row per key) and the
@@ -1473,17 +1479,18 @@ class Collection private[core] (
     * absent. Returns the number of documents banded in.
     */
   def refreshDedupIndex(column: String): Long =
-    maintained(DedupIndex, column) { _ =>
-      if (!built(DedupIndex, column)) {
-        buildDedupIndex(column)
-        read(DedupIndex, column, "bands").select(col(KeyCol)).distinct().count()
-      } else {
-        val pending = df.filter(col(KeyCol) > heldWatermark(DedupIndex, column))
-          .select(col(KeyCol), col(column))
-        if (pending.isEmpty) 0L
-        else appendBands(column, pending).select(col(KeyCol)).distinct().count()
-      }
-    }
+    refresh(DedupIndex, column)(dedupFold(column))
+
+  /** The dedup index's fold ([[Fold]]): build with the default params or
+    * band the unseen rows; either counts the banded documents.
+    */
+  private def dedupFold(column: String): Fold = {
+    def banded(bands: DataFrame): Long = bands.select(col(KeyCol)).distinct().count()
+    Fold(Some { () =>
+      buildDedupIndex(column)
+      banded(read(DedupIndex, column, "bands"))
+    }, rows => banded(appendBands(column, rows)))
+  }
 
   /** Band `pending` rows into the dedup index and record their
     * fingerprints in the same commit, so a later [[repairDedupIndex]]
@@ -1545,19 +1552,13 @@ class Collection private[core] (
     * store with the default width.
     */
   def refreshNoveltyStore(column: String): Long =
-    maintained(NoveltyStore, column) { root =>
-      val s = root.snapshot()
-      if (!s.has(NoveltyStore.marker)) { buildNoveltyStore(column); count() }
-      else {
-        val pending = df.filter(col(KeyCol) > heldWatermark(NoveltyStore, column))
-          .select(col(KeyCol), col(column))
-        val nPending = pending.count()
-        if (nPending > 0) root.commit(Nil)(stage =>
-          graft.dedup.Dedup.ngramFingerprints(pending, column, KeyCol, noveltyN(s))
-            .write.parquet(s"$stage/grams"))
-        nPending
-      }
-    }
+    refresh(NoveltyStore, column)(Fold(Some { () => buildNoveltyStore(column); count() }, { rows =>
+      val root = familyRoot(NoveltyStore, column)
+      val n = noveltyN(root.snapshot())
+      root.commit(Nil)(stage => graft.dedup.Dedup.ngramFingerprints(rows, column, KeyCol, n)
+        .write.parquet(s"$stage/grams"))
+      rows.count()
+    }))
 
   /** Score an incoming batch against the stored grams —
     * [[graft.dedup.Dedup.ngramNoveltyAgainst]] with the store's width:
@@ -1583,9 +1584,7 @@ class Collection private[core] (
     * stored params.
     */
   def dedupIndexStream(column: String, checkpointDir: String): StreamingQuery =
-    watermarkStream(DedupIndex, column, checkpointDir) {
-      buildDedupIndex(column)
-    } { pending => appendBands(column, pending) }
+    watermarkStream(DedupIndex, column, checkpointDir)(dedupFold(column))
 
   /** Check an incoming batch against the indexed corpus: `(corpus_key,
     * new_key, jaccard)` for every batch row whose exact shingle Jaccard
@@ -2042,18 +2041,16 @@ class Collection private[core] (
     * outright when absent. Returns the number of vectors folded in.
     */
   def refreshAnnIndex(column: String): Long =
-    maintained(AnnIndex, column) { _ =>
-      if (!built(AnnIndex, column)) {
-        buildAnnIndex(column)
-        annLists(column, Seq(KeyCol)).count()
-      } else {
-        val wm = heldWatermark(AnnIndex, column)
-        val pending = embeddings(column).filter(col(KeyCol) > wm)
-        if (pending.isEmpty) 0L
-        else appendAnnRows(column, pending,
-          annUpstreamFps(column).filter(col(KeyCol) > wm)).count()
-      }
-    }
+    refresh(AnnIndex, column)(annFold(column))
+
+  /** The ANN index's fold ([[Fold]]): build at `nLists`/`pqM`, or assign
+    * the unseen stored vector rows, their fingerprints riding along;
+    * either counts the lists rows.
+    */
+  private def annFold(column: String, nLists: Int = 0, pqM: Int = 0): Fold = Fold(Some { () =>
+    buildAnnIndex(column, nLists = nLists, pqM = pqM)
+    annLists(column, Seq(KeyCol)).count()
+  }, rows => appendAnnRows(column, vectorLayout.view(rows), vectorFps(rows)).count())
 
   /** Assign `vectors` against the STORED centroids (PQ-encoded when the
     * index carries codebooks) and commit them to the lists with their
@@ -2206,9 +2203,7 @@ class Collection private[core] (
     */
   def annIndexStream(column: String, checkpointDir: String,
                      nLists: Int = 0, pqM: Int = 0): StreamingQuery =
-    watermarkStream(AnnIndex, column, checkpointDir) {
-      buildAnnIndex(column, nLists = nLists, pqM = pqM)
-    } { pending => appendAnnRows(column, vectorLayout.view(pending), vectorFps(pending)) }
+    watermarkStream(AnnIndex, column, checkpointDir)(annFold(column, nLists, pqM))
 
   /** Repair the ANN index after [[upsert]] + [[reembedChanged]] rewrote
     * vectors under existing keys — the stored `(key, fp)` table is
@@ -2260,27 +2255,25 @@ class Collection private[core] (
   /** Re-cluster the ANN lists table into ~`targetFileBytes` files —
     * refresh appends accumulate small, wide-range files that erode the
     * probe filter's footer pruning — and fold the fps sidecar with it,
-    * one commit ([[compactTables]]). Returns the lists file count
+    * one commit ([[compaction]]). Returns the lists file count
     * written, 0 when no index.
     */
   def compactAnnIndex(column: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(AnnIndex, column) { root =>
-      val s = root.snapshot()
-      if (!s.has(AnnIndex.marker)) 0
-      else compactTables(root, s, targetFileBytes, "lists", "fps") {
-        // dropDuplicates over ALL columns: a repair that crashed between
-        // its lists commit and its fps sidecar update re-appends the same
-        // (key, list, vector/code) row on re-run — benign for serving
-        // (every read path folds per-key/pair max) but it inflates the
-        // table; compaction is where the copies fold away. Distinct chunk
-        // vectors of one document differ in their embedding/code column
-        // and are never collapsed.
-        case ("lists", n) => annClustered(annLists(column, annPqM(s)).dropDuplicates(), n)
-        // the fps sidecar accumulates one appended file per refresh/stream
-        // micro-batch FOREVER if only the lists fold
-        case (sub, n) => keyCompacted(AnnIndex, column)(sub, n)
-      }.head
-    }
+    compaction(familyRoot(AnnIndex, column), targetFileBytes, "lists", "fps") {
+      // dropDuplicates over ALL columns: a repair that crashed between
+      // its lists commit and its fps sidecar update re-appends the same
+      // (key, list, vector/code) row on re-run — benign for serving
+      // (every read path folds per-key/pair max) but it inflates the
+      // table; compaction is where the copies fold away. Distinct chunk
+      // vectors of one document differ in their embedding/code column
+      // and are never collapsed.
+      case (s, "lists", n) =>
+        annClustered(read(AnnIndex, s, "lists").select(annListCols(annPqM(s)).map(col): _*)
+          .dropDuplicates(), n)
+      // the fps sidecar accumulates one appended file per refresh/stream
+      // micro-batch FOREVER if only the lists fold
+      case (s, sub, n) => keyCompacted(AnnIndex)(s, sub, n)
+    }.head
 
   /** Fold the dedup index's stream/refresh appends: bands and the fps
     * sidecar both re-cluster to a small file count, in one commit. The band/fps tables
@@ -2291,12 +2284,8 @@ class Collection private[core] (
     */
   def compactDedupIndex(column: String,
                         targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(DedupIndex, column) { root =>
-      val s = root.snapshot()
-      if (!s.has(DedupIndex.marker)) 0
-      else compactTables(root, s, targetFileBytes, "bands", "fps")(
-        keyCompacted(DedupIndex, column)).sum
-    }
+    compaction(familyRoot(DedupIndex, column), targetFileBytes, "bands", "fps")(
+      keyCompacted(DedupIndex)).sum
 
   // --- binary (1-bit sign) sketch surface ---------------------------------
   //
@@ -2352,20 +2341,15 @@ class Collection private[core] (
     * family uses. Builds outright when absent. Returns keys folded in.
     */
   def refreshBinarySketch(column: String): Long =
-    maintained(BinarySketch, column) { _ =>
-      if (!built(BinarySketch, column)) buildBinarySketch(column)
-      else {
-        val pending = embeddings(column)
-          .filter(col(KeyCol) > heldWatermark(BinarySketch, column))
-          .localCheckpoint(true)
-        if (pending.isEmpty) 0L
-        else {
-          appendSketch(column, pending,
-            annUpstreamFps(column, Some(pending.select(col(KeyCol)))))
-          pending.select(col(KeyCol)).distinct().count()
-        }
-      }
-    }
+    refresh(BinarySketch, column)(binaryFold(column))
+
+  /** The sketch's fold ([[Fold]]): build, or sketch the unseen stored
+    * vector rows with their fingerprints; either counts the keys.
+    */
+  private def binaryFold(column: String): Fold = Fold(Some(() => buildBinarySketch(column)), { rows =>
+    appendSketch(column, vectorLayout.view(rows), vectorFps(rows))
+    rows.select(col(KeyCol)).distinct().count()
+  })
 
   /** Commit `vectors`' sign words to the sketch and `fps` to its
     * sidecar, in one commit.
@@ -2409,9 +2393,7 @@ class Collection private[core] (
     * commit together. Bootstraps by building the sketch when absent.
     */
   def binarySketchStream(column: String, checkpointDir: String): StreamingQuery =
-    watermarkStream(BinarySketch, column, checkpointDir) {
-      buildBinarySketch(column)
-    } { pending => appendSketch(column, vectorLayout.view(pending), vectorFps(pending)) }
+    watermarkStream(BinarySketch, column, checkpointDir)(binaryFold(column))
 
   /** Re-cluster the sketch and its fps sidecar into ~`targetFileBytes`
     * files, one commit — heals refresh small-file growth and folds away
@@ -2422,12 +2404,8 @@ class Collection private[core] (
     */
   def compactBinarySketch(column: String,
                           targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    maintained(BinarySketch, column) { root =>
-      val s = root.snapshot()
-      if (!s.has(BinarySketch.marker)) 0
-      else compactTables(root, s, targetFileBytes, "sketch", "fps")(
-        keyCompacted(BinarySketch, column)).head
-    }
+    compaction(familyRoot(BinarySketch, column), targetFileBytes, "sketch", "fps")(
+      keyCompacted(BinarySketch)).head
 
   /** Two-stage binary serving: Hamming over the stored sketch ranks
     * `fetchK` candidate KEYS (per-key min over chunk vectors), exact
@@ -3100,6 +3078,15 @@ private[core] object Collection {
     */
   final case class KeywordQuery(st: Option[graft.search.Keyword.Stats],
                                 terms: Seq[String], mustNot: Seq[String])
+
+  /** An index family's two steps over rows it has not seen, shared by
+    * its refresh and its stream ([[Collection.refresh]],
+    * [[Collection.watermarkStream]]): `bootstrap` builds the family when
+    * absent, None when its first fold is an append like any other (the
+    * vector index); `append` folds a batch of unseen upstream rows into
+    * it. Each returns the count the refresh reports.
+    */
+  final case class Fold(bootstrap: Option[() => Long], append: DataFrame => Long)
 
   // planMaintenance's thresholds
   /** ANN centroid drift, over the build baseline, that plans a retrain. */

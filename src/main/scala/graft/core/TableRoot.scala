@@ -74,9 +74,11 @@ private[graft] final class TableRoot(fs: FileSystem, val dir: String, lease: Wri
     * move in that order, the rest after them. A stage with no leaves and
     * nothing replaced commits nothing. The journal rename and its
     * completion hold [[monitor]], so a snapshot in this JVM never rolls a
-    * half-completed commit forward beside this thread.
+    * half-completed commit forward beside this thread. Returns the
+    * leaves it added, relative to the root.
     */
-  def commit(replaced: => Seq[String], order: Seq[String] = Nil)(write: String => Unit): Unit = {
+  def commit(replaced: => Seq[String], order: Seq[String] = Nil)(
+             write: String => Unit): Seq[String] = {
     discard()
     val deleteLeaves = replaced
     write(stage.toString)
@@ -84,7 +86,7 @@ private[graft] final class TableRoot(fs: FileSystem, val dir: String, lease: Wri
       val i = order.indexOf(n.takeWhile(_ != '/'))
       if (i < 0) order.length else i
     }
-    if (stagedLeaves.isEmpty && deleteLeaves.isEmpty) { fs.delete(stage, true); return }
+    if (stagedLeaves.isEmpty && deleteLeaves.isEmpty) { fs.delete(stage, true); return Nil }
     // Spark part-file names embed a per-job UUID, so a collision with an
     // existing file would mean something is deeply wrong — refuse rather
     // than let the journal's delete step destroy the staged replacement
@@ -102,6 +104,7 @@ private[graft] final class TableRoot(fs: FileSystem, val dir: String, lease: Wri
         throw new java.io.IOException(s"could not commit swap journal for $dir")
       complete()
     }
+    stagedLeaves
   }
 
   /** Execute a committed journal to completion. Moves staged files in, in

@@ -136,46 +136,14 @@ final class HttpApi(catalog: Catalog, registry: ModelRegistry, port: Int,
             case other => throw new IllegalArgumentException(
               s"search_after must be [score, key], got $other")
           }
-        if (searchAfter.isDefined && mode != "vector" && mode != "keyword")
-          throw new IllegalArgumentException(
-            s"search_after supports modes vector|keyword, not '$mode'")
         def embedder = registry.load(coll.config.model_name, coll.config.model_variant)
-        // require_all=true -> conjunctive (AND) semantics
-        def requireAll = opt[Boolean](req, "require_all").getOrElse(false)
-        val rows = (mode match {
-          case "vector" => coll.search(column, query, limit, embedder, searchAfter)
-          case "keyword" =>
-            coll.searchKeyword(column, query, limit, requireAll, searchAfter)
-          case "fuzzy" =>
-            // keyword search with typo auto-correction (vocabulary-
-            // absent terms replaced by their best trigram/edit match)
-            val maxDist = opt[Int](req, "max_dist").getOrElse(2)
-            require(maxDist >= 1, s"max_dist must be >= 1, got $maxDist")
-            coll.searchKeywordFuzzy(column, query, limit, requireAll, maxDist)
-          case "hybrid" => coll.searchHybrid(column, query, limit, embedder)
-          case "ann" =>
-            val nProbe = opt[Int](req, "n_probe").getOrElse(2)
-            require(nProbe >= 1, s"n_probe must be >= 1, got $nProbe")
-            coll.searchAnn(column, query, limit, embedder, nProbe)
-          case "binary" =>
-            // Hamming candidates over the 1-bit sketch, exact rerank
-            val fetchK = opt[Int](req, "fetch_k").getOrElse(0)
-            require(fetchK >= 0, s"fetch_k must be >= 0, got $fetchK")
-            coll.searchBinary(column, query, limit, embedder, fetchK)
-          case "late" =>
-            // MaxSim over a chunked index, the query chunked at the
-            // index's recorded geometry. n_probe > 0 routes candidate
-            // generation through the ANN index (PLAID shape)
-            val np = opt[Int](req, "n_probe").getOrElse(0)
-            require(np >= 0, s"n_probe must be >= 0, got $np")
-            coll.searchLate(column, query, limit, embedder, np)
-          case other => throw new IllegalArgumentException(
-            s"mode must be vector|keyword|fuzzy|hybrid|ann|binary|late, got '$other'")
-        }).collect()
+        val rows = SearchModes.run(coll, column, query, limit, mode, searchAfter, embedder,
+          SearchModes.Params(opt[Int](req, _), opt[Boolean](req, _).getOrElse(false), identity,
+            m => throw new IllegalArgumentException(m))).collect()
         // a FULL page advertises its continuation cursor (vector/keyword
         // modes); a short page is the end — no next
         val next =
-          if (rows.length == limit && (mode == "vector" || mode == "keyword"))
+          if (rows.length == limit && SearchModes.Cursored(mode))
             s""","next":[${rows.last.getDouble(2)},${rows.last.getLong(1)}]"""
           else ""
         (200, ok(secs(), s"""{"results":${hitsJson(rows)}$next}"""))

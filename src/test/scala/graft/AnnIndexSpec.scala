@@ -19,7 +19,7 @@ class AnnIndexSpec extends SparkSpec {
   private val emb = new HashingEmbedder(dim = 32)
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_annidx").toString
+    tempDir("graft_annidx")
 
   private def mkCollection(name: String, n: Int = 40): graft.core.Collection = {
     val cat = new Catalog(spark, tmpRoot())

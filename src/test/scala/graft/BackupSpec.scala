@@ -15,7 +15,7 @@ class BackupSpec extends SparkSpec {
   private val emb = new HashingEmbedder(dim = 32)
 
   private def tmpRoot(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix)
 
   private def mkCollection(cat: Catalog, name: String) = {
     val c = cat.create(CollectionConfig(name = name))

@@ -18,7 +18,7 @@ class BinaryIndexSpec extends SparkSpec {
   private val emb = new HashingEmbedder(dim = 32)
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_binidx").toString
+    tempDir("graft_binidx")
 
   private def mkCollection(name: String, n: Int = 40): graft.core.Collection = {
     val cat = new Catalog(spark, tmpRoot())

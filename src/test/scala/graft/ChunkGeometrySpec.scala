@@ -40,7 +40,7 @@ class ChunkGeometrySpec extends SparkSpec {
   }
 
   private def catalog(tag: String) =
-    new Catalog(spark, java.nio.file.Files.createTempDirectory(tag).toString)
+    new Catalog(spark, tempDir(tag))
 
   test("repairIndexes re-embeds an upserted long document at the recorded geometry") {
     val cat = catalog("graft_geom_repair")

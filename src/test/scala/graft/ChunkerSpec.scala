@@ -7,7 +7,7 @@ import graft.functions.Chunker.ChunkerConfig
 /** The reference's 11 chunker tests ported 1:1 (src/chunker.rs:302-441) —
   * the best-specified behavior in the reference repo.
   */
-class ChunkerSpec extends AnyFunSuite {
+class ChunkerSpec extends AnyFunSuite with TempDirs {
 
   private def chunk(text: String, maxTokens: Int, overlap: Int): Seq[String] =
     Chunker.chunk(text, ChunkerConfig(maxTokens, overlap))
@@ -128,7 +128,7 @@ class ChunkerSpec extends AnyFunSuite {
   }
 
   test("fromFile: plain piece list and tokenizer.json both load, id order preserved") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vocab")
+    val dir = java.nio.file.Paths.get(tempDir("graft_vocab"))
     // plain newline-delimited list
     val plain = dir.resolve("vocab.txt")
     java.nio.file.Files.write(plain,

@@ -14,7 +14,7 @@ class ClassifierIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private def mk(name: String): graft.core.Collection = {
-    val root = java.nio.file.Files.createTempDirectory("graft_clf").toString
+    val root = tempDir("graft_clf")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = name))
     c.importDf((1 to 40).map { i =>
@@ -102,10 +102,10 @@ class ClassifierIndexSpec extends SparkSpec {
     val c = mk("clf5")
     c.trainClassifier("text", col("text").contains("excellent"),
       dim = 16, iters = 2, lr = 1e-3)
-    val dest = java.nio.file.Files.createTempDirectory("graft_clf_bk").toString
+    val dest = tempDir("graft_clf_bk")
     c.backup(dest)
     val cat2 = new Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_clf_rs").toString)
+      tempDir("graft_clf_rs"))
     val r = cat2.restore(dest, "clf5r")
     assert(r.hasClassifier("text"))
     assert(r.classifierWeights("text").toSeq ==

@@ -68,7 +68,7 @@ class CatalogSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_test").toString
+    tempDir("graft_test")
 
   test("count is footer-metadata-only and tracks every mutation exactly") {
     val cat = new Catalog(spark, tmpRoot())
@@ -228,7 +228,7 @@ class CatalogSpec extends SparkSpec {
     c.importDf((1 to 20).map(i => s"row $i").toDF("text"))
     val rows = c.df.orderBy("_key").collect().map(_.toSeq).toSeq
     val roots = (1 to 4).map { i =>
-      val link = java.nio.file.Files.createTempDirectory("graft_link").resolve(s"root$i")
+      val link = java.nio.file.Paths.get(tempDir("graft_link")).resolve(s"root$i")
       java.nio.file.Files.createSymbolicLink(link, java.nio.file.Paths.get(real)).toString
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
@@ -375,7 +375,7 @@ class PartitionScopedCowSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_cow").toString
+    tempDir("graft_cow")
 
   /** name -> (length, lastModified) for every parquet file under dir. */
   private def fileMeta(dir: String): Map[String, (Long, Long)] =
@@ -652,7 +652,7 @@ class ChunkedIndexSpec extends SparkSpec {
   }
 
   test("chunked embed -> multi-vector index -> one slot per doc, best-chunk score") {
-    val root = java.nio.file.Files.createTempDirectory("graft_chunked").toString
+    val root = tempDir("graft_chunked")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "chunked"))
     val emb = new HashingEmbedder(dim = 64)
@@ -756,7 +756,7 @@ class SearchSpec extends SparkSpec {
   test("filtered search: predicate narrows ranking, page stays k deep") {
     import graft.core.{Catalog, CollectionConfig}
     import graft.embed.HashingEmbedder
-    val root = java.nio.file.Files.createTempDirectory("graft_fsearch").toString
+    val root = tempDir("graft_fsearch")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "docs"))
     c.importDf(Seq(

@@ -16,7 +16,7 @@ class DeleteSpec extends SparkSpec {
   private val emb = new HashingEmbedder(dim = 32)
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_del").toString
+    tempDir("graft_del")
 
   private def fileMeta(dir: String): Map[String, (Long, Long)] =
     new java.io.File(dir).listFiles().toSeq

@@ -75,7 +75,7 @@ class FuzzyExpectSpec extends SparkSpec {
 
   test("collection suggest + fuzzy search: correction, stability, exclusions") {
     import graft.core.{Catalog, CollectionConfig}
-    val root = java.nio.file.Files.createTempDirectory("graft_fzc").toString
+    val root = tempDir("graft_fzc")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "fz", index_columns = Seq("text")))
     c.importDf(Seq(

@@ -29,7 +29,7 @@ class HttpApiSpec extends SparkSpec {
   }
 
   test("all four reference routes over a live collection") {
-    val root = java.nio.file.Files.createTempDirectory("graft_http").toString
+    val root = tempDir("graft_http")
     val cat = new Catalog(spark, root)
     val registry = new ModelRegistry
     registry.register("hf://mys/minilm", "f32", new HashingEmbedder(dim = 64))
@@ -144,7 +144,7 @@ class HttpApiSpec extends SparkSpec {
   }
 
   test("malformed request bodies are 400s, never 500s or silent defaults") {
-    val root = java.nio.file.Files.createTempDirectory("graft_http").toString
+    val root = tempDir("graft_http")
     val cat = new Catalog(spark, root)
     val registry = new ModelRegistry
     registry.register("hf://mys/minilm", "f32", new HashingEmbedder(dim = 64))
@@ -177,7 +177,7 @@ class HttpApiSpec extends SparkSpec {
   }
 
   test("a column that is not an identifier is a 400 and never reaches the filesystem") {
-    val root = java.nio.file.Files.createTempDirectory("graft_http").toString
+    val root = tempDir("graft_http")
     val cat = new Catalog(spark, root)
     val registry = new ModelRegistry
     registry.register("hf://mys/minilm", "f32", new HashingEmbedder(dim = 64))
@@ -208,7 +208,7 @@ class HttpApiSpec extends SparkSpec {
   }
 
   test("parallel mixed-mode requests return the serial pages") {
-    val root = java.nio.file.Files.createTempDirectory("graft_http").toString
+    val root = tempDir("graft_http")
     val cat = new Catalog(spark, root)
     val registry = new ModelRegistry
     registry.register("hf://mys/minilm", "f32", new HashingEmbedder(dim = 64))
@@ -255,7 +255,7 @@ class HttpApiSpec extends SparkSpec {
   }
 
   test("search_batch route: a page of queries answered in one pass") {
-    val root = java.nio.file.Files.createTempDirectory("graft_http").toString
+    val root = tempDir("graft_http")
     val cat = new Catalog(spark, root)
     val registry = new ModelRegistry
     registry.register("hf://mys/minilm", "f32", new HashingEmbedder(dim = 64))
@@ -293,7 +293,7 @@ class HttpApiSpec extends SparkSpec {
   }
 
   test("percolate route: saved queries match posted documents") {
-    val root = java.nio.file.Files.createTempDirectory("graft_http").toString
+    val root = tempDir("graft_http")
     val cat = new Catalog(spark, root)
     val registry = new ModelRegistry
     val c = cat.create(CollectionConfig(name = "alerts"))

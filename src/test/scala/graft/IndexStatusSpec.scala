@@ -19,7 +19,7 @@ class IndexStatusSpec extends SparkSpec {
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
 
   test("indexStatus tracks missing/stale/orphaned through the maintenance lifecycle") {
-    val root = java.nio.file.Files.createTempDirectory("graft_fsck").toString
+    val root = tempDir("graft_fsck")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "fsck"))
     c.importDf((1 to 20).map(i => s"document body number $i alpha beta").toDF("text"))

@@ -16,7 +16,7 @@ class IndexStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("dedup index stream: bootstrap, append fold, exactly-once replay") {
-    val root = java.nio.file.Files.createTempDirectory("graft_ddstream").toString
+    val root = tempDir("graft_ddstream")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "dds"))
     c.importDf(Seq("alpha beta gamma delta epsilon",
@@ -58,7 +58,7 @@ class IndexStreamSpec extends SparkSpec {
 
   test("ann index stream: bootstrap, chained embed-stream fold, exactly-once replay") {
     val emb = new HashingEmbedder(dim = 32)
-    val root = java.nio.file.Files.createTempDirectory("graft_annstream").toString
+    val root = tempDir("graft_annstream")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "anns"))
     val words = Seq("alpha", "beta", "gamma", "delta", "orbit", "quark",
@@ -112,7 +112,7 @@ class IndexStreamSpec extends SparkSpec {
 
   test("ann index stream: PQ layout — appended vectors land as byte codes, rerank stays exact") {
     val emb = new HashingEmbedder(dim = 32)
-    val root = java.nio.file.Files.createTempDirectory("graft_annpqs").toString
+    val root = tempDir("graft_annpqs")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "annpq"))
     c.importDf((1 to 30).map(i => s"alpha beta document number $i").toDF("text"))
@@ -140,7 +140,7 @@ class IndexStreamSpec extends SparkSpec {
 
   test("binary sketch stream: bootstrap, chained embed-stream fold, exactly-once replay") {
     val emb = new HashingEmbedder(dim = 32)
-    val root = java.nio.file.Files.createTempDirectory("graft_binstream").toString
+    val root = tempDir("graft_binstream")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "binstr"))
     c.importDf((1 to 40).map(i => s"alpha beta document number $i").toDF("text"))
@@ -186,7 +186,7 @@ class IndexStreamSpec extends SparkSpec {
     // part-way. Each family's stream must index those keys, not drop them
     // as replays.
     val emb = new HashingEmbedder(dim = 32)
-    val root = java.nio.file.Files.createTempDirectory("graft_lowkeys").toString
+    val root = tempDir("graft_lowkeys")
     val c = new Catalog(spark, root).create(CollectionConfig(name = "low"))
     c.importDf((1 to 30).map(i => (i * 10L, s"alpha beta gamma delta document number $i"))
       .toDF("_key", "text"))
@@ -212,5 +212,61 @@ class IndexStreamSpec extends SparkSpec {
       assert(c.searchKeyword("text", "zephyr", 5).collect().map(_.getLong(1)).toSet ==
         Set(15L, 25L))
     } finally streams.foreach(_.stop())
+  }
+
+  test("a refresh and a stream fold the same batch: equal keys and live (key, fp) rows") {
+    val t0 = System.nanoTime()
+    val emb = new HashingEmbedder(dim = 32)
+    val root = tempDir("graft_fold_agree")
+    val cat = new Catalog(spark, root)
+    val docs = (1 to 30).map(i => s"fold agreement doc $i word$i shared tail").toDF("text")
+    val Seq(streamed, refreshed) = Seq("fs", "fr").map { name =>
+      val c = cat.create(CollectionConfig(name = name))
+      c.importDf(docs)
+      c.embedColumn("text", emb)
+      c.buildKeywordIndex("text")
+      c.buildDedupIndex("text")
+      c.buildAnnIndex("text", nLists = 2, sampleN = 100)
+      c.buildBinarySketch("text")
+      c
+    }
+    val c = streamed
+    // the vector stream first: the ANN and binary streams watch its index
+    val streams = Seq(c.embedColumnStream("text", emb, s"$root/_emb"),
+      c.keywordIndexStream("text", s"$root/_kw"), c.dedupIndexStream("text", s"$root/_dd"),
+      c.annIndexStream("text", s"$root/_ann"), c.binarySketchStream("text", s"$root/_bin"))
+    try {
+      streams.foreach(_.processAllAvailable())
+      val batch = (31 to 45).map(i => s"appended fold doc $i word$i").toDF("text")
+      Seq(streamed, refreshed).foreach(_.appendDf(batch))
+      streams.foreach(_.processAllAvailable())
+    } finally streams.foreach(_.stop())
+    refreshed.embedColumn("text", emb)
+    refreshed.refreshKeywordIndex("text")
+    refreshed.refreshDedupIndex("text")
+    refreshed.refreshAnnIndex("text")
+    refreshed.refreshBinarySketch("text")
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    def keys(dir: String) =
+      spark.read.parquet(dir).select("_key").distinct().collect().map(_.getLong(0)).toSet
+    val families: Seq[(String, graft.core.Collection => (Set[Long], Set[(Long, String)]))] = Seq(
+      "vector" -> { x => val d = x.indexDir("text")
+        (keys(d), rows(spark.read.parquet(d).select("_key", "fp").distinct())) },
+      "keyword" -> { x => val live = rows(graft.search.Keyword.liveFps(spark, x.keywordIndexDir("text")))
+        (live.map(_._1), live) },
+      "dedup" -> { x => val d = x.dedupIndexDir("text")
+        (keys(s"$d/bands"), rows(spark.read.parquet(s"$d/fps").select("_key", "fp"))) },
+      "ann" -> { x => val d = x.annIndexDir("text")
+        (keys(s"$d/lists"), rows(spark.read.parquet(s"$d/fps").select("_key", "fp"))) },
+      "binary" -> { x => val d = x.binaryIndexDir("text")
+        (keys(s"$d/sketch"), rows(spark.read.parquet(s"$d/fps").select("_key", "fp"))) })
+    families.foreach { case (family, state) =>
+      val (sk, sr) = state(streamed)
+      assert(sk == (1L to 45L).toSet, s"$family: the stream holds keys $sk")
+      assert(state(refreshed) == ((sk, sr)), s"$family: the refresh and the stream differ")
+    }
+    info(f"wall ${(System.nanoTime() - t0) / 1e9}%.1f s")
   }
 }

@@ -9,7 +9,7 @@ class IngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    tempDir("graft_ingest")
 
   test("jsonl import infers schema, assigns keys; glob append continues keys") {
     val dir = tmp()
@@ -44,7 +44,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("corrupt jsonl lines are quarantined, not dropped or fatal") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_corrupt").toString
+    val dir = tempDir("graft_corrupt")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/in.jsonl"),
       """{"id": 1, "text": "ok one"}
         |{"id": 2, "text": "ok two"}
@@ -96,7 +96,7 @@ class MultiColumnIndexSpec extends SparkSpec {
   import spark.implicits._
 
   test("multiple index columns get independent indexes and searches") {
-    val root = java.nio.file.Files.createTempDirectory("graft_mc").toString
+    val root = tempDir("graft_mc")
     val cat = new graft.core.Catalog(spark, root)
     val c = cat.create(graft.core.CollectionConfig(
       name = "mc", index_columns = Seq("title", "body")))

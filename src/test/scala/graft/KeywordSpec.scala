@@ -41,7 +41,7 @@ class KeywordSpec extends SparkSpec {
     // conjunctive scoring is the same BM25 sum — only membership changes
     and.foreach { case (k, s) => assert(s == or(k)) }
     // the persistent index agrees with the inline scan
-    val dir = java.nio.file.Files.createTempDirectory("graft_kwconj").toString + "/idx"
+    val dir = tempDir("graft_kwconj") + "/idx"
     Keyword.buildIndex(docs, dir, nBuckets = 8)
     val viaIdx = Keyword.searchIndex(spark, dir, terms, k = 10, requireAll = true)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -53,7 +53,7 @@ class KeywordSpec extends SparkSpec {
 
   test("stopword-only query returns an empty page, not an error") {
     import graft.core.{Catalog, CollectionConfig}
-    val root = java.nio.file.Files.createTempDirectory("graft_kwstop").toString
+    val root = tempDir("graft_kwstop")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "stopq"))
     c.importDf(Seq("the quick fox", "a lazy dog").toDF("text"))
@@ -69,7 +69,7 @@ class KeywordSpec extends SparkSpec {
   }
 
   test("persistent index search matches the inline corpus scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kwidx").toString + "/idx"
+    val dir = tempDir("graft_kwidx") + "/idx"
     val docs = Tables.documents(spark, sf0001)
     val terms = Seq("vector", "hash", "join")
     Keyword.buildIndex(docs, dir, nBuckets = 16)
@@ -81,7 +81,7 @@ class KeywordSpec extends SparkSpec {
   }
 
   test("index search prunes to the query terms' bucket partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kwprune").toString + "/idx"
+    val dir = tempDir("graft_kwprune") + "/idx"
     val docs = Tables.documents(spark, sf0001)
     Keyword.buildIndex(docs, dir, nBuckets = 16)
     val terms = Seq("vector")
@@ -117,7 +117,7 @@ class KeywordSpec extends SparkSpec {
   /** A collection over the `_key`/`text` of `docs` (keys = doc ids). */
   private def keyedCollection(name: String, docs: org.apache.spark.sql.DataFrame) = {
     val c = new graft.core.Catalog(spark,
-      java.nio.file.Files.createTempDirectory(s"graft_$name").toString)
+      tempDir(s"graft_$name"))
       .create(graft.core.CollectionConfig(name = name))
     c.importDf(docs.select(col("doc_id").as("_key"), col("text")))
     c
@@ -259,7 +259,7 @@ class KeywordSpec extends SparkSpec {
     // --- wordpiece, on the collection surface (analyzer auto-derived) ---
     import graft.core.{Catalog, CollectionConfig}
     val cat = new Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_kwwp").toString)
+      tempDir("graft_kwwp"))
     val c = cat.create(CollectionConfig(name = "wp"))
     c.importDf(raw.map(_._2).toDF("text"))
     c.buildKeywordIndex("text", nBuckets = 8, analyzer = Analyzer.WordPiece)
@@ -292,7 +292,7 @@ class KeywordSpec extends SparkSpec {
 
   test("streaming keyword refresh: in sync with appends, exactly once under replay") {
     import graft.core.{Catalog, CollectionConfig}
-    val root = java.nio.file.Files.createTempDirectory("graft_kwstream").toString
+    val root = tempDir("graft_kwstream")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "kws"))
     c.importDf(Seq("spark engine spark", "spark shuffle", "parquet files only")
@@ -329,7 +329,7 @@ class KeywordSpec extends SparkSpec {
   test("collection surface: keyword index, fallback equality, hybrid fusion") {
     import graft.core.{Catalog, CollectionConfig}
     import graft.embed.HashingEmbedder
-    val root = java.nio.file.Files.createTempDirectory("graft_kwcoll").toString
+    val root = tempDir("graft_kwcoll")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "docs"))
     c.importDf(Seq("apple banana fruit", "car truck road", "apple pie baking")
@@ -355,7 +355,7 @@ class KeywordSpec extends SparkSpec {
 
   test("collection surface: staged-swap rebuild + watermark refresh") {
     import graft.core.{Catalog, CollectionConfig}
-    val root = java.nio.file.Files.createTempDirectory("graft_kwrefresh").toString
+    val root = tempDir("graft_kwrefresh")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "docs"))
     c.importDf(Seq("alpha beta gamma", "beta delta", "gamma gamma echo")
@@ -397,7 +397,7 @@ class KeywordSpec extends SparkSpec {
 
   test("repair after upsert: fp-driven tombstones, search == inline, compaction folds") {
     import graft.core.{Catalog, CollectionConfig}
-    val root = java.nio.file.Files.createTempDirectory("graft_kwrepair").toString
+    val root = tempDir("graft_kwrepair")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "docs"))
     c.importDf(Seq("apple banana fruit", "car truck road", "apple pie baking")
@@ -430,7 +430,7 @@ class KeywordSpec extends SparkSpec {
 
   test("stats log stays exact through refresh, repair and delete; compaction folds it") {
     val c = new graft.core.Catalog(spark,
-        java.nio.file.Files.createTempDirectory("graft_kwstats").toString)
+        tempDir("graft_kwstats"))
       .create(graft.core.CollectionConfig(name = "docs"))
     c.importDf(Seq("apple banana fruit", "car truck road", "apple pie baking", "")
       .toDF("text"))
@@ -598,7 +598,7 @@ class KeywordSpec extends SparkSpec {
   test("collection percolateVector embeds saved queries and fires on meaning") {
     import graft.core.{Catalog, CollectionConfig}
     import graft.embed.HashingEmbedder
-    val root = java.nio.file.Files.createTempDirectory("graft_vperc").toString
+    val root = tempDir("graft_vperc")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "valerts"))
     c.importDf(Seq("seed row").toDF("text"))
@@ -636,7 +636,7 @@ class KeywordSpec extends SparkSpec {
   test("collection percolateVector runs on a stream: append mode, no state store") {
     import graft.core.{Catalog, CollectionConfig}
     import graft.embed.HashingEmbedder
-    val root = java.nio.file.Files.createTempDirectory("graft_vpercstream").toString
+    val root = tempDir("graft_vpercstream")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "vstream"))
     c.importDf(Seq("seed row").toDF("text"))
@@ -672,7 +672,7 @@ class KeywordSpec extends SparkSpec {
 
   test("collection percolation runs on a stream with the persisted analyzer") {
     import graft.core.{Catalog, CollectionConfig}
-    val root = java.nio.file.Files.createTempDirectory("graft_percstream").toString
+    val root = tempDir("graft_percstream")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "alerts"))
     c.importDf(Seq("seed row").toDF("text"))
@@ -701,7 +701,7 @@ class KeywordSpec extends SparkSpec {
 
   test("putQueries: intra-batch duplicates collapse when identical, reject when conflicting") {
     import graft.core.{Catalog, CollectionConfig}
-    val root = java.nio.file.Files.createTempDirectory("graft_putq").toString
+    val root = tempDir("graft_putq")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "alerts"))
     c.importDf(Seq("seed row").toDF("text"))
@@ -802,7 +802,7 @@ class KeywordSpec extends SparkSpec {
     not.foreach { case (k, s) => assert(s == base(k)) }
     // the persistent index agrees with the inline scan (exclusion term's
     // bucket is read through the same pruned path)
-    val dir = java.nio.file.Files.createTempDirectory("graft_kwnot").toString + "/idx"
+    val dir = tempDir("graft_kwnot") + "/idx"
     Keyword.buildIndex(docs, dir, nBuckets = 8)
     val viaIdx = Keyword.searchIndex(spark, dir, Seq("spark"), k = 10,
         mustNot = Seq("shuffle"))
@@ -817,7 +817,7 @@ class KeywordSpec extends SparkSpec {
 
   test("collection searchKeyword parses '-term' exclusions through the analyzer") {
     import graft.core.{Catalog, CollectionConfig}
-    val root = java.nio.file.Files.createTempDirectory("graft_kwneg").toString
+    val root = tempDir("graft_kwneg")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "kn", index_columns = Seq("text")))
     c.importDf(Seq(
@@ -839,7 +839,7 @@ class KeywordSpec extends SparkSpec {
 
   test("searchHybrid's keyword side honours '-term' exclusions") {
     import graft.core.{Catalog, CollectionConfig}
-    val root = java.nio.file.Files.createTempDirectory("graft_hyneg").toString
+    val root = tempDir("graft_hyneg")
     val c = new Catalog(spark, root).create(CollectionConfig(name = "hn"))
     c.importDf((1 to 30).map(i =>
       s"apple ${if (i % 2 == 1) "banana" else "cherry"} filler$i").toDF("text"))

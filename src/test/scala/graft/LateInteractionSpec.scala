@@ -74,7 +74,7 @@ class LateInteractionSpec extends SparkSpec {
   test("collection searchLate: multi-section query outranks one-best-chunk search") {
     import graft.core.{Catalog, CollectionConfig}
     import graft.embed.HashingEmbedder
-    val root = java.nio.file.Files.createTempDirectory("graft_late").toString
+    val root = tempDir("graft_late")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "late"))
     val emb = new HashingEmbedder(dim = 64)

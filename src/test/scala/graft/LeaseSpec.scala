@@ -15,7 +15,7 @@ class WriteLeaseSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_lease").toString
+    tempDir("graft_lease")
 
   test("a second writer refuses loudly while the lease is held, proceeds after release") {
     val cat = new Catalog(spark, tmpRoot())

@@ -15,7 +15,7 @@ class MaintenanceSpec extends SparkSpec {
   private val emb = new HashingEmbedder(dim = 32)
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_maint").toString
+    tempDir("graft_maint")
 
   private def plan(c: graft.core.Collection) =
     c.planMaintenance().collect()

@@ -9,7 +9,7 @@ import graft.multimodal.MediaFixtures
 class MediaFixturesSpec extends SparkSpec {
 
   private def newTree(tag: String, seed: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"mf-$tag-").toString
+    val dir = tempDir(s"mf-$tag-")
     // a documents.parquet listing is the fingerprint source
     spark.range(seed, seed + 5).toDF("doc_id")
       .write.parquet(s"$dir/documents.parquet")
@@ -30,7 +30,7 @@ class MediaFixturesSpec extends SparkSpec {
       .toMap
 
   test("cache round-trip: second call serves identical bytes from parquet") {
-    val cache = java.nio.file.Files.createTempDirectory("mf-cache-").toString
+    val cache = tempDir("mf-cache-")
     sys.props("graft.media.cache") = cache
     try {
       val tree = newTree("a", 0)
@@ -49,7 +49,7 @@ class MediaFixturesSpec extends SparkSpec {
   }
 
   test("a regenerated source tree at the SAME path misses via the fingerprint") {
-    val cache = java.nio.file.Files.createTempDirectory("mf-cache2-").toString
+    val cache = tempDir("mf-cache2-")
     sys.props("graft.media.cache") = cache
     try {
       val tree = newTree("b", 0)

@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.embed.ModelHub
 
 /** Offline list-models over a synthetic GRAFT_HF_MIRROR layout. */
-class ModelHubSpec extends AnyFunSuite {
+class ModelHubSpec extends AnyFunSuite with TempDirs {
 
   test("lists letsearch-compatible repos with variants, skips others") {
-    val root = java.nio.file.Files.createTempDirectory("graft_hub")
+    val root = java.nio.file.Paths.get(tempDir("graft_hub"))
     def write(repo: String, json: String): Unit = {
       val dir = root.resolve(repo)
       java.nio.file.Files.createDirectories(dir)

@@ -172,7 +172,7 @@ class DedupSpec extends SparkSpec {
   test("shard export: one file per shard, deterministic re-run, manifest binds order") {
     import graft.operators.Export
     val df = (0L until 500L).map(k => (k, s"doc $k")).toDF("k", "v").repartition(7)
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString + "/train"
+    val out = tempDir("graft_shards") + "/train"
     val manifest = Export.writeShards(df, "k", out, rowsPerShard = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     // 500 rows / 64 = 8 shards, last one short; contiguous pos ranges
@@ -203,7 +203,7 @@ class DedupSpec extends SparkSpec {
   test("jsonl export: interchange shards round-trip, order provable from pos") {
     import graft.operators.Export
     val df = (0L until 300L).map(k => (k, s"doc $k")).toDF("k", "v").repartition(7)
-    val out = java.nio.file.Files.createTempDirectory("graft_jsonl").toString + "/rel"
+    val out = tempDir("graft_jsonl") + "/rel"
     val manifest = Export.writeShards(df, "k", out, rowsPerShard = 64,
         format = "jsonl")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4))).toSeq
@@ -238,7 +238,7 @@ class DedupSpec extends SparkSpec {
   test("split export: per-split trees partition the corpus, assignment matches hashSplit") {
     import graft.operators.{Export, Sampling}
     val df = (0L until 600L).map(k => (k, s"doc $k")).toDF("k", "v").repartition(5)
-    val out = java.nio.file.Files.createTempDirectory("graft_split").toString
+    val out = tempDir("graft_split")
     val splits = Seq("train" -> 90, "val" -> 5, "test" -> 5)
     val manifest = Export.writeSplitShards(df, "k", out, rowsPerShard = 64, splits)
       .collect().map(r => (r.getString(0), r.getAs[Long]("n_rows")))
@@ -265,7 +265,7 @@ class DedupSpec extends SparkSpec {
   test("collection dedup index: indexed check == inline, refresh catches appends") {
     import graft.core.{Catalog, CollectionConfig}
     import graft.dedup.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft_ddidx").toString
+    val root = tempDir("graft_ddidx")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "docs"))
     c.importDf(Seq("alpha beta gamma delta epsilon",
@@ -719,7 +719,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("q29's all-pairs guard still trips on oversized input (limit-bounded probe)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-q29-guard").toString
+    val dir = tempDir("graft-q29-guard")
     spark.range(10001)
       .select(col("id").as("vec_id"),
         array(lit(0.1f), lit(0.2f)).as("embedding"))
@@ -741,7 +741,7 @@ class AnnSpec extends SparkSpec {
         .map(_.metrics("numOutputRows").value).sum
     }
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val base = tempDir("graft_layout")
     // sorted layout: 8 files, each covering ~1/8 of the key range
     Layout.writeRangeSorted(docs, s"$base/sorted", "doc_id", nFiles = 8)
     // unsorted layout: same 8 files, keys scattered round-robin
@@ -768,7 +768,7 @@ class AnnSpec extends SparkSpec {
     // a 100x100 grid: x and y independent, 10k rows
     val grid = (0 until 10000).map(i => (i.toLong, (i % 100).toLong, (i / 100).toLong))
       .toDF("id", "x", "y")
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val base = tempDir("graft_zorder")
     Layout.writeZOrdered(grid, s"$base/z", Seq("x", "y"), nFiles = 16,
       bitsPerCol = 8)
     Layout.writeRangeSorted(grid, s"$base/xsorted", "x", nFiles = 16)
@@ -1047,7 +1047,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("bucket-partitioned index prunes partitions on probe") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/idx"
+    val dir = tempDir("graft_annidx") + "/idx"
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id").as("_key"), col("embedding"))
     val q = e.filter(col("_key") === 5).select("embedding").head().getSeq[Float](0).toArray
@@ -1066,7 +1066,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("IVF list-partitioned index prunes to the probed lists") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfidx").toString + "/idx"
+    val dir = tempDir("graft_ivfidx") + "/idx"
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id").as("_key"), col("embedding"))
     val q = e.filter(col("_key") === 5).select("embedding").head().getSeq[Float](0).toArray
@@ -1402,7 +1402,7 @@ class StreamsSpec extends SparkSpec {
     implicit val sctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, Long)]
     val pairs = mem.toDF().toDF("key_a", "key_b")
-    val root = java.nio.file.Files.createTempDirectory("graft_dgs").toString
+    val root = tempDir("graft_dgs")
     val labelDir = s"$root/labels"
     val ckpt = s"$root/ckpt"
     def labelMap = Streams.readLabels(spark, labelDir)
@@ -1449,7 +1449,7 @@ class StreamsSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String, Long)]
     val stream = mem.toDF().toDF("doc_id", "text", "tsl")
       .withColumn("ts", (col("tsl") / 1000).cast("timestamp")).drop("tsl")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_nd_ckpt").toString
+    val ckpt = tempDir("graft_nd_ckpt")
     def ts(i: Long) = 1700000000000L + i * 1000L
 
     // foreachBatch sink: unlike the memory sink it supports restarting
@@ -1640,7 +1640,7 @@ class StreamsSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     // stream the µs-converted events through a temp dir (stream source needs
     // a static schema; reuse the batch loader then re-write)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     val ev = Tables.events(spark, sf0001).select("ts", "event_type", "value")
     ev.write.mode("overwrite").parquet(dir)
     val batch = Streams.hourlyTypeCounts(spark.read.parquet(dir))
@@ -1739,7 +1739,7 @@ class EmbedStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("streaming embed keeps the index in sync with appends, exactly once") {
-    val root = java.nio.file.Files.createTempDirectory("graft_es").toString
+    val root = tempDir("graft_es")
     val cat = new graft.core.Catalog(spark, root)
     val c = cat.create(graft.core.CollectionConfig(name = "s"))
     c.importDf(Seq("first doc text", "second doc text").toDF("text"))
@@ -1765,7 +1765,7 @@ class EmbedStreamSpec extends SparkSpec {
   }
 
   test("overlapping batches anti-join (checkpoint loss, compaction), new keys stream free") {
-    val root = java.nio.file.Files.createTempDirectory("graft_es2").toString
+    val root = tempDir("graft_es2")
     val cat = new graft.core.Catalog(spark, root)
     val c = cat.create(graft.core.CollectionConfig(name = "s2"))
     c.importDf(Seq("one text", "two text").toDF("text"))
@@ -1807,7 +1807,7 @@ class EmbedStreamSpec extends SparkSpec {
   }
 
   test("chunked embed stream builds the same multi-vector index as the batch path") {
-    val root = java.nio.file.Files.createTempDirectory("graft_es_ch").toString
+    val root = tempDir("graft_es_ch")
     val cat = new graft.core.Catalog(spark, root)
     val emb = new graft.embed.HashingEmbedder(dim = 32)
     val longDoc = "# part one\n" +
@@ -1843,7 +1843,7 @@ class EmbedStreamSpec extends SparkSpec {
     // ignoreMissingFiles on the stream reader that replay dies with
     // FileNotFoundException; with it the vanished files are skipped and
     // the rows arrive via the compacted files instead, exactly once.
-    val root = java.nio.file.Files.createTempDirectory("graft_es3").toString
+    val root = tempDir("graft_es3")
     val cat = new graft.core.Catalog(spark, root)
     val c = cat.create(graft.core.CollectionConfig(name = "s3"))
     c.importDf(Seq("alpha text", "beta text").toDF("text").repartition(1))
@@ -1882,7 +1882,7 @@ class EmbedStreamSpec extends SparkSpec {
     // must be safe to run while the embed stream is LIVE (both hold the
     // collection writeLock, so an append can't land inside the swap
     // window and be lost)
-    val root = java.nio.file.Files.createTempDirectory("graft_ci").toString
+    val root = tempDir("graft_ci")
     val cat = new graft.core.Catalog(spark, root)
     val c = cat.create(graft.core.CollectionConfig(name = "ci"))
     val emb = new graft.embed.HashingEmbedder(dim = 32)

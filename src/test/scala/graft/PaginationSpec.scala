@@ -80,7 +80,7 @@ class PaginationSpec extends SparkSpec {
   }
 
   test("keyword index and collection surface page identically to inline") {
-    val root = java.nio.file.Files.createTempDirectory("graft_page").toString
+    val root = tempDir("graft_page")
     val cat = new graft.core.Catalog(spark, root)
     val c = cat.create(graft.core.CollectionConfig(name = "pages"))
     c.importDf(docs.select(col("text")))

@@ -106,7 +106,7 @@ class PdfSpec extends SparkSpec {
   }
 
   test("distributed binaryFile read: one row per text PDF, scanned filtered") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pdf")
+    val dir = java.nio.file.Paths.get(tempDir("graft_pdf"))
     java.nio.file.Files.write(dir.resolve("a.pdf"),
       pdfWith(s"BT ($LongLine) Tj ET", flate = true))
     java.nio.file.Files.write(dir.resolve("b.pdf"),
@@ -120,10 +120,10 @@ class PdfSpec extends SparkSpec {
 
   test("add-docs chunked PDF: chunks land in the target column, schema widens") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pdfadd")
+    val dir = java.nio.file.Paths.get(tempDir("graft_pdfadd"))
     java.nio.file.Files.write(dir.resolve("doc.pdf"),
       pdfWith(s"BT ($LongLine) Tj ET", flate = true))
-    val root = java.nio.file.Files.createTempDirectory("graft_pdfcoll").toString
+    val root = tempDir("graft_pdfcoll")
     val cat = new graft.core.Catalog(spark, root)
     val c = cat.create(graft.core.CollectionConfig(name = "pdfs"))
     c.importDf(Seq("existing doc body").toDF("body"))

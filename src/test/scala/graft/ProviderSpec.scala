@@ -31,7 +31,7 @@ class ProviderSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_provider").toString
+    tempDir("graft_provider")
 
   test("reflection load: provider class builds the embedder; bad config fails loudly") {
     val e = EmbedderProvider.load("graft.FakeOnnxProvider", "onnx://x-large")

@@ -15,7 +15,7 @@ class QualityCleanSpec extends SparkSpec {
   private val emb = new HashingEmbedder(dim = 16)
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_quality").toString
+    tempDir("graft_quality")
 
   private def fixture(): graft.core.Collection = {
     val cat = new Catalog(spark, tmpRoot())

@@ -48,7 +48,7 @@ class QuantizationSpec extends SparkSpec {
 
   test("i8/f16 variant collections: quantized storage, transparent reads") {
     for (variant <- Seq("i8", "f16")) {
-      val root = java.nio.file.Files.createTempDirectory(s"graft_q_$variant").toString
+      val root = tempDir(s"graft_q_$variant")
       val cat = new Catalog(spark, root)
       val c = cat.create(CollectionConfig(name = "q", model_variant = variant))
       c.importDf(Seq("apple banana fruit", "car truck road", "apple pie baking")

@@ -25,7 +25,7 @@ class ReadsBesideWritesSpec extends SparkSpec {
   private val emb = new SlowEmbedder(dim0 = 32, sleepMs = 40)
 
   test("readers on a second instance never break a writer's commit") {
-    val root = java.nio.file.Files.createTempDirectory("graft_rw").toString
+    val root = tempDir("graft_rw")
     val writer = new Catalog(spark, root).create(CollectionConfig(name = "rw"))
     writer.importDf((1 to 120).map(i => s"seed doc $i word${i % 7}").toDF("text"))
     writer.embedColumn("text", emb)
@@ -93,7 +93,7 @@ class ReadsBesideWritesSpec extends SparkSpec {
     // page answered from anything but the index carries docs without the
     // one real query term
     val az = Analyzer.Stopworded(Set("the", "of"))
-    val root = java.nio.file.Files.createTempDirectory("graft_kwrw").toString
+    val root = tempDir("graft_kwrw")
     val writer = new Catalog(spark, root).create(CollectionConfig(name = "kwrw"))
     def doc(tag: String, i: Int) =
       s"the $tag $i of word${i % 7}" + (if (i % 30 == 0) " apple" else "")

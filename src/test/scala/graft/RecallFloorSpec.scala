@@ -22,7 +22,7 @@ class RecallFloorSpec extends SparkSpec {
   private val emb = new HashingEmbedder(dim = 32)
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_recall").toString
+    tempDir("graft_recall")
 
   private def mkCollection(name: String, n: Int): graft.core.Collection = {
     val cat = new Catalog(spark, tmpRoot())

@@ -17,7 +17,7 @@ class RefreshJobsSpec extends SparkSpec {
   private val emb = new HashingEmbedder(dim = 32)
 
   test("refresh after one appended batch stays within each family's job ceiling") {
-    val root = java.nio.file.Files.createTempDirectory("graft_refresh_jobs").toString
+    val root = tempDir("graft_refresh_jobs")
     val c = new Catalog(spark, root).create(CollectionConfig(name = "rj"))
     c.importDf((1 to 40).map(i => s"refresh fixture doc $i word$i").toDF("text"))
     assert(c.embedColumn("text", emb) == 40)
@@ -48,7 +48,7 @@ class RefreshJobsSpec extends SparkSpec {
   }
 
   test("each vector embed pass stays within its job ceiling") {
-    val root = java.nio.file.Files.createTempDirectory("graft_embed_jobs").toString
+    val root = tempDir("graft_embed_jobs")
     val cat = new Catalog(spark, root)
     val docs = (1 to 40).map(i => s"embed fixture doc $i word$i")
     val c = cat.create(CollectionConfig(name = "ej"))

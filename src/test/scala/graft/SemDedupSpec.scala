@@ -131,7 +131,7 @@ class SemDedupSpec extends SparkSpec {
   test("collection semanticDups rides the stored ANN lists; nLists=1 == exact pairs") {
     import graft.core.{Catalog, CollectionConfig}
     import graft.embed.HashingEmbedder
-    val root = java.nio.file.Files.createTempDirectory("graft_semdedup").toString
+    val root = tempDir("graft_semdedup")
     val cat = new Catalog(spark, root)
     val c = cat.create(CollectionConfig(name = "sem"))
     val emb = new HashingEmbedder(dim = 32)

@@ -25,7 +25,7 @@ class ServeJobsSpec extends SparkSpec {
     "falcon", "garden", "harbor", "island", "jungle", "kettle", "lemon")
 
   test("one search request per mode stays within its job ceiling") {
-    val root = java.nio.file.Files.createTempDirectory("graft_serve_jobs").toString
+    val root = tempDir("graft_serve_jobs")
     val c = new Catalog(spark, root).create(CollectionConfig(name = "sj"))
     c.importDf((1 to 300).map(i =>
       Seq(words(i % 12), words(i * 7 % 12), words(i * 5 % 11), s"doc$i")

@@ -22,7 +22,7 @@ class ServeLayoutSpec extends SparkSpec {
     Seq(words(i % 10), words(i * 3 % 10), words(i * 7 % 9), s"doc$i").mkString(" "))
 
   private def collection(name: String, variant: String = "f32"): Collection = {
-    val root = java.nio.file.Files.createTempDirectory("graft_serve_layout").toString
+    val root = tempDir("graft_serve_layout")
     val c = new Catalog(spark, root).create(CollectionConfig(name = name, model_variant = variant))
     c.importDf(texts.toDF("text"))
     c
@@ -231,7 +231,7 @@ class ServeLayoutSpec extends SparkSpec {
   }
 
   test("a keyword index over token-less text builds empty and serves empty pages") {
-    val root = java.nio.file.Files.createTempDirectory("graft_serve_layout").toString
+    val root = tempDir("graft_serve_layout")
     val c = new Catalog(spark, root).create(CollectionConfig(name = "notokens"))
     c.importDf(Seq("", "   ").toDF("text"))
     c.buildKeywordIndex("text")

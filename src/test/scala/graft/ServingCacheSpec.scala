@@ -28,7 +28,7 @@ class ServingCacheSpec extends SparkSpec {
     collectionOf(name, variant, docs.toDF("text"))
 
   private def collectionOf(name: String, variant: String, data: DataFrame): Collection = {
-    val root = java.nio.file.Files.createTempDirectory("graft_serving_cache").toString
+    val root = tempDir("graft_serving_cache")
     val c = new Catalog(spark, root).create(CollectionConfig(name = name, model_variant = variant))
     c.importDf(data)
     c

@@ -338,7 +338,7 @@ class Session3OpsSpec extends SparkSpec {
   test("novelty store: build, watermark refresh, check; retention survives delete") {
     import graft.core.{Catalog, CollectionConfig}
     val cat = new Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_nv").toString)
+      tempDir("graft_nv"))
     val c = cat.create(CollectionConfig(name = "nv"))
     c.importDf(Seq("alpha beta gamma delta", "epsilon zeta eta theta")
       .toDF("text"))

@@ -159,7 +159,7 @@ class Session4OpsSpec extends SparkSpec {
   }
 
   test("csv round-trip preserves embedded newlines, quotes, commas, unicode") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csvspec").toString
+    val tmp = tempDir("graft_csvspec")
     val rows = Seq(
       (1L, "plain"),
       (2L, "comma, inside"),

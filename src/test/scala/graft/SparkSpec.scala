@@ -4,11 +4,37 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
+/** A suite's temporary directories: each [[tempDir]] is deleted, with
+  * everything under it, when the suite ends.
+  */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A new temporary directory named from `prefix`, deleted after the suite. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    dirs.add(d)
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally dirs.forEach(d => scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)))
+}
+
 /** Shared local session for specs — one per suite, lazy. */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Streams a test left running are stopped before the suite's
+    * directories go.
+    */
+  override def afterAll(): Unit =
+    try SparkSession.getActiveSession.foreach(_.streams.active.foreach(_.stop()))
+    finally super.afterAll()
   def sf0001 = "/root/testdata/sf0.001"
 
   /** The Parquet files directly under `dir`. */

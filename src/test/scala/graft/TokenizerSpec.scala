@@ -9,7 +9,7 @@ class TokenizerSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft_tok").toString
+    tempDir("graft_tok")
 
   private val texts = Seq(
     "low low low lower lowest", "new newer newest new new",

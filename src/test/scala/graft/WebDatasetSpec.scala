@@ -51,7 +51,7 @@ class WebDatasetSpec extends SparkSpec {
     .toDF("doc_id", "content", "caption")
 
   test("webdataset shards: well-formed tars, adjacent ordered samples") {
-    val dir = Files.createTempDirectory("wds").toString
+    val dir = tempDir("wds")
     val report = Export.writeWebDataset(fixture, "doc_id", dir,
       rowsPerShard = 3, members = Seq("content" -> "bin", "caption" -> "txt"))
       .collect()
@@ -79,8 +79,8 @@ class WebDatasetSpec extends SparkSpec {
   }
 
   test("webdataset export is byte-reproducible") {
-    val d1 = Files.createTempDirectory("wds1").toString
-    val d2 = Files.createTempDirectory("wds2").toString
+    val d1 = tempDir("wds1")
+    val d2 = tempDir("wds2")
     Seq(d1, d2).foreach(d => Export.writeWebDataset(fixture, "doc_id", d,
       rowsPerShard = 3, members = Seq("content" -> "bin", "caption" -> "txt"))
       .collect())
@@ -99,7 +99,7 @@ class WebDatasetSpec extends SparkSpec {
   test("system tar accepts the archives (when available)") {
     if (new java.io.File("/bin/tar").exists ||
         new java.io.File("/usr/bin/tar").exists) {
-      val dir = Files.createTempDirectory("wds3").toString
+      val dir = tempDir("wds3")
       Export.writeWebDataset(fixture, "doc_id", dir, rowsPerShard = 7,
         members = Seq("caption" -> "txt")).collect()
       import scala.sys.process._
